@@ -2,7 +2,11 @@ package graft.operators
 
 import graft.types.Metric
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.BoundReference
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.DataType
 
 /** IVF (inverted-file) ANN index, batch-native.
   *
@@ -20,14 +24,46 @@ import org.apache.spark.sql.functions._
   *   centroids:   (cluster_id int, centroid array<float>)   — small
   *   assigned:    records + cluster_id                      — huge
   *
-  * At 100 TB `assigned` is written `partitionBy("cluster_id")`; the probe
-  * query then semi-joins the probed cluster ids, which Catalyst turns into
-  * dynamic partition pruning — the physical analog of the reference's
-  * "scan only the probed posting lists" (`index.rs:176-187`).
+  * At 100 TB `assigned` is written `partitionBy("cluster_id")`. A
+  * single-vector query ranks the centroids on the driver ([[probe]]) and
+  * filters the store on the probed cluster ids, which reaches the parquet
+  * scan as static partition pruning — the physical analog of the
+  * reference's "scan only the probed posting lists" (`index.rs:176-187`).
   */
 object IvfIndex {
 
-  final case class Model(centroids: DataFrame, assigned: DataFrame)
+  /** An index version: its centroids and its assigned records.
+    *
+    * A single-vector query ranks the centroids on the driver, so each
+    * `Model` instance collects its centroid rows ONCE, on its first query,
+    * and keeps them for its lifetime (at most `kMax` rows). Treat a `Model`
+    * as an immutable index version: when the centroids change, build a new
+    * `Model` rather than mutating the data behind `centroids`. */
+  final case class Model(centroids: DataFrame, assigned: DataFrame) {
+    @transient private[operators] lazy val probeCentroids: ProbeCentroids =
+      ProbeCentroids(centroids)
+  }
+
+  /** Centroid rows held on the driver for the single-query probe: cluster
+    * ids and Catalyst-form vectors (one-column rows the distance kernel
+    * evaluates against). A row with a null cluster_id names no posting
+    * list and is dropped; `rowCount` still counts it. */
+  private[operators] final class ProbeCentroids(
+      val ids: Array[Int],
+      val vectors: Array[InternalRow],
+      val vectorType: DataType,
+      val rowCount: Long)
+
+  private[operators] object ProbeCentroids {
+    def apply(centroids: DataFrame): ProbeCentroids = {
+      val vectorType = centroids.schema("centroid").dataType
+      val toCatalyst = CatalystTypeConverters.createToCatalystConverter(vectorType)
+      val rows = centroids.select(col("cluster_id").cast("int"), col("centroid")).collect()
+      val kept = rows.filter(!_.isNullAt(0))
+      new ProbeCentroids(kept.map(_.getInt(0)),
+        kept.map(r => InternalRow(toCatalyst(r.get(1)))), vectorType, rows.length.toLong)
+    }
+  }
 
   /** Nearest-centroid assignment (reference `src/cores/index.rs:246-253`).
     *
@@ -274,46 +310,79 @@ object IvfIndex {
     }
   }
 
-  /** The probe stage shared by every funnel: rank ALL centroids by
-    * distance to the query (NaN last), keep the nearest `probes`
-    * cluster ids — ONE definition so the probe tiebreak, NaN handling,
-    * and invalid-row exclusion can never diverge across the exact /
-    * prefix / Hamming / ADC serving paths. A NULL centroid distance
-    * (null or wrong-length centroid/query — the kernels return null,
-    * not NaN) is an invalid row, not a near one: unguarded it sorts
-    * FIRST ascending and steals a probe slot from a real cluster, so
-    * it is excluded outright. `keep` selects the columns retained for
-    * the caller (the residual-ADC path also needs centroid and qvec
-    * for its per-cluster LUTs). */
-  private def probedClusters(
-      centroids: DataFrame,
-      query: DataFrame,
-      probes: Int,
-      metric: Metric,
-      keep: Seq[String]): DataFrame =
-    centroids
-      .crossJoin(broadcast(query))
-      .withColumn("__cdist", metric.distance(col("centroid"), col("qvec")))
-      .where(col("__cdist").isNotNull)
-      .orderBy(isnan(col("__cdist")).asc, col("__cdist").asc, col("cluster_id").asc)
-      .limit(probes)
-      .select(keep.map(col): _*)
+  /** The probe order shared by every single-query funnel and
+    * [[probeCost]]: positions into `cents`, nearest centroid first — ONE
+    * definition so the tiebreak, NaN handling and invalid-row exclusion
+    * can never diverge across the exact / prefix / Hamming / ADC serving
+    * paths. Distances are the metric's own kernel evaluated on the driver
+    * against the query literal, so they are bit-identical to the kernel
+    * in a plan. NaN ranks last (`index.rs:269-272`), ties go to the lower
+    * cluster_id. A NULL distance (null or wrong-length centroid/query —
+    * the kernels return null, not NaN) is an invalid row, not a near one:
+    * it is excluded outright rather than stealing a probe slot from a
+    * real cluster. A zero-row query probes nothing. */
+  private[operators] def probe(
+      cents: ProbeCentroids,
+      query: Knn.QueryRow,
+      metric: Metric): Array[Int] =
+    if (query.row.isEmpty) Array.empty
+    else {
+      val dist = ColumnBridge.expression(metric.distance(
+        ColumnBridge.column(BoundReference(0, cents.vectorType, nullable = true)),
+        query.literal("qvec")))
+      val scored = cents.vectors.indices.iterator.flatMap { i =>
+        Option(dist.eval(cents.vectors(i))).map(d => (d.asInstanceOf[Double], cents.ids(i), i))
+      }.toArray
+      // Spark's sort order: isnan asc, distance asc (NaN = NaN, 0.0 = -0.0),
+      // cluster_id asc
+      scored.sortWith { case ((da, ia, _), (db, ib, _)) =>
+        if (da.isNaN != db.isNaN) db.isNaN
+        else if (!da.isNaN && da != db) da < db
+        else ia < ib
+      }.map(_._3)
+    }
 
-  private def probedClusters(
-      model: Model,
-      query: DataFrame,
+  /** The ids of the nearest `probes` clusters under [[probe]]'s order. */
+  private def probedIds(
+      cents: ProbeCentroids,
+      query: Knn.QueryRow,
       probes: Int,
-      metric: Metric): DataFrame =
-    probedClusters(model.centroids, query, probes, metric, Seq("cluster_id"))
+      metric: Metric): Seq[Int] =
+    probe(cents, query, metric).take(probes).map(cents.ids).toSeq
+
+  /** `store` restricted to the probed posting lists: a literal IN-list on
+    * cluster_id, which a `partitionBy("cluster_id")` store prunes
+    * statically at the scan. */
+  private def inClusters(store: DataFrame, ids: Seq[Int]): DataFrame =
+    store.where(col("cluster_id").isin(ids: _*))
+
+  /** Every rankable cluster of `model` as `(cluster_id, rank)`, rank 1 =
+    * nearest: the budget-`p` probe list is the `rank <= p` prefix, which
+    * is what lets the sweeps serve every budget from one ranking. */
+  private def probeRanks(model: Model, query: Knn.QueryRow, metric: Metric): Seq[(Int, Int)] = {
+    val cents = model.probeCentroids
+    probe(cents, query, metric).toSeq.zipWithIndex.map { case (i, r) => (cents.ids(i), r + 1) }
+  }
+
+  /** [[probeRanks]] per tagged model, as `(tag, cluster_id, rank)`. */
+  private def taggedRanks(
+      models: Seq[(String, Model)],
+      query: Knn.QueryRow,
+      metric: Metric): Seq[(String, Int, Int)] =
+    models.flatMap { case (t, m) =>
+      probeRanks(m, query, metric).map { case (c, r) => (t, c, r) }
+    }
 
   /** Probed ANN query (reference `src/cores/index.rs:168-214`):
     * rank ALL centroids by distance to the query — NaN ranks last
     * (`index.rs:269-272`) — visit the nearest `min(probes, n_centroids)`
     * clusters (`index.rs:177-182`), then exact search within them.
     *
-    * `probed` is a ≤probes-row frame → broadcast semi-join prunes the big
-    * table (partition pruning when `assigned` is disk-partitioned by
-    * cluster_id); the exact re-rank inherits Knn's TakeOrderedAndProject. */
+    * The query row and the probe list are resolved on the driver
+    * ([[Knn.QueryRow]], [[probe]]); the store is filtered on the probed
+    * ids (static partition pruning when `assigned` is disk-partitioned by
+    * cluster_id) and the exact re-rank inherits Knn's
+    * TakeOrderedAndProject — a warm query is one scan job. */
   def query(
       model: Model,
       query: DataFrame,
@@ -322,9 +391,9 @@ object IvfIndex {
       metric: Metric = Metric.Euclidean,
       radius: Double = Double.PositiveInfinity,
       filter: Column = lit(true)): DataFrame = {
-    val probed = probedClusters(model, query, probes, metric)
-    val candidates = model.assigned.join(broadcast(probed), Seq("cluster_id"), "left_semi")
-    Knn.search(candidates, query, k, metric, radius, filter)
+    val q = Knn.QueryRow(query)
+    val candidates = inClusters(model.assigned, probedIds(model.probeCentroids, q, probes, metric))
+    Knn.search(candidates, q, k, metric, radius, filter, None)
   }
 
   /** Probe-COST observability — the dashboard row that tells an
@@ -354,24 +423,15 @@ object IvfIndex {
       "probeCost needs at least one probe budget (got an empty probesList)")
     val spark = model.assigned.sparkSession
     import spark.implicits._
-    // ONE centroid-distance pass for the whole sweep (the queryProbeSweep
-    // argument): rank all centroids once — same NaN-last / id-tiebreak
-    // total order as probedClusters — then every budget is the rank ≤ p
-    // prefix, so the r13 form's one-ranking-per-budget (≈|probesList|
-    // centroid scans) collapses to one window over a cluster-count-bounded
-    // frame. The window partitions BY THE QUERY VECTOR (non-foldable) so
-    // it never plans a partition-less global window.
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("qvec"))
-      .orderBy(isnan(col("__cdist")).asc, col("__cdist").asc, col("cluster_id").asc)
+    // ONE centroid ranking for the whole sweep (the queryProbeSweep
+    // argument), by the serving path's own driver-side probe: every
+    // budget is the rank ≤ p prefix of that order.
     val sizes = model.assigned.groupBy(col("cluster_id"))
       .agg(count(lit(1)).as("__csz"))
     // a probed cluster emptied by duplicate-tie assignment still counts
     // as probed with zero rows (left join, not inner)
-    val ranked = model.centroids.crossJoin(broadcast(query))
-      .withColumn("__cdist", metric.distance(col("centroid"), col("qvec")))
-      .where(col("__cdist").isNotNull)
-      .withColumn("__rank", row_number().over(w))
-      .select(col("cluster_id"), col("__rank"))
+    val ranked = probeRanks(model, Knn.QueryRow(query), metric)
+      .toDF("cluster_id", "__rank")
       // NOTE (r14): broadcast(sizes) was tried here and reverted — both
       // sides are cluster-count-bounded, so the join is tiny either way,
       // and A/B probes could not show a win for the extra
@@ -379,7 +439,7 @@ object IvfIndex {
       // materialization) over the small sort-merge.
       .join(sizes, Seq("cluster_id"), "left_outer")
     val totals = model.assigned.agg(count(lit(1)).as("store_rows"))
-      .crossJoin(model.centroids.agg(count(lit(1)).as("store_clusters")))
+      .withColumn("store_clusters", lit(model.probeCentroids.rowCount))
     probesList.distinct.toDF("probes")
       // rank-prefix fan-out: points × clusters nested-loop on a broadcast
       // cluster-count frame; left join keeps a budget row even when no
@@ -414,9 +474,9 @@ object IvfIndex {
       prefixDim: Int,
       shortlist: Int,
       metric: Metric = Metric.Euclidean): DataFrame = {
-    val probed = probedClusters(model, query, probes, metric)
-    val candidates = model.assigned.join(broadcast(probed), Seq("cluster_id"), "left_semi")
-    Knn.searchPrefixRerank(candidates, query, k, prefixDim, shortlist, metric)
+    val q = Knn.QueryRow(query)
+    val candidates = inClusters(model.assigned, probedIds(model.probeCentroids, q, probes, metric))
+    Knn.searchPrefixRerank(candidates, q, k, prefixDim, shortlist, metric)
   }
 
   /** Three-level BINARY serving funnel: IVF probe pruning → Hamming
@@ -445,13 +505,11 @@ object IvfIndex {
       probes: Int,
       shortlist: Int,
       metric: Metric = Metric.Euclidean): DataFrame = {
-    val probed = probedClusters(model, query, probes, metric)
-    val pruned = model.assigned
-      .join(broadcast(probed), Seq("cluster_id"), "left_semi")
+    val q = Knn.QueryRow(query.withColumn("qcode", VectorOps.binaryCodes(col("qvec"))))
+    val pruned = inClusters(model.assigned, probedIds(model.probeCentroids, q, probes, metric))
     val candidates =
       if (pruned.columns.contains("bcode")) pruned
       else pruned.withColumn("bcode", VectorOps.binaryCodes(col("embedding")))
-    val q = query.withColumn("qcode", VectorOps.binaryCodes(col("qvec")))
     Knn.searchHammingRerank(candidates, q, k, shortlist, metric)
   }
 
@@ -478,11 +536,10 @@ object IvfIndex {
       k: Int,
       probes: Int = 32,
       filterIds: Option[DataFrame] = None): DataFrame = {
-    val probed = probedClusters(centroids, query, probes, Metric.Euclidean, Seq("cluster_id"))
-    val luts = query.crossJoin(broadcast(books))
-      .select(VectorOps.pqLuts(col("qvec"), col("books")).as("luts"))
-    val candidates = codeStore
-      .join(broadcast(probed), Seq("cluster_id"), "left_semi")
+    val q = Knn.QueryRow(query)
+    val luts = books.select(VectorOps.pqLuts(q.literal("qvec"), col("books")).as("luts"))
+    val candidates = inClusters(codeStore,
+      probedIds(ProbeCentroids(centroids), q, probes, Metric.Euclidean))
     // Metadata filtering composes PRE-top-k (the reference's filtered
     // query: predicate evaluation precedes ranking, O4 × O6): the code
     // store carries no metadata at 100 TB — the caller derives the
@@ -534,10 +591,11 @@ object IvfIndex {
     * `Σ_sub luts_c[sub][codes[sub]] ≈ ‖q − v‖²`. Cost of the LUT build
     * is ≤ probes·m·|book| doubles — a tiny broadcast frame keyed by
     * cluster_id — and the candidate scan stays m lookups + m−1 adds per
-    * record. The inner broadcast join on cluster_id prunes to the probed
-    * clusters AND delivers each candidate its cluster's table in one
-    * step (partition pruning when the code store is disk-partitioned by
-    * cluster_id, same as [[queryAdc]]). Output `(id, distance)`
+    * record. The probe runs on the driver ([[probe]]): the centroids and
+    * the store are filtered on the probed ids (static partition pruning
+    * when the code store is disk-partitioned by cluster_id, same as
+    * [[queryAdc]]) and the broadcast join on cluster_id delivers each
+    * candidate its cluster's table. Output `(id, distance)`
     * ascending, ties to the smaller id, bounded top-k. */
   def queryAdcResidual(
       centroids: DataFrame,
@@ -546,14 +604,15 @@ object IvfIndex {
       query: DataFrame,
       k: Int,
       probes: Int = 32): DataFrame = {
-    val probed = probedClusters(centroids, query, probes, Metric.Euclidean,
-      Seq("cluster_id", "centroid", "qvec"))
-    val cluts = probed.crossJoin(broadcast(books))
+    val q = Knn.QueryRow(query)
+    val probed = probedIds(ProbeCentroids(centroids), q, probes, Metric.Euclidean)
+    val cluts = inClusters(centroids, probed)
+      .crossJoin(broadcast(books))
       .select(col("cluster_id"),
         VectorOps.pqLuts(
-          VectorOps.residual(col("qvec"), col("centroid")),
+          VectorOps.residual(q.literal("qvec"), col("centroid")),
           col("books")).as("luts"))
-    codeStore
+    inClusters(codeStore, probed)
       .join(broadcast(cluts), Seq("cluster_id"))
       .withColumn("distance", VectorOps.adcDistance(col("codes"), col("luts")))
       // same invalid-candidate guard as queryAdc: NULL sorts first
@@ -1279,40 +1338,27 @@ object IvfIndex {
     * `(probes, distance, id)` rows fan out to the probe points that
     * admit the record's cluster.
     *
-    * Exactness: a cluster's centroid RANK under probedClusters' order
+    * Exactness: a cluster's centroid RANK under [[probe]]'s order
     * (NaN-last, ties to the lower cluster_id — `index.rs:269-272`) is a
-    * total order, so `rank <= p` reproduces `ORDER BY … LIMIT p` for
-    * every p at once; the rank window runs over |centroids| rows —
-    * never the data (same bounded shape as [[queryBatch]]'s probe).
-    * Per-point top-k is the two-phase bounded heap; output
-    * `(probes, id, distance)` is row-identical to [[query]] at each
-    * probe count (law-pinned in IvfIndexSpec). */
+    * total order, so `rank <= p` reproduces [[query]]'s probe list for
+    * every p at once; the ranking runs on the driver over the centroid
+    * rows — never the data. Per-point top-k is the two-phase bounded
+    * heap; output `(probes, id, distance)` is row-identical to [[query]]
+    * at each probe count (law-pinned in IvfIndexSpec). */
   def queryProbeSweep(
       model: Model,
       query: DataFrame,
       k: Int,
       probePoints: Seq[Int],
       metric: Metric = Metric.Euclidean): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(k > 0, "k must be positive")
     require(probePoints.nonEmpty, "probePoints must be non-empty")
     val spark = model.assigned.sparkSession
     import spark.implicits._
-    // partitioned BY THE QUERY VECTOR (non-foldable, so the window stays
-    // partitioned in the optimized plan — a literal query_id constant-
-    // folds away and leaves a partition-less window): one ≤|centroids|-row
-    // partition per query, the bounded shape of queryBatch's probe window
-    val w = Window.partitionBy(col("qvec"))
-      .orderBy(isnan(col("__cdist")).asc, col("__cdist").asc, col("cluster_id").asc)
-    val ranked = model.centroids.crossJoin(broadcast(query))
-      .withColumn("__cdist", metric.distance(col("centroid"), col("qvec")))
-      .where(col("__cdist").isNotNull)
-      .withColumn("__rank", row_number().over(w))
-      .select(col("cluster_id"), col("__rank"))
+    val q = Knn.QueryRow(query)
+    val ranked = probeRanks(model, q, metric).toDF("cluster_id", "__rank")
     val points = probePoints.toDF("probes")
-    val cands = model.assigned
-      .join(broadcast(ranked), Seq("cluster_id"))
-      .crossJoin(broadcast(query))
+    val cands = q.attachTo(model.assigned.join(broadcast(ranked), Seq("cluster_id")))
       .withColumn("distance", metric.distance(col("embedding"), col("qvec")))
       .where(!isnan(col("distance")))
       .select(col("id"), col("__rank"), col("distance"))
@@ -1326,23 +1372,22 @@ object IvfIndex {
   }
 
   /** [[queryProbeSweep]] over SEVERAL models in ONE pass: the models'
-    * centroid/assignment frames are unioned under a `__model` tag, the
-    * rank window partitions by (model, qvec), and the bounded heap runs
-    * per (model, probes) — so a before/after dashboard
-    * (`ivf_compaction_gain`) pays ONE ranking window, ONE data-scan
-    * chain and ONE top-k aggregation instead of one each per model
-    * (guide §2.4: two operations keyed the same way share one
-    * exchange). Output `(__model, probes, id, distance)` is
-    * row-identical per model to [[queryProbeSweep]] (law-pinned in
-    * IvfIndexSpec): the window, the rank-prefix fan-out and the heap
-    * are all keyed by the tag, so models never mix. */
+    * assignment frames are unioned under a `__model` tag, each model's
+    * centroids are ranked on the driver ([[probe]]), and the bounded heap
+    * runs per (model, probes) — so a before/after dashboard
+    * (`ivf_compaction_gain`) pays ONE data-scan chain and ONE top-k
+    * aggregation instead of one each per model (guide §2.4: two
+    * operations keyed the same way share one exchange). Output
+    * `(__model, probes, id, distance)` is row-identical per model to
+    * [[queryProbeSweep]] (law-pinned in IvfIndexSpec): the ranks, the
+    * rank-prefix fan-out and the heap are all keyed by the tag, so
+    * models never mix. */
   def queryProbeSweepTagged(
       models: Seq[(String, Model)],
       query: DataFrame,
       k: Int,
       probePoints: Seq[Int],
       metric: Metric = Metric.Euclidean): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(k > 0, "k must be positive")
     require(probePoints.nonEmpty, "probePoints must be non-empty")
     require(models.nonEmpty, "models must be non-empty")
@@ -1350,24 +1395,14 @@ object IvfIndex {
       "model tags must be distinct")
     val spark = models.head._2.assigned.sparkSession
     import spark.implicits._
-    val cents = models.map { case (t, m) =>
-      m.centroids.select(lit(t).as("__model"), col("cluster_id"), col("centroid"))
-    }.reduce(_ unionByName _)
+    val q = Knn.QueryRow(query)
     val asg = models.map { case (t, m) =>
       m.assigned.select(lit(t).as("__model"), col("cluster_id"),
         col("id"), col("embedding"))
     }.reduce(_ unionByName _)
-    val w = Window.partitionBy(col("__model"), col("qvec"))
-      .orderBy(isnan(col("__cdist")).asc, col("__cdist").asc, col("cluster_id").asc)
-    val ranked = cents.crossJoin(broadcast(query))
-      .withColumn("__cdist", metric.distance(col("centroid"), col("qvec")))
-      .where(col("__cdist").isNotNull)
-      .withColumn("__rank", row_number().over(w))
-      .select(col("__model"), col("cluster_id"), col("__rank"))
+    val ranked = taggedRanks(models, q, metric).toDF("__model", "cluster_id", "__rank")
     val points = probePoints.toDF("probes")
-    val cands = asg
-      .join(broadcast(ranked), Seq("__model", "cluster_id"))
-      .crossJoin(broadcast(query))
+    val cands = q.attachTo(asg.join(broadcast(ranked), Seq("__model", "cluster_id")))
       .withColumn("distance", metric.distance(col("embedding"), col("qvec")))
       .where(!isnan(col("distance")))
       .select(col("__model"), col("id"), col("__rank"), col("distance"))
@@ -1383,18 +1418,16 @@ object IvfIndex {
 
   /** [[probeCost]] over SEVERAL models in ONE pass — the cost half of
     * the tagged-union dashboard machinery (see
-    * [[queryProbeSweepTagged]]): one tagged sizes rollup, one tagged
-    * ranking window, one rank-prefix aggregate; totals stay the
+    * [[queryProbeSweepTagged]]): one tagged sizes rollup, one driver-side
+    * ranking per model, one rank-prefix aggregate; totals stay the
     * per-model two-count cross of [[probeCost]]. Output adds `__model`
     * in front of [[probeCost]]'s columns and is otherwise row-identical
     * per model (law-pinned in IvfIndexSpec). */
-
   def probeCostTagged(
       models: Seq[(String, Model)],
       query: DataFrame,
       probesList: Seq[Int],
       metric: Metric = Metric.Euclidean): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(probesList.nonEmpty,
       "probeCost needs at least one probe budget (got an empty probesList)")
     require(models.nonEmpty, "models must be non-empty")
@@ -1402,21 +1435,13 @@ object IvfIndex {
       "model tags must be distinct")
     val spark = models.head._2.assigned.sparkSession
     import spark.implicits._
-    val cents = models.map { case (t, m) =>
-      m.centroids.select(lit(t).as("__model"), col("cluster_id"), col("centroid"))
-    }.reduce(_ unionByName _)
     val asg = models.map { case (t, m) =>
       m.assigned.select(lit(t).as("__model"), col("cluster_id"))
     }.reduce(_ unionByName _)
-    val w = Window.partitionBy(col("__model"), col("qvec"))
-      .orderBy(isnan(col("__cdist")).asc, col("__cdist").asc, col("cluster_id").asc)
     val sizes = asg.groupBy(col("__model"), col("cluster_id"))
       .agg(count(lit(1)).as("__csz"))
-    val ranked = cents.crossJoin(broadcast(query))
-      .withColumn("__cdist", metric.distance(col("centroid"), col("qvec")))
-      .where(col("__cdist").isNotNull)
-      .withColumn("__rank", row_number().over(w))
-      .select(col("__model"), col("cluster_id"), col("__rank"))
+    val ranked = taggedRanks(models, Knn.QueryRow(query), metric)
+      .toDF("__model", "cluster_id", "__rank")
       .join(sizes, Seq("__model", "cluster_id"), "left_outer")
     val tags = models.map(_._1).toDF("__model")
     // totals per model as two single-partition counts (the [[probeCost]]
@@ -1427,8 +1452,8 @@ object IvfIndex {
     // suffices (r15)
     val totals = models.map { case (t, m) =>
       m.assigned.agg(count(lit(1)).as("store_rows"))
-        .crossJoin(m.centroids.agg(count(lit(1)).as("store_clusters")))
-        .select(lit(t).as("__model"), col("store_rows"), col("store_clusters"))
+        .select(lit(t).as("__model"), col("store_rows"),
+          lit(m.probeCentroids.rowCount).as("store_clusters"))
     }.reduce(_ unionByName _)
     probesList.distinct.toDF("probes").crossJoin(tags)
       .join(broadcast(ranked),

@@ -1,8 +1,11 @@
 package graft.operators
 
 import graft.types.Metric
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.StructType
 
 /** Exact k-nearest-neighbor search (reference `src/cores/index.rs:168-214`,
   * minus the IVF pruning which lives in [[IvfIndex]]).
@@ -27,10 +30,44 @@ import org.apache.spark.sql.functions._
   */
 object Knn {
 
+  /** A single-vector query resolved on the driver: the one row of a query
+    * frame (`None` for a zero-row frame) and the frame's schema. The row
+    * is small and the query is answered in one action anyway, so it rides
+    * the plan as typed literals ([[attachTo]]) instead of a broadcast
+    * cross join: a warm single-query plan is one scan job over the store,
+    * with no broadcast exchange and no nested-loop join. */
+  private[operators] final case class QueryRow(schema: StructType, row: Option[Row]) {
+
+    /** Column `name` as a typed literal; a typed null for a zero-row frame. */
+    def literal(name: String): Column =
+      ColumnBridge.column(Literal.create(
+        row.map(_.get(schema.fieldIndex(name))).orNull, schema(name).dataType))
+
+    /** `records` with every query column attached as a literal. A zero-row
+      * query attaches typed nulls under a false filter, so the result is
+      * empty and keeps its schema. */
+    def attachTo(records: DataFrame): DataFrame = {
+      val attached = records.withColumns(schema.fieldNames.map(n => n -> literal(n)).toMap)
+      if (row.isEmpty) attached.where(lit(false)) else attached
+    }
+  }
+
+  private[operators] object QueryRow {
+    /** Collect the query frame: no job for a local frame, one job for a
+      * computed one. */
+    def apply(query: DataFrame): QueryRow = {
+      val rows = query.collect()
+      require(rows.length <= 1,
+        s"a single-vector query takes a one-row query frame, got ${rows.length} rows")
+      QueryRow(query.schema, rows.headOption)
+    }
+  }
+
   /** Single-query search. `query` is a one-row frame with column `qvec`
-    * (kept as a frame, not a collected literal, so the same code path works
-    * when the query vector is itself the result of a computation). It is
-    * broadcast — never a shuffle. */
+    * (kept as a frame, not a literal argument, so the same code path works
+    * when the query vector is itself the result of a computation). Its row
+    * is collected to the driver and attached as literals ([[QueryRow]]);
+    * a zero-row frame gives an empty result, more rows fail. */
   def search(
       records: DataFrame,
       query: DataFrame,
@@ -38,7 +75,17 @@ object Knn {
       metric: Metric = Metric.Euclidean,
       radius: Double = Double.PositiveInfinity,
       filter: Column = lit(true),
-      dim: Option[Int] = None): DataFrame = {
+      dim: Option[Int] = None): DataFrame =
+    search(records, QueryRow(query), k, metric, radius, filter, dim)
+
+  private[operators] def search(
+      records: DataFrame,
+      query: QueryRow,
+      k: Int,
+      metric: Metric,
+      radius: Double,
+      filter: Column,
+      dim: Option[Int]): DataFrame = {
     require(k > 0, "k must be positive") // reference database.rs:321-325
     val dist = metric.distance(col("embedding"), col("qvec"))
     val dimOk = dim match { // O20, reference database.rs:189-199 call site 319
@@ -46,8 +93,7 @@ object Knn {
         Metric.validDimension(col("qvec"), d)
       case None => lit(true)
     }
-    records
-      .crossJoin(broadcast(query))
+    query.attachTo(records)
       .where(dimOk)
       .withColumn("distance", dist)
       .where(!isnan(col("distance")) && col("distance") <= lit(radius))
@@ -81,13 +127,21 @@ object Knn {
       k: Int,
       prefixDim: Int,
       shortlist: Int,
-      metric: Metric = Metric.Euclidean): DataFrame = {
+      metric: Metric = Metric.Euclidean): DataFrame =
+    searchPrefixRerank(records, QueryRow(query), k, prefixDim, shortlist, metric)
+
+  private[operators] def searchPrefixRerank(
+      records: DataFrame,
+      query: QueryRow,
+      k: Int,
+      prefixDim: Int,
+      shortlist: Int,
+      metric: Metric): DataFrame = {
     require(k > 0 && shortlist >= k, "need shortlist >= k > 0")
     require(prefixDim > 0, "prefixDim must be positive")
     val pre = metric.distance(
       slice(col("embedding"), 1, prefixDim), slice(col("qvec"), 1, prefixDim))
-    records
-      .crossJoin(broadcast(query))
+    query.attachTo(records)
       .withColumn("__pd", pre)
       .where(col("__pd").isNotNull && !isnan(col("__pd")))
       .orderBy(col("__pd").asc, col("id").asc)
@@ -116,10 +170,17 @@ object Knn {
       query: DataFrame,
       k: Int,
       shortlist: Int,
-      metric: Metric = Metric.Euclidean): DataFrame = {
+      metric: Metric = Metric.Euclidean): DataFrame =
+    searchHammingRerank(records, QueryRow(query), k, shortlist, metric)
+
+  private[operators] def searchHammingRerank(
+      records: DataFrame,
+      query: QueryRow,
+      k: Int,
+      shortlist: Int,
+      metric: Metric): DataFrame = {
     require(k > 0 && shortlist >= k, "need shortlist >= k > 0")
-    records
-      .crossJoin(broadcast(query))
+    query.attachTo(records)
       .withColumn("__h", VectorOps.hammingDistance(col("bcode"), col("qcode")))
       // a null Hamming distance (null/ragged codes) must not fill
       // shortlist slots: Spark sorts nulls FIRST ascending — the same
@@ -154,8 +215,7 @@ object Knn {
       metric: Metric = Metric.Euclidean): DataFrame = {
     require(shortlists.nonEmpty, "need at least one shortlist budget")
     require(k > 0 && shortlists.min >= k, "need every shortlist >= k > 0")
-    val top = graft.Caching.ensureCached(records
-      .crossJoin(broadcast(query))
+    val top = graft.Caching.ensureCached(QueryRow(query).attachTo(records)
       .withColumn("__h", VectorOps.hammingDistance(col("bcode"), col("qcode")))
       .where(col("__h").isNotNull) // same invalid-candidate guard as the single-budget funnel
       .orderBy(col("__h").asc, col("id").asc)
@@ -220,8 +280,7 @@ object Knn {
       oneMinusLam: Double,
       metric: Metric = Metric.Euclidean): DataFrame = {
     require(k > 0 && shortlist >= k, "need shortlist >= k > 0")
-    records
-      .crossJoin(broadcast(query))
+    QueryRow(query).attachTo(records)
       .withColumn("__dq", metric.distance(col("embedding"), col("qvec")))
       .where(col("__dq").isNotNull && !isnan(col("__dq")))
       .orderBy(col("__dq").asc, col("id").asc)

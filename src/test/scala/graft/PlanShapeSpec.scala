@@ -104,13 +104,19 @@ class PlanShapeSpec extends SparkSpec {
     val disk = IvfIndex.Model(c, spark.read.parquet(path))
     val q = r.where(col("id") === 0).select(col("embedding").as("qvec"))
     val df = IvfIndex.query(disk, q, 10, probes = 3, Metric.Euclidean)
-    // the probed-cluster semi join must reach the scan as partition
-    // pruning (dynamic, via the broadcast probe list)
-    val p = plan(df)
-    assert(p.contains("dynamicpruning") || p.contains("PartitionFilters: [dynamic"),
-      p.linesIterator.filter(_.contains("PartitionFilters")).mkString("\n"))
+    // the driver-side probe list must reach the scan as STATIC partition
+    // pruning: a cluster_id filter naming exactly the probed ids, and only
+    // those partitions read
+    val got = df.collect()
+      .map(r0 => (r0.getAs[Long]("id"), r0.getAs[Double]("distance"))).toSet
+    val probed = ProbeReference.probedIds(c, q, 3, Metric.Euclidean).toSet
+    val scans = ProbeReference.fileScans(df)
+    assert(scans.size === 1, plan(df))
+    assert(ProbeReference.partitionFilterIds(scans.head) === Some(probed),
+      plan(df).linesIterator.filter(_.contains("PartitionFilters")).mkString("\n"))
+    assert(scans.head.metrics("numPartitions").value ===
+      (probed intersect ProbeReference.storeClusters(path)).size)
     // and the pruned-scan path returns exactly what the in-memory path does
-    val got = df.select("id", "distance").collect().map(r0 => (r0.getLong(0), r0.getDouble(1))).toSet
     val want = IvfIndex.query(mem, q, 10, probes = 3, Metric.Euclidean)
       .select("id", "distance").collect().map(r0 => (r0.getLong(0), r0.getDouble(1))).toSet
     assert(got === want)
@@ -148,10 +154,18 @@ class PlanShapeSpec extends SparkSpec {
       .write.mode("overwrite").partitionBy("cluster_id").parquet(path)
     val q = r.where(col("id") === 0).select(col("embedding").as("qvec"))
     val df = IvfIndex.queryAdc(c, spark.read.parquet(path), books, q, 10, probes = 3)
-    val p = plan(df)
-    assert(p.contains("dynamicpruning") || p.contains("PartitionFilters: [dynamic"),
-      p.linesIterator.filter(_.contains("PartitionFilters")).mkString("\n"))
     assert(df.collect().length === 10)
+    // static partition pruning from the driver-side probe list: the code
+    // store's scan filters cluster_id on exactly the probed ids and reads
+    // only those partitions
+    val probed = ProbeReference.probedIds(c, q, 3, Metric.Euclidean).toSet
+    val store = ProbeReference.fileScans(df).filter(_.relation.location.rootPaths
+      .exists(_.toString.contains(new java.io.File(path).getName)))
+    assert(store.size === 1, plan(df))
+    assert(ProbeReference.partitionFilterIds(store.head) === Some(probed),
+      plan(df).linesIterator.filter(_.contains("PartitionFilters")).mkString("\n"))
+    assert(store.head.metrics("numPartitions").value ===
+      (probed intersect ProbeReference.storeClusters(path)).size)
   }
 
   test("bucket-partitioned LSH store: probe query prunes partitions at the scan") {

@@ -1,0 +1,53 @@
+package graft
+
+import graft.types.Metric
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{In, InSet, Literal}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.functions._
+
+/** Test-side references for the single-query probe. */
+object ProbeReference extends AdaptiveSparkPlanHelper {
+
+  /** The Spark-side probe ranking the single-query paths ran before the
+    * probe moved to the driver: rank every centroid by distance to the
+    * one-row query (null distances excluded, NaN last, ties to the lower
+    * cluster_id) and keep the nearest `probes` cluster ids. */
+  def probedIds(centroids: DataFrame, query: DataFrame, probes: Int, metric: Metric): Seq[Int] =
+    centroids
+      .crossJoin(broadcast(query))
+      .withColumn("__cdist", metric.distance(col("centroid"), col("qvec")))
+      .where(col("__cdist").isNotNull)
+      .orderBy(isnan(col("__cdist")).asc, col("__cdist").asc, col("cluster_id").asc)
+      .limit(probes)
+      .select(col("cluster_id"))
+      .collect().map(_.getInt(0)).toSeq
+
+  /** The parquet scans in `df`'s executed plan, adaptive query stages
+    * included. Run `df` first, so the adaptive plan is final and the scan
+    * metrics are filled in. */
+  def fileScans(df: DataFrame): Seq[FileSourceScanExec] =
+    collect(df.queryExecution.executedPlan) { case s: FileSourceScanExec => s }
+
+  /** The operator names of `df`'s executed plan, adaptive query stages
+    * included (a cached relation's own build plan is not part of it). */
+  def operatorNames(df: DataFrame): Seq[String] =
+    collect(df.queryExecution.executedPlan) { case p => p.nodeName }
+
+  /** The cluster ids a scan's static partition filters admit: the values
+    * of its `cluster_id IN (...)` filter, or `None` when it has none. */
+  def partitionFilterIds(scan: FileSourceScanExec): Option[Set[Int]] =
+    scan.partitionFilters.collectFirst {
+      case In(a, values) if a.references.exists(_.name == "cluster_id") =>
+        values.map { case l: Literal => l.value.asInstanceOf[Int] }.toSet
+      case InSet(a, values) if a.references.exists(_.name == "cluster_id") =>
+        values.map(_.asInstanceOf[Int])
+    }
+
+  /** The `cluster_id=<n>` partition directories under a store path. */
+  def storeClusters(path: String): Set[Int] =
+    new java.io.File(path).listFiles().map(_.getName)
+      .collect { case n if n.startsWith("cluster_id=") => n.stripPrefix("cluster_id=").toInt }
+      .toSet
+}

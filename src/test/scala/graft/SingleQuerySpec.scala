@@ -1,0 +1,123 @@
+package graft
+
+import java.util.concurrent.atomic.AtomicInteger
+
+import graft.operators.{IvfIndex, Knn}
+import graft.types.Metric
+import org.apache.spark.graft.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+/** The single-vector query paths resolve the query row and the probe list
+  * on the driver: a warm query plans as one scan job, a zero-row query
+  * frame answers empty, a multi-row one fails, and a computed query frame
+  * answers like a local one. */
+class SingleQuerySpec extends SparkSpec {
+  import spark.implicits._
+
+  private val dim = 16
+
+  private lazy val records = {
+    val rnd = new scala.util.Random(7)
+    (0 until 600).map { i =>
+      (i.toLong, Seq.fill(dim)(rnd.nextGaussian().toFloat), Map("label" -> (i % 3).toString))
+    }.toDF("id", "embedding", "metadata").cache()
+  }
+
+  private lazy val centroids = records.where(col("id") < 12)
+    .select(col("id").cast("int").as("cluster_id"), col("embedding").as("centroid"))
+
+  private lazy val model = {
+    val assigned = Caching.ensureCached(IvfIndex.assign(records, centroids, Metric.Euclidean))
+    assigned.count()
+    IvfIndex.Model(centroids, assigned)
+  }
+
+  /** The `qvec0` shape of the catalog: the query vector read from the store. */
+  private def computedQuery(id: Long): DataFrame =
+    records.where(col("id") === id).select(col("embedding").as("qvec"))
+
+  private def localQuery(id: Long): DataFrame =
+    Seq(Tuple1(records.where(col("id") === id).select("embedding").as[Seq[Float]].head()))
+      .toDF("qvec")
+
+  /** Jobs started while building `df` and collecting it. */
+  private def jobsToRun(df: => DataFrame): (Int, DataFrame) = {
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val built = df
+      built.collect()
+      ListenerDrain(spark.sparkContext)
+      (jobs.get(), built)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private def assertNoBroadcast(df: DataFrame): Unit = {
+    val ops = ProbeReference.operatorNames(df)
+    assert(!ops.exists(o => o.contains("BroadcastExchange") || o.contains("BroadcastNestedLoopJoin")),
+      df.queryExecution.executedPlan.toString)
+  }
+
+  test("a warm IVF query and an exact search each run exactly one job, with no broadcast") {
+    val q = localQuery(5)
+    IvfIndex.query(model, localQuery(3), 10, probes = 4).collect() // warms the centroid memo
+    val (ivfJobs, ivf) = jobsToRun(IvfIndex.query(model, q, 10, probes = 4))
+    assert(ivfJobs === 1)
+    assertNoBroadcast(ivf)
+    val (filteredJobs, filtered) = jobsToRun(IvfIndex.query(model, q, 10,
+      probes = 4, filter = col("metadata")("label") === "1"))
+    assert(filteredJobs === 1)
+    assertNoBroadcast(filtered)
+    val (exactJobs, exact) = jobsToRun(Knn.search(model.assigned, q, 10))
+    assert(exactJobs === 1)
+    assertNoBroadcast(exact)
+  }
+
+  private val paths: Seq[(String, DataFrame => DataFrame)] = Seq(
+    "IvfIndex.query" -> (q => IvfIndex.query(model, q, 10, probes = 4)),
+    "Knn.search" -> (q => Knn.search(records, q, 10)),
+    "IvfIndex.queryPrefixRerank" -> (q => IvfIndex.queryPrefixRerank(model, q, 10,
+      probes = 4, prefixDim = 8, shortlist = 40)),
+    "Knn.searchPrefixRerank" -> (q => Knn.searchPrefixRerank(records, q, 10,
+      prefixDim = 8, shortlist = 40)),
+    "IvfIndex.queryHammingRerank" -> (q => IvfIndex.queryHammingRerank(model, q, 10,
+      probes = 4, shortlist = 40)))
+
+  test("a zero-row query frame answers empty with the unchanged schema") {
+    paths.foreach { case (name, run) =>
+      val one = run(localQuery(5))
+      val none = run(localQuery(5).limit(0))
+      assert(none.collect().isEmpty, name)
+      assert(none.schema === one.schema, name)
+      val noneComputed = run(computedQuery(-1L))
+      assert(noneComputed.collect().isEmpty, name)
+      assert(noneComputed.schema === one.schema, name)
+    }
+  }
+
+  test("a two-row query frame fails with a clear message") {
+    val two = records.where(col("id") < 2).select(col("embedding").as("qvec"))
+    paths.foreach { case (name, run) =>
+      val e = intercept[IllegalArgumentException](run(two).collect())
+      assert(e.getMessage.contains("one-row query frame, got 2 rows"), s"$name: ${e.getMessage}")
+    }
+  }
+
+  test("a computed query frame answers exactly like a local one") {
+    Seq(0L, 5L, 17L).foreach { id =>
+      paths.foreach { case (name, run) =>
+        def answer(q: DataFrame) =
+          run(q).select("id", "distance").as[(Long, Double)].collect().toSeq
+        val local = answer(localQuery(id))
+        assert(local.nonEmpty, name)
+        assert(answer(computedQuery(id)) === local, s"$name, query $id")
+      }
+    }
+  }
+}

@@ -247,18 +247,25 @@ class StreamingSpec extends SparkSpec {
     assert(new java.io.File(streamStore).listFiles()
       .exists(_.getName.startsWith("cluster_id=")))
 
-    // probe query over the STREAM-written store: DPP at the scan, and
-    // results identical to the in-memory model
+    // probe query over the STREAM-written store: static partition pruning
+    // at the scan, and results identical to the in-memory model
     val disk = IvfIndex.Model(centroids, spark.read.parquet(streamStore))
-    // query vector from a FILTERED scan: DPP requires a selective
-    // predicate on the pruning side (a bare literal frame won't trigger it)
+    // query vector from a filtered scan (a computed query frame)
     val qv = spark.read.parquet(inDir).where(col("id") === 0)
       .select(col("embedding").as("qvec"))
     val probed = IvfIndex.query(disk, qv, 10, probes = 2, Metric.Euclidean)
+    val got = probed.collect()
+      .map(r => (r.getAs[Long]("id"), r.getAs[Double]("distance"))).toSet
+    // the scan's partition filter names exactly the probed cluster ids,
+    // and only those partitions are read
+    val probedIds = ProbeReference.probedIds(centroids, qv, 2, Metric.Euclidean).toSet
+    val scans = ProbeReference.fileScans(probed)
     val p = probed.queryExecution.executedPlan.toString
-    assert(p.contains("dynamicpruning") || p.contains("PartitionFilters: [dynamic"),
+    assert(scans.size === 1, p)
+    assert(ProbeReference.partitionFilterIds(scans.head) === Some(probedIds),
       p.linesIterator.filter(_.contains("PartitionFilters")).mkString("\n"))
-    val got = probed.select("id", "distance").as[(Long, Double)].collect().toSet
+    assert(scans.head.metrics("numPartitions").value ===
+      (probedIds intersect ProbeReference.storeClusters(streamStore)).size)
     val want = IvfIndex.query(batchModel, qv, 10, probes = 2, Metric.Euclidean)
       .select("id", "distance").as[(Long, Double)].collect().toSet
     assert(got === want && got.nonEmpty)
