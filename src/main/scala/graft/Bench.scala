@@ -114,7 +114,7 @@ object Bench {
       // knn+semantic ≈ 12 s, decon+substring+rank frames ≈ 12 s — max
       // lane ≈ 13 s vs 18 s when the rank builds trailed the MinHash
       // lane. Cross-lane memo dependencies are SAFE, not racy: the
-      // memos are ConcurrentHashMap.computeIfAbsent, so when lane 3's
+      // memos are `SessionMemo` (computeIfAbsent), so when lane 3's
       // pagerank reaches for the MinHash pair list while lane 1's
       // dedup_apply is still building it, it blocks on the same
       // compute and reuses the one result.

@@ -15,13 +15,6 @@ object Probe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    if (name == "ivfprof") { ivfProfile(spark, dir); spark.stop(); return }
-    if (name == "mhprof") { minhashProfile(spark, dir); spark.stop(); return }
-    if (name == "balprof") { balancedProfile(spark, dir); spark.stop(); return }
-    if (name == "ccprof") { corpusCleanProfile(spark, dir); spark.stop(); return }
-    if (name == "groupsprof") { groupsProfile(spark, dir); spark.stop(); return }
-    if (name == "contprof") { containmentProfile(spark, dir); spark.stop(); return }
-    if (name == "fzprof") { fuzzyProfile(spark, dir); spark.stop(); return }
     // `explainAll <outDir> <q1> <q2> ...` — the r14 measurement sweep:
     // in ONE session (memos shared like the bench), per query: dump
     // `.explain("formatted")` to <outDir>/<q>.txt, then time THREE full
@@ -72,271 +65,5 @@ object Probe {
       println(f"RUN$i: $n rows in ${(System.nanoTime() - t0) / 1e9}%.2f s")
     }
     spark.stop()
-  }
-
-  /** Blocking-volume meter for the fuzzy-match pipeline (the
-    * metered-not-assumed rule from the containment restructure): key
-    * count, deletion-key bucket-size histogram, candidate-pair volume
-    * before the verify kernel, and survivors — the numbers that decide
-    * whether a corpus needs a maxBucket-style cap before SymSpell
-    * blocking is allowed to run on it. */
-  private def fuzzyProfile(spark: SparkSession, dir: String): Unit = {
-    import graft.functions.NativeExprs
-    import org.apache.spark.sql.functions._
-    def t[A](label: String)(f: => A): A = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"PHASE $label: ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-    }
-    val names = spark.read.parquet(s"$dir/customer.parquet")
-      .select(col("c_custkey").as("id"),
-        graft.operators.TextOps.nfc(col("c_name")).as("s"))
-      .where(col("id") < 2500 && col("s").isNotNull && length(col("s")) <= 24)
-    val keyed = graft.Caching.ensureCached(
-      names.select(col("id"),
-        explode(NativeExprs.deletionVariants(col("s"), 2, 24)).as("key")))
-    println("names: " + names.count() + ", keyed rows: " + t("keys")(keyed.count()))
-    println("bucket histogram (size -> n_keys):")
-    t("hist")(keyed.groupBy(col("key")).agg(count(lit(1)).as("b"))
-      .groupBy(col("b")).agg(count(lit(1)).as("n")).orderBy(col("b").desc)
-      .limit(12).collect().foreach(r => println("  " + r)))
-    val cand = keyed.as("a").join(keyed.as("b"), Seq("key"))
-      .where(col("a.id") < col("b.id"))
-      .select(col("a.id").as("ia"), col("b.id").as("ib"))
-    println("candidate pairs (pre-distinct): " + t("cand")(cand.count()))
-    println("distinct candidate pairs: " + t("dist")(cand.distinct().count()))
-    val pairs = graft.operators.Fuzzy.matchPairs(names, maxDist = 2, prefixLen = 24)
-    println("verified pairs: " + t("verify")(pairs.count()))
-  }
-
-  /** Stage attribution + volumes for the containment pipeline. */
-  private def containmentProfile(spark: SparkSession, dir: String): Unit = {
-    import graft.operators.{Dedup, TextOps}
-    import org.apache.spark.sql.functions._
-    def t[A](label: String)(f: => A): A = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"PHASE $label: ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-    }
-    val d = spark.read.parquet(s"$dir/documents.parquet")
-    t("warmup-read")(d.write.format("noop").mode("overwrite").save())
-    val sig = graft.Caching.ensureCached(
-      Dedup.minhashSignature(d, 3, 16)
-        .select(col("doc_id"), col("__sig"), col("__shh")))
-    t("sig-build")(sig.write.format("noop").mode("overwrite").save())
-    val postings = sig.select(col("doc_id"),
-      explode(array_distinct(col("__shh"))).as("__h"))
-    println("postings: " + t("postings-count")(postings.count()))
-    val dfs = postings.groupBy(col("__h")).agg(count(lit(1)).as("__df"))
-    println("df histogram (df -> n_shingles):")
-    t("df-hist")(dfs.groupBy(col("__df")).agg(count(lit(1)).as("n"))
-      .orderBy(col("__df")).limit(20).collect().foreach(r => println("  " + r)))
-    val rare = dfs.where(col("__df") >= 2 && col("__df") <= 10).select(col("__h"))
-    val rp = postings.join(rare, Seq("__h"))
-    println("rare postings: " + t("rare-postings")(rp.count()))
-    val candidates = rp.select(col("__h"), col("doc_id").as("doc_id_a"))
-      .join(rp.select(col("__h"), col("doc_id").as("doc_id_b")), Seq("__h"))
-      .where(col("doc_id_a") < col("doc_id_b"))
-      .select("doc_id_a", "doc_id_b")
-    println("candidate pairs (pre-distinct): " + t("cand-raw")(candidates.count()))
-    val cd = candidates.distinct()
-    println("candidate pairs (distinct): " + t("cand-distinct")(cd.count()))
-    println("avg shingle array size: " +
-      sig.select(avg(size(col("__shh")))).collect()(0))
-    // verify-stage alternatives over the SAME distinct candidate set
-    val cands = cd.persist()
-    println("cands cached: " + cands.count())
-    def verifySemi(): org.apache.spark.sql.DataFrame = {
-      val candIds = cands.select(col("doc_id_a").as("doc_id"))
-        .union(cands.select(col("doc_id_b").as("doc_id"))).distinct()
-      val candSh = sig.join(candIds, Seq("doc_id"), "left_semi")
-      val shA = candSh.select(col("doc_id").as("doc_id_a"),
-        array_distinct(col("__shh")).as("__sa"))
-      val shB = candSh.select(col("doc_id").as("doc_id_b"),
-        array_distinct(col("__shh")).as("__sb"))
-      cands.join(shA, Seq("doc_id_a")).join(shB, Seq("doc_id_b"))
-        .select(col("doc_id_a"), col("doc_id_b"),
-          (size(array_intersect(col("__sa"), col("__sb"))).cast("double") /
-            least(size(col("__sa")), size(col("__sb"))).cast("double")).as("containment"))
-        .where(col("containment") >= 0.8)
-    }
-    def verifyBcast(): org.apache.spark.sql.DataFrame = {
-      val sh = sig.select(col("doc_id"), array_distinct(col("__shh")).as("__s"))
-      val shA = sh.select(col("doc_id").as("doc_id_a"), col("__s").as("__sa"))
-      val shB = sh.select(col("doc_id").as("doc_id_b"), col("__s").as("__sb"))
-      cands.join(broadcast(shA), Seq("doc_id_a")).join(broadcast(shB), Seq("doc_id_b"))
-        .select(col("doc_id_a"), col("doc_id_b"),
-          (size(array_intersect(col("__sa"), col("__sb"))).cast("double") /
-            least(size(col("__sa")), size(col("__sb"))).cast("double")).as("containment"))
-        .where(col("containment") >= 0.8)
-    }
-    (1 to 2).foreach { i =>
-      t(s"verify-semi-$i")(verifySemi().write.format("noop").mode("overwrite").save())
-      t(s"verify-bcast-$i")(verifyBcast().write.format("noop").mode("overwrite").save())
-    }
-    t("full-query")(SparkEntry.queries("dedup_containment")(spark, dir)
-      .write.format("noop").mode("overwrite").save())
-    t("full-query-again")(SparkEntry.queries("dedup_containment")(spark, dir)
-      .write.format("noop").mode("overwrite").save())
-    import graft.operators.Dedup
-    val d2 = graft.sources.Records.table(spark, dir, "documents")
-    t("op-no-orderby")(Dedup.containmentPairs(d2, 3, 16, 10, 0.8)
-      .write.format("noop").mode("overwrite").save())
-    t("op-no-orderby-again")(Dedup.containmentPairs(d2, 3, 16, 10, 0.8)
-      .write.format("noop").mode("overwrite").save())
-  }
-
-  /** Stage attribution for the session-lifecycle group-map builds: the
-    * MinHash pair pipeline, the SimHash pair pipeline, and the CC label
-    * propagation, timed separately (the Bench warmup pays these once). */
-  private def groupsProfile(spark: SparkSession, dir: String): Unit = {
-    import graft.operators.Dedup
-    import org.apache.spark.sql.functions._
-    def t[A](label: String)(f: => A): A = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"PHASE $label: ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-    }
-    val d = spark.read.parquet(s"$dir/documents.parquet")
-    t("warmup-read")(d.write.format("noop").mode("overwrite").save())
-    val mh = Dedup.minhashLsh(d, shingleN = 3, perms = 16, bands = 4,
-      threshold = 0.5, maxBucket = Dedup.DefaultPipelineMaxBucket)
-      .select(col("doc_id_a"), col("doc_id_b"))
-    t("minhash-pairs")(mh.write.format("noop").mode("overwrite").save())
-    t("minhash-pairs-again")(mh.write.format("noop").mode("overwrite").save())
-    t("cc-groups")(Dedup.duplicateGroups(mh)
-      .write.format("noop").mode("overwrite").save())
-    val sh = Dedup.simhashPairs(d, maxHamming = 8,
-      maxBucket = Dedup.DefaultPipelineMaxBucket)
-      .select(col("doc_id_a"), col("doc_id_b"))
-    t("simhash-pairs")(sh.write.format("noop").mode("overwrite").save())
-    val multi = mh.unionByName(sh).distinct()
-    t("multi-pairs")(multi.write.format("noop").mode("overwrite").save())
-    println(s"pairs: mh=${mh.count()} sh=${sh.count()} multi=${multi.count()}")
-    t("cc-multi")(Dedup.duplicateGroups(multi)
-      .write.format("noop").mode("overwrite").save())
-  }
-
-  /** Per-round timing for the balanced (two-level) build. */
-  private def balancedProfile(spark: SparkSession, dir: String): Unit = {
-    import graft.operators.IvfIndex
-    import graft.sources.Records
-    import graft.types.Metric
-    def t[A](label: String)(f: => A): A = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"PHASE $label: ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-    }
-    val r = Records.fromEmbeddings(spark, dir)
-    t("warmup-read")(r.write.format("noop").mode("overwrite").save())
-    val n = t("count")(r.count())
-    t("fit") {
-      import org.apache.spark.ml.clustering.KMeans
-      import org.apache.spark.ml.functions.array_to_vector
-      val featurized = r.repartition(4, org.apache.spark.sql.functions.col("id"))
-        .withColumn("__features", array_to_vector(org.apache.spark.sql.functions.col("embedding")))
-        .persist()
-      val km = new KMeans().setK(4).setSeed(42L).setMaxIter(10).setTol(1e-3)
-        .setFeaturesCol("__features").setPredictionCol("cluster_id").fit(featurized)
-      featurized.unpersist()
-      println(s"iterations=${km.summary.numIter}")
-    }
-    var m = t("coarse-build")(IvfIndex.build(r, 64, Metric.Euclidean, 42L, kMax = 4))
-    def truncate(df: org.apache.spark.sql.DataFrame) =
-      org.apache.spark.sql.graft.PlanBridge.statsReset(df.localCheckpoint())
-    var round = 0
-    var go = true
-    while (go && round < 32) {
-      t(s"round-$round plan") {
-        IvfIndex.splitKWayKeepCache(m, 64, Metric.Euclidean, 5, IvfIndex.DefaultMaxWay)
-      } match {
-        case None => go = false
-        case Some((refined, members)) =>
-          m = t(s"round-$round checkpoint")(
-            IvfIndex.Model(refined.centroids, truncate(refined.assigned)))
-          members.unpersist()
-          round += 1
-      }
-    }
-    t("final-stats")(m.assigned.groupBy("cluster_id").count()
-      .agg(org.apache.spark.sql.functions.max("count")).show())
-  }
-
-  /** Stage timing for the corpus_clean verdict-column pass. */
-  private def corpusCleanProfile(spark: SparkSession, dir: String): Unit = {
-    import graft.operators.TextOps
-    import org.apache.spark.sql.functions._
-    def t(label: String)(df: org.apache.spark.sql.DataFrame): Unit = {
-      val t0 = System.nanoTime()
-      df.write.format("noop").mode("overwrite").save()
-      println(f"STAGE $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    }
-    val docs = spark.read.parquet(s"$dir/documents.parquet").repartition(col("doc_id"))
-    t("warmup")(docs)
-    val toks = docs.withColumn("__toks", TextOps.tokens(col("text")))
-    t("tokens")(toks.select("doc_id", "__toks"))
-    val stats = toks.withColumn("__stats", TextOps.tokenStats(col("__toks")))
-    t("stats")(stats.select("doc_id", "__stats"))
-    t("lang")(stats.select(col("doc_id"),
-      TextOps.langFromVotes(col("__stats.votes")).as("__lang")))
-    t("quality")(stats.select(col("doc_id"),
-      TextOps.qualityFromStats(col("text"), col("__toks"), col("__stats")).as("__q")))
-    t("sha2")(docs.select(col("doc_id"), sha2(col("text"), 256).as("__h")))
-    val narrow = stats.select(col("doc_id"), sha2(col("text"), 256).as("__h"),
-      TextOps.langFromVotes(col("__stats.votes")).as("__lang"),
-      TextOps.qualityFromStats(col("text"), col("__toks"), col("__stats")).as("__q"))
-    t("narrow-all")(narrow)
-    val persisted = narrow.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    t("narrow-persist-build")(persisted)
-    t("narrow-persist-read")(persisted)
-  }
-
-  /** Stage timing for the MinHash signature pipeline. */
-  private def minhashProfile(spark: SparkSession, dir: String): Unit = {
-    import graft.operators.TextOps
-    import org.apache.spark.sql.functions._
-    def t(label: String)(df: org.apache.spark.sql.DataFrame): Unit = {
-      val t0 = System.nanoTime()
-      df.write.format("noop").mode("overwrite").save()
-      println(f"STAGE $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    }
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-    t("warmup")(docs)
-    val toksDf = docs.repartition(col("doc_id"))
-      .withColumn("__toks", TextOps.tokens(col("text")))
-    t("tokens")(toksDf.select(col("doc_id"), col("__toks")))
-    val sh = toksDf.withColumn("__sh", TextOps.shinglesFromTokens(col("__toks"), 3))
-    t("shingles")(sh.select(col("doc_id"), col("__sh")))
-    val sig = graft.operators.Dedup.minhashSignature(docs, 3, 16)
-    t("signature-full")(sig.select(col("doc_id"), col("__sig")))
-  }
-
-  /** Phase timing for the IVF build path. */
-  private def ivfProfile(spark: SparkSession, dir: String): Unit = {
-    import graft.sources.Records
-    import graft.types.Metric
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    import org.apache.spark.sql.functions._
-    def t[A](label: String)(f: => A): A = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"PHASE $label: ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-    }
-    val records = Records.fromEmbeddings(spark, dir)
-    val n = t("count")(records.count())
-    val k = math.max(1, math.ceil(n.toDouble / 64).toInt)
-    val featurized = records.repartition(16, col("id"))
-      .withColumn("__features", array_to_vector(col("embedding")))
-      .persist()
-    t("persist-materialize")(featurized.count())
-    val model = t("fit") {
-      new KMeans().setK(k).setSeed(42L).setMaxIter(100).setTol(1e-3)
-        .setFeaturesCol("__features").setPredictionCol("cluster_id").fit(featurized)
-    }
-    println(s"iterations=${model.summary.numIter}")
-    featurized.unpersist()
-    import spark.implicits._
-    val centroids = model.clusterCenters.zipWithIndex
-      .map { case (v, i) => (i, v.toArray.map(_.toFloat).toSeq) }.toSeq
-      .toDF("cluster_id", "centroid")
-      .withColumn("centroid", col("centroid").cast("array<float>"))
-    val assigned = graft.operators.IvfIndex.assign(records, centroids, Metric.Euclidean)
-    t("assign-materialize")(assigned.write.format("noop").mode("overwrite").save())
   }
 }

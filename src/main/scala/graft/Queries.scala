@@ -800,17 +800,6 @@ object Queries {
        |SELECT doc_id, split, shard, strt // 512 AS pack_id, strt % 512 AS tok_offset
        |FROM c ORDER BY doc_id""".stripMargin
 
-  /** Corpus-assembly oracle, BPE back half (mirror of [[assemblePacked]]
-    * on `n_tokens_bpe`), parameterized by the keep-set CTE it packs —
-    * shared by `corpus_assemble_bpe` (keep = `kept`) and
-    * `corpus_assemble_dedup_bpe` (keep = `kept2`, the near-dup drop
-    * spliced in). Requires `bseg` ([[sqlBpeSegCtes]]) in scope: pack
-    * budgets are pack_bpe's per-token segmentation replay summed per
-    * kept doc. The `adn` leg is a LEFT JOIN with coalesce-to-0 so a
-    * kept doc whose tokens are ALL empty keeps its Spark-side
-    * `n_tokens_bpe = 0` instead of dropping out of the pack — currently
-    * unreachable (the lang/quality gate requires real tokens), but the
-    * oracle must not encode that reachability argument. */
   /** Per-kept-doc TRAINED-BPE token counts — `adn(doc_id, n_tokens)`,
     * pack_bpe's per-token segmentation replay summed per doc. Requires
     * `bseg` ([[sqlBpeSegCtes]]) in scope; consumers LEFT JOIN and
@@ -822,6 +811,17 @@ object Queries {
        |adn AS (SELECT doc_id, CAST(sum(n_sym) AS BIGINT) AS n_tokens
        |  FROM abdoc JOIN bseg USING (token) WHERE token <> '' GROUP BY doc_id)""".stripMargin
 
+  /** Corpus-assembly oracle, BPE back half (mirror of [[assemblePacked]]
+    * on `n_tokens_bpe`), parameterized by the keep-set CTE it packs —
+    * shared by `corpus_assemble_bpe` (keep = `kept`) and
+    * `corpus_assemble_dedup_bpe` (keep = `kept2`, the near-dup drop
+    * spliced in). Requires `bseg` ([[sqlBpeSegCtes]]) in scope: pack
+    * budgets are pack_bpe's per-token segmentation replay summed per
+    * kept doc. The `adn` leg is a LEFT JOIN with coalesce-to-0 so a
+    * kept doc whose tokens are ALL empty keeps its Spark-side
+    * `n_tokens_bpe = 0` instead of dropping out of the pack — currently
+    * unreachable (the lang/quality gate requires real tokens), but the
+    * oracle must not encode that reachability argument. */
   private def sqlAssembleBpeTail(kept: String): String =
     s"""${sqlBpeDocCounts(kept)},
        |m AS (SELECT d.doc_id,
@@ -873,42 +873,25 @@ object Queries {
     * distributed (one window + one map-side-combinable aggregate, here
     * once per session); consumers do driver math or tiny-frame joins.
     * Session-scoped only: every bench/verify JVM recomputes from
-    * parquet. NOTE: `localCheckpoint` blocks live on executors — fine
-    * for the local[n] bench; a cluster deployment with dynamic
-    * allocation should use reliable `checkpoint()` or a written table. */
-  private val typeTransitionsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def typeTransitions(s: SparkSession, dir: String): DataFrame = {
-    typeTransitionsCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    typeTransitionsCache.computeIfAbsent((s, dir), _ =>
-      org.apache.spark.sql.graft.PlanBridge.statsReset(
-        operators.Events.transitionCounts(events(s, dir))
-          .localCheckpoint(eager = true)))
-  }
+    * parquet. */
+  private val typeTransitionsCache = new SessionMemo[String, DataFrame]
+  private def typeTransitions(s: SparkSession, dir: String): DataFrame =
+    typeTransitionsCache(s, dir)(Caching.truncate(
+      operators.Events.transitionCounts(events(s, dir)), eager = true))
 
-  /** The sign-packed binary-code store `recs + bcode`, memoized per
-    * (session, dir) and persisted — session state for the whole binary
-    * Hamming family (query/rerank/batch/filtered/curve/methods-report):
-    * the codes are deterministic per record, so six queries re-deriving
-    * them per materialization was pure recompute. At 100 TB this IS the
-    * layout: binary codes live next to the vectors as a maintained
-    * column (32× smaller), not as a per-query projection. */
   /** DSIR importance weights over the corpus vs the src0 target,
     * memoized per (session, dir) — the fit-once lifecycle: production
     * fits the hashed-ngram ratio model once per (corpus, target) pair
     * and every sampling/mixing pass reads the weights. Shared by
     * `corpus_dsir` (global top-k) and `corpus_dsir_mix` (per-source
     * quota), which previously each paid the token explode. */
-  private val dsirWeightsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def dsirWeightsMemo(s: SparkSession, dir: String): DataFrame = {
-    dsirWeightsCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    Caching.ensureCached(dsirWeightsCache.computeIfAbsent((s, dir), _ => {
+  private val dsirWeightsCache = new SessionMemo[String, DataFrame]
+  private def dsirWeightsMemo(s: SparkSession, dir: String): DataFrame =
+    Caching.ensureCached(dsirWeightsCache(s, dir) {
       val d = docsSpread(s, dir)
       graft.operators.Corpus.dsirWeights(
         d, d.where(col("source") === "src0").select(col("text")), nBuckets = 64)
-    }))
-  }
+    })
 
   /** The `doc_id < 400` corpus-side MinHash index of `dedup_incremental`
     * (banded keys + shingle hashes), memoized per (session, dir) — the
@@ -917,11 +900,9 @@ object Queries {
     * the query's ~1.4 s. Both frames persist via the `ensureCached`
     * inside [[graft.streaming.DocIngest.corpusIndex]] plus the banded
     * leg here. */
-  private val corpusIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (DataFrame, DataFrame)]()
+  private val corpusIndexCache = new SessionMemo[String, (DataFrame, DataFrame)]
   private def corpusIndexMemo(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    corpusIndexCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    val (banded, hashes) = corpusIndexCache.computeIfAbsent((s, dir), _ => {
+    val (banded, hashes) = corpusIndexCache(s, dir) {
       // same cap-symmetry contract as [[minhashPairs]]: the index is
       // built with the production viral-bucket cap while the
       // dedup_incremental oracle replays the UNCAPPED join — assert at
@@ -943,7 +924,7 @@ object Queries {
           s"cap (${Dedup.DefaultPipelineMaxBucket}): capped gate join no " +
           "longer equals the uncapped oracle — cap the oracle too")
       idx
-    })
+    }
     (Caching.ensureCached(banded), Caching.ensureCached(hashes))
   }
 
@@ -958,11 +939,9 @@ object Queries {
     * census ([[graft.operators.Dedup.bandingCensus]]) audits the raw
     * stored rows. Derived from the memoized signature cache, so writing
     * costs one cached-frame dump, not a second signature pass. */
-  private val dedupStoreCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-  private def dedupStorePath(s: SparkSession, dir: String): String = {
-    dedupStoreCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    dedupStoreCache.computeIfAbsent((s, dir), _ => {
+  private val dedupStoreCache = new SessionMemo[String, String]
+  private def dedupStorePath(s: SparkSession, dir: String): String =
+    dedupStoreCache(s, dir) {
       // sanitized dir (not a hash — hashes can collide across dirs, and a
       // collision would silently serve one corpus's index to the other)
       val path = s"${System.getProperty("java.io.tmpdir")}/graft_dedup_store_" +
@@ -978,17 +957,19 @@ object Queries {
       banded.write.mode("overwrite").partitionBy("band_idx").parquet(s"$path/banded")
       hashes.write.mode("overwrite").parquet(s"$path/hashes")
       path
-    })
-  }
+    }
 
-  private val binStoreCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def binStore(s: SparkSession, dir: String): DataFrame = {
-    binStoreCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    Caching.ensureCached(binStoreCache.computeIfAbsent((s, dir), _ =>
-      recs(s, dir).withColumn("bcode",
-        operators.VectorOps.binaryCodes(col("embedding")))))
-  }
+  /** The sign-packed binary-code store `recs + bcode`, memoized per
+    * (session, dir) and persisted — session state for the whole binary
+    * Hamming family (query/rerank/batch/filtered/curve/methods-report):
+    * the codes are deterministic per record, so six queries re-deriving
+    * them per materialization was pure recompute. At 100 TB this IS the
+    * layout: binary codes live next to the vectors as a maintained
+    * column (32× smaller), not as a per-query projection. */
+  private val binStoreCache = new SessionMemo[String, DataFrame]
+  private def binStore(s: SparkSession, dir: String): DataFrame =
+    Caching.ensureCached(binStoreCache(s, dir)(
+      recs(s, dir).withColumn("bcode", operators.VectorOps.binaryCodes(col("embedding")))))
   private def qvec0(s: SparkSession, dir: String): DataFrame =
     recs(s, dir).where(col("id") === 0).select(col("embedding").as("qvec"))
 
@@ -1008,20 +989,14 @@ object Queries {
     * every query from it (`src/cores/database.rs:70-76`); re-deriving the
     * assignment per query is a batch-harness artifact, and the assignment
     * is deterministic, so results are identical either way. */
-  // Keyed by SESSION (not applicationId): a later session in the same
-  // application must not reuse a frame bound to a stopped session. Entries
-  // whose owning context has stopped are evicted on access (their persisted
-  // blocks died with the context; nothing to unpersist). `ensureCached` on
-  // every access re-persists a frame whose blocks were dropped by an
-  // intervening `clearCache()` (the bench's between-family hygiene).
-  private val fixedModelCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
+  // `ensureCached` on every access re-persists a frame whose blocks were
+  // dropped by an intervening `clearCache()` (the bench's between-family
+  // hygiene).
+  private val fixedModelCache = new SessionMemo[(String, String), DataFrame]
   private def fixedModel(s: SparkSession, dir: String, metric: Metric): IvfIndex.Model = {
-    fixedModelCache.keySet.removeIf(_._1.sparkContext.isStopped)
     val c = fixedCentroids(s, dir)
-    val assigned = fixedModelCache.computeIfAbsent(
-      (s, dir, metric.name),
-      _ => IvfIndex.assign(recs(s, dir), c, metric))
+    val assigned = fixedModelCache(s, (dir, metric.name))(
+      IvfIndex.assign(recs(s, dir), c, metric))
     // NOTE (r15, measured): checkpoint-backing this fixture (the r14
     // Batch-A discipline) was tried and REVERTED — the whole ivf family
     // ran ~2× SLOWER (probe_cost 0.62 → 1.67 s, tuning_curve 1.38 →
@@ -1043,11 +1018,9 @@ object Queries {
     * state the compaction path exists for. Memoized per (session, dir),
     * same rationale as [[fixedModel]]: one churn replay serves every
     * consumer. */
-  private val drainedAssignedCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def drainedAssigned(s: SparkSession, dir: String): DataFrame = {
-    drainedAssignedCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    drainedAssignedCache.computeIfAbsent((s, dir), _ => {
+  private val drainedAssignedCache = new SessionMemo[String, DataFrame]
+  private def drainedAssigned(s: SparkSession, dir: String): DataFrame =
+    drainedAssignedCache(s, dir) {
       val m = fixedModel(s, dir, Metric.Euclidean)
       // consumed twice inside applyDiff (anti-join + upsert split)
       val changes = Caching.ensureCached(
@@ -1062,21 +1035,14 @@ object Queries {
       // every reference — ivf_compaction_gain's physical plan was
       // 11.5k lines / 1232 Exchange nodes, ~3.4 s of per-pass driver
       // planning at sf0.1. A LogicalRDD leaf collapses every reference.
-      // Cluster caveat (r15, per advice — applies to every localCheckpoint
-      // memo here): blocks live on executors with lineage truncated, so
-      // under executor loss / dynamic allocation the fixture is
-      // unrecoverable mid-session; a cluster deployment should use
-      // reliable checkpoint() or a written table instead.
-      val ckpt = org.apache.spark.sql.graft.PlanBridge.statsReset(
-        IvfIndex.applyDiff(m, changes, Metric.Euclidean).assigned
-          .localCheckpoint(eager = true))
+      val ckpt = Caching.truncate(
+        IvfIndex.applyDiff(m, changes, Metric.Euclidean).assigned, eager = true)
       // the eager checkpoint above is the last consumer of `changes`:
       // drop its cache entry now instead of leaving a dead pin until the
       // next clearCache (r14 advice)
       changes.unpersist()
       ckpt
-    })
-  }
+    }
 
   /** The COMPACTED twin of [[drainedAssigned]]: [[IvfIndex.mergeSmall]]
     * at the ceil(n/16) floor over the churned fixture, memoized per
@@ -1084,11 +1050,9 @@ object Queries {
     * consumer (`ivf_merge_stats`, `ivf_compaction_gain`), exactly the
     * [[fixedModel]] discipline: a production maintenance job compacts
     * the store once and every dashboard reads the compacted version. */
-  private val mergedModelCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), IvfIndex.Model]()
-  private def mergedModel(s: SparkSession, dir: String): IvfIndex.Model = {
-    mergedModelCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    val m = mergedModelCache.computeIfAbsent((s, dir), _ => {
+  private val mergedModelCache = new SessionMemo[String, IvfIndex.Model]
+  private def mergedModel(s: SparkSession, dir: String): IvfIndex.Model =
+    mergedModelCache(s, dir) {
       val da = drainedAssigned(s, dir)
       val floor = (da.count() + 15L) / 16L
       val merged = IvfIndex.mergeSmall(
@@ -1097,14 +1061,9 @@ object Queries {
       // the compacted store is a converged maintenance result; truncating
       // the mergeSmall-over-churn lineage keeps every consumer reference a
       // LogicalRDD leaf instead of a re-analyzed plan subtree
-      IvfIndex.Model(
-        org.apache.spark.sql.graft.PlanBridge.statsReset(
-          merged.centroids.localCheckpoint(eager = true)),
-        org.apache.spark.sql.graft.PlanBridge.statsReset(
-          merged.assigned.localCheckpoint(eager = true)))
-    })
-    m
-  }
+      IvfIndex.Model(Caching.truncate(merged.centroids, eager = true),
+        Caching.truncate(merged.assigned, eager = true))
+    }
 
   /** The two-level balanced build (coarse seeded k-means at a forced-tiny
     * kMax + the adaptive-split loop), memoized per (session, dir) with
@@ -1117,8 +1076,7 @@ object Queries {
     * #2 on the bench). The build is deterministic (seeded), so results
     * are identical either way; checkpoint backing survives the bench's
     * between-family clearCache. */
-  private val balancedModelCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), IvfIndex.Model]()
+  private val balancedModelCache = new SessionMemo[String, IvfIndex.Model]
   /** r12: the build behind `ivf_balanced_stats` switched from
     * [[IvfIndex.buildBalanced]] (MLlib coarse fit — engine-internal, so
     * the oracle could only state boolean invariants) to the
@@ -1128,19 +1086,14 @@ object Queries {
     * the adaptive-split loop), but every step SQL-replayable, so the
     * oracle states the exact final cluster census. buildBalanced stays
     * the production fast path, law-pinned in IvfIndexSpec. */
-  private def balancedModel(s: SparkSession, dir: String): IvfIndex.Model = {
-    balancedModelCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    balancedModelCache.computeIfAbsent((s, dir), _ => {
+  private def balancedModel(s: SparkSession, dir: String): IvfIndex.Model =
+    balancedModelCache(s, dir) {
       val m = IvfIndex.buildBalancedRefine(recs(s, dir),
         fixedCentroids(s, dir).where(col("cluster_id") < 4),
         density = 64, Metric.Euclidean, maxRounds = 12)
-      IvfIndex.Model(
-        org.apache.spark.sql.graft.PlanBridge.statsReset(
-          m.centroids.localCheckpoint(eager = true)),
-        org.apache.spark.sql.graft.PlanBridge.statsReset(
-          m.assigned.localCheckpoint(eager = true)))
-    })
-  }
+      IvfIndex.Model(Caching.truncate(m.centroids, eager = true),
+        Caching.truncate(m.assigned, eager = true))
+    }
 
   /** The fixed augmented MIPS geometry shared by the `ivf_mips_*` family
     * (Bachrach et al. 2014 norm augmentation: x̃ = x ++ [√(M² − |x|²)],
@@ -1214,12 +1167,11 @@ object Queries {
     * memoizing the converged model removes the per-pass Lloyd-chain
     * re-execution entirely. The members cache is unpersisted here —
     * the checkpoint holds the materialized result. */
-  private val refinedFixedModelCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (IvfIndex.Model, IvfIndex.Model)]()
+  private val refinedFixedModelCache =
+    new SessionMemo[String, (IvfIndex.Model, IvfIndex.Model)]
   private def refinedFixedModel(
-      s: SparkSession, dir: String): (IvfIndex.Model, IvfIndex.Model) = {
-    refinedFixedModelCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    refinedFixedModelCache.computeIfAbsent((s, dir), _ => {
+      s: SparkSession, dir: String): (IvfIndex.Model, IvfIndex.Model) =
+    refinedFixedModelCache(s, dir) {
       val c = fixedCentroids(s, dir).where(col("cluster_id") < 4)
       val model = IvfIndex.Model(c,
         Caching.ensureCached(IvfIndex.assign(recs(s, dir), c, Metric.Euclidean)))
@@ -1227,17 +1179,13 @@ object Queries {
           Metric.Euclidean) match {
         case None => model
         case Some((m, members)) =>
-          val checkpointed = IvfIndex.Model(
-            org.apache.spark.sql.graft.PlanBridge.statsReset(
-              m.centroids.localCheckpoint(eager = true)),
-            org.apache.spark.sql.graft.PlanBridge.statsReset(
-              m.assigned.localCheckpoint(eager = true)))
+          val checkpointed = IvfIndex.Model(Caching.truncate(m.centroids, eager = true),
+            Caching.truncate(m.assigned, eager = true))
           members.unpersist()
           checkpointed
       }
       (model, refined)
-    })
-  }
+    }
 
   /** Corpus char-trigram LM model, memoized per (session, dir) — the
     * session-lifecycle-state pattern of [[fixedModel]]: a production
@@ -1245,16 +1193,12 @@ object Queries {
     * scoring pass reads it; rebuilding the (charset³-bounded) count
     * table per query is a batch-harness artifact. Persisted because the
     * scorer broadcasts it on every materialization. */
-  private val lmModelCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val lmModelCache = new SessionMemo[String, DataFrame]
   private def lmModel(s: SparkSession, dir: String): DataFrame = {
-    lmModelCache.keySet.removeIf(_._1.sparkContext.isStopped)
     // checkpoint-backed (r14), same argument as [[nbModelOf]]: fitted
     // charset³-bounded model, explicitly broadcast by the scorer
-    lmModelCache.computeIfAbsent((s, dir), _ =>
-      org.apache.spark.sql.graft.PlanBridge.statsReset(
-        TextOps.charLmModel(docs(s, dir), col("text"))
-          .localCheckpoint(eager = true)))
+    lmModelCache(s, dir)(
+      Caching.truncate(TextOps.charLmModel(docs(s, dir), col("text")), eager = true))
   }
 
   /** Trained NB language model (char-trigram multinomial,
@@ -1262,25 +1206,20 @@ object Queries {
     * content-hash train split — the same fit-once-score-many lifecycle
     * as [[lmModel]]; both model frames are charset³×|langs|-bounded and
     * persist because the scorer broadcasts them per materialization. */
-  private val nbModelCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), TextOps.NbModel]()
+  private val nbModelCache = new SessionMemo[(String, String), TextOps.NbModel]
   private def nbModelOf(s: SparkSession, dir: String, tag: String)(
       train: => DataFrame): TextOps.NbModel = {
-    nbModelCache.keySet.removeIf(_._1.sparkContext.isStopped)
     // checkpoint-backed (r14): the fitted model is a converged RESULT the
     // scorer broadcasts per materialization; keeping the fit lineage
     // behind a plan-matched persist made every consumer re-analyze the
     // whole train-split tokenize/count tree per pass (corpus_nb_quality's
     // physical plan was ~1k lines). Both frames are charset³×|langs|-
     // bounded, so the checkpoint is tiny.
-    nbModelCache.computeIfAbsent((s, dir, tag), _ => {
+    nbModelCache(s, (dir, tag)) {
       val m = TextOps.nbCharGramModel(train, col("text"), col("label"))
-      TextOps.NbModel(
-        org.apache.spark.sql.graft.PlanBridge.statsReset(
-          m.grams.localCheckpoint(eager = true)),
-        org.apache.spark.sql.graft.PlanBridge.statsReset(
-          m.labels.localCheckpoint(eager = true)))
-    })
+      TextOps.NbModel(Caching.truncate(m.grams, eager = true),
+        Caching.truncate(m.labels, eager = true))
+    }
   }
   private def nbLangModel(s: SparkSession, dir: String): TextOps.NbModel =
     nbModelOf(s, dir, "lang")(
@@ -1293,17 +1232,13 @@ object Queries {
     * prefix of `text_nb_langid`, `text_nb_confusion`, AND
     * `text_nb_margin` (argmax, rollup, and top-2 are all cheap derived
     * aggregations over it); re-scoring per query was pure recompute. */
-  private val nbHeldScoresCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
+  private val nbHeldScoresCache = new SessionMemo[(String, String), DataFrame]
   private def nbHeldScoresOf(s: SparkSession, dir: String, tag: String)(
       build: => DataFrame): DataFrame = {
-    nbHeldScoresCache.keySet.removeIf(_._1.sparkContext.isStopped)
     // checkpoint-backed (r14), same argument as [[nbModelOf]]: the score
     // frame is the converged shared prefix of three consumers; the frame
     // is |held docs|×|labels| rows of (long, string, long) — bounded.
-    nbHeldScoresCache.computeIfAbsent((s, dir, tag), _ =>
-      org.apache.spark.sql.graft.PlanBridge.statsReset(
-        build.localCheckpoint(eager = true)))
+    nbHeldScoresCache(s, (dir, tag))(Caching.truncate(build, eager = true))
   }
   private def nbHeldScores(s: SparkSession, dir: String): DataFrame =
     nbHeldScoresOf(s, dir, "lang")(
@@ -1336,20 +1271,14 @@ object Queries {
     * gram table is built once per corpus version, written next to the
     * corpus, and semi-joined by every batch
     * ([[operators.Corpus.gramIndex]]). */
-  private val splitGramsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Int), DataFrame]()
-  private def splitGrams(s: SparkSession, dir: String, n: Int): DataFrame = {
-    splitGramsCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    splitGramsCache.computeIfAbsent((s, dir, n), _ =>
-      org.apache.spark.sql.graft.PlanBridge.statsReset(
-        graft.operators.Corpus.assignSplit(
-            docsSpread(s, dir), col("text"))
-          .select(col("split"), col("doc_id"), explode_outer(
-            TextOps.shingleHashes(
-              TextOps.shinglesFromTokens(TextOps.tokens(col("text")), n))).as("h"))
-          .distinct()
-          .localCheckpoint(eager = true)))
-  }
+  private val splitGramsCache = new SessionMemo[(String, Int), DataFrame]
+  private def splitGrams(s: SparkSession, dir: String, n: Int): DataFrame =
+    splitGramsCache(s, (dir, n))(Caching.truncate(
+      graft.operators.Corpus.assignSplit(docsSpread(s, dir), col("text"))
+        .select(col("split"), col("doc_id"), explode_outer(
+          TextOps.shingleHashes(
+            TextOps.shinglesFromTokens(TextOps.tokens(col("text")), n))).as("h"))
+        .distinct(), eager = true))
   private def splitGrams8(s: SparkSession, dir: String): DataFrame =
     splitGrams(s, dir, 8)
   /** One split's gram rows from [[splitGrams]] (gram-less docs' null
@@ -1360,25 +1289,16 @@ object Queries {
       .where(col("split") === split && col("h").isNotNull)
       .select(col("doc_id"), col("h"))
 
-  /** Embeddings blocked on their TWO nearest fixed clusters (each vector
-    * appears under cluster_id and, when present, cluster_id2) — the
-    * shared candidate-generation layout for [[Dedup.embeddingNearDup]],
-    * [[Knn.selfJoinNN]], and the semantic-dedup composition. */
   /** Memoized `(id, cand_id, d)` squared-L2 pair distances over the
     * blocked frame — the converged RESULT three consumers reduce over
     * (`ann_self_join`, `embed_triplets`, `embed_knn_accuracy`), so per
     * the memoize-results-never-pipelines rule it is checkpoint-backed
     * and computed once per (session, corpus): each consumer then pays
     * only its own reduction, not the candidate distance pass. */
-  private val blockedPairsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def blockedSqPairs(s: SparkSession, dir: String): DataFrame = {
-    blockedPairsCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    blockedPairsCache.computeIfAbsent((s, dir), _ =>
-      org.apache.spark.sql.graft.PlanBridge.statsReset(
-        Knn.pairDistances(top2Blocked(s, dir), Metric.Euclidean)
-          .localCheckpoint(eager = true)))
-  }
+  private val blockedPairsCache = new SessionMemo[String, DataFrame]
+  private def blockedSqPairs(s: SparkSession, dir: String): DataFrame =
+    blockedPairsCache(s, dir)(Caching.truncate(
+      Knn.pairDistances(top2Blocked(s, dir), Metric.Euclidean), eager = true))
 
   /** Memoized converged PageRank frame over [[minhashPairs]] — the
     * memoize-RESULTS rule applied to the rank fixed point: two
@@ -1386,43 +1306,34 @@ object Queries {
     * argmax) reduce over the identical 8-iteration result, so the
     * iteration loop runs once per (session, corpus). Checkpoint-backed
     * (bounded by the duplicate subset). */
-  private val pageRankCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def pageRankFrame(s: SparkSession, dir: String): DataFrame = {
-    pageRankCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    pageRankCache.computeIfAbsent((s, dir), _ =>
-      org.apache.spark.sql.graft.PlanBridge.statsReset(
-        operators.Graph.pageRank(minhashPairs(s, dir), iters = 8)
-          .localCheckpoint(eager = true)))
-  }
+  private val pageRankCache = new SessionMemo[String, DataFrame]
+  private def pageRankFrame(s: SparkSession, dir: String): DataFrame =
+    pageRankCache(s, dir)(Caching.truncate(
+      operators.Graph.pageRank(minhashPairs(s, dir), iters = 8), eager = true))
 
   /** Memoized converged PERSONALIZED rank frame (even-id trust list) —
     * same session-state argument as [[pageRankFrame]]; a distinct fixed
     * point (seeded teleport), so a distinct memo. */
-  private val pprCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def pprFrame(s: SparkSession, dir: String): DataFrame = {
-    pprCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    pprCache.computeIfAbsent((s, dir), _ =>
-      org.apache.spark.sql.graft.PlanBridge.statsReset(
-        operators.Graph.personalizedPageRank(minhashPairs(s, dir),
-            docs(s, dir).select(col("doc_id").as("node"))
-              .where(col("doc_id") % 2 === 0),
-            iters = 8)
-          .localCheckpoint(eager = true)))
-  }
+  private val pprCache = new SessionMemo[String, DataFrame]
+  private def pprFrame(s: SparkSession, dir: String): DataFrame =
+    pprCache(s, dir)(Caching.truncate(
+      operators.Graph.personalizedPageRank(minhashPairs(s, dir),
+        docs(s, dir).select(col("doc_id").as("node")).where(col("doc_id") % 2 === 0),
+        iters = 8), eager = true))
 
-  private val top2BlockedCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  /** Embeddings blocked on their TWO nearest fixed clusters (each vector
+    * appears under cluster_id and, when present, cluster_id2) — the
+    * shared candidate-generation layout for [[Dedup.embeddingNearDup]],
+    * [[Knn.selfJoinNN]], and the semantic-dedup composition. */
+  private val top2BlockedCache = new SessionMemo[String, DataFrame]
   private def top2Blocked(s: SparkSession, dir: String): DataFrame = {
-    top2BlockedCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    val blocked = top2BlockedCache.computeIfAbsent((s, dir), _ => {
+    val blocked = top2BlockedCache(s, dir) {
       val a2 = IvfIndex
         .assignTop2(recs(s, dir), fixedCentroids(s, dir), Metric.Euclidean)
       a2.select(col("cluster_id").as("block"), col("id"), col("embedding"))
         .unionByName(a2.where(col("cluster_id2") >= 0)
           .select(col("cluster_id2").as("block"), col("id"), col("embedding")))
-    })
+    }
     // Persisted (not just memoized): every consumer self-joins the frame,
     // so without materialization the assignment kernel runs twice per
     // query — and three query families (embed/ann/dedup) share it, the
@@ -1436,20 +1347,16 @@ object Queries {
     * normalized vectors ARE the cosine store), so re-running the
     * interpreted normalize fold inside every probe is a batch-harness
     * artifact. */
-  private val normalizedAssignedCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val normalizedAssignedCache = new SessionMemo[String, DataFrame]
   private def normalizedRecs(s: SparkSession, dir: String): DataFrame =
     recs(s, dir).select(col("id"),
       operators.VectorOps.l2Normalize(col("embedding")).as("embedding"))
   private def normalizedCentroids(s: SparkSession, dir: String): DataFrame =
     normalizedRecs(s, dir).where(col("id") < 8)
       .select(col("id").cast("int").as("cluster_id"), col("embedding").as("centroid"))
-  private def normalizedAssigned(s: SparkSession, dir: String): DataFrame = {
-    normalizedAssignedCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    Caching.ensureCached(normalizedAssignedCache.computeIfAbsent((s, dir),
-      _ => IvfIndex.assign(normalizedRecs(s, dir), normalizedCentroids(s, dir),
-        Metric.Euclidean)))
-  }
+  private def normalizedAssigned(s: SparkSession, dir: String): DataFrame =
+    Caching.ensureCached(normalizedAssignedCache(s, dir)(
+      IvfIndex.assign(normalizedRecs(s, dir), normalizedCentroids(s, dir), Metric.Euclidean)))
 
   /** Fixed product-quantization codebooks (records 0..15's subvectors,
     * m=4 × dsub=16 over the 64-dim embeddings), packed for broadcast —
@@ -1486,15 +1393,6 @@ object Queries {
   private val sqlOpqWw: String =
     s"${operators.VectorOps.OpqDirection.map(x => x * x).sum.toInt}.0"
 
-  /** The capped-LSH duplicate-group map, memoized per (session, dir) —
-    * the dedup twin of [[fixedModel]]: a pipeline computes the keep/drop
-    * map ONCE per corpus version and every consumer (the group listing,
-    * the applied filter) reads the same map. [[Dedup.duplicateGroups]]
-    * is eager, so the memo holds an already-converged label table backed
-    * by a checkpointed RDD; recomputing it per query is a batch-harness
-    * artifact — results are identical (deterministic pipeline). */
-  private val dedupGroupsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
   /** One CONTENT-HASH projection per (session, corpus) — `(doc_id,
     * source, __nc, __h56 DECIMAL(20,0), __sha)` — shared by every
     * whole-corpus digest consumer: `corpus_checksum` (56-bit md5 sum),
@@ -1505,20 +1403,15 @@ object Queries {
     * funnel 1.4 s both paid the md5/sha scan the dedup lanes had
     * already paid). Checkpoint-backed so the bench's family-boundary
     * clearCache can't force a re-digest. */
-  private val hashedDocsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def hashedDocsMemo(s: SparkSession, dir: String): DataFrame = {
-    hashedDocsCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    hashedDocsCache.computeIfAbsent((s, dir), _ =>
-      org.apache.spark.sql.graft.PlanBridge.statsReset(
-        docsSpread(s, dir)
-          .select(col("doc_id"), col("source"),
-            col("n_chars").cast("long").as("__nc"),
-            conv(substr(md5(col("text")), lit(1), lit(14)), 16, 10)
-              .cast("decimal(20,0)").as("__h56"),
-            sha2(col("text"), 256).as("__sha"))
-          .localCheckpoint(eager = true)))
-  }
+  private val hashedDocsCache = new SessionMemo[String, DataFrame]
+  private def hashedDocsMemo(s: SparkSession, dir: String): DataFrame =
+    hashedDocsCache(s, dir)(Caching.truncate(
+      docsSpread(s, dir)
+        .select(col("doc_id"), col("source"),
+          col("n_chars").cast("long").as("__nc"),
+          conv(substr(md5(col("text")), lit(1), lit(14)), 16, 10)
+            .cast("decimal(20,0)").as("__h56"),
+          sha2(col("text"), 256).as("__sha")), eager = true))
 
   /** The corpus-assembly front half: one tokenize pass computing hash /
     * split bucket / token count / language / quality, exact dedup
@@ -1527,14 +1420,9 @@ object Queries {
     * (`corpus_assemble`, `corpus_assemble_dedup`, `corpus_funnel`), and
     * in production the verdict columns are maintained table state
     * (written by the ingest gate), not a per-query tokenize. */
-  private val assembleFilteredCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private[graft] def assembleFiltered(s: SparkSession, dir: String): DataFrame = {
-    assembleFilteredCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    assembleFilteredCache.computeIfAbsent((s, dir), _ =>
-      org.apache.spark.sql.graft.PlanBridge.statsReset(
-        assembleFilteredDag(s, dir).localCheckpoint(eager = true)))
-  }
+  private val assembleFilteredCache = new SessionMemo[String, DataFrame]
+  private[graft] def assembleFiltered(s: SparkSession, dir: String): DataFrame =
+    assembleFilteredCache(s, dir)(Caching.truncate(assembleFilteredDag(s, dir), eager = true))
 
   /** The assemble front half as a PLAN (un-memoized — [[assembleFiltered]]
     * checkpoints it once per (session, dir)): ONE tokenize pass computes
@@ -1600,11 +1488,9 @@ object Queries {
     * force the second build to re-run the whole LSH pipeline (~3 s at
     * sf0.1). The materialized frame is bounded by the duplicate subset,
     * not the corpus, so holding it for the session is cheap at any SF. */
-  private val minhashPairsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def minhashPairs(s: SparkSession, dir: String): DataFrame = {
-    minhashPairsCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    minhashPairsCache.computeIfAbsent((s, dir), _ => {
+  private val minhashPairsCache = new SessionMemo[String, DataFrame]
+  private def minhashPairs(s: SparkSession, dir: String): DataFrame =
+    minhashPairsCache(s, dir) {
       // CONTRACT ENFORCEMENT, not an operator limit: every consumer's
       // DuckDB oracle replays the UNCAPPED banded join, while this
       // composed pipeline runs with the production viral-bucket cap.
@@ -1627,13 +1513,11 @@ object Queries {
         s"LSH bucket of $maxBucket docs exceeds the pipeline cap " +
           s"(${Dedup.DefaultPipelineMaxBucket}): the capped pair set no " +
           "longer equals the uncapped oracle join — cap the oracle too")
-      org.apache.spark.sql.graft.PlanBridge.statsReset(
+      Caching.truncate(
         Dedup.minhashLsh(docs(s, dir), shingleN = 3, perms = 16, bands = 4,
           threshold = 0.5, maxBucket = Dedup.DefaultPipelineMaxBucket)
-          .select(col("doc_id_a"), col("doc_id_b"), col("jaccard"))
-          .localCheckpoint(eager = true))
-    })
-  }
+          .select(col("doc_id_a"), col("doc_id_b"), col("jaccard")), eager = true)
+    }
 
   /** The BOUNDED customer-name frame the fuzzy-match family runs on:
     * NFC-normalized names (so composed/decomposed twins match at
@@ -1657,15 +1541,11 @@ object Queries {
     * best-match resolve) reduce over the same converged RESULT, so the
     * blocking+verify pipeline runs once per corpus (the
     * memoize-results-never-pipelines rule). */
-  private val fuzzyPairsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def fuzzyNamePairs(s: SparkSession, dir: String): DataFrame = {
-    fuzzyPairsCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    fuzzyPairsCache.computeIfAbsent((s, dir), _ =>
-      org.apache.spark.sql.graft.PlanBridge.statsReset(
-        operators.Fuzzy.matchPairs(fuzzyCustomers(s, dir), maxDist = 2, prefixLen = 24)
-          .localCheckpoint(eager = true)))
-  }
+  private val fuzzyPairsCache = new SessionMemo[String, DataFrame]
+  private def fuzzyNamePairs(s: SparkSession, dir: String): DataFrame =
+    fuzzyPairsCache(s, dir)(Caching.truncate(
+      operators.Fuzzy.matchPairs(fuzzyCustomers(s, dir), maxDist = 2, prefixLen = 24),
+      eager = true))
 
   /** Oracle CTE twin of [[fuzzyCustomers]] + [[fuzzyNamePairs]]: the
     * bounded frame, then the QUADRATIC pair truth — DuckDB's
@@ -1741,12 +1621,6 @@ object Queries {
        |  FROM x JOIN o USING (grp))""".stripMargin
   }
 
-  /** The deterministically-transformed "next version" of a record store
-    * shared by `snapshot_diff` and `ivf_apply_diff`: id ≡ 3 (mod 97)
-    * deleted, surviving id ≡ 5 (mod 89) metadata-rewritten, surviving
-    * id ≡ 7 (mod 101) vector-perturbed (+1 on component 0), plus one
-    * fresh insert at max(id)+1 — all four change classes, recomputable
-    * in SQL at any scale factor. */
   /** The shared delete + vector-perturbation legs of the deterministic
     * store evolution (id ≡ 3 (mod 97) deleted; surviving id ≡ 7
     * (mod 101) gets +1 on component 0) — ONE definition for
@@ -1760,6 +1634,12 @@ object Queries {
             (x, i) => when(i === 0, x + lit(1.0f)).otherwise(x)))
           .otherwise(col("embedding")))
 
+  /** The deterministically-transformed "next version" of a record store
+    * shared by `snapshot_diff` and `ivf_apply_diff`: id ≡ 3 (mod 97)
+    * deleted, surviving id ≡ 5 (mod 89) metadata-rewritten, surviving
+    * id ≡ 7 (mod 101) vector-perturbed (+1 on component 0), plus one
+    * fresh insert at max(id)+1 — all four change classes, recomputable
+    * in SQL at any scale factor. */
   private def diffNewStore(s: SparkSession, old: DataFrame): DataFrame = {
     import s.implicits._
     val maxId = old.agg(max(col("id"))).head.getLong(0)
@@ -1779,15 +1659,10 @@ object Queries {
     * — the same once-per-corpus-version argument as [[minhashPairs]]:
     * the span REPORT and the scrub APPLY both consume this frame, and
     * it is bounded by the flagged-doc subset, not the corpus. */
-  private val substringSpansCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def substringSpans10(s: SparkSession, dir: String): DataFrame = {
-    substringSpansCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    substringSpansCache.computeIfAbsent((s, dir), _ =>
-      org.apache.spark.sql.graft.PlanBridge.statsReset(
-        Dedup.substringSpans(docs(s, dir), windowTokens = 10)
-          .localCheckpoint(eager = true)))
-  }
+  private val substringSpansCache = new SessionMemo[String, DataFrame]
+  private def substringSpans10(s: SparkSession, dir: String): DataFrame =
+    substringSpansCache(s, dir)(
+      Caching.truncate(Dedup.substringSpans(docs(s, dir), windowTokens = 10), eager = true))
 
   /** Bench-lane coordination: the group-map builders end with a global
     * `clearCache()` (the LSH pipeline's dead persisted intermediates
@@ -1803,9 +1678,16 @@ object Queries {
   private def builderCacheClear(s: SparkSession): Unit =
     if (!deferBuilderCacheClear.get()) s.catalog.clearCache()
 
-  private def cappedGroups(s: SparkSession, dir: String): DataFrame = {
-    dedupGroupsCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    dedupGroupsCache.computeIfAbsent((s, dir), _ => {
+  /** The capped-LSH duplicate-group map, memoized per (session, dir) —
+    * the dedup twin of [[fixedModel]]: a pipeline computes the keep/drop
+    * map ONCE per corpus version and every consumer (the group listing,
+    * the applied filter) reads the same map. [[Dedup.duplicateGroups]]
+    * is eager, so the memo holds an already-converged label table backed
+    * by a checkpointed RDD; recomputing it per query is a batch-harness
+    * artifact — results are identical (deterministic pipeline). */
+  private val dedupGroupsCache = new SessionMemo[String, DataFrame]
+  private def cappedGroups(s: SparkSession, dir: String): DataFrame =
+    dedupGroupsCache(s, dir) {
       val groups = Dedup.duplicateGroups(minhashPairs(s, dir))
       // the converged label table is checkpoint-backed; the LSH
       // pipeline's persisted intermediates are dead weight once the
@@ -1815,8 +1697,7 @@ object Queries {
       // on demand (Caching.ensureCached), the memoized frame survives.
       builderCacheClear(s)
       groups
-    })
-  }
+    }
 
   /** MULTI-SIGNAL duplicate-group map: MinHash-LSH ∪ SimHash pair sets
     * fed into one connected-component pass — production dedup runs
@@ -1824,11 +1705,9 @@ object Queries {
     * blind spots: MinHash misses low-Jaccard paraphrase, SimHash misses
     * long-doc partial overlap). Same memoized lifecycle as
     * [[cappedGroups]]. */
-  private val multiGroupsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def multiGroups(s: SparkSession, dir: String): DataFrame = {
-    multiGroupsCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    multiGroupsCache.computeIfAbsent((s, dir), _ => {
+  private val multiGroupsCache = new SessionMemo[String, DataFrame]
+  private def multiGroups(s: SparkSession, dir: String): DataFrame =
+    multiGroupsCache(s, dir) {
       val sh = Dedup.simhashPairs(docs(s, dir), maxHamming = 8,
         maxBucket = Dedup.DefaultPipelineMaxBucket)
         .select(col("doc_id_a"), col("doc_id_b"))
@@ -1837,32 +1716,27 @@ object Queries {
       // (law: equals duplicateGroups(mh ∪ sh) — DedupSpec) instead of
       // re-running label propagation over the MinHash edge set the
       // session already converged.
-      val groups = org.apache.spark.sql.graft.PlanBridge.statsReset(
-        Dedup.extendGroups(cappedGroups(s, dir), sh)
-          .localCheckpoint(eager = true))
+      val groups = Caching.truncate(
+        Dedup.extendGroups(cappedGroups(s, dir), sh), eager = true)
       builderCacheClear(s) // same lifecycle as [[cappedGroups]]
       groups
-    })
-  }
+    }
 
   /** The SEMANTIC duplicate-group map, memoized per (session, dir) — the
     * embedding-space twin of [[cappedGroups]], with the same lifecycle
     * argument: a pipeline computes the keep/drop map ONCE per corpus
     * version and every consumer reads that map. [[Dedup.duplicateGroups]]
     * is eager, so the memo holds the converged label table. */
-  private val semanticGroupsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def semanticGroups(s: SparkSession, dir: String): DataFrame = {
-    semanticGroupsCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    semanticGroupsCache.computeIfAbsent((s, dir), _ => {
+  private val semanticGroupsCache = new SessionMemo[String, DataFrame]
+  private def semanticGroups(s: SparkSession, dir: String): DataFrame =
+    semanticGroupsCache(s, dir) {
       val groups = Dedup.duplicateGroups(
         Dedup.embeddingNearDup(top2Blocked(s, dir), threshold = 0.2)
           .select(col("id_a"), col("id_b")).distinct(),
         srcCol = "id_a", dstCol = "id_b")
       builderCacheClear(s) // same lifecycle as [[cappedGroups]]
       groups
-    })
-  }
+    }
 
   /** The perceptual-hash duplicate-group map (media_id, rep_id),
     * memoized per (session, dir) with the converged label table
@@ -1870,11 +1744,9 @@ object Queries {
     * lifecycle: decode + grid-8 aHash + banded pairs + CC is a build a
     * pipeline runs once per corpus version. [[Dedup.duplicateGroups]]
     * materializes eagerly, so the memo holds the fixed point. */
-  private val mediaGroupsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def mediaPhashGroups(s: SparkSession, dir: String): DataFrame = {
-    mediaGroupsCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    mediaGroupsCache.computeIfAbsent((s, dir), _ => {
+  private val mediaGroupsCache = new SessionMemo[String, DataFrame]
+  private def mediaPhashGroups(s: SparkSession, dir: String): DataFrame =
+    mediaGroupsCache(s, dir) {
       val hashed = Multimodal.perceptualHash(
         Multimodal.codecMedia(docs(s, dir)).where(col("kind") === "image"),
         grid = 8)
@@ -1886,8 +1758,7 @@ object Queries {
         .select(col("doc_id").as("media_id"), col("rep_id"))
       builderCacheClear(s) // same lifecycle as [[cappedGroups]]
       groups
-    })
-  }
+    }
 
   /** The derived SCD2 change log shared by `snapshot_scd2` and
     * `snapshot_time_travel` (and mirrored verbatim in their oracles):

@@ -515,8 +515,8 @@ object Dedup {
     * the current labels plus a min-aggregate — shuffles bounded by
     * |edges|, converging in graph-diameter rounds (near-dup components
     * are short chains or cliques, so diameter is small). Lineage AND
-    * inherited statistics are truncated per round (lazy `localCheckpoint`
-    * + `PlanBridge.statsReset`) — the loop-carried join plan would
+    * inherited statistics are truncated per round (lazy
+    * [[graft.Caching.truncate]]) — the loop-carried join plan would
     * otherwise nest per round (see [[IvfIndex.refine]]). The convergence
     * check (label-change count) is one aggregate per round over the
     * (node, label) frame, which is bounded by the DISTINCT DOCS THAT
@@ -529,8 +529,6 @@ object Dedup {
       maxIter: Int = 50,
       srcCol: String = "doc_id_a",
       dstCol: String = "doc_id_b"): DataFrame = {
-    def truncate(df: DataFrame): DataFrame =
-      org.apache.spark.sql.graft.PlanBridge.statsReset(df.localCheckpoint(eager = false))
     // Materialize the directed pair list ONCE (eager local checkpoint,
     // stats reset). The pair emitter is typically a full LSH
     // candidate+verify pipeline; left lazy (even persisted), every
@@ -540,13 +538,12 @@ object Dedup {
     // execution. After the eager checkpoint every loop plan scans a small
     // materialized RDD bounded by the duplicate subset, not the corpus,
     // and the edge union needs no cache of its own.
-    val p = org.apache.spark.sql.graft.PlanBridge.statsReset(
-      pairs.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-        .localCheckpoint(eager = true))
+    val p = graft.Caching.truncate(
+      pairs.select(col(srcCol).as("src"), col(dstCol).as("dst")), eager = true)
     val edges = p.unionByName(p.select(col("dst").as("src"), col("src").as("dst")))
-    var labels = truncate(
+    var labels = graft.Caching.truncate(
       edges.select(col("src").as("node")).distinct()
-        .withColumn("lab", col("node")))
+        .withColumn("lab", col("node")), eager = false)
     // Convergence via the label-sum invariant: min-propagation is
     // MONOTONE (labels only ever decrease), so Σlab strictly decreases
     // iff any label changed — an exact test from one scalar aggregate
@@ -576,16 +573,16 @@ object Dedup {
       val prop = edges
         .join(cur.withColumnRenamed("node", "dst"), Seq("dst"))
         .select(col("src").as("node"), col("lab"))
-      val merged = truncate(
+      val merged = graft.Caching.truncate(
         cur.unionByName(prop)
-          .groupBy(col("node")).agg(min(col("lab")).as("lab")))
+          .groupBy(col("node")).agg(min(col("lab")).as("lab")), eager = false)
       merged.join(
           merged.select(col("node").as("lab"), col("lab").as("__lab2")),
           Seq("lab"), "left")
         .select(col("node"), coalesce(col("__lab2"), col("lab")).as("lab"))
     }
     while (changed && i < maxIter) {
-      val next = truncate(iterate(labels))
+      val next = graft.Caching.truncate(iterate(labels), eager = false)
       val nextSum = labSum(next)
       changed = nextSum.compareTo(prevSum) != 0
       prevSum = nextSum

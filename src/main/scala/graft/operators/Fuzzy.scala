@@ -66,8 +66,9 @@ object Fuzzy {
     // whose EVERY shared variant is hot; exact duplicates of a viral
     // string are better collapsed by exact dedup first (the corpus_clean
     // composition order). Default = uncapped: unlike banded LSH the
-    // default inputs are bounded name frames — meter with `Probe fzprof`
-    // before capping (sf0.1: max bucket 322, far under any useful cap).
+    // default inputs are bounded name frames — meter `keyed` above with
+    // a `groupBy(key)` count before capping (sf0.1: max bucket 322, far
+    // under any useful cap).
     val blocked =
       if (maxBucket == Int.MaxValue) keyed
       else {

@@ -59,13 +59,10 @@ object Graph {
       srcCol: String = "doc_id_a",
       dstCol: String = "doc_id_b"): DataFrame = {
     require(iters >= 0, "iters must be non-negative")
-    def truncate(df: DataFrame): DataFrame =
-      org.apache.spark.sql.graft.PlanBridge.statsReset(df.localCheckpoint(eager = false))
     // one eager materialization of the (typically pipeline-backed) pair
     // list, then symmetric edges — same rationale as duplicateGroups
-    val p = org.apache.spark.sql.graft.PlanBridge.statsReset(
-      pairs.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-        .localCheckpoint(eager = true))
+    val p = graft.Caching.truncate(
+      pairs.select(col(srcCol).as("src"), col(dstCol).as("dst")), eager = true)
     val edges = p.unionByName(p.select(col("dst").as("src"), col("src").as("dst")))
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     val n = deg.count()
@@ -77,19 +74,19 @@ object Graph {
     val teleport = (15L * RankScale) / (100L * n)
     // edges pre-joined with the sender's degree ONCE (the degree never
     // changes); each round then only joins the current ranks on
-    val edgesDeg = truncate(edges.join(deg, Seq("src")))
-    var ranks = truncate(deg.select(col("src").as("node"),
-      lit(RankScale / n).as("rank_q")))
+    val edgesDeg = graft.Caching.truncate(edges.join(deg, Seq("src")), eager = false)
+    var ranks = graft.Caching.truncate(deg.select(col("src").as("node"),
+      lit(RankScale / n).as("rank_q")), eager = false)
     for (_ <- 0 until iters) {
       val contrib = edgesDeg
         .join(ranks.withColumnRenamed("node", "src"), Seq("src"))
         .selectExpr("dst", s"(rank_q * $DampNum) DIV ($DampDen * deg) AS c")
         .groupBy(col("dst")).agg(sum(col("c")).as("__in"))
-      ranks = truncate(
+      ranks = graft.Caching.truncate(
         ranks.select(col("node"))
           .join(contrib.withColumnRenamed("dst", "node"), Seq("node"), "left")
           .select(col("node"),
-            (lit(teleport) + coalesce(col("__in"), lit(0L))).as("rank_q")))
+            (lit(teleport) + coalesce(col("__in"), lit(0L))).as("rank_q")), eager = false)
     }
     ranks.select(col("node").as("doc_id"), col("rank_q"))
   }
@@ -113,11 +110,8 @@ object Graph {
       srcCol: String = "doc_id_a",
       dstCol: String = "doc_id_b"): DataFrame = {
     require(iters >= 0, "iters must be non-negative")
-    def truncate(df: DataFrame): DataFrame =
-      org.apache.spark.sql.graft.PlanBridge.statsReset(df.localCheckpoint(eager = false))
-    val p = org.apache.spark.sql.graft.PlanBridge.statsReset(
-      pairs.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-        .localCheckpoint(eager = true))
+    val p = graft.Caching.truncate(
+      pairs.select(col(srcCol).as("src"), col(dstCol).as("dst")), eager = true)
     val edges = p.unionByName(p.select(col("dst").as("src"), col("src").as("dst")))
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     val nodes = deg.select(col("src").as("node"))
@@ -132,21 +126,21 @@ object Graph {
         .limit(0)
     val teleport = (15L * RankScale) / (100L * nSeeds)
     val init = RankScale / nSeeds
-    val edgesDeg = truncate(edges.join(deg, Seq("src")))
-    val nodesT = truncate(nodes.select(col("node"),
-      when(col("is_seed"), lit(teleport)).otherwise(lit(0L)).as("__t")))
-    var ranks = truncate(nodes.select(col("node"),
-      when(col("is_seed"), lit(init)).otherwise(lit(0L)).as("rank_q")))
+    val edgesDeg = graft.Caching.truncate(edges.join(deg, Seq("src")), eager = false)
+    val nodesT = graft.Caching.truncate(nodes.select(col("node"),
+      when(col("is_seed"), lit(teleport)).otherwise(lit(0L)).as("__t")), eager = false)
+    var ranks = graft.Caching.truncate(nodes.select(col("node"),
+      when(col("is_seed"), lit(init)).otherwise(lit(0L)).as("rank_q")), eager = false)
     for (_ <- 0 until iters) {
       val contrib = edgesDeg
         .join(ranks.withColumnRenamed("node", "src"), Seq("src"))
         .selectExpr("dst", s"(rank_q * $DampNum) DIV ($DampDen * deg) AS c")
         .groupBy(col("dst")).agg(sum(col("c")).as("__in"))
-      ranks = truncate(
+      ranks = graft.Caching.truncate(
         nodesT
           .join(contrib.withColumnRenamed("dst", "node"), Seq("node"), "left")
           .select(col("node"),
-            (col("__t") + coalesce(col("__in"), lit(0L))).as("rank_q")))
+            (col("__t") + coalesce(col("__in"), lit(0L))).as("rank_q")), eager = false)
     }
     ranks.select(col("node").as("doc_id"), col("rank_q"))
   }
@@ -185,11 +179,9 @@ object Graph {
       pairs: DataFrame,
       srcCol: String = "doc_id_a",
       dstCol: String = "doc_id_b"): DataFrame = {
-    val p = org.apache.spark.sql.graft.PlanBridge.statsReset(
-      pairs.select(col(srcCol).as("a"), col(dstCol).as("b"))
-        .localCheckpoint(eager = true))
-    val o = org.apache.spark.sql.graft.PlanBridge.statsReset(
-      orientByDegree(p).localCheckpoint(eager = true))
+    val p = graft.Caching.truncate(
+      pairs.select(col(srcCol).as("a"), col(dstCol).as("b")), eager = true)
+    val o = graft.Caching.truncate(orientByDegree(p), eager = true)
     val tri = o.as("e1")
       .join(o.as("e2"), col("e1.dst") === col("e2.src"))
       .join(o.as("e3"),

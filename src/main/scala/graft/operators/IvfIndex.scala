@@ -800,23 +800,16 @@ object IvfIndex {
     // `effIds` action below) with each level's blocks cached as
     // executor-held partitions along the way. Unlike the round-2
     // collect+re-broadcast, nothing proportional to cluster count moves
-    // through the driver. `statsReset` then drops the checkpoint's
-    // INHERITED statistics — Spark 4 copies the origin's join-multiplied
-    // sizeInBytes onto the checkpoint, which compounds
-    // doubly-exponentially across rounds and grinds the driver on
-    // million-digit BigInteger math (see PlanBridge). On a multi-tenant
-    // cluster where executor loss must not fail the build, swap for a
-    // reliable `checkpoint()` to cluster storage — same truncation.
-    def truncate(df: DataFrame): DataFrame =
-      org.apache.spark.sql.graft.PlanBridge.statsReset(df.localCheckpoint(eager = false))
+    // through the driver. The cut also resets the checkpoint's inherited
+    // statistics ([[graft.Caching.truncate]]).
     // centPrev = the centroids the FINAL assignment runs under; cent =
     // the means of that assignment (proper Lloyd: each stored centroid is
     // exactly the mean of the members assigned to it).
-    var centPrev = truncate(seed0.join(seed1, Seq("cluster_id")))
+    var centPrev = graft.Caching.truncate(seed0.join(seed1, Seq("cluster_id")), eager = false)
     var cent = centPrev
     (1 to math.max(iters, 1)).foreach { _ =>
       centPrev = cent
-      cent = truncate(lloydRound(cent))
+      cent = graft.Caching.truncate(lloydRound(cent), eager = false)
     }
 
     // Effective splits: clusters whose sub-1 actually received members in
@@ -909,7 +902,7 @@ object IvfIndex {
     * step joins members against the broadcast packed sub-centroids and
     * argmin-folds ([[assign]]'s shape); means via the native vector-mean
     * aggregate; lineage AND inherited stats truncated per step (lazy
-    * `localCheckpoint` + `PlanBridge.statsReset`, see [[refine]]). The
+    * [[graft.Caching.truncate]], see [[refine]]). The
     * lowest live sub keeps the old cluster id (replace), the rest append
     * under fresh ids allocated in the one small driver materialization
     * (bounded by the NEW cluster count — the same bound as the centroid
@@ -993,18 +986,15 @@ object IvfIndex {
           col("__m").isNotNull.as("__live"))
     }
 
-    def truncate(df: DataFrame): DataFrame =
-      org.apache.spark.sql.graft.PlanBridge.statsReset(df.localCheckpoint(eager = false))
-
     // centPrev = the centroids the FINAL assignment runs under; cent =
     // the means of that assignment (each stored centroid is exactly the
     // mean of its final members — one consistent Lloyd step, like refine).
-    var centPrev = truncate(seed)
+    var centPrev = graft.Caching.truncate(seed, eager = false)
     var cent = centPrev.withColumn("__live", lit(true))
     (1 to math.max(iters, 1)).foreach { _ =>
       val base = cent.select("cluster_id", "__sub", "__c")
       centPrev = base
-      cent = truncate(lloydRound(base))
+      cent = graft.Caching.truncate(lloydRound(base), eager = false)
     }
 
     // The one small driver materialization: live (cluster, sub) pairs of
@@ -1191,8 +1181,8 @@ object IvfIndex {
     * rounds — at kMax=4 over sf0.1 that's 2 rounds instead of ~9, each
     * round dominated by the full-assignment checkpoint.
     *
-    * Lineage AND statistics are truncated per round (`localCheckpoint` +
-    * `PlanBridge.statsReset` — see [[refine]]) — the assignment frame
+    * Lineage AND statistics are truncated per round
+    * ([[graft.Caching.truncate]] — see [[refine]]) — the assignment frame
     * would otherwise nest one union+join layer per round and its
     * inherited stats would compound into driver-grinding BigInts. At
     * warehouse scale, round boundaries would instead persist to the
@@ -1211,8 +1201,6 @@ object IvfIndex {
       // latency in the checkpoint chain.
       iters: Int = 3,
       maxWay: Int = DefaultMaxWay): Model = {
-    def truncate(df: DataFrame): DataFrame =
-      org.apache.spark.sql.graft.PlanBridge.statsReset(df.localCheckpoint())
     // loose coarse fit (3 Lloyd iterations): the split loop below refines
     // every oversized cluster anyway, so converging the coarse centroids
     // first is wasted work — only their seeded determinism and rough
@@ -1222,7 +1210,7 @@ object IvfIndex {
     // checkpoint the coarse assignment once: each split round actions the
     // assignment several times (sizes, members, final anti-join) — raw,
     // every action would re-run the scan + argmin assign pass
-    var m = Model(coarse.centroids, truncate(coarse.assigned))
+    var m = Model(coarse.centroids, graft.Caching.truncate(coarse.assigned, eager = true))
     var rounds = 0
     var progressed = true
     while (progressed && rounds < maxRounds) {
@@ -1234,7 +1222,7 @@ object IvfIndex {
           // round — linear growth, and anti-join/union stats don't
           // multiply — so re-evaluating it stays cheap while skipping a
           // materialization job per round.
-          m = Model(split.centroids, truncate(split.assigned))
+          m = Model(split.centroids, graft.Caching.truncate(split.assigned, eager = true))
           members.unpersist() // checkpoint is materialized; cache done
           rounds += 1
       }
@@ -1268,16 +1256,14 @@ object IvfIndex {
       maxRounds: Int = 12,
       iters: Int = 3): Model = {
     require(maxRounds > 0, s"maxRounds must be positive, got $maxRounds")
-    def truncate(df: DataFrame): DataFrame =
-      org.apache.spark.sql.graft.PlanBridge.statsReset(df.localCheckpoint())
-    var m = Model(coarse, truncate(assign(records, coarse, metric)))
+    var m = Model(coarse, graft.Caching.truncate(assign(records, coarse, metric), eager = true))
     var rounds = 0
     var progressed = true
     while (progressed && rounds < maxRounds) {
       refineKeepCache(m, density, metric, iters) match {
         case None => progressed = false
         case Some((split, members)) =>
-          m = Model(split.centroids, truncate(split.assigned))
+          m = Model(split.centroids, graft.Caching.truncate(split.assigned, eager = true))
           members.unpersist()
           rounds += 1
       }

@@ -504,9 +504,6 @@ object VectorOps {
       metric: graft.types.Metric): DataFrame = {
     require(k >= 1, "k must be >= 1")
     val spark = records.sparkSession
-    def truncate(df: DataFrame): DataFrame =
-      org.apache.spark.sql.graft.PlanBridge.statsReset(
-        df.localCheckpoint(eager = false))
     val base = records.select(col("id"), col("embedding"))
       .where(col("embedding").isNotNull)
     val seed = base.orderBy(col("id").asc).limit(1).collect()
@@ -515,9 +512,9 @@ object VectorOps {
     val seedVec = seed.head.getSeq[Float](1)
     val out = scala.collection.mutable.ArrayBuffer[(Int, Long, Option[Double])](
       (1, seedId, None))
-    var cur = truncate(base
+    var cur = graft.Caching.truncate(base
       .withColumn("__mind", metric.distance(col("embedding"), typedLit(seedVec)))
-      .where(col("id") =!= lit(seedId)))
+      .where(col("id") =!= lit(seedId)), eager = false)
     for (step <- 2 to k) {
       val q4 = floor(col("__mind") * lit(10000.0) + lit(0.5))
       val best = cur.where(!isnan(col("__mind")))
@@ -526,10 +523,10 @@ object VectorOps {
       val bid = best.head.getLong(0)
       val bvec = best.head.getSeq[Float](1)
       out += ((step, bid, Some(best.head.getDouble(2))))
-      cur = truncate(cur
+      cur = graft.Caching.truncate(cur
         .withColumn("__mind",
           least(col("__mind"), metric.distance(col("embedding"), typedLit(bvec))))
-        .where(col("id") =!= lit(bid)))
+        .where(col("id") =!= lit(bid)), eager = false)
     }
     import spark.implicits._
     out.toSeq.toDF("step", "id", "radius")

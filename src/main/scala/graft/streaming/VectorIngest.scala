@@ -549,8 +549,6 @@ final class MaintainedIngest private[streaming] (
   }
 
   private def refineNow(): Unit = {
-    def truncate(df: DataFrame): DataFrame =
-      org.apache.spark.sql.graft.PlanBridge.statsReset(df.localCheckpoint())
     var m = IvfIndex.Model(cents, spark.read.parquet(storePath))
     var rounds = 0
     var fixedPoint = false
@@ -570,7 +568,8 @@ final class MaintainedIngest private[streaming] (
           maxWay = IvfIndex.DefaultMaxWay) match {
         case None => fixedPoint = true
         case Some((refined, members)) =>
-          m = IvfIndex.Model(refined.centroids, truncate(refined.assigned))
+          m = IvfIndex.Model(refined.centroids,
+            graft.Caching.truncate(refined.assigned, eager = true))
           members.unpersist() // checkpoint is materialized; cache done
           rounds += 1
       }

@@ -2,30 +2,14 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.{DataFrame, Row}
 
-/** Bridge to `private[sql]` plan plumbing, sibling of [[ColumnBridge]].
-  *
-  * `statsReset` exists because Spark 4's `Dataset.localCheckpoint` rewrites
-  * the ORIGIN plan's statistics onto the checkpointed `LogicalRDD`
-  * (`LogicalRDD.rewriteStatsAndConstraints`, sql/core ExistingRDD.scala).
-  * Lineage is truncated but statistics are not: in an iterative algorithm
-  * that joins the previous round's checkpoint several times, the
-  * join-MULTIPLIED `sizeInBytes` BigInts compound doubly-exponentially —
-  * the digit count multiplies by the per-round join count — and after a
-  * few rounds the stats rewrite itself grinds the driver on
-  * million-digit `BigInteger.multiply` calls (observed: a single
-  * `localCheckpoint` pinning a core for 15+ minutes inside
-  * `SizeInBytesOnlyStatsPlanVisitor`). Rewrapping the checkpointed rows
-  * in a fresh `LogicalRDD` drops the inherited statistics back to the
-  * session default, which is what a checkpoint boundary should report
-  * anyway — the optimizer must not claim join-derived estimates for a
-  * materialized intermediate it never measured.
-  */
+/** Bridge to `private[sql]` plan plumbing, sibling of [[ColumnBridge]]. */
 object PlanBridge {
 
   /** Rewrap `df`'s physical rows as a new DataFrame whose plan carries
     * DEFAULT statistics (and no inherited constraints). Lazy: call on an
-    * already-materialized frame (e.g. fresh from `localCheckpoint`) so
-    * the rewrap never recomputes upstream work. */
+    * already-materialized frame so the rewrap never recomputes upstream
+    * work. Its one caller is [[graft.Caching.truncate]], whose doc says
+    * why a checkpoint needs it. */
   def statsReset(df: DataFrame): DataFrame = {
     val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
     ds.sparkSession.internalCreateDataFrame(ds.queryExecution.toRdd, ds.schema)

@@ -1044,8 +1044,7 @@ class IvfIndexSpec extends SparkSpec {
         case None => done = true
         case Some((split, members)) =>
           m = IvfIndex.Model(split.centroids,
-            org.apache.spark.sql.graft.PlanBridge.statsReset(
-              split.assigned.localCheckpoint()))
+            Caching.truncate(split.assigned, eager = true))
           members.unpersist()
           rounds += 1
       }
