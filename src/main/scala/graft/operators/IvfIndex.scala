@@ -29,6 +29,8 @@ import org.apache.spark.sql.types.DataType
   * filters the store on the probed cluster ids, which reaches the parquet
   * scan as static partition pruning — the physical analog of the
   * reference's "scan only the probed posting lists" (`index.rs:176-187`).
+  * The probed ids ride the plan as one array literal ([[inClusters]]), so
+  * a warm query compiles no new code whichever clusters it probes.
   */
 object IvfIndex {
 
@@ -350,11 +352,19 @@ object IvfIndex {
       metric: Metric): Seq[Int] =
     probe(cents, query, metric).take(probes).map(cents.ids).toSeq
 
-  /** `store` restricted to the probed posting lists: a literal IN-list on
-    * cluster_id, which a `partitionBy("cluster_id")` store prunes
-    * statically at the scan. */
+  /** `store` restricted to the probed posting lists:
+    * `array_contains(<probed ids>, cluster_id)` with the ids as ONE array
+    * literal. An IN-list would be optimized to an `INSET` whose values are
+    * written into the generated code, so every new probe list would be
+    * new source and a fresh Janino compile on the driver; an array
+    * literal reaches the generated code as a reference object, so every
+    * warm query of one plan shape reuses one compiled class. The
+    * predicate reads only cluster_id, so a `partitionBy("cluster_id")`
+    * store still prunes partitions statically at the scan. An empty
+    * probe list is a constant-false filter, which plans no scan. */
   private def inClusters(store: DataFrame, ids: Seq[Int]): DataFrame =
-    store.where(col("cluster_id").isin(ids: _*))
+    if (ids.isEmpty) store.where(lit(false))
+    else store.where(array_contains(typedLit(ids.toArray), col("cluster_id")))
 
   /** Every rankable cluster of `model` as `(cluster_id, rank)`, rank 1 =
     * nearest: the budget-`p` probe list is the `rank <= p` prefix, which
@@ -382,7 +392,11 @@ object IvfIndex {
     * ([[Knn.QueryRow]], [[probe]]); the store is filtered on the probed
     * ids (static partition pruning when `assigned` is disk-partitioned by
     * cluster_id) and the exact re-rank inherits Knn's
-    * TakeOrderedAndProject — a warm query is one scan job. */
+    * TakeOrderedAndProject — a warm query is one scan job. The query
+    * vector and the probed ids both enter the plan as array literals,
+    * which generated code holds as references, not as inlined values: a
+    * warm query reuses the compiled code of the previous one instead of
+    * compiling its own ([[inClusters]]). */
   def query(
       model: Model,
       query: DataFrame,

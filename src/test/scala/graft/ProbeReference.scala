@@ -2,10 +2,12 @@ package graft
 
 import graft.types.Metric
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.{In, InSet, Literal}
+import org.apache.spark.sql.catalyst.expressions.{ArrayContains, In, InSet, Literal}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, IntegerType}
 
 /** Test-side references for the single-query probe. */
 object ProbeReference extends AdaptiveSparkPlanHelper {
@@ -36,9 +38,13 @@ object ProbeReference extends AdaptiveSparkPlanHelper {
     collect(df.queryExecution.executedPlan) { case p => p.nodeName }
 
   /** The cluster ids a scan's static partition filters admit: the values
-    * of its `cluster_id IN (...)` filter, or `None` when it has none. */
+    * of its `array_contains(<int array literal>, cluster_id)` or
+    * `cluster_id IN (...)` filter, or `None` when it has none. */
   def partitionFilterIds(scan: FileSourceScanExec): Option[Set[Int]] =
     scan.partitionFilters.collectFirst {
+      case ArrayContains(Literal(ids: ArrayData, ArrayType(IntegerType, _)), a)
+          if a.references.exists(_.name == "cluster_id") =>
+        ids.toIntArray().toSet
       case In(a, values) if a.references.exists(_.name == "cluster_id") =>
         values.map { case l: Literal => l.value.asInstanceOf[Int] }.toSet
       case InSet(a, values) if a.references.exists(_.name == "cluster_id") =>

@@ -2,17 +2,19 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import graft.operators.{IvfIndex, Knn}
+import graft.functions.FilterDsl
+import graft.operators.{IvfIndex, Knn, VectorOps}
 import graft.types.Metric
 import org.apache.spark.graft.ListenerDrain
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The single-vector query paths resolve the query row and the probe list
   * on the driver: a warm query plans as one scan job, a zero-row query
-  * frame answers empty, a multi-row one fails, and a computed query frame
-  * answers like a local one. */
+  * frame answers empty, a multi-row one fails, a computed query frame
+  * answers like a local one, and a warm IVF query compiles no code. */
 class SingleQuerySpec extends SparkSpec {
   import spark.implicits._
 
@@ -118,6 +120,65 @@ class SingleQuerySpec extends SparkSpec {
         assert(local.nonEmpty, name)
         assert(answer(computedQuery(id)) === local, s"$name, query $id")
       }
+    }
+  }
+
+  /** Code classes compiled so far in this JVM (cache misses of Spark's
+    * codegen cache). */
+  private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  test("a warm single-vector IVF query compiles no code, whatever clusters it probes") {
+    val probes = 3
+    // local query frames whose probe lists are pairwise distinct
+    val queries = records.where(col("id") >= 100).orderBy("id")
+      .select("embedding").as[Seq[Float]].collect().iterator
+      .map { v =>
+        val q = Seq(Tuple1(v)).toDF("qvec")
+        (q, ProbeReference.probedIds(centroids, q, probes, Metric.Euclidean))
+      }
+      .distinctBy(_._2.toSet).take(8).toSeq
+    assert(queries.size === 8)
+    val books = VectorOps.pqPack(VectorOps.pqTrain(records, m = 4, dsub = 4, k = 8))
+    val codes = Caching.ensureCached(model.assigned.crossJoin(broadcast(books))
+      .select(col("id"), col("cluster_id"),
+        VectorOps.pqCodes(col("embedding"), col("books")).as("codes")))
+    val residualCodes = Caching.ensureCached(
+      IvfIndex.encodeResidual(model.assigned, centroids, books))
+    val label = FilterDsl.predicate(col("metadata"), "label = 1")
+    // each path over an index whose store (records or codes) is `assigned`
+    type Path = (IvfIndex.Model, Int, DataFrame) => DataFrame
+    val paths: Seq[(String, IvfIndex.Model, Path)] = Seq(
+      ("query", model, (m, p, q) => IvfIndex.query(m, q, 10, p)),
+      ("query with a FilterDsl filter", model,
+        (m, p, q) => IvfIndex.query(m, q, 10, p, filter = label)),
+      ("queryPrefixRerank", model,
+        (m, p, q) => IvfIndex.queryPrefixRerank(m, q, 10, p, prefixDim = 8, shortlist = 40)),
+      ("queryHammingRerank", model,
+        (m, p, q) => IvfIndex.queryHammingRerank(m, q, 10, p, shortlist = 40)),
+      ("queryAdc", IvfIndex.Model(centroids, codes),
+        (m, p, q) => IvfIndex.queryAdc(m.centroids, m.assigned, books, q, 10, p)),
+      ("queryAdcResidual", IvfIndex.Model(centroids, residualCodes),
+        (m, p, q) => IvfIndex.queryAdcResidual(m.centroids, m.assigned, books, q, 10, p)))
+    def answer(df: DataFrame): Seq[(Long, Double)] =
+      df.select("id", "distance").as[(Long, Double)].collect().toSeq
+    paths.foreach { case (name, index, run) =>
+      val (compiled, answers) = queries.map { case (q, _) =>
+        val before = compiles
+        val got = answer(run(index, probes, q))
+        (compiles - before, got)
+      }.unzip
+      assert(compiled.tail.forall(_ == 0), s"$name: classes compiled per query $compiled")
+      queries.zip(answers).foreach { case ((q, probed), got) =>
+        assert(got.nonEmpty, name)
+        // the same search over the store filtered with an IN-list
+        val pruned = IvfIndex.Model(index.centroids,
+          index.assigned.where(col("cluster_id").isin(probed: _*)))
+        assert(got === answer(run(pruned, Int.MaxValue, q)), s"$name, probes $probed")
+      }
+      val q = queries.head._1
+      val none = run(index, 0, q)
+      assert(none.collect().isEmpty, name)
+      assert(none.schema === run(index, probes, q).schema, name)
     }
   }
 }

@@ -37,3 +37,4 @@ for name, sql in sorted(oracle.items()):
     except Exception as ex:
         print(f'{name}: ERROR {str(ex)[:200]}'); fails += 1
 print('FAILURES:', fails)
+sys.exit(1 if fails else 0)
