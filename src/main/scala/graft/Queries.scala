@@ -1112,8 +1112,8 @@ object Queries {
     * (an Inf-norm payload beyond the Metric.validRecord domain) would
     * poison every augmentation via sqrt(∞ − n²) — both return `None`
     * and the callers emit the oracle's zero-row frame. */
-  private def mipsFixedIndex(
-      s: SparkSession, dir: String): Option[(DataFrame, DataFrame)] = {
+  private[graft] def mipsFixedIndex(
+      s: SparkSession, dir: String): Option[IvfIndex.Model] = {
     val base = recs(s, dir)
       .withColumn("__n2",
         graft.functions.NativeExprs.dot(col("embedding"), col("embedding")))
@@ -1134,25 +1134,20 @@ object Queries {
           cents, Metric.Euclidean)
         .select(col("id"), col("cluster_id"), col("__orig").as("embedding"),
           col("metadata")))
-      Some((cents, assigned))
+      Some(IvfIndex.Model(cents, assigned))
     }
   }
 
-  /** The single-query MIPS probe: the 3 nearest AUGMENTED centroids to
-    * the zero-padded query (ties to the lower cluster_id), carrying the
-    * raw qvec for the exact dot rerank — the native sq-L2 kernel is the
-    * fuzz-pinned twin of the sqlSq fold the oracle replays. */
-  private def mipsProbed(s: SparkSession, dir: String,
-      cents: DataFrame): DataFrame = {
-    val qa = qvec0(s, dir).select(col("qvec"),
-      concat(col("qvec").cast("array<double>"),
-        array(lit(0.0))).as("__qaug"))
-    cents.crossJoin(broadcast(qa))
-      .withColumn("__cd",
-        Metric.Euclidean.distance(col("centroid"), col("__qaug")))
-      .orderBy(col("__cd").asc, col("cluster_id").asc).limit(3)
-      .select(col("cluster_id"), col("qvec"))
-  }
+  /** A single-query `ivf_mips_*` answer `(vec_id, score)`: `serve` over
+    * the fixed augmented index, or the oracle's zero-row frame when there
+    * is none. */
+  private def mipsAnswer(s: SparkSession, dir: String)(
+      serve: IvfIndex.Model => DataFrame): DataFrame =
+    mipsFixedIndex(s, dir) match {
+      case None => recs(s, dir).limit(0)
+        .select(col("id").as("vec_id"), lit(0.0).as("score"))
+      case Some(m) => serve(m).select(col("id").as("vec_id"), r4(col("score")).as("score"))
+    }
 
   /** The (pre-refine, post-refine) pair over the forced-oversized
     * 4-fixed-centroid model, memoized per (session, dir) with the
@@ -1945,22 +1940,14 @@ object Queries {
     // M² = max |x|², q̃ = q ++ [0] — then |x̃|² is the CONSTANT M², so
     // L2 order on the augmented vectors equals dot-product order and
     // the whole IVF probe machinery applies to MIPS unchanged. Probe =
-    // 3 nearest augmented fixed centroids (records 0..7); exact dot
-    // rerank inside the probed clusters. All augmentation arithmetic in
+    // 3 nearest augmented fixed centroids (records 0..7), ranked on the
+    // driver ([[IvfIndex.queryMips]]); exact dot rerank inside the probed
+    // clusters, NaN scores dropped. All augmentation arithmetic in
     // doubles (float→double widening is exact; sqrt is correctly
     // rounded), every fold in index order — the oracle replays
     // augmentation, assignment, probe, and rerank list-for-list
-    "ivf_mips_query" -> ((s, dir) =>
-      mipsFixedIndex(s, dir) match {
-        case None => recs(s, dir).limit(0)
-          .select(col("id").as("vec_id"), lit(0.0).as("score"))
-        case Some((cents, assigned)) =>
-          assigned.join(broadcast(mipsProbed(s, dir, cents)), Seq("cluster_id"))
-            .withColumn("__s",
-              graft.functions.NativeExprs.dot(col("embedding"), col("qvec")))
-            .orderBy(col("__s").desc, col("id").asc).limit(10)
-            .select(col("id").as("vec_id"), r4(col("__s")).as("score"))
-      }),
+    "ivf_mips_query" -> ((s, dir) => mipsAnswer(s, dir)(m =>
+      IvfIndex.queryMips(m, qvec0(s, dir), k = 10, probes = 3))),
 
     // extension: METADATA-FILTERED MIPS — the O4 × O6 composition on the
     // dot-product order, completing the MIPS family's symmetry with the
@@ -1969,43 +1956,26 @@ object Queries {
     // (predicate precedes ranking, reference index.rs:197-199), so a
     // selective filter never widens the probe. Same fixed augmented
     // geometry and oracle-replayed probe as ivf_mips_query.
-    "ivf_mips_filtered" -> ((s, dir) =>
-      mipsFixedIndex(s, dir) match {
-        case None => recs(s, dir).limit(0)
-          .select(col("id").as("vec_id"), lit(0.0).as("score"))
-        case Some((cents, assigned)) =>
-          assigned.join(broadcast(mipsProbed(s, dir, cents)), Seq("cluster_id"))
-            .where(FilterDsl.predicate(col("metadata"), "label >= 5"))
-            .withColumn("__s",
-              graft.functions.NativeExprs.dot(col("embedding"), col("qvec")))
-            .orderBy(col("__s").desc, col("id").asc).limit(10)
-            .select(col("id").as("vec_id"), r4(col("__s")).as("score"))
-      }),
+    "ivf_mips_filtered" -> ((s, dir) => mipsAnswer(s, dir)(m =>
+      IvfIndex.queryMips(m, qvec0(s, dir), k = 10, probes = 3,
+        filter = FilterDsl.predicate(col("metadata"), "label >= 5")))),
 
     // extension: the MIPS 100 TB LAYOUT — the norm-augmented assignment
     // written as cluster_id-partitioned parquet (posting lists on disk,
     // ivf_store_query's shape applied to dot order) and probed from the
     // reopened store: the 3-centroid probe list must prune partitions at
-    // the scan (DPP, pinned in PlanShapeSpec), and the pruned store
-    // answers exactly like the in-memory ivf_mips_query — same oracle.
+    // the scan (static pruning, pinned in PlanShapeSpec), and the pruned
+    // store answers exactly like the in-memory ivf_mips_query — same oracle.
     // Augmented centroids stay in memory (the model side); only the
     // data-proportional posting lists live on disk.
-    "ivf_mips_store_query" -> ((s, dir) =>
-      mipsFixedIndex(s, dir) match {
-        case None => recs(s, dir).limit(0)
-          .select(col("id").as("vec_id"), lit(0.0).as("score"))
-        case Some((cents, assigned)) =>
-          val path = s"${System.getProperty("java.io.tmpdir")}/graft_mips_store_" +
-            s"${s.sparkContext.applicationId}_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-          if (!new java.io.File(s"$path/_SUCCESS").exists())
-            assigned.write.mode("overwrite").partitionBy("cluster_id").parquet(path)
-          s.read.parquet(path)
-            .join(broadcast(mipsProbed(s, dir, cents)), Seq("cluster_id"))
-            .withColumn("__s",
-              graft.functions.NativeExprs.dot(col("embedding"), col("qvec")))
-            .orderBy(col("__s").desc, col("id").asc).limit(10)
-            .select(col("id").as("vec_id"), r4(col("__s")).as("score"))
-      }),
+    "ivf_mips_store_query" -> ((s, dir) => mipsAnswer(s, dir) { m =>
+      val path = s"${System.getProperty("java.io.tmpdir")}/graft_mips_store_" +
+        s"${s.sparkContext.applicationId}_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      if (!new java.io.File(s"$path/_SUCCESS").exists())
+        IvfIndex.writePartitioned(m, path)
+      IvfIndex.queryMips(IvfIndex.Model(m.centroids, s.read.parquet(path)),
+        qvec0(s, dir), k = 10, probes = 3)
+    }),
 
     // extension: BATCH MIPS serving — the r10 single-query norm-augmented
     // probe generalized to many queries ([[IvfIndex.queryMipsBatch]]):
@@ -2020,10 +1990,10 @@ object Queries {
         case None => recs(s, dir).limit(0)
           .select(col("id").as("query_id"), col("id").as("vec_id"),
             lit(0.0).as("score"))
-        case Some((cents, assigned)) =>
+        case Some(m) =>
           val queries = recs(s, dir).where(col("id") < 5)
             .select(col("id").as("query_id"), col("embedding").as("qvec"))
-          IvfIndex.queryMipsBatch(cents, assigned, queries, k = 5, probes = 3)
+          IvfIndex.queryMipsBatch(m.centroids, m.assigned, queries, k = 5, probes = 3)
             .orderBy(col("query_id").asc, col("score").desc, col("id").asc)
             .select(col("query_id"), col("id").as("vec_id"),
               r4(col("score")).as("score"))
@@ -2048,16 +2018,15 @@ object Queries {
           // oracle's LEFT JOIN … coalesce(0) shape, not an empty frame
           points.toDF("probes").select(col("probes"),
             lit(0L).as("n_hit"), lit(0.0).as("recall"))
-        case Some((cents, assigned)) =>
+        case Some(m) =>
           val q = qvec0(s, dir)
-          val exact10 = assigned.crossJoin(broadcast(q))
+          val exact10 = m.assigned.crossJoin(broadcast(q))
             .withColumn("__s",
               graft.functions.NativeExprs.dot(col("embedding"), col("qvec")))
             .where(!isnan(col("__s")))
             .orderBy(col("__s").desc, col("id").asc).limit(10)
             .select(col("id"))
-          val hits = IvfIndex.queryMipsProbeSweep(cents, assigned, q,
-              k = 10, points)
+          val hits = IvfIndex.queryMipsProbeSweep(m, q, k = 10, points)
             .join(broadcast(exact10), Seq("id"), "left_semi")
             .groupBy(col("probes")).agg(count(lit(1)).as("__h"))
           points.toDF("probes")
@@ -7208,7 +7177,8 @@ object Queries {
       |  FROM te JOIN pr ON te.doc_id = pr.doc_id WHERE pr.rn = 1)""".stripMargin
 
   /** The ivf_mips_query funnel replay (augmentation + assignment +
-    * probe + dot rerank, list-for-list) — shared VERBATIM by
+    * probe + dot rerank, list-for-list, NaN scores dropped as
+    * [[IvfIndex.queryMips]] drops them) — shared VERBATIM by
     * `ivf_mips_store_query`: the on-disk posting-list roundtrip must
     * not change a single row, so the two queries carry one oracle. */
   private lazy val mipsQueryOracleSql: String =
@@ -7227,6 +7197,7 @@ object Queries {
        |probed AS (SELECT c.cid FROM c, qa ORDER BY ${sqlSq("c.ca", "qa.qaug")} ASC, c.cid ASC LIMIT 3)
        |SELECT aug.vec_id AS vec_id, ${sqlR4(sqlDot("aug.embedding", "q.qvec"))} AS score
        |FROM aug JOIN asg ON aug.vec_id = asg.vec_id JOIN probed ON asg.cid = probed.cid, q
+       |WHERE NOT isnan(${sqlDot("aug.embedding", "q.qvec")})
        |ORDER BY ${sqlDot("aug.embedding", "q.qvec")} DESC, aug.vec_id ASC LIMIT 10""".stripMargin
 
   val oracleSql: Map[String, String] = Map(
@@ -7302,7 +7273,7 @@ object Queries {
          |probed AS (SELECT c.cid FROM c, qa ORDER BY ${sqlSq("c.ca", "qa.qaug")} ASC, c.cid ASC LIMIT 3)
          |SELECT aug.vec_id AS vec_id, ${sqlR4(sqlDot("aug.embedding", "q.qvec"))} AS score
          |FROM aug JOIN asg ON aug.vec_id = asg.vec_id JOIN probed ON asg.cid = probed.cid, q
-         |WHERE aug.label >= 5
+         |WHERE aug.label >= 5 AND NOT isnan(${sqlDot("aug.embedding", "q.qvec")})
          |ORDER BY ${sqlDot("aug.embedding", "q.qvec")} DESC, aug.vec_id ASC LIMIT 10""".stripMargin,
 
     // augmented probe funnel replayed at each probe count via the

@@ -1,12 +1,12 @@
 package graft.operators
 
 import graft.types.Metric
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.BoundReference
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Concat, Literal}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, StructField, StructType}
 
 /** IVF (inverted-file) ANN index, batch-native.
   *
@@ -31,6 +31,11 @@ import org.apache.spark.sql.types.DataType
   * reference's "scan only the probed posting lists" (`index.rs:176-187`).
   * The probed ids ride the plan as one array literal ([[inClusters]]), so
   * a warm query compiles no new code whichever clusters it probes.
+  *
+  * The probe order (nearest centroid first, null distances dropped, NaN
+  * last, ties to the lower cluster_id) has exactly two definitions:
+  * [[probe]] for one query, on the driver, and [[probeBatch]] for a frame
+  * of queries, as one window.
   */
 object IvfIndex {
 
@@ -312,17 +317,17 @@ object IvfIndex {
     }
   }
 
-  /** The probe order shared by every single-query funnel and
-    * [[probeCost]]: positions into `cents`, nearest centroid first — ONE
-    * definition so the tiebreak, NaN handling and invalid-row exclusion
-    * can never diverge across the exact / prefix / Hamming / ADC serving
-    * paths. Distances are the metric's own kernel evaluated on the driver
-    * against the query literal, so they are bit-identical to the kernel
-    * in a plan. NaN ranks last (`index.rs:269-272`), ties go to the lower
-    * cluster_id. A NULL distance (null or wrong-length centroid/query —
-    * the kernels return null, not NaN) is an invalid row, not a near one:
-    * it is excluded outright rather than stealing a probe slot from a
-    * real cluster. A zero-row query probes nothing. */
+  /** The probe order for ONE query, and one of its two definitions (the
+    * other is [[probeBatch]], pinned to this one in ProbePropSpec): every
+    * single-query funnel, both sweeps and [[probeCost]] rank through it.
+    * Positions into `cents`, nearest centroid first. Distances are the
+    * metric's own kernel evaluated on the driver against the query
+    * literal, so they are bit-identical to the kernel in a plan. NaN ranks
+    * last (`index.rs:269-272`), ties go to the lower cluster_id. A NULL
+    * distance (null or wrong-length centroid/query — the kernels return
+    * null, not NaN) is an invalid row, not a near one: it is excluded
+    * outright rather than stealing a probe slot from a real cluster. A
+    * zero-row query probes nothing. */
   private[operators] def probe(
       cents: ProbeCentroids,
       query: Knn.QueryRow,
@@ -343,6 +348,40 @@ object IvfIndex {
         else ia < ib
       }.map(_._3)
     }
+
+  /** The probe order for a FRAME of queries, keyed by `query_id`, and the
+    * other of its two definitions: [[probe]]'s rule as one ranking window
+    * over the broadcast centroids × queries cross (never the data). Emits
+    * the rows that survive each query's nearest-`probes` cut, with every
+    * column of both sides and no rank column. */
+  private[operators] def probeBatch(
+      centroids: DataFrame,
+      queries: DataFrame,
+      qvec: Column,
+      metric: Metric,
+      probes: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(isnan(col("__cdist")).asc, col("__cdist").asc, col("cluster_id").asc)
+    centroids
+      .crossJoin(broadcast(queries))
+      .withColumn("__cdist", metric.distance(col("centroid"), qvec))
+      .where(col("__cdist").isNotNull && col("cluster_id").isNotNull)
+      .withColumn("__rn", row_number().over(w))
+      .where(col("__rn") <= lit(probes))
+      .drop("__cdist", "__rn")
+  }
+
+  /** `q` in the norm-augmented MIPS geometry: its `qvec` widened to
+    * doubles and padded with a 0 (q̃ = q ++ [0], [[queryMipsBatch]]). */
+  private def padded(q: Knn.QueryRow): Knn.QueryRow = {
+    val augType = ArrayType(DoubleType)
+    val aug = Concat(Seq(
+      Cast(ColumnBridge.expression(q.literal("qvec")), augType),
+      Literal.create(Seq(0.0), augType)))
+    Knn.QueryRow(StructType(Seq(StructField("qvec", augType))),
+      q.row.map(_ => Row(CatalystTypeConverters.convertToScala(aug.eval(), augType))))
+  }
 
   /** The ids of the nearest `probes` clusters under [[probe]]'s order. */
   private def probedIds(
@@ -366,22 +405,21 @@ object IvfIndex {
     if (ids.isEmpty) store.where(lit(false))
     else store.where(array_contains(typedLit(ids.toArray), col("cluster_id")))
 
-  /** Every rankable cluster of `model` as `(cluster_id, rank)`, rank 1 =
-    * nearest: the budget-`p` probe list is the `rank <= p` prefix, which
-    * is what lets the sweeps serve every budget from one ranking. */
-  private def probeRanks(model: Model, query: Knn.QueryRow, metric: Metric): Seq[(Int, Int)] = {
-    val cents = model.probeCentroids
-    probe(cents, query, metric).toSeq.zipWithIndex.map { case (i, r) => (cents.ids(i), r + 1) }
-  }
-
-  /** [[probeRanks]] per tagged model, as `(tag, cluster_id, rank)`. */
+  /** Every rankable cluster of each tagged model as `(tag, cluster_id,
+    * rank)`, rank 1 = nearest: the budget-`p` probe list is the
+    * `rank <= p` prefix, which is what lets the sweeps serve every budget
+    * from one ranking. */
   private def taggedRanks(
       models: Seq[(String, Model)],
       query: Knn.QueryRow,
-      metric: Metric): Seq[(String, Int, Int)] =
+      metric: Metric): Seq[(String, Int, Int)] = {
+    require(models.nonEmpty, "models must be non-empty")
+    require(models.map(_._1).distinct.size == models.size, "model tags must be distinct")
     models.flatMap { case (t, m) =>
-      probeRanks(m, query, metric).map { case (c, r) => (t, c, r) }
+      val cents = m.probeCentroids
+      probe(cents, query, metric).toSeq.zipWithIndex.map { case (i, r) => (t, cents.ids(i), r + 1) }
     }
+  }
 
   /** Probed ANN query (reference `src/cores/index.rs:168-214`):
     * rank ALL centroids by distance to the query — NaN ranks last
@@ -427,48 +465,39 @@ object IvfIndex {
     * means over-dense clusters (the adaptive-split budget is behind —
     * see [[refine]]). One row per requested probe budget; a probed
     * cluster emptied by duplicate-tie assignment still counts as probed
-    * with zero rows (left join, not inner). */
+    * with zero rows (left join, not inner). The one-model case of
+    * [[probeCostTagged]], ranked by [[probe]]. */
   def probeCost(
       model: Model,
       query: DataFrame,
       probesList: Seq[Int],
-      metric: Metric = Metric.Euclidean): DataFrame = {
-    require(probesList.nonEmpty,
-      "probeCost needs at least one probe budget (got an empty probesList)")
-    val spark = model.assigned.sparkSession
-    import spark.implicits._
-    // ONE centroid ranking for the whole sweep (the queryProbeSweep
-    // argument), by the serving path's own driver-side probe: every
-    // budget is the rank ≤ p prefix of that order.
-    val sizes = model.assigned.groupBy(col("cluster_id"))
-      .agg(count(lit(1)).as("__csz"))
-    // a probed cluster emptied by duplicate-tie assignment still counts
-    // as probed with zero rows (left join, not inner)
-    val ranked = probeRanks(model, Knn.QueryRow(query), metric)
-      .toDF("cluster_id", "__rank")
-      // NOTE (r14): broadcast(sizes) was tried here and reverted — both
-      // sides are cluster-count-bounded, so the join is tiny either way,
-      // and A/B probes could not show a win for the extra
-      // BroadcastExchange (a driver collect round-trip per
-      // materialization) over the small sort-merge.
-      .join(sizes, Seq("cluster_id"), "left_outer")
-    val totals = model.assigned.agg(count(lit(1)).as("store_rows"))
-      .withColumn("store_clusters", lit(model.probeCentroids.rowCount))
-    probesList.distinct.toDF("probes")
-      // rank-prefix fan-out: points × clusters nested-loop on a broadcast
-      // cluster-count frame; left join keeps a budget row even when no
-      // cluster is probeable (empty/NaN centroid set → n_probed = 0)
-      .join(broadcast(ranked), col("__rank") <= col("probes"), "left_outer")
-      .groupBy(col("probes"))
-      .agg(count(col("cluster_id")).as("n_probed"),
-        coalesce(sum(col("__csz")), lit(0L)).as("rows_scanned"))
-      .crossJoin(broadcast(totals))
-      .select(col("probes"), col("n_probed"), col("rows_scanned"),
-        col("store_rows"), col("store_clusters"),
-        // an EMPTY store scans 0 of 0 rows — report 0.0, not null
-        when(col("store_rows") === 0L, lit(0.0))
-          .otherwise(floor(col("rows_scanned").cast("double") / col("store_rows")
-            * lit(10000.0) + lit(0.5)) / lit(10000.0)).as("scan_frac"))
+      metric: Metric = Metric.Euclidean): DataFrame =
+    probeCostTagged(Seq("model" -> model), query, probesList, metric).drop("__model")
+
+  /** Single-query MIPS serving — the dot-product twin of [[query]] over
+    * the norm-augmented geometry of [[queryMipsBatch]]: `model.centroids`
+    * are the AUGMENTED centroids, `model.assigned` keeps the ORIGINAL
+    * embeddings. The zero-padded query ranks the centroids under L2 with
+    * [[probe]], the store is filtered on the probed ids ([[inClusters]]),
+    * `filter` applies before the top-k, and the dot rerank is a bounded
+    * top-k: descending score, ties to the smaller id, NaN and null scores
+    * dropped. Emits `(id, score)`, score = the raw dot product. */
+  def queryMips(
+      model: Model,
+      query: DataFrame,
+      k: Int,
+      probes: Int = 32,
+      filter: Column = lit(true)): DataFrame = {
+    require(k > 0, "k must be positive")
+    val q = Knn.QueryRow(query)
+    val probed = probedIds(model.probeCentroids, padded(q), probes, Metric.Euclidean)
+    q.attachTo(inClusters(model.assigned, probed))
+      .where(filter)
+      .withColumn("score", graft.functions.NativeExprs.dot(col("embedding"), col("qvec")))
+      .where(!isnan(col("score")))
+      .orderBy(col("score").desc, col("id").asc)
+      .limit(k)
+      .select(col("id"), col("score"))
   }
 
   /** IVF probe composed with the Matryoshka prefix funnel
@@ -637,7 +666,8 @@ object IvfIndex {
   }
 
   /** Batch twin of [[queryAdcResidual]]: many queries against the
-    * residual code store. LUTs live per (query, probed cluster) — the
+    * residual code store. Each query's probe list is cut by
+    * [[probeBatch]]; LUTs live per (query, probed cluster) — the
     * broadcast frame is ≤ |queries|·probes rows of m·|book| doubles —
     * and the single cluster_id join both prunes the store to probed
     * clusters and fans each candidate out to exactly the queries probing
@@ -651,18 +681,10 @@ object IvfIndex {
       queries: DataFrame,
       k: Int,
       probes: Int = 32): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(k > 0, "k must be positive")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(isnan(col("__cdist")).asc, col("__cdist").asc, col("cluster_id").asc)
-    val probedQ = centroids
-      .crossJoin(broadcast(queries))
-      .withColumn("__cdist", Metric.Euclidean.distance(col("centroid"), col("qvec")))
-      .where(col("__cdist").isNotNull) // invalid centroid rows never probe
-      .withColumn("__rn", row_number().over(w))
-      .where(col("__rn") <= lit(probes))
+    val cluts = probeBatch(centroids, queries, col("qvec"), Metric.Euclidean, probes)
       .select(col("query_id"), col("cluster_id"), col("centroid"), col("qvec"))
-    val cluts = probedQ.crossJoin(broadcast(books))
+      .crossJoin(broadcast(books))
       .select(col("query_id"), col("cluster_id"),
         VectorOps.pqLuts(
           VectorOps.residual(col("qvec"), col("centroid")),
@@ -1290,8 +1312,8 @@ object IvfIndex {
     *
     * Plan shape (the part that must survive 100 TB):
     *   1. queries × centroids is a broadcast cross of two SMALL frames;
-    *      a per-query ranking window runs over ≤ |queries|·k_centroids
-    *      rows — never the data table.
+    *      the per-query ranking window ([[probeBatch]]) runs over
+    *      ≤ |queries|·k_centroids rows — never the data table.
     *   2. The big `assigned` table joins the broadcast (query_id,
     *      cluster_id, qvec) probe list on `cluster_id` — each record
     *      meets only the queries probing its cluster (with disk
@@ -1307,17 +1329,8 @@ object IvfIndex {
       metric: Metric = Metric.Euclidean,
       radius: Double = Double.PositiveInfinity,
       filter: Column = lit(true)): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(k > 0, "k must be positive")
-    val cdist = metric.distance(col("centroid"), col("qvec"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(isnan(col("__cdist")).asc, col("__cdist").asc, col("cluster_id").asc)
-    val probedQ = model.centroids
-      .crossJoin(broadcast(queries))
-      .withColumn("__cdist", cdist)
-      .where(col("__cdist").isNotNull) // invalid centroid rows never probe
-      .withColumn("__rn", row_number().over(w))
-      .where(col("__rn") <= lit(probes))
+    val probedQ = probeBatch(model.centroids, queries, col("qvec"), metric, probes)
       .select(col("query_id"), col("cluster_id"), col("qvec"))
     val dist = metric.distance(col("embedding"), col("qvec"))
     val candidates = model.assigned
@@ -1344,66 +1357,62 @@ object IvfIndex {
     * every p at once; the ranking runs on the driver over the centroid
     * rows — never the data. Per-point top-k is the two-phase bounded
     * heap; output `(probes, id, distance)` is row-identical to [[query]]
-    * at each probe count (law-pinned in IvfIndexSpec). */
+    * at each probe count (law-pinned in IvfIndexSpec). The one-model
+    * case of [[queryProbeSweepTagged]]. */
   def queryProbeSweep(
       model: Model,
       query: DataFrame,
       k: Int,
       probePoints: Seq[Int],
-      metric: Metric = Metric.Euclidean): DataFrame = {
-    require(k > 0, "k must be positive")
-    require(probePoints.nonEmpty, "probePoints must be non-empty")
-    val spark = model.assigned.sparkSession
-    import spark.implicits._
-    val q = Knn.QueryRow(query)
-    val ranked = probeRanks(model, q, metric).toDF("cluster_id", "__rank")
-    val points = probePoints.toDF("probes")
-    val cands = q.attachTo(model.assigned.join(broadcast(ranked), Seq("cluster_id")))
-      .withColumn("distance", metric.distance(col("embedding"), col("qvec")))
-      .where(!isnan(col("distance")))
-      .select(col("id"), col("__rank"), col("distance"))
-      // 5-row broadcast nested-loop fan-out on the rank predicate — each
-      // record row multiplies only into the points whose probe budget
-      // admits its cluster, and only after the wide embedding is dropped
-      .join(broadcast(points), col("__rank") <= col("probes"))
-      .select(col("probes").as("query_id"), col("distance"), col("id"))
-    Knn.topKPerQueryPairs(cands, k)
-      .select(col("query_id").as("probes"), col("id"), col("distance"))
-  }
+      metric: Metric = Metric.Euclidean): DataFrame =
+    queryProbeSweepTagged(Seq("model" -> model), query, k, probePoints, metric)
+      .drop("__model")
 
-  /** [[queryProbeSweep]] over SEVERAL models in ONE pass: the models'
-    * assignment frames are unioned under a `__model` tag, each model's
-    * centroids are ranked on the driver ([[probe]]), and the bounded heap
-    * runs per (model, probes) — so a before/after dashboard
-    * (`ivf_compaction_gain`) pays ONE data-scan chain and ONE top-k
-    * aggregation instead of one each per model (guide §2.4: two
-    * operations keyed the same way share one exchange). Output
-    * `(__model, probes, id, distance)` is row-identical per model to
-    * [[queryProbeSweep]] (law-pinned in IvfIndexSpec): the ranks, the
-    * rank-prefix fan-out and the heap are all keyed by the tag, so
-    * models never mix. */
+  /** [[queryProbeSweep]] over SEVERAL models in ONE pass, and the one
+    * body of both: the models' assignment frames are unioned under a
+    * `__model` tag, each model's centroids are ranked on the driver
+    * ([[probe]]), and the bounded heap runs per (model, probes) — so a
+    * before/after dashboard (`ivf_compaction_gain`) pays ONE data-scan
+    * chain and ONE top-k aggregation instead of one each per model
+    * (guide §2.4: two operations keyed the same way share one exchange).
+    * Output `(__model, probes, id, distance)`; each model's rows are
+    * those of its own one-model sweep (law-pinned in IvfIndexSpec): the
+    * ranks, the rank-prefix fan-out and the heap are all keyed by the
+    * tag, so models never mix. */
   def queryProbeSweepTagged(
       models: Seq[(String, Model)],
       query: DataFrame,
       k: Int,
       probePoints: Seq[Int],
       metric: Metric = Metric.Euclidean): DataFrame = {
+    val q = Knn.QueryRow(query)
+    sweep(models.map { case (t, m) => t -> m.assigned }, taggedRanks(models, q, metric), q,
+      k, probePoints, metric.distance(col("embedding"), col("qvec")))
+  }
+
+  /** The one body of the probe sweeps: the tagged stores' records joined
+    * to their clusters' `(tag, cluster_id, rank)`, each record's
+    * `distance` computed once (NaN and null dropped), fanned out to the
+    * budgets that admit its rank, and a bounded heap per (tag, probes).
+    * Emits `(__model, probes, id, distance)`. */
+  private def sweep(
+      stores: Seq[(String, DataFrame)],
+      ranks: Seq[(String, Int, Int)],
+      q: Knn.QueryRow,
+      k: Int,
+      probePoints: Seq[Int],
+      distance: Column): DataFrame = {
     require(k > 0, "k must be positive")
     require(probePoints.nonEmpty, "probePoints must be non-empty")
-    require(models.nonEmpty, "models must be non-empty")
-    require(models.map(_._1).distinct.size == models.size,
-      "model tags must be distinct")
-    val spark = models.head._2.assigned.sparkSession
+    val spark = stores.head._2.sparkSession
     import spark.implicits._
-    val q = Knn.QueryRow(query)
-    val asg = models.map { case (t, m) =>
-      m.assigned.select(lit(t).as("__model"), col("cluster_id"),
-        col("id"), col("embedding"))
+    val asg = stores.map { case (t, a) =>
+      a.select(lit(t).as("__model"), col("cluster_id"), col("id"), col("embedding"))
     }.reduce(_ unionByName _)
-    val ranked = taggedRanks(models, q, metric).toDF("__model", "cluster_id", "__rank")
+    val ranked = ranks.toDF("__model", "cluster_id", "__rank")
     val points = probePoints.toDF("probes")
     val cands = q.attachTo(asg.join(broadcast(ranked), Seq("__model", "cluster_id")))
-      .withColumn("distance", metric.distance(col("embedding"), col("qvec")))
+      .withColumn("distance", distance)
       .where(!isnan(col("distance")))
       .select(col("__model"), col("id"), col("__rank"), col("distance"))
       .join(broadcast(points), col("__rank") <= col("probes"))
@@ -1416,13 +1425,13 @@ object IvfIndex {
         col("query_id.probes").as("probes"), col("id"), col("distance"))
   }
 
-  /** [[probeCost]] over SEVERAL models in ONE pass — the cost half of
-    * the tagged-union dashboard machinery (see
+  /** [[probeCost]] over SEVERAL models in ONE pass, and the one body of
+    * both — the cost half of the tagged-union dashboard machinery (see
     * [[queryProbeSweepTagged]]): one tagged sizes rollup, one driver-side
-    * ranking per model, one rank-prefix aggregate; totals stay the
-    * per-model two-count cross of [[probeCost]]. Output adds `__model`
-    * in front of [[probeCost]]'s columns and is otherwise row-identical
-    * per model (law-pinned in IvfIndexSpec). */
+    * ranking per model ([[probe]]), one rank-prefix aggregate, and the
+    * totals as one two-count row per model. Output adds `__model` in
+    * front of [[probeCost]]'s columns; each model's rows are those of its
+    * own one-model census (law-pinned in IvfIndexSpec). */
   def probeCostTagged(
       models: Seq[(String, Model)],
       query: DataFrame,
@@ -1430,9 +1439,7 @@ object IvfIndex {
       metric: Metric = Metric.Euclidean): DataFrame = {
     require(probesList.nonEmpty,
       "probeCost needs at least one probe budget (got an empty probesList)")
-    require(models.nonEmpty, "models must be non-empty")
-    require(models.map(_._1).distinct.size == models.size,
-      "model tags must be distinct")
+    val ranks = taggedRanks(models, Knn.QueryRow(query), metric)
     val spark = models.head._2.assigned.sparkSession
     import spark.implicits._
     val asg = models.map { case (t, m) =>
@@ -1440,22 +1447,28 @@ object IvfIndex {
     }.reduce(_ unionByName _)
     val sizes = asg.groupBy(col("__model"), col("cluster_id"))
       .agg(count(lit(1)).as("__csz"))
-    val ranked = taggedRanks(models, Knn.QueryRow(query), metric)
-      .toDF("__model", "cluster_id", "__rank")
+    val ranked = ranks.toDF("__model", "cluster_id", "__rank")
+      // NOTE (r14): broadcast(sizes) was tried here and reverted — both
+      // sides are cluster-count-bounded, so the join is tiny either way,
+      // and A/B probes could not show a win for the extra
+      // BroadcastExchange (a driver collect round-trip per
+      // materialization) over the small sort-merge.
       .join(sizes, Seq("__model", "cluster_id"), "left_outer")
     val tags = models.map(_._1).toDF("__model")
-    // totals per model as two single-partition counts (the [[probeCost]]
-    // shape): deriving store_rows from the sizes rollup was tried and
-    // measured WORSE — it duplicates the sizes subtree (re-inlining the
-    // whole assignment lineage when a model is not checkpoint-backed)
-    // and adds two tag-keyed joins where a cross of 1-row aggregates
-    // suffices (r15)
+    // totals per model as two single-partition counts: deriving
+    // store_rows from the sizes rollup was tried and measured WORSE — it
+    // duplicates the sizes subtree (re-inlining the whole assignment
+    // lineage when a model is not checkpoint-backed) and adds two
+    // tag-keyed joins where a cross of 1-row aggregates suffices (r15)
     val totals = models.map { case (t, m) =>
       m.assigned.agg(count(lit(1)).as("store_rows"))
         .select(lit(t).as("__model"), col("store_rows"),
           lit(m.probeCentroids.rowCount).as("store_clusters"))
     }.reduce(_ unionByName _)
     probesList.distinct.toDF("probes").crossJoin(tags)
+      // rank-prefix fan-out: budgets × clusters nested-loop on a broadcast
+      // cluster-count frame; left join keeps a budget row even when no
+      // cluster is probeable (empty/NaN centroid set → n_probed = 0)
       .join(broadcast(ranked),
         ranked("__model") === tags("__model") && col("__rank") <= col("probes"),
         "left_outer")
@@ -1466,6 +1479,7 @@ object IvfIndex {
       .join(broadcast(totals), Seq("__model"))
       .select(col("__model"), col("probes"), col("n_probed"),
         col("rows_scanned"), col("store_rows"), col("store_clusters"),
+        // an EMPTY store scans 0 of 0 rows — report 0.0, not null
         when(col("store_rows") === 0L, lit(0.0))
           .otherwise(floor(col("rows_scanned").cast("double") / col("store_rows")
             * lit(10000.0) + lit(0.5)) / lit(10000.0)).as("scan_frac"))
@@ -1481,9 +1495,9 @@ object IvfIndex {
     * ORIGINAL embeddings for the exact rerank); queries arrive
     * unaugmented and are padded with a literal 0 here.
     *
-    * Probe selection per query is [[queryBatch]]'s bounded
-    * centroids×queries window (|centroids|·|queries| rows — never the
-    * data); the exact dot rerank inside the probed clusters feeds the
+    * Probe selection per query is the bounded centroids×queries window
+    * of [[probeBatch]] (|centroids|·|queries| rows — never the data),
+    * the batch twin of [[queryMips]]'s driver probe; the exact dot rerank inside the probed clusters feeds the
     * two-phase bounded heap ([[Knn.topKPerQueryPairs]]) on the NEGATED
     * score — IEEE negation is exact, so ascending −dot is exactly
     * descending dot with ties to the smaller id. NaN scores are dropped
@@ -1495,19 +1509,9 @@ object IvfIndex {
       queries: DataFrame,
       k: Int,
       probes: Int = 32): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(k > 0, "k must be positive")
-    val qAug = queries.select(col("query_id"), col("qvec"),
-      concat(col("qvec").cast("array<double>"),
-        array(lit(0.0))).as("__qaug"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(isnan(col("__cdist")).asc, col("__cdist").asc, col("cluster_id").asc)
-    val probedQ = augCentroids
-      .crossJoin(broadcast(qAug))
-      .withColumn("__cdist", Metric.Euclidean.distance(col("centroid"), col("__qaug")))
-      .where(col("__cdist").isNotNull)
-      .withColumn("__rn", row_number().over(w))
-      .where(col("__rn") <= lit(probes))
+    val qAug = concat(col("qvec").cast("array<double>"), array(lit(0.0)))
+    val probedQ = probeBatch(augCentroids, queries, qAug, Metric.Euclidean, probes)
       .select(col("query_id"), col("cluster_id"), col("qvec"))
     val cands = assigned
       .join(broadcast(probedQ), Seq("cluster_id"))
@@ -1520,54 +1524,25 @@ object IvfIndex {
   }
 
   /** Probe-SWEEP evaluation for MIPS — [[queryProbeSweep]]'s one-scan
-    * rank-derivation applied to the norm-augmented geometry
-    * ([[queryMipsBatch]]): the AUGMENTED centroids are ranked once by
-    * L2 distance to the zero-padded query (NaN-last, ties to the lower
-    * cluster_id — the same total order every probe funnel uses), each
-    * record's exact DOT score is computed once, and only narrow
-    * `(rank, score, id)` rows fan out to the probe points whose budget
-    * admits the record's cluster. `rank <= p` reproduces
-    * `ORDER BY … LIMIT p` for every p at once, so each point's output
-    * is row-identical to a fresh probe-p MIPS query (law-pinned in
-    * IvfIndexSpec). Per-point top-k is the two-phase bounded heap on
-    * the negated score; NaN scores are dropped (an underfull heap would
-    * otherwise admit NaN). Emits `(probes, id, score)`. */
+    * sweep over the norm-augmented geometry of [[queryMips]]: the
+    * zero-padded query ranks the AUGMENTED centroids once on the driver
+    * ([[probe]] under L2), the store is filtered to the clusters ranked
+    * within the largest budget ([[inClusters]]), and the sweep's heap
+    * runs on the negated DOT score (NaN scores dropped). Each point's
+    * output is row-identical to [[queryMips]] and [[queryMipsBatch]] at
+    * that budget (law-pinned in IvfIndexSpec). Emits
+    * `(probes, id, score)`. */
   def queryMipsProbeSweep(
-      augCentroids: DataFrame,
-      assigned: DataFrame,
+      model: Model,
       query: DataFrame,
       k: Int,
       probePoints: Seq[Int]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(k > 0, "k must be positive")
-    require(probePoints.nonEmpty, "probePoints must be non-empty")
-    val spark = assigned.sparkSession
-    import spark.implicits._
-    val qAug = query.select(col("qvec"),
-      concat(col("qvec").cast("array<double>"),
-        array(lit(0.0))).as("__qaug"))
-    // partitioned BY THE QUERY VECTOR (non-foldable — queryProbeSweep's
-    // bounded-window note): one ≤|centroids|-row partition per query
-    val w = Window.partitionBy(col("qvec"))
-      .orderBy(isnan(col("__cdist")).asc, col("__cdist").asc, col("cluster_id").asc)
-    val ranked = augCentroids.crossJoin(broadcast(qAug))
-      .withColumn("__cdist",
-        Metric.Euclidean.distance(col("centroid"), col("__qaug")))
-      .where(col("__cdist").isNotNull)
-      .withColumn("__rank", row_number().over(w))
-      .select(col("cluster_id"), col("__rank"), col("qvec"))
-    val points = probePoints.toDF("probes")
-    val cands = assigned
-      .join(broadcast(ranked), Seq("cluster_id"))
-      .withColumn("__s",
-        graft.functions.NativeExprs.dot(col("embedding"), col("qvec")))
-      .where(!isnan(col("__s")))
-      .select(col("id"), col("__rank"), negate(col("__s")).as("distance"))
-      .join(broadcast(points), col("__rank") <= col("probes"))
-      .select(col("probes").as("query_id"), col("distance"), col("id"))
-    Knn.topKPerQueryPairs(cands, k)
-      .select(col("query_id").as("probes"), col("id"),
-        negate(col("distance")).as("score"))
+    val q = Knn.QueryRow(query)
+    val ranks = taggedRanks(Seq("model" -> model), padded(q), Metric.Euclidean)
+      .filter { case (_, _, r) => probePoints.exists(r <= _) }
+    sweep(Seq("model" -> inClusters(model.assigned, ranks.map(_._2))), ranks, q, k,
+      probePoints, negate(graft.functions.NativeExprs.dot(col("embedding"), col("qvec"))))
+      .select(col("probes"), col("id"), negate(col("distance")).as("score"))
   }
 
   /** The 100 TB layout: posting lists as Parquet partitions. */
@@ -1639,8 +1614,8 @@ object IvfIndex {
   }
 
   /** Batch twin of [[queryAdc]]: many queries against the compressed
-    * code store. Probe selection per query is the same bounded
-    * centroids×queries window as [[queryBatch]] (|centroids|·|queries|
+    * code store. Probe selection per query is the bounded
+    * centroids×queries window of [[probeBatch]] (|centroids|·|queries|
     * rows — never the data); every query's LUT rides one broadcast, and
     * the per-query top-k is the two-phase bounded-heap shape
     * ([[graft.functions.TopKPairsAgg]]) — no ranking window over
@@ -1652,16 +1627,8 @@ object IvfIndex {
       queries: DataFrame,
       k: Int,
       probes: Int = 32): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(k > 0, "k must be positive")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(isnan(col("__cdist")).asc, col("__cdist").asc, col("cluster_id").asc)
-    val probedQ = centroids
-      .crossJoin(broadcast(queries))
-      .withColumn("__cdist", Metric.Euclidean.distance(col("centroid"), col("qvec")))
-      .where(col("__cdist").isNotNull) // invalid centroid rows never probe
-      .withColumn("__rn", row_number().over(w))
-      .where(col("__rn") <= lit(probes))
+    val probedQ = probeBatch(centroids, queries, col("qvec"), Metric.Euclidean, probes)
       .select(col("query_id"), col("cluster_id"))
     val luts = queries.crossJoin(broadcast(books))
       .select(col("query_id"), VectorOps.pqLuts(col("qvec"), col("books")).as("luts"))

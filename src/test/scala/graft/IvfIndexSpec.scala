@@ -237,22 +237,10 @@ class IvfIndexSpec extends SparkSpec {
 
   test("queryMipsBatch at full probe equals brute-force per-query dot top-k " +
     "(descending dot, ties to the smaller id)") {
-    val base = records.withColumn("__n2",
-      graft.functions.NativeExprs.dot(col("embedding"), col("embedding")))
-    val m2 = base.agg(max(col("__n2"))).head().getDouble(0)
-    val aug = base.select(col("id"), col("embedding"),
-      concat(col("embedding").cast("array<double>"),
-        array(sqrt(lit(m2) - col("__n2")))).as("__aug"))
-    val cents = aug.where(col("id") < 8)
-      .select(col("id").cast("int").as("cluster_id"), col("__aug").as("centroid"))
-    val assigned = IvfIndex.assign(
-        aug.select(col("id"), col("__aug").as("embedding"),
-          col("embedding").as("__orig")),
-        cents, Metric.Euclidean)
-      .select(col("id"), col("cluster_id"), col("__orig").as("embedding"))
+    val mips = ProbeReference.mipsIndex(records, nCentroids = 8)
     val q = records.where(col("id") < 4)
       .select(col("id").as("query_id"), col("embedding").as("qvec"))
-    val got = IvfIndex.queryMipsBatch(cents, assigned, q, k = 5, probes = 8)
+    val got = IvfIndex.queryMipsBatch(mips.centroids, mips.assigned, q, k = 5, probes = 8)
       .select("query_id", "id", "score").as[(Long, Long, Double)].collect()
       .groupBy(_._1).view
       .mapValues(_.map(r => (r._2, r._3)).sortBy { case (id, s) => (-s, id) })
@@ -271,29 +259,22 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("queryMipsProbeSweep law: row-identical to queryMipsBatch at every probe point") {
-    val base = records.withColumn("__n2",
-      graft.functions.NativeExprs.dot(col("embedding"), col("embedding")))
-    val m2 = base.agg(max(col("__n2"))).head().getDouble(0)
-    val aug = base.select(col("id"), col("embedding"),
-      concat(col("embedding").cast("array<double>"),
-        array(sqrt(lit(m2) - col("__n2")))).as("__aug"))
-    val cents = aug.where(col("id") < 8)
-      .select(col("id").cast("int").as("cluster_id"), col("__aug").as("centroid"))
-    val assigned = IvfIndex.assign(
-        aug.select(col("id"), col("__aug").as("embedding"),
-          col("embedding").as("__orig")),
-        cents, Metric.Euclidean)
-      .select(col("id"), col("cluster_id"), col("__orig").as("embedding"))
+    // and to the single-query queryMips, the third path over one ranking
+    val mips = ProbeReference.mipsIndex(records, nCentroids = 8)
     val q = records.where(col("id") === 7).select(col("embedding").as("qvec"))
     val points = Seq(1, 2, 4, 8, 999) // 999 exercises the probes clamp
-    val sweep = IvfIndex.queryMipsProbeSweep(cents, assigned, q, 10, points)
+    val sweep = IvfIndex.queryMipsProbeSweep(mips, q, 10, points)
       .select("probes", "id", "score").as[(Int, Long, Double)].collect()
       .groupBy(_._1).view.mapValues(_.map(r => (r._2, r._3)).toSet).toMap
     points.foreach { p =>
-      val direct = IvfIndex.queryMipsBatch(cents, assigned,
+      val single = IvfIndex.queryMips(mips, q, k = 10, probes = p)
+        .select("id", "score").as[(Long, Double)].collect().toSet
+      val batch = IvfIndex.queryMipsBatch(mips.centroids, mips.assigned,
           q.select(lit(0L).as("query_id"), col("qvec")), k = 10, probes = p)
         .select("id", "score").as[(Long, Double)].collect().toSet
-      assert(sweep(p) === direct, s"probes=$p")
+      assert(single.nonEmpty, s"probes=$p")
+      assert(sweep(p) === single, s"probes=$p: sweep vs queryMips")
+      assert(batch === single, s"probes=$p: queryMipsBatch vs queryMips")
     }
   }
 

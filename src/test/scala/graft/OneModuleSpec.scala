@@ -6,8 +6,10 @@ import scala.jdk.CollectionConverters._
 
 /** Source guard: lineage truncation and session memoization are each
   * decided in one place, `Caching.scala` ([[Caching.truncate]],
-  * [[SessionMemo]]). Any other main source that checkpoints directly or
-  * hand-rolls a session-keyed map fails here. */
+  * [[SessionMemo]]), and the batch IVF probe order in one window,
+  * `IvfIndex.probeBatch`. Any other main source that checkpoints
+  * directly, hand-rolls a session-keyed map or writes its own centroid
+  * ranking window fails here. */
 class OneModuleSpec extends SparkSpec {
 
   private val mainRoot = Paths.get("src", "main")
@@ -45,5 +47,13 @@ class OneModuleSpec extends SparkSpec {
   test("no session-keyed ConcurrentHashMap outside SessionMemo") {
     assert(offenders("ConcurrentHashMap[(SparkSession",
       _.getFileName.toString == "Caching.scala").isEmpty)
+  }
+
+  test("the batch probe order is written once: one centroid ranking window in src/main") {
+    val ranking = java.util.regex.Pattern.quote("isnan(col(\"__cdist\"))").r
+    val sites = sources.map { case (p, code) =>
+      p.getFileName.toString -> ranking.findAllMatchIn(code).size
+    }.filter(_._2 > 0)
+    assert(sites === Seq("IvfIndex.scala" -> 1))
   }
 }

@@ -124,14 +124,24 @@ class PlanShapeSpec extends SparkSpec {
 
   test("cluster-partitioned MIPS store: the augmented probe prunes partitions at the scan") {
     // the query writes the augmented posting lists once per (app, dir)
-    // and reopens them; the 3-cluster probe list must reach the parquet
-    // scan as dynamic partition pruning — without it every MIPS serve
-    // reads the full store
+    // and reopens them; the driver-side probe list on the augmented
+    // geometry must reach the parquet scan as STATIC partition pruning —
+    // a cluster_id filter naming exactly the probed ids, and only those
+    // partitions read — without it every MIPS serve reads the full store
     val df = Queries.queries("ivf_mips_store_query")(spark, sf)
-    val p = plan(df)
-    assert(p.contains("dynamicpruning") || p.contains("PartitionFilters: [dynamic"),
-      p.linesIterator.filter(_.contains("PartitionFilters")).mkString("\n"))
     assert(df.collect().length === 10)
+    val index = Queries.mipsFixedIndex(spark, sf).get
+    val q = graft.sources.Records.fromEmbeddings(spark, sf).where(col("id") === 0)
+      .select(col("embedding").as("qvec"))
+    val probed = ProbeReference.probedIds(index.centroids, ProbeReference.padded(q), 3,
+      Metric.Euclidean).toSet
+    val scans = ProbeReference.fileScans(df)
+    assert(scans.size === 1, plan(df))
+    assert(ProbeReference.partitionFilterIds(scans.head) === Some(probed),
+      plan(df).linesIterator.filter(_.contains("PartitionFilters")).mkString("\n"))
+    val path = scans.head.relation.location.rootPaths.head.toUri.getPath
+    assert(scans.head.metrics("numPartitions").value ===
+      (probed intersect ProbeReference.storeClusters(path)).size)
   }
 
   test("cluster-partitioned CODE store: the ADC probe prunes partitions at the scan") {

@@ -1,5 +1,7 @@
 package graft
 
+import graft.functions.NativeExprs
+import graft.operators.IvfIndex
 import graft.types.Metric
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{ArrayContains, In, InSet, Literal}
@@ -25,6 +27,29 @@ object ProbeReference extends AdaptiveSparkPlanHelper {
       .limit(probes)
       .select(col("cluster_id"))
       .collect().map(_.getInt(0)).toSeq
+
+  /** A one-row query frame's `qvec` in the norm-augmented MIPS geometry:
+    * widened to doubles and padded with a 0. */
+  def padded(query: DataFrame): DataFrame =
+    query.select(concat(col("qvec").cast("array<double>"), array(lit(0.0))).as("qvec"))
+
+  /** A norm-augmented MIPS index over `records` (the geometry of
+    * `Queries.mipsFixedIndex`): the records with id < `nCentroids` as
+    * AUGMENTED centroids, every record assigned in augmented space and
+    * stored with its ORIGINAL embedding and its other columns. */
+  def mipsIndex(records: DataFrame, nCentroids: Int): IvfIndex.Model = {
+    val n2 = NativeExprs.dot(col("embedding"), col("embedding"))
+    val m2 = records.agg(max(n2)).head().getDouble(0)
+    val aug = records.withColumn("__aug",
+      concat(col("embedding").cast("array<double>"), array(sqrt(lit(m2) - n2))))
+    val cents = aug.where(col("id") < nCentroids)
+      .select(col("id").cast("int").as("cluster_id"), col("__aug").as("centroid"))
+    val assigned = IvfIndex.assign(
+        aug.withColumnRenamed("embedding", "__orig").withColumnRenamed("__aug", "embedding"),
+        cents, Metric.Euclidean)
+      .drop("embedding").withColumnRenamed("__orig", "embedding")
+    IvfIndex.Model(cents, assigned)
+  }
 
   /** The parquet scans in `df`'s executed plan, adaptive query stages
     * included. Run `df` first, so the adaptive plan is final and the scan

@@ -36,6 +36,14 @@ class SingleQuerySpec extends SparkSpec {
     IvfIndex.Model(centroids, assigned)
   }
 
+  /** The norm-augmented MIPS index over the same records. */
+  private lazy val mips = {
+    val m = ProbeReference.mipsIndex(records, nCentroids = 12)
+    val assigned = Caching.ensureCached(m.assigned)
+    assigned.count()
+    IvfIndex.Model(m.centroids, assigned)
+  }
+
   /** The `qvec0` shape of the catalog: the query vector read from the store. */
   private def computedQuery(id: Long): DataFrame =
     records.where(col("id") === id).select(col("embedding").as("qvec"))
@@ -79,6 +87,11 @@ class SingleQuerySpec extends SparkSpec {
     val (exactJobs, exact) = jobsToRun(Knn.search(model.assigned, q, 10))
     assert(exactJobs === 1)
     assertNoBroadcast(exact)
+    // the MIPS twin of the IVF query, over the augmented index
+    IvfIndex.queryMips(mips, localQuery(3), 10, probes = 4).collect()
+    val (mipsJobs, mipsQuery) = jobsToRun(IvfIndex.queryMips(mips, q, 10, probes = 4))
+    assert(mipsJobs === 1)
+    assertNoBroadcast(mipsQuery)
   }
 
   private val paths: Seq[(String, DataFrame => DataFrame)] = Seq(
@@ -145,10 +158,13 @@ class SingleQuerySpec extends SparkSpec {
     val residualCodes = Caching.ensureCached(
       IvfIndex.encodeResidual(model.assigned, centroids, books))
     val label = FilterDsl.predicate(col("metadata"), "label = 1")
-    // each path over an index whose store (records or codes) is `assigned`
+    // each path over an index whose store (records or codes) is `assigned`;
+    // MIPS reports its dot score as the distance column
     type Path = (IvfIndex.Model, Int, DataFrame) => DataFrame
     val paths: Seq[(String, IvfIndex.Model, Path)] = Seq(
       ("query", model, (m, p, q) => IvfIndex.query(m, q, 10, p)),
+      ("queryMips", mips,
+        (m, p, q) => IvfIndex.queryMips(m, q, 10, p).withColumnRenamed("score", "distance")),
       ("query with a FilterDsl filter", model,
         (m, p, q) => IvfIndex.query(m, q, 10, p, filter = label)),
       ("queryPrefixRerank", model,
@@ -168,8 +184,12 @@ class SingleQuerySpec extends SparkSpec {
         (compiles - before, got)
       }.unzip
       assert(compiled.tail.forall(_ == 0), s"$name: classes compiled per query $compiled")
-      queries.zip(answers).foreach { case ((q, probed), got) =>
+      queries.zip(answers).foreach { case ((q, l2Probed), got) =>
         assert(got.nonEmpty, name)
+        // MIPS probes the augmented centroids with the zero-padded query
+        val probed = if (index eq mips)
+          ProbeReference.probedIds(mips.centroids, ProbeReference.padded(q), probes, Metric.Euclidean)
+        else l2Probed
         // the same search over the store filtered with an IN-list
         val pruned = IvfIndex.Model(index.centroids,
           index.assigned.where(col("cluster_id").isin(probed: _*)))

@@ -1,9 +1,11 @@
 #!/bin/bash
 # Correctness gate: dump every SparkEntry query with graft.Verify at
-# sf0.001 and sf0.01 and compare each dump with the DuckDB oracle
+# sf0.001 and sf0.01, and on the hostile corpus built from each of them
+# (tools/make_advdata.py), and compare each dump with the DuckDB oracle
 # (tools/compare.py). Exits non-zero on any mismatch, missing query or
-# failed step. Writes only under target/gate/: dumps, compare reports,
-# Spark's scratch space and the temp stores some queries write.
+# failed step. Writes only under target/gate/: the hostile corpora,
+# dumps, compare reports, Spark's scratch space and the temp stores some
+# queries write. The testdata dir is only read.
 # Usage: tools/gate.sh <testdata dir holding sf0.001/ and sf0.01/>
 set -euo pipefail
 if [ $# -ne 1 ]; then
@@ -15,20 +17,30 @@ cd "$(dirname "$0")/.."
 out=$PWD/target/gate
 scales=(sf0.001 sf0.01)
 mkdir -p "$out/spark-local" "$out/tmp"
-runs=("set javaOptions += \"-Djava.io.tmpdir=$out/tmp\"")
+# each run: a report name and the data dir it reads
+names=() dirs=()
 for sf in "${scales[@]}"; do
-  runs+=("runMain graft.Verify $data/$sf $out/$sf")
+  names+=("$sf") dirs+=("$data/$sf")
 done
-# one sbt session builds once and runs both dumps
+for sf in "${scales[@]}"; do
+  python3 tools/make_advdata.py "$data/$sf" "$out/data/adv-$sf" > /dev/null
+  names+=("adv-$sf") dirs+=("$out/data/adv-$sf")
+done
+runs=("set javaOptions += \"-Djava.io.tmpdir=$out/tmp\"")
+for i in "${!names[@]}"; do
+  runs+=("runMain graft.Verify ${dirs[$i]} $out/${names[$i]}")
+done
+# one sbt session builds once and runs every dump
 SPARK_LOCAL_DIRS="$out/spark-local" sbt --batch "${runs[@]}"
 status=0
-for sf in "${scales[@]}"; do
-  if python3 tools/compare.py "$data/$sf" "$out/$sf" > "$out/$sf.txt"; then
-    echo "$sf: $(tail -1 "$out/$sf.txt")"
+for i in "${!names[@]}"; do
+  name=${names[$i]}
+  if python3 tools/compare.py "${dirs[$i]}" "$out/$name" > "$out/$name.txt"; then
+    echo "$name: $(tail -1 "$out/$name.txt")"
   else
     status=1
-    echo "$sf: FAILED (report: $out/$sf.txt)"
-    grep -v ': OK (' "$out/$sf.txt" || true
+    echo "$name: FAILED (report: $out/$name.txt)"
+    grep -v ': OK (' "$out/$name.txt" || true
   fi
 done
 exit $status
