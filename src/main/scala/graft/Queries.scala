@@ -8399,11 +8399,16 @@ object Queries {
 
     "events_attribution_markov" -> markovRemovalOracleSql(iters = 16),
 
-    // the HW fold extended with a growing error tail (positions 10+ of
-    // the fold state); μ/σ reductions replay the engine's exact
-    // ascending operand order
+    // the HW fold extended with an error tail (positions 10+ of the
+    // fold state), run over blocks of 256 days: a recursive CTE carries
+    // the 9-value state from block to block and folds each block with the
+    // same step, so the IEEE operations and their order are the
+    // engine's, in time linear in the day span (one fold over all days
+    // copied the growing tail at every day). μ/σ reductions replay the
+    // engine's exact ascending operand order; the rows unnest the error
+    // and count lists side by side instead of indexing them per row
     "events_seasonal_anomaly" ->
-      s"""WITH dc AS (SELECT epoch_us(ts) // 86400000000 AS d, CAST(count(*) AS DOUBLE) AS n
+      s"""WITH RECURSIVE dc AS (SELECT epoch_us(ts) // 86400000000 AS d, CAST(count(*) AS DOUBLE) AS n
          |  FROM events GROUP BY d),
          |bounds AS (SELECT min(d) AS mn, max(d) AS mx FROM dc),
          |filled AS (SELECT u.d AS d, coalesce(dc.n, CAST(0.0 AS DOUBLE)) AS n
@@ -8416,11 +8421,14 @@ object Queries {
          |    list_reduce(list_slice(y, 1, 7), (a, b) -> a + b) / CAST(7.0 AS DOUBLE) AS m1,
          |    list_reduce(list_slice(y, 8, 14), (a, b) -> a + b) / CAST(7.0 AS DOUBLE) AS m2
          |  FROM ys WHERE len(y) >= 14),
-         |st AS (SELECT y, list_reduce(
-         |    list_prepend(
-         |      list_concat([m1, (m2 - m1) / CAST(7.0 AS DOUBLE)],
-         |        list_transform(list_slice(y, 1, 7), v -> v - m1)),
-         |      list_transform(list_slice(y, 8, len(y)), v -> [v])),
+         |blocks AS MATERIALIZED (SELECT t.b AS b,
+         |    list_transform(list_slice(y, 8 + 256 * t.b, 7 + 256 * (t.b + 1)), v -> [v]) AS xs
+         |  FROM init, unnest(generate_series(0, (len(y) - 8) // 256)) AS t(b)),
+         |hw(b, s) AS (
+         |  SELECT CAST(-1 AS BIGINT), list_concat([m1, (m2 - m1) / CAST(7.0 AS DOUBLE)],
+         |    list_transform(list_slice(y, 1, 7), v -> v - m1)) FROM init
+         |  UNION ALL
+         |  SELECT blocks.b, list_reduce(list_prepend(list_slice(hw.s, 1, 9), blocks.xs),
          |    (acc, x) -> list_concat(
          |      list_concat(
          |        [CAST(0.5 AS DOUBLE) * (x[1] - acc[3]) + CAST(0.5 AS DOUBLE) * (acc[1] + acc[2]),
@@ -8428,17 +8436,18 @@ object Queries {
          |        list_append(list_slice(acc, 4, 9),
          |          CAST(0.25 AS DOUBLE) * (x[1] - (CAST(0.5 AS DOUBLE) * (x[1] - acc[3]) + CAST(0.5 AS DOUBLE) * (acc[1] + acc[2]))) + CAST(0.75 AS DOUBLE) * acc[3])),
          |      list_append(list_slice(acc, 10, len(acc)),
-         |        x[1] - (acc[1] + acc[2] + acc[3])))
-         |  ) AS s FROM init),
-         |er AS (SELECT y, list_slice(s, 10, len(s)) AS errs FROM st),
+         |        x[1] - (acc[1] + acc[2] + acc[3]))))
+         |  FROM hw JOIN blocks ON blocks.b = hw.b + 1),
+         |er AS (SELECT y, (SELECT flatten(list(list_slice(s, 10, len(s)) ORDER BY b)) FROM hw WHERE b >= 0) AS errs
+         |  FROM init),
          |mo AS (SELECT y, errs,
          |    list_reduce(errs, (a, b) -> a + b) / CAST(len(errs) AS DOUBLE) AS mu
          |  FROM er),
          |si AS (SELECT y, errs, mu,
          |    sqrt(list_reduce(list_transform(errs, v -> (v - mu) * (v - mu)), (a, b) -> a + b) / CAST(len(errs) AS DOUBLE)) AS sg
          |  FROM mo),
-         |rws AS (SELECT u.i AS i, errs[u.i] AS e, y[7 + u.i] AS yv, mu, sg
-         |  FROM si, unnest(generate_series(1, len(errs))) AS u(i)),
+         |rws AS (SELECT unnest(generate_series(1, len(errs))) AS i, unnest(errs) AS e,
+         |    unnest(list_slice(y, 8, len(y))) AS yv, mu, sg FROM si),
          |b2 AS (SELECT (SELECT mn FROM bounds) + 7 + i - 1 AS day_index,
          |    CAST(yv AS BIGINT) AS n, yv - e AS expected, e AS error,
          |    abs(e - mu) > CAST(3.0 AS DOUBLE) * sg AS is_anomaly,

@@ -2,8 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, LeafExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, CodegenFallback, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
@@ -16,15 +17,23 @@ import org.apache.spark.unsafe.types.UTF8String
   * boxing. For kernels that touch every vector component or every token
   * (distance, SimHash votes, sliding-window hashing) that interpretive
   * overhead dominates the arithmetic by an order of magnitude. Each
-  * expression here evaluates its children once per row and runs the inner
-  * loop as compiled Scala over the unsafe array/string representations —
-  * the `CodegenFallback` per-row dispatch is negligible at thousands of
-  * elements per row.
+  * kernel here evaluates its children once per row and runs the inner
+  * loop as compiled Scala over the unsafe array/string representations.
+  *
+  * The kernels are `CodegenFallback` expressions, not generated code: a
+  * whole-stage-codegen stage cannot hold them, so an operator that
+  * evaluates one (the serving plan's `Filter` and `Project` over the
+  * distance) runs outside any `*(n)` codegen stage and calls the
+  * kernel's `eval` once per row. That per-row dispatch is negligible
+  * next to a loop over thousands of elements.
   *
   * CONTRACT: each expression is bit-identical to the HOF formulation it
   * replaces (same double-precision operation sequence, same null
   * semantics), so the DuckDB oracle SQL — which mirrors those HOF
   * formulas — is unchanged. The HOF originals remain documented alongside.
+  *
+  * [[BoundValue]] is the one non-kernel expression: the run-time value
+  * slot of a prepared serving plan ([[graft.operators.Knn.search]]).
   */
 object NativeExprs {
 
@@ -49,6 +58,34 @@ object NativeExprs {
   def simhash60(tokens: Column): Column = asCol(SimHash60Expr(ex(tokens)))
   def md5MinWindow(text: Column, window: Int): Column =
     asCol(Md5MinWindowExpr(ex(text), window))
+
+  /** A value bound into a prepared plan at run time: the query vector
+    * and the probed cluster ids of a warm single-vector query
+    * ([[graft.operators.Knn.search]]). `value` is in Catalyst's internal
+    * form; `slot` tells the values of one plan apart.
+    *
+    * It is not foldable, so the optimizer keeps it in the plan as a
+    * leaf instead of folding it into its parent, and it is always
+    * nullable, so no rule specializes the plan to one value's
+    * nullness. Generated code reads the value through a reference
+    * object (`ctx.addReferenceObj`), never as an inlined constant: two
+    * plans that differ only in their bound values generate the same
+    * source, and a newly bound value compiles no new class. A plan is
+    * bound by copying it with each slot's new `BoundValue`, so a bound
+    * plan is immutable. */
+  case class BoundValue(slot: Int, dataType: DataType, value: Any) extends LeafExpression {
+    override def nullable: Boolean = true
+    override def foldable: Boolean = false
+    override def eval(input: InternalRow): Any = value
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val ref = ctx.addReferenceObj("bound", value, CodeGenerator.boxedType(dataType))
+      ev.copy(code = code"""
+        boolean ${ev.isNull} = $ref == null;
+        ${CodeGenerator.javaType(dataType)} ${ev.value} = ${ev.isNull} ?
+          ${CodeGenerator.defaultValue(dataType)} : $ref;""")
+    }
+    override def toString: String = s"bound#$slot"
+  }
 
   /** Lowercased whitespace tokenization — compiled twin of
     * `split(translate(trim(text), 'A'..'Z', 'a'..'z'), "\\s+")` (ASCII-only

@@ -434,7 +434,16 @@ object IvfIndex {
     * vector and the probed ids both enter the plan as array literals,
     * which generated code holds as references, not as inlined values: a
     * warm query reuses the compiled code of the previous one instead of
-    * compiling its own ([[inClusters]]). */
+    * compiling its own ([[inClusters]]).
+    *
+    * When `model.assigned` is held in the session cache, the store and
+    * the driver-side probe list go to [[Knn.Prepared]]: the call runs
+    * its one job when called, from a plan prepared once per query shape
+    * with the query vector and the probed ids bound at run time, and
+    * returns the ≤ k answer rows as a local frame. Concurrent callers
+    * each run their own bound copy of the shared prepared plan, with no
+    * lock. A store that is not cached (a `writePartitioned` store) keeps
+    * the lazy per-query plan above, whose literal ids prune partitions. */
   def query(
       model: Model,
       query: DataFrame,
@@ -444,8 +453,9 @@ object IvfIndex {
       radius: Double = Double.PositiveInfinity,
       filter: Column = lit(true)): DataFrame = {
     val q = Knn.QueryRow(query)
-    val candidates = inClusters(model.assigned, probedIds(model.probeCentroids, q, probes, metric))
-    Knn.search(candidates, q, k, metric, radius, filter, None)
+    val probed = probedIds(model.probeCentroids, q, probes, metric)
+    Knn.Prepared.serve(model.assigned, Some(probed), q, k, metric, radius, filter, None)
+      .getOrElse(Knn.search(inClusters(model.assigned, probed), q, k, metric, radius, filter, None))
   }
 
   /** Probe-COST observability — the dashboard row that tells an

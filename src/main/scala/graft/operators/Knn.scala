@@ -4,8 +4,8 @@ import graft.types.Metric
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.graft.{ColumnBridge, PlanBridge}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Exact k-nearest-neighbor search (reference `src/cores/index.rs:168-214`,
   * minus the IVF pruning which lives in [[IvfIndex]]).
@@ -26,7 +26,10 @@ import org.apache.spark.sql.types.StructType
   * driver, the distributed analog of the reference's size-k+1 BinaryHeap
   * (`index.rs:201-209`); no full sort, no full shuffle, driver traffic is
   * k rows per partition. The filter and radius predicates sit below the
-  * top-k so Catalyst fuses scan→distance→filter→heap in one codegen stage.
+  * top-k, so one stage runs scan→distance→filter→heap. The distance is a
+  * `CodegenFallback` kernel ([[graft.functions.NativeExprs]]), so the
+  * `Filter` and `Project` that evaluate it run outside whole-stage
+  * codegen.
   */
 object Knn {
 
@@ -66,8 +69,16 @@ object Knn {
   /** Single-query search. `query` is a one-row frame with column `qvec`
     * (kept as a frame, not a literal argument, so the same code path works
     * when the query vector is itself the result of a computation). Its row
-    * is collected to the driver and attached as literals ([[QueryRow]]);
-    * a zero-row frame gives an empty result, more rows fail. */
+    * is collected to the driver ([[QueryRow]]); a zero-row frame gives an
+    * empty result, more rows fail.
+    *
+    * On a store held in the session cache (`records` itself is a cached
+    * plan, [[graft.Caching.ensureCached]]) the call is served from a
+    * prepared plan ([[Prepared]]): it runs its one job when called and
+    * returns the ≤ k answer rows as a local frame. Concurrent callers
+    * each run their own bound copy of the shared prepared plan, with no
+    * lock. Any other store gets a lazy frame planned for this query, with
+    * the query row attached as literals. */
   def search(
       records: DataFrame,
       query: DataFrame,
@@ -75,12 +86,25 @@ object Knn {
       metric: Metric = Metric.Euclidean,
       radius: Double = Double.PositiveInfinity,
       filter: Column = lit(true),
-      dim: Option[Int] = None): DataFrame =
-    search(records, QueryRow(query), k, metric, radius, filter, dim)
+      dim: Option[Int] = None): DataFrame = {
+    val q = QueryRow(query)
+    Prepared.serve(records, None, q, k, metric, radius, filter, dim)
+      .getOrElse(search(records, q, k, metric, radius, filter, dim))
+  }
 
   private[operators] def search(
       records: DataFrame,
       query: QueryRow,
+      k: Int,
+      metric: Metric,
+      radius: Double,
+      filter: Column,
+      dim: Option[Int]): DataFrame =
+    topK(query.attachTo(records), k, metric, radius, filter, dim)
+
+  /** The exact top-k over `candidates`, which carry the query columns. */
+  private def topK(
+      candidates: DataFrame,
       k: Int,
       metric: Metric,
       radius: Double,
@@ -93,7 +117,7 @@ object Knn {
         Metric.validDimension(col("qvec"), d)
       case None => lit(true)
     }
-    query.attachTo(records)
+    candidates
       .where(dimOk)
       .withColumn("distance", dist)
       .where(!isnan(col("distance")) && col("distance") <= lit(radius))
@@ -101,6 +125,149 @@ object Knn {
       .orderBy(col("distance").asc, col("id").asc)
       .limit(k)
       .select(col("id"), col("metadata"), col("distance"))
+  }
+
+  /** Prepared serving plans: [[search]] and [[IvfIndex.query]] on a
+    * store held in the session cache plan each query SHAPE once and bind
+    * each query into that plan at run time.
+    *
+    * A shape is the store frame (by identity, held weakly), the metric,
+    * k, radius, `dim`, the filter (its canonicalized expression, literal
+    * values included), the query frame's schema, whether the store is
+    * restricted to probed clusters and the session's SQL conf (the time
+    * zone, ANSI mode and the rest shape analysis and planning). The
+    * query row and the probed cluster ids are not part of it: they enter
+    * the plan as [[graft.functions.NativeExprs.BoundValue]] slots, one per
+    * query column plus one for the ids, so every query of a shape runs
+    * the same physical plan and compiles no code after the shape's first
+    * call.
+    *
+    * A call binds by copying the prepared plan with its own values
+    * (`transformAllExpressions`); the copy is immutable, so concurrent
+    * callers share the prepared plan without a lock. It runs the copy in
+    * one job and returns the answer rows as a local frame.
+    *
+    * A prepared plan reads the cached columns of one CacheManager entry.
+    * Every call looks the store up again and re-prepares when the entry
+    * is gone or is another registration (after `unpersist`, or
+    * `clearCache()` and caching again): re-running a plan over cleared
+    * buffers would rebuild a cache the session no longer tracks. A store
+    * that is not cached (a `writePartitioned` store needs literal ids for
+    * static partition pruning), a zero-row query, an empty probe list, a
+    * shape whose plan has an exchange and a shape with a value Spark fixes
+    * when it plans the query (`current_timestamp()`, `rand()`,
+    * [[PlanBridge.reusable]]) keep the per-query plan. There is no answer
+    * cache: every call runs a job. */
+  private[graft] object Prepared {
+    import graft.functions.NativeExprs.BoundValue
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.types.{ArrayType, IntegerType}
+
+    /** Prepared plans kept per store, least recently used dropped first:
+      * room for a serving mix of a few query kinds over one index with
+      * about ten filter values each. */
+    val MaxPlansPerStore = 16
+
+    private final case class Shape(
+        metric: String,
+        k: Int,
+        radiusBits: Long,
+        dim: Option[Int],
+        filter: Expression,
+        query: StructType,
+        clustered: Boolean,
+        conf: Map[String, String])
+
+    /** A shape's plan, planned against the cache entry `cache`; `plan` is
+      * `None` when the shape cannot be served prepared. */
+    private final class Entry(val plan: Option[SparkPlan], val cache: AnyRef, val schema: StructType)
+
+    private final class Plans extends java.util.LinkedHashMap[Shape, Entry](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[Shape, Entry]): Boolean =
+        size > MaxPlansPerStore
+    }
+
+    private val stores =
+      java.util.Collections.synchronizedMap(new java.util.WeakHashMap[DataFrame, Plans]())
+
+    private val IdsType = ArrayType(IntegerType, containsNull = false)
+
+    /** The answer from `store`'s prepared plan for this shape, or `None`
+      * when the call takes the per-query plan. `clusters` restricts the
+      * store to those `cluster_id`s. */
+    def serve(
+        store: DataFrame,
+        clusters: Option[Seq[Int]],
+        query: QueryRow,
+        k: Int,
+        metric: Metric,
+        radius: Double,
+        filter: Column,
+        dim: Option[Int]): Option[DataFrame] =
+      if (query.row.isEmpty || clusters.exists(_.isEmpty)) None
+      else PlanBridge.cacheEntry(store).flatMap { cache =>
+        val shape = Shape(metric.name, k, java.lang.Double.doubleToLongBits(radius), dim,
+          canonical(filter), query.schema, clusters.isDefined, store.sparkSession.conf.getAll)
+        val plans = stores.computeIfAbsent(store, _ => new Plans)
+        val cached = plans.synchronized(Option(plans.get(shape))).filter(_.cache eq cache)
+        val entry = cached.getOrElse {
+          val e = prepare(store, cache, clusters.isDefined, query.schema, k, metric, radius, filter, dim)
+          plans.synchronized(plans.put(shape, e))
+          e
+        }
+        entry.plan.map { plan =>
+          val values = slotValues(query, clusters)
+          PlanBridge.collectLocal(store, entry.schema)(plan.transformAllExpressions {
+            case b: BoundValue => b.copy(value = values(b.slot))
+          })
+        }
+      }
+
+    /** The prepared physical plans held for `store`, least recently used
+      * first. */
+    private[graft] def plans(store: DataFrame): Seq[SparkPlan] = {
+      import scala.jdk.CollectionConverters._
+      Option(stores.get(store)).toSeq.flatMap(p => p.synchronized(p.values.asScala.toList))
+        .flatMap(_.plan)
+    }
+
+    private def canonical(filter: Column): Expression = {
+      val e = ColumnBridge.converted(filter)
+      try e.canonicalized catch { case scala.util.control.NonFatal(_) => e }
+    }
+
+    /** The bound values of one call: the query columns in schema order,
+      * then the probed ids. */
+    private def slotValues(query: QueryRow, clusters: Option[Seq[Int]]): IndexedSeq[Any] = {
+      val row = query.row.get
+      query.schema.fields.indices.map { i =>
+        CatalystTypeConverters.createToCatalystConverter(query.schema(i).dataType)(row.get(i))
+      } ++ clusters.map(ids => new GenericArrayData(ids.toArray[Any]))
+    }
+
+    private def prepare(
+        store: DataFrame,
+        cache: AnyRef,
+        clustered: Boolean,
+        schema: StructType,
+        k: Int,
+        metric: Metric,
+        radius: Double,
+        filter: Column,
+        dim: Option[Int]): Entry = {
+      def slot(i: Int, t: DataType): Column = ColumnBridge.column(BoundValue(i, t, null))
+      val restricted =
+        if (clustered) store.where(array_contains(slot(schema.length, IdsType), col("cluster_id")))
+        else store
+      val attached = restricted.withColumns(
+        schema.fields.zipWithIndex.map { case (f, i) => f.name -> slot(i, f.dataType) }.toMap)
+      val df = topK(attached, k, metric, radius, filter, dim)
+      val plan = PlanBridge.physicalPlan(df)
+      new Entry(Some(plan).filter(PlanBridge.reusable(df, _)), cache, df.schema)
+    }
   }
 
   /** Matryoshka-style two-stage search (Kusupati et al. 2022): a

@@ -10,15 +10,21 @@ import org.apache.spark.sql.functions._
   *     rank-equivalent and cheaper (`metric.rs:10-13`).
   *   - Cosine is the cosine **distance** (1 − similarity) (`metric.rs:14-16`).
   *
-  * Implemented as pure Catalyst higher-order-function expressions
-  * (`zip_with` + `aggregate`), NOT UDFs: they stay inside whole-stage
-  * codegen, are null-safe, and are expressible 1:1 in the DuckDB oracle.
+  * Implemented as native Catalyst expressions
+  * ([[graft.functions.NativeExprs]]: `SqEuclideanExpr`,
+  * `CosineDistanceExpr`), NOT UDFs: one compiled loop per row over the
+  * unsafe arrays, null-safe, and bit-identical to the higher-order-function
+  * form (`zip_with` + `aggregate`) that the DuckDB oracle mirrors 1:1.
   * Elements are cast to double before arithmetic so Spark and the oracle
   * accumulate identically (sequential left-to-right double sums).
   *
+  * They are `CodegenFallback` kernels, so they do NOT run inside
+  * whole-stage codegen: an operator that evaluates a distance (the
+  * serving plan's `Filter` and `Project`) has no `*(n)` codegen stage and
+  * calls the kernel's `eval` per row.
+  *
   * At 100 TB scale this is a narrow map-side computation — no shuffle; the
-  * scan reads only the embedding column (column pruning) and the expression
-  * vectorizes per-row inside codegen.
+  * scan reads only the embedding column (column pruning).
   */
 sealed trait Metric {
   /** Distance between two `array<float>` columns as a `double` Column. */

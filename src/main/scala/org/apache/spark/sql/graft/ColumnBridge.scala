@@ -2,7 +2,7 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, ExpressionUtils}
 
 /** Bridge to Spark's `private[sql]` Column ⇄ Expression converters, for
   * wiring custom Catalyst expressions ([[graft.functions.NativeExprs]])
@@ -12,4 +12,10 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** `c` converted to a Catalyst expression tree now. [[expression]] may
+    * instead wrap the column's node for conversion at analysis, and the
+    * wrapper carries the call site, so two equal columns built at two
+    * call sites would compare unequal. */
+  def converted(c: Column): Expression = ColumnNodeToExpressionConverter(c.node)
 }

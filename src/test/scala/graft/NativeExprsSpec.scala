@@ -478,4 +478,35 @@ class NativeExprsSpec extends SparkSpec {
     // the emoji doc: each 🎉 is ONE code point, classified other
     assert(got(2L)._2 === 13L && got(2L)._8 === 2L)
   }
+
+  test("BoundValue: reads its value in generated and interpreted code, is never " +
+    "folded, and a newly bound value compiles no class") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.graft.ColumnBridge
+    import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
+    val vecType = ArrayType(FloatType, containsNull = false)
+    def bound(slot: Int, t: org.apache.spark.sql.types.DataType, v: Any): Column =
+      ColumnBridge.column(NativeExprs.BoundValue(slot, t, v))
+    // a whole-stage-codegen projection (a primitive slot) and a kernel
+    // projection (an array slot), each against its literal twin
+    def run(v: Seq[Float], w: java.lang.Double): Unit = {
+      val q = bound(0, vecType, new GenericArrayData(v.toArray[Any]))
+      // not a local relation, which the optimizer would evaluate itself
+      assertSame(NativeExprs.sqEuclidean(col("a"), q),
+        NativeExprs.sqEuclidean(col("a"), typedLit(v)), vecsDf.repartition(2))
+      val shifted = spark.range(30).select((col("id").cast("double") + bound(1, DoubleType, w)).as("s"))
+      assert(shifted.as[Option[Double]].collect().toSeq ===
+        (0 until 30).map(i => Option(w).map(i + _.doubleValue)))
+      assert(shifted.queryExecution.optimizedPlan.expressions
+        .exists(_.exists(_.isInstanceOf[NativeExprs.BoundValue])), "the bound value was folded")
+    }
+    run(randVec(16), 1.5)
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    run(randVec(16), -2.0)
+    run(randVec(16), null)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount === before)
+    assert(!NativeExprs.BoundValue(0, DoubleType, 1.0).foldable)
+    assert(NativeExprs.BoundValue(0, DoubleType, 1.0).eval() === 1.0)
+  }
 }

@@ -6,7 +6,7 @@ import graft.types.Metric
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{ArrayContains, In, InSet, Literal}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, IntegerType}
@@ -60,7 +60,17 @@ object ProbeReference extends AdaptiveSparkPlanHelper {
   /** The operator names of `df`'s executed plan, adaptive query stages
     * included (a cached relation's own build plan is not part of it). */
   def operatorNames(df: DataFrame): Seq[String] =
-    collect(df.queryExecution.executedPlan) { case p => p.nodeName }
+    operatorNames(df.queryExecution.executedPlan)
+
+  /** The operator names of a physical plan, adaptive query stages
+    * included. */
+  def operatorNames(plan: SparkPlan): Seq[String] =
+    collect(plan) { case p => p.nodeName }
+
+  /** `pf` over every operator of a physical plan, adaptive query stages
+    * included. */
+  def collectPlan[B](plan: SparkPlan)(pf: PartialFunction[SparkPlan, B]): Seq[B] =
+    collect(plan)(pf)
 
   /** The cluster ids a scan's static partition filters admit: the values
     * of its `array_contains(<int array literal>, cluster_id)` or

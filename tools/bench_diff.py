@@ -21,9 +21,11 @@ Accepts any of the three artifact shapes that exist in this repo:
   - the bare bench JSON line Bench.scala prints (and writes to
     target/bench.json): {"metric":"total",...,"queries":{name:sec,...}}
   - the driver's BENCH_rN.json wrapper with a non-null "parsed" field
-  - the driver wrapper with parsed=null: per-query times are scraped
-    from the truncated "tail" string (pairs it cut off are skipped —
-    the tool says how many names it recovered)
+  - the driver wrapper whose "parsed" is null, or a summary with no
+    "queries" map (BENCH_r15.json): per-query times are scraped from
+    the truncated "tail" string (pairs it cut off are skipped — the
+    tool says what it found in "parsed" and how many names it
+    recovered)
 
 Prints total/count deltas, the worst regressions above the threshold,
 the best improvements, and queries present on one side only.
@@ -50,7 +52,8 @@ def load_queries(path):
     p = d.get('parsed')
     if isinstance(p, dict) and isinstance(p.get('queries'), dict):
         return p.get('value'), p['queries']
-    # driver wrapper with parsed=null: scrape the truncated tail. Match
+    # driver wrapper with no per-query map in "parsed" (null, or a
+    # summary without "queries"): scrape the truncated tail. Match
     # both the summary form "name":1.23 and the passes form
     # "name":[1.2,0.9] (taking the min, same as the summary).
     #
@@ -76,8 +79,18 @@ def load_queries(path):
               'load_avg_start', 'load_avg_end', 'cpus', 'n_queries',
               'queries_wall_s', 'queries_cpu_s', 'queries_gc_s'):
         q.pop(k, None)
-    print(f'[{path}] parsed=null: recovered {len(q)} query times from tail')
-    return None, q
+    print(f'[{path}] {describe_parsed(p)}: recovered {len(q)} query times from tail')
+    return (p.get('value') if isinstance(p, dict) else None), q
+
+
+def describe_parsed(p):
+    """What a wrapper's "parsed" field held, when it has no queries map."""
+    if p is None:
+        return 'parsed=null'
+    if isinstance(p, dict):
+        return f'parsed has no "queries" map (keys: {", ".join(sorted(p)) or "none"})'
+    return f'parsed is a {type(p).__name__}, not a summary'
+
 
 
 def main():

@@ -70,7 +70,31 @@ def main():
     check('synthetic: warmup entry q_gamma excluded', 'q_gamma' not in q)
     check('synthetic: gc_spikes entry q_delta excluded', 'q_delta' not in q)
 
-    # 3) flag parsing: a typo'd flag and a trailing valueless flag are
+    # 3) the BENCH_r15.json shape: "parsed" is a summary dict without a
+    #    "queries" map. The tail is scraped, the summary total is kept,
+    #    and the message names what "parsed" held instead of "null".
+    json.dump({'parsed': {'metric': 'total', 'value': 152.2, 'n_queries': 2},
+               'tail': tail}, open(tmp, 'w'))
+    r = subprocess.run([sys.executable, os.path.join(ROOT, 'tools', 'bench_diff.py'), tmp, tmp],
+                       capture_output=True, text=True)
+    check('r15 shape: message names the missing queries map',
+          'parsed has no "queries" map (keys: metric, n_queries, value)' in r.stdout
+          and 'parsed=null' not in r.stdout, r.stdout[:300])
+    total, q = bd.load_queries(tmp)
+    check('r15 shape: tail recovered, summary total kept',
+          q.get('q_alpha') == 1.23 and total == 152.2, f'got {total} {q}')
+    json.dump({'parsed': None, 'tail': tail}, open(tmp, 'w'))
+    r = subprocess.run([sys.executable, os.path.join(ROOT, 'tools', 'bench_diff.py'), tmp, tmp],
+                       capture_output=True, text=True)
+    check('null parsed: message still says parsed=null', 'parsed=null' in r.stdout, r.stdout[:300])
+    r15 = os.path.join(ROOT, 'BENCH_r15.json')
+    if os.path.exists(r15):
+        r = subprocess.run([sys.executable, os.path.join(ROOT, 'tools', 'bench_diff.py'), r15, r15],
+                           capture_output=True, text=True)
+        check('r15 fixture: no parsed=null claim', 'parsed=null' not in r.stdout
+              and 'parsed has no "queries" map' in r.stdout, r.stdout[:300])
+
+    # 4) flag parsing: a typo'd flag and a trailing valueless flag are
     #    usage errors (exit!=0 with a message), never silent or a traceback
     for argv in (['--remeasuredd', 'x.json', 'a', 'b'],
                  ['a', 'b', '--remeasured'],
