@@ -1555,9 +1555,15 @@ object IvfIndex {
       .select(col("probes"), col("id"), negate(col("distance")).as("score"))
   }
 
-  /** The 100 TB layout: posting lists as Parquet partitions. */
+  /** The 100 TB layout: posting lists as Parquet partitions. Published
+    * like a snapshot ([[graft.sources.Commit.snapshot]]): the index is
+    * written to a stage and swapped in by one checked rename, so a
+    * failed write leaves the previous index in place, and
+    * [[graft.sources.Records.open]] finishes a publish that crashed
+    * between delete and rename. */
   def writePartitioned(model: Model, path: String): Unit =
-    model.assigned.write.mode("overwrite").partitionBy("cluster_id").parquet(path)
+    graft.sources.Commit.snapshot(model.assigned.sparkSession, path)(
+      model.assigned.write.mode("overwrite").partitionBy("cluster_id").parquet(_))
 
   /** Incremental index maintenance from a change log
     * ([[Crud.diff]]'s shape: `id, op ∈ upsert|delete, embedding,

@@ -14,9 +14,9 @@ import org.apache.spark.sql.functions._
   * (`record.rs:17-20`) so results are oracle-reproducible.
   *
   * Snapshots (reference `src/cores/database.rs:174-187`, bincode + atomic
-  * rename) map to Parquet write/read — Parquet's commit protocol already
-  * gives the atomic-rename guarantee, and at 100 TB the snapshot is a
-  * distributed columnar table instead of a single driver-memory blob.
+  * rename) map to Parquet write/read, published by [[Commit]]'s staged
+  * write-then-rename; at 100 TB the snapshot is a distributed columnar
+  * table instead of a single driver-memory blob.
   */
 object Records {
 
@@ -163,64 +163,17 @@ object Records {
     fromEmbeddings(spark, sfDir).as[Record]
   }
 
-  // ---------- staged overwrite: the snapshot durability protocol ----------
-  //
-  // A plain `mode("overwrite")` DELETES the existing directory before the
-  // write job runs, so a mid-job crash destroys the previous good
-  // snapshot — the opposite of the reference's write-then-atomic-rename
-  // (`src/cores/database.rs:215-225`). The staged protocol writes the
-  // COMPLETE new snapshot beside the store first, so the old data is only
-  // deleted once its replacement is fully committed:
-  //   crash during the stage write  → old snapshot untouched;
-  //   crash between delete & rename → the committed stage survives, and
-  //                                    the open paths finish the rename
-  //                                    (self-heal) on next read.
-  // Single-writer, like the reference's RwLock'd store.
-
-  private val StageSuffix = ".__stage"
-
-  private def fsOf(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def publishStage(spark: SparkSession, path: String): Unit = {
-    val fs = fsOf(spark, path)
-    val dest = new org.apache.hadoop.fs.Path(path)
-    val stage = new org.apache.hadoop.fs.Path(path + StageSuffix)
-    fs.delete(dest, true) // the stage is complete and committed
-    // a false/soft-failed delete that leaves dest present would make the
-    // rename NEST the stage inside the live dir (posix-mv semantics) and
-    // still return true — silent snapshot corruption; require the target
-    // gone before renaming
-    require(!fs.exists(dest), s"delete $dest failed — refusing nested rename")
-    require(fs.rename(stage, dest), s"rename $stage -> $dest failed")
-  }
-
-  /** Finish a crashed publish: a missing final dir beside a committed
-    * stage can only be the delete→rename window. */
-  private def healStage(spark: SparkSession, path: String): Unit = {
-    val fs = fsOf(spark, path)
-    val dest = new org.apache.hadoop.fs.Path(path)
-    val stage = new org.apache.hadoop.fs.Path(path + StageSuffix)
-    if (!fs.exists(dest) && fs.exists(stage))
-      require(fs.rename(stage, dest), s"heal rename $stage -> $dest failed")
-  }
-
-  /** Snapshot sink (O17): staged overwrite (see above) — a crash never
-    * destroys the previous snapshot. ⚠ EAGER — a write action, not a
-    * plan: the snapshot executes `df` and hits disk before this returns
-    * (the reference's `Snapshot` RPC is the same blocking call,
-    * `src/cores/database.rs:215-225`). */
-  def snapshot(df: DataFrame, path: String): Unit = {
-    fsOf(df.sparkSession, path)
-      .delete(new org.apache.hadoop.fs.Path(path + StageSuffix), true)
-    df.write.mode("overwrite").parquet(path + StageSuffix)
-    publishStage(df.sparkSession, path)
-  }
+  /** Snapshot sink (O17): a staged overwrite ([[Commit.snapshot]]) — a
+    * crash never destroys the previous snapshot. ⚠ EAGER — a write
+    * action, not a plan: the snapshot executes `df` and hits disk before
+    * this returns (the reference's `Snapshot` RPC is the same blocking
+    * call, `src/cores/database.rs:215-225`). */
+  def snapshot(df: DataFrame, path: String): Unit =
+    Commit.snapshot(df.sparkSession, path)(df.write.mode("overwrite").parquet(_))
 
   /** Snapshot source (O18); self-heals a crashed publish. */
   def open(spark: SparkSession, path: String): DataFrame = {
-    healStage(spark, path)
+    Commit.heal(spark, path)
     spark.read.parquet(path)
   }
 
@@ -230,17 +183,13 @@ object Records {
     * `map<string,string>` metadata round-trip natively, and the id
     * predicate pushes into ORC row-group min/max stats exactly as it
     * does for parquet. Parquet stays the default store format. */
-  def snapshotOrc(df: DataFrame, path: String): Unit = {
-    fsOf(df.sparkSession, path)
-      .delete(new org.apache.hadoop.fs.Path(path + StageSuffix), true)
-    df.write.mode("overwrite").orc(path + StageSuffix)
-    publishStage(df.sparkSession, path)
-  }
+  def snapshotOrc(df: DataFrame, path: String): Unit =
+    Commit.snapshot(df.sparkSession, path)(df.write.mode("overwrite").orc(_))
 
   /** ORC snapshot source — see [[snapshotOrc]]; self-heals a crashed
     * publish. */
   def openOrc(spark: SparkSession, path: String): DataFrame = {
-    healStage(spark, path)
+    Commit.heal(spark, path)
     spark.read.orc(path)
   }
 
@@ -276,22 +225,21 @@ object Records {
     * within-bucket id order the row-group pruning contract needs. */
   def snapshotById(df: DataFrame, path: String, buckets: Int = 256): Unit = {
     require(buckets > 0, s"buckets must be positive, got $buckets")
-    val stage = path + StageSuffix
-    fsOf(df.sparkSession, path).delete(new org.apache.hadoop.fs.Path(stage), true)
-    df.withColumn("id_bucket", pmod(col("id"), lit(buckets.toLong)).cast("int"))
-      .repartition(col("id_bucket"))
-      .sortWithinPartitions(col("id_bucket"), col("id"))
-      .write.mode("overwrite").partitionBy("id_bucket").parquet(stage)
-    df.sparkSession.range(1).select(lit(buckets).as("buckets"))
-      .write.mode("overwrite").parquet(layoutPath(stage))
-    publishStage(df.sparkSession, path)
+    Commit.snapshot(df.sparkSession, path) { stage =>
+      df.withColumn("id_bucket", pmod(col("id"), lit(buckets.toLong)).cast("int"))
+        .repartition(col("id_bucket"))
+        .sortWithinPartitions(col("id_bucket"), col("id"))
+        .write.mode("overwrite").partitionBy("id_bucket").parquet(stage)
+      df.sparkSession.range(1).select(lit(buckets).as("buckets"))
+        .write.mode("overwrite").parquet(layoutPath(stage))
+    }
   }
 
   /** Open a [[snapshotById]] store as the canonical record frame (the
     * physical `id_bucket` column is dropped; use [[getById]] for pruned
     * point lookups). */
   def openById(spark: SparkSession, path: String): DataFrame = {
-    healStage(spark, path)
+    Commit.heal(spark, path)
     spark.read.parquet(path).drop("id_bucket")
   }
 
@@ -306,7 +254,7 @@ object Records {
 
   private def bucketsOf(spark: SparkSession, path: String): Int = {
     val lp = new org.apache.hadoop.fs.Path(layoutPath(path))
-    val mod = fsOf(spark, path).getFileStatus(lp).getModificationTime
+    val mod = Commit.fsOf(spark, path).getFileStatus(lp).getModificationTime
     layoutCache.keySet.removeIf(k => k._1 == path && k._2 != mod) // superseded versions
     layoutCache.computeIfAbsent((path, mod), _ =>
       spark.read.parquet(layoutPath(path)).head().getAs[Int]("buckets"))
@@ -319,7 +267,7 @@ object Records {
     * stats). Plan shape pinned in PlanShapeSpec: the scan reads exactly
     * one file. */
   def getById(spark: SparkSession, path: String, id: Long): DataFrame = {
-    healStage(spark, path)
+    Commit.heal(spark, path)
     val buckets = bucketsOf(spark, path)
     spark.read.parquet(path)
       .where(col("id_bucket") === lit(java.lang.Math.floorMod(id, buckets.toLong)).cast("int")
@@ -395,29 +343,16 @@ object Records {
     * versions, and time travel ([[graft.operators.Crud.snapshotAt]])
     * into a vacuumed version correctly fails rather than silently
     * reading partial data — the trade every retention policy makes. */
-  /** THE definition of "which directories are versions" — shared by
-    * [[vacuumVersions]], [[restoreVersion]], and the streaming restart
-    * recovery ([[graft.streaming.VectorIngest]]), so the lifecycle tools
-    * can never disagree about what exists. Sorted ascending. */
-  private[graft] def listVersions(fs: org.apache.hadoop.fs.FileSystem,
-      base: String): Seq[Int] = {
-    val p = new org.apache.hadoop.fs.Path(base)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).filter(_.isDirectory)
-      .map(_.getPath.getName).filter(_.matches("v\\d+"))
-      .map(_.drop(1).toInt).sorted.toSeq
-  }
-
   def vacuumVersions(spark: SparkSession, base: String, keepLast: Int): Seq[Int] = {
     require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
+    val fs = Commit.fsOf(spark, base)
     val p = new org.apache.hadoop.fs.Path(base)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return Seq.empty
-    val versions = listVersions(fs, base)
+    val versions = Commit.listVersions(fs, base)
     val doomed = versions.dropRight(keepLast)
     doomed.foreach { v =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$base/v$v"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$base/centroids_v$v"), true)
+      fs.delete(new org.apache.hadoop.fs.Path(Commit.versionDir(base, v)), true)
+      fs.delete(new org.apache.hadoop.fs.Path(Commit.centroidsDir(base, v)), true)
     }
     // Sweep staging debris from crashed restoreVersion attempts: a
     // `.vN.tmp` whose N is not past every published version can never be
@@ -427,14 +362,8 @@ object Records {
     if (versions.nonEmpty) {
       val maxV = versions.max
       fs.listStatus(p).map(_.getPath.getName)
-        .flatMap { n =>
-          "^\\.(?:centroids_)?v(\\d+)\\.tmp$".r.findFirstMatchIn(n)
-            .map(m => (n, m.group(1).toInt))
-        }
-        .filter(_._2 <= maxV)
-        .foreach { case (n, _) =>
-          fs.delete(new org.apache.hadoop.fs.Path(s"$base/$n"), true)
-        }
+        .filter(n => Commit.stagedVersion(n).exists(_ <= maxV))
+        .foreach(n => fs.delete(new org.apache.hadoop.fs.Path(s"$base/$n"), true))
     }
     doomed
   }
@@ -445,48 +374,25 @@ object Records {
     * auditable, and vacuum-safe (the bad versions age out through
     * [[vacuumVersions]] like any other).
     *
-    * Crash safety: the copy lands in a hidden staging directory
-    * (`.v{next}.tmp` — invisible to the `v\\d+` listings readers and
-    * the restart recovery use) and is RENAMED into place only once
-    * fully written, centroids first. A plain write to `v{next}` would
-    * be listable the moment it starts, so a crash mid-copy would leave
-    * a partial directory as the authoritative newest version — which
-    * [[vacuumVersions]] would then faithfully preserve while aging out
-    * the good ones. Returns the new version number. */
+    * Crash safety: the copy goes through the staged version publish
+    * ([[Commit.publishVersion]]): it lands in hidden staging invisible
+    * to the version listing readers and the restart recovery use, and
+    * is renamed into place only once fully written, centroids first. A
+    * plain write to `v{next}` would be listable the moment it starts, so
+    * a crash mid-copy would leave a partial directory as the
+    * authoritative newest version — which [[vacuumVersions]] would then
+    * faithfully preserve while aging out the good ones. Returns the new
+    * version number. */
   def restoreVersion(spark: SparkSession, base: String, v: Int): Int = {
-    val p = new org.apache.hadoop.fs.Path(base)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(new org.apache.hadoop.fs.Path(s"$base/v$v")),
+    val fs = Commit.fsOf(spark, base)
+    require(fs.exists(new org.apache.hadoop.fs.Path(Commit.versionDir(base, v))),
       s"version v$v does not exist under $base")
-    val next = listVersions(fs, base).max + 1
-    val tmp = new org.apache.hadoop.fs.Path(s"$base/.v$next.tmp")
-    fs.delete(tmp, true) // stale staging from an earlier crash
-    spark.read.parquet(s"$base/v$v")
-      .write.mode("overwrite").parquet(tmp.toString)
-    // Publish = checked rename into a target that is guaranteed absent.
-    // Hadoop rename-into-existing-DIRECTORY nests the source inside the
-    // target (posix mv semantics) and still returns true — so a retry
-    // after a crash between the two renames below would silently bury
-    // the staging copy inside the half-published directory. Any
-    // pre-existing target at `next` can only be leftover from exactly
-    // such a crashed attempt (next is past every listed version), so
-    // delete it before renaming, and fail loudly if the rename itself
-    // reports false.
-    def publish(src: org.apache.hadoop.fs.Path, dstName: String): Unit = {
-      val dst = new org.apache.hadoop.fs.Path(s"$base/$dstName")
-      fs.delete(dst, true) // stale target from a crashed earlier attempt
-      // soft-failed delete (dst still present) → the rename would nest
-      require(!fs.exists(dst), s"delete $dst failed — refusing nested rename")
-      require(fs.rename(src, dst), s"rename $src -> $dst failed")
+    val next = Commit.listVersions(fs, base).max + 1
+    Commit.publishVersion(spark, base, next) { (data, cents) =>
+      spark.read.parquet(Commit.versionDir(base, v)).write.mode("overwrite").parquet(data)
+      if (fs.exists(new org.apache.hadoop.fs.Path(Commit.centroidsDir(base, v))))
+        spark.read.parquet(Commit.centroidsDir(base, v)).write.mode("overwrite").parquet(cents)
     }
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$base/centroids_v$v"))) {
-      val ctmp = new org.apache.hadoop.fs.Path(s"$base/.centroids_v$next.tmp")
-      fs.delete(ctmp, true)
-      spark.read.parquet(s"$base/centroids_v$v")
-        .write.mode("overwrite").parquet(ctmp.toString)
-      publish(ctmp, s"centroids_v$next")
-    }
-    publish(tmp, s"v$next")
     next
   }
 }

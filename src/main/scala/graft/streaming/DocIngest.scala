@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.operators.{Dedup, TextOps}
+import graft.sources.Commit
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -303,13 +304,10 @@ object DocIngest {
           val kept = b.join(dups, Seq("doc_id"), "left_anti")
           val pred = TextOps.nbClassify(kept, col("text"), model)
             .select(col("doc_id"), col("pred_label"))
-          kept.join(pred, Seq("doc_id"), "left_outer")
+          Commit.writeBatch(kept.join(pred, Seq("doc_id"), "left_outer")
             .select(col("doc_id"), col("text"),
-              coalesce(col("pred_label"), lit("und")).as("pred_lang"))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("pred_lang", "batch_id").parquet(storePath)
+              coalesce(col("pred_label"), lit("und")).as("pred_lang")),
+            batchId, storePath, "pred_lang")
         } finally b.unpersist()
         ()
       }
@@ -328,8 +326,8 @@ object DocIngest {
     * fused signature pass, no stream state, no join — maintenance
     * throughput scales with executors and is independent of index size.
     *
-    * STAGED publish (the [[graft.streaming.MaintainedIngest]] version
-    * discipline): each batch writes to hidden `.staging` dirs,
+    * STAGED publish ([[graft.sources.Commit.publishStaged]]): each batch
+    * writes to hidden `.staging` dirs,
     * then checked renames land `hashes/batch_id=N` FIRST and
     * `banded/batch_id=N` LAST — a hash row without its banded twin is
     * inert (the candidate join is driven by banded), so a reader
@@ -363,32 +361,18 @@ object DocIngest {
         val sig = Dedup.minhashSignature(batch, shingleN, perms)
           .select(col("doc_id"), col("__sig"), col("__shh")).persist()
         try {
-          val fs = new org.apache.hadoop.fs.Path(storePath)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val bandedTmp =
-            new org.apache.hadoop.fs.Path(s"$storePath/.staging/banded_batch_$batchId")
-          val hashesTmp =
-            new org.apache.hadoop.fs.Path(s"$storePath/.staging/hashes_batch_$batchId")
-          fs.delete(bandedTmp, true) // stale staging from an earlier crash
-          fs.delete(hashesTmp, true)
-          Dedup.bandedSignature(sig, perms, bands)
-            .select(col("doc_id").as("dup_of"), col("band_idx"), col("band_hash"))
-            .write.mode("overwrite")
-            .partitionBy("band_idx").parquet(bandedTmp.toString)
-          sig.select(col("doc_id").as("dup_of"), col("__shh").as("__corpus_shh"))
-            .write.mode("overwrite").parquet(hashesTmp.toString)
-          // checked renames — delete any stale target from a retried
-          // batch first (rename-into-existing-dir nests silently)
-          def publish(src: org.apache.hadoop.fs.Path, table: String): Unit = {
-            val dst = new org.apache.hadoop.fs.Path(
-              s"$storePath/$table/batch_id=$batchId")
-            fs.mkdirs(dst.getParent)
-            fs.delete(dst, true)
-            require(!fs.exists(dst), s"delete $dst failed — refusing nested rename")
-            require(fs.rename(src, dst), s"rename $src -> $dst failed")
+          val hashesTmp = s"$storePath/.staging/hashes_batch_$batchId"
+          val bandedTmp = s"$storePath/.staging/banded_batch_$batchId"
+          Commit.publishStaged(spark,
+              hashesTmp -> s"$storePath/hashes/batch_id=$batchId",
+              bandedTmp -> s"$storePath/banded/batch_id=$batchId") {
+            Dedup.bandedSignature(sig, perms, bands)
+              .select(col("doc_id").as("dup_of"), col("band_idx"), col("band_hash"))
+              .write.mode("overwrite")
+              .partitionBy("band_idx").parquet(bandedTmp)
+            sig.select(col("doc_id").as("dup_of"), col("__shh").as("__corpus_shh"))
+              .write.mode("overwrite").parquet(hashesTmp)
           }
-          publish(hashesTmp, "hashes")
-          publish(bandedTmp, "banded")
         } finally sig.unpersist()
         ()
       }
@@ -521,13 +505,10 @@ object DocIngest {
         try {
           val pred = TextOps.nbClassify(b, col("text"), model)
             .select(col("doc_id"), col("pred_label"))
-          b.join(pred, Seq("doc_id"), "left_outer")
+          Commit.writeBatch(b.join(pred, Seq("doc_id"), "left_outer")
             .select(col("doc_id"), col("text"),
-              coalesce(col("pred_label"), lit("und")).as("pred_lang"))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("pred_lang", "batch_id").parquet(storePath)
+              coalesce(col("pred_label"), lit("und")).as("pred_lang")),
+            batchId, storePath, "pred_lang")
         } finally b.unpersist()
         ()
       }
@@ -559,10 +540,7 @@ object DocIngest {
       storePath: String,
       checkpointPath: String,
       n: Int = 3): StreamingQuery =
-    spark.readStream
-      .schema(corpusDocSchema)
-      .option("pathGlobFilter", "*.parquet")
-      .parquet(dir)
+    readCorpusDocs(spark, dir)
       .writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointPath)
@@ -571,16 +549,19 @@ object DocIngest {
           batch.where(col("lang").isNotNull), col("text"), col("lang"), n)
         val merged = nbCountsAt(spark, storePath, beforeBatch = batchId)
           .map(prev => TextOps.nbMergeCounts(prev, bc)).getOrElse(bc)
-        // COMMIT ORDER: docs first, grams LAST — version discovery
-        // ([[nbCountsAt]]) keys on the grams directory, so a version only
-        // becomes visible once BOTH frames exist; a crash between the two
-        // writes leaves an invisible docs/v=N that the batch replay
-        // overwrites, never a reader-visible version missing its docs leg
-        merged.docCounts.write.mode("overwrite")
-          .parquet(s"$storePath/docs/v=$batchId")
-        merged.gramCounts.write.mode("overwrite")
-          .parquet(s"$storePath/grams/v=$batchId")
-        ()
+        // COMMIT ORDER: both legs staged, then docs published first and
+        // grams LAST — version discovery ([[nbCountsAt]]) keys on the
+        // grams directory, so a version becomes visible only once BOTH
+        // frames are complete; a failed write leaves only staging debris
+        // that the batch replay clears
+        val docsTmp = s"$storePath/.staging/docs_v$batchId"
+        val gramsTmp = s"$storePath/.staging/grams_v$batchId"
+        Commit.publishStaged(spark,
+            docsTmp -> s"$storePath/docs/v=$batchId",
+            gramsTmp -> s"$storePath/grams/v=$batchId") {
+          merged.docCounts.write.mode("overwrite").parquet(docsTmp)
+          merged.gramCounts.write.mode("overwrite").parquet(gramsTmp)
+        }
       }
       .trigger(Trigger.AvailableNow())
       .start()
@@ -592,8 +573,10 @@ object DocIngest {
     * form) silently returns null on hdfs:// / s3a:// URIs, which would
     * have disabled merging (every version holding only its own batch)
     * with no error anywhere. Discovery keys on `grams/` — the LAST
-    * directory [[startNbCountsMaintenance]] commits — so a half-written
-    * version is never visible. */
+    * directory [[startNbCountsMaintenance]] publishes, by checked rename
+    * of a completely written stage — so a version is listed only once
+    * both its legs are complete, and a failed or crashed write is never
+    * visible. */
   def nbCountsAt(
       spark: SparkSession,
       storePath: String,
@@ -725,14 +708,8 @@ object DocIngest {
         val parsed = batch.persist()
         try {
           val (good, bad) = graft.sources.Records.splitCsvValidated(parsed)
-          good.withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id").parquet(goodPath)
-          bad.withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id").parquet(quarantinePath)
+          Commit.writeBatch(good, batchId, goodPath)
+          Commit.writeBatch(bad, batchId, quarantinePath)
         } finally parsed.unpersist()
       }
       .trigger(Trigger.AvailableNow())
@@ -749,72 +726,34 @@ object DocIngest {
     *
     * State: one parquet row per (batch_id, source) — the newest
     * batch_id is the authoritative manifest, the partition history is
-    * the audit trail. A `batch_id < current` read + dynamic partition
-    * overwrite makes a foreachBatch replay idempotent (same recovery
-    * discipline as the drift monitor's moment state). Scale: state is
-    * bounded by sources × retained batches, never data; the per-batch
-    * fold is one map-side-combinable aggregate over the batch plus a
-    * sources-sized union. */
+    * the audit trail; a foreachBatch replay is idempotent ([[Fold]]).
+    * Scale: state is bounded by sources × retained batches, never data;
+    * the per-batch fold is one map-side-combinable aggregate over the
+    * batch plus a sources-sized union. */
   def startChecksum(
       spark: SparkSession,
       dir: String,
       stateDir: String,
       checkpointPath: String): StreamingQuery =
+    Fold.start(readCorpusDocs(spark, dir), stateDir, checkpointPath, ChecksumState) {
+      graft.operators.Corpus.checksumPartials(_, col("source"), col("text"), col("n_chars"))
+    } {
+      _.groupBy(col("source"))
+        .agg(sum(col("n_docs")).cast("long").as("n_docs"),
+          sum(col("hash_sum")).cast("decimal(38,0)").as("hash_sum"),
+          sum(col("total_chars")).cast("long").as("total_chars"))
+    }
+
+  private val ChecksumState = StructType.fromDDL("source STRING NOT NULL, " +
+    "n_docs BIGINT NOT NULL, hash_sum DECIMAL(38,0) NOT NULL, total_chars BIGINT NOT NULL")
+
+  /** A directory of full documents-table parquet ([[corpusDocSchema]])
+    * as a stream. */
+  private def readCorpusDocs(spark: SparkSession, dir: String): DataFrame =
     spark.readStream
       .schema(corpusDocSchema)
       .option("pathGlobFilter", "*.parquet")
       .parquet(dir)
-      .writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val parts = graft.operators.Corpus.checksumPartials(
-          batch, col("source"), col("text"), col("n_chars"))
-        val prior = readNewestState(spark, stateDir, Some(batchId))
-        val folded = prior match {
-          case None => parts
-          case Some(p) => p.unionByName(parts)
-            .groupBy(col("source"))
-            .agg(sum(col("n_docs")).cast("long").as("n_docs"),
-              sum(col("hash_sum")).cast("decimal(38,0)").as("hash_sum"),
-              sum(col("total_chars")).cast("long").as("total_chars"))
-        }
-        folded.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(stateDir)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** The newest committed `(source, n_docs, hash_sum, total_chars)`
-    * fold in a [[startChecksum]] state dir, `None` when no fold has
-    * committed yet — a missing dir AND an existing-but-empty dir (a
-    * crashed FIRST write leaves `stateDir` with only `_temporary/`,
-    * the hazard the drift monitor documents). ONLY the two no-state
-    * error conditions map to None; any other analysis error (e.g.
-    * schema drift in an old state dir) propagates — mapping it to None
-    * would silently restart the cumulative fold from the current batch
-    * and corrupt the manifest with no error anywhere. */
-  private def readNewestState(spark: SparkSession, stateDir: String,
-      beforeBatch: Option[Long]): Option[DataFrame] = {
-    val st =
-      try {
-        val full = spark.read.parquet(stateDir)
-        beforeBatch.fold(full)(b => full.where(col("batch_id") < b))
-      } catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getCondition == "PATH_NOT_FOUND" ||
-              e.getCondition == "UNABLE_TO_INFER_SCHEMA" =>
-          return None
-      }
-    // partition-column type inference reads batch_id back as INT —
-    // cast before the driver-side getLong
-    val mb = st.agg(max(col("batch_id").cast("long"))).head()
-    if (mb.isNullAt(0)) None
-    else Some(st.where(col("batch_id").cast("long") === mb.getLong(0))
-      .select(col("source"), col("n_docs"), col("hash_sum"),
-        col("total_chars")))
-  }
 
   /** The newest cumulative manifest from a [[startChecksum]] state dir,
     * in [[graft.operators.Corpus.checksum]]'s hash-robust two-BIGINT
@@ -823,10 +762,5 @@ object DocIngest {
     * landed, or a crashed first write), yields an EMPTY manifest frame —
     * the "no manifest yet" signal — instead of an AnalysisException/NPE. */
   def checksumManifest(spark: SparkSession, stateDir: String): DataFrame =
-    graft.operators.Corpus.checksumSurface(
-      readNewestState(spark, stateDir, beforeBatch = None).getOrElse(
-        spark.emptyDataFrame
-          .select(lit("").as("source"), lit(0L).as("n_docs"),
-            lit(java.math.BigDecimal.ZERO).cast("decimal(38,0)").as("hash_sum"),
-            lit(0L).as("total_chars"))))
+    graft.operators.Corpus.checksumSurface(Fold.state(spark, stateDir, ChecksumState))
 }

@@ -403,37 +403,20 @@ object EventStream {
     * bounded by depth × w CELLS regardless of stream history or key
     * cardinality (the whole point of sketching the stream instead of
     * keeping per-key counts). The newest batch_id is the authoritative
-    * sketch; replay after a crash is idempotent because the fold reads
-    * only `batch_id < current` and rewrites its own partition (dynamic
-    * partition overwrite — the checksum manifest / drift monitor
-    * recovery discipline). */
+    * sketch; replay after a crash is idempotent ([[Fold]]). */
   def startCmSketch(
       spark: SparkSession,
       dir: String,
       stateDir: String,
       checkpointPath: String,
       w: Int = 64): StreamingQuery =
-    readEventIngestDir(spark, dir)
-      .writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val counts = batch.where(col("user_id").isNotNull)
-          .groupBy(col("user_id").cast("long").as("key"))
-          .agg(count(lit(1)).as("n"))
-        val parts = graft.operators.Events.cmSketch(counts, w)
-        val folded = readCmState(spark, stateDir, Some(batchId)) match {
-          case None => parts
-          case Some(p) => p.unionByName(parts)
-            .groupBy(col("row"), col("cell"))
-            .agg(sum(col("cell_n")).cast("long").as("cell_n"))
-        }
-        folded.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(stateDir)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    Fold.start(readEventIngestDir(spark, dir), stateDir, checkpointPath, CmState) { batch =>
+      graft.operators.Events.cmSketch(batch.where(col("user_id").isNotNull)
+        .groupBy(col("user_id").cast("long").as("key"))
+        .agg(count(lit(1)).as("n")), w)
+    } {
+      _.groupBy(col("row"), col("cell")).agg(sum(col("cell_n")).cast("long").as("cell_n"))
+    }
 
   /** Event INGEST-DIR stream: unlike [[readEvents]] (pinned to the
     * testdata layout's single `events.parquet`), this watches every
@@ -466,26 +449,11 @@ object EventStream {
       stateDir: String,
       checkpointPath: String,
       k: Int = 4096): StreamingQuery =
-    readEventIngestDir(spark, dir)
-      .writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val cells = graft.operators.Events.lcCells(
-          batch.where(col("user_id").isNotNull)
-            .select(col("event_type").as("grp"),
-              col("user_id").cast("long").as("key")), k)
-        val folded = readFold(spark, stateDir, Some(batchId),
-          Seq("grp", "cell")) match {
-          case None => cells
-          case Some(p) => p.unionByName(cells).distinct()
-        }
-        folded.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(stateDir)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    Fold.start(readEventIngestDir(spark, dir), stateDir, checkpointPath, LcState) { batch =>
+      graft.operators.Events.lcCells(
+        batch.where(col("user_id").isNotNull)
+          .select(col("event_type").as("grp"), col("user_id").cast("long").as("key")), k)
+    }(_.distinct())
 
   /** Decimal-digit value histogram maintained at the ingest door — the
     * third monitor of the streaming sketch trio (CM frequencies: SUM
@@ -498,26 +466,13 @@ object EventStream {
       dir: String,
       stateDir: String,
       checkpointPath: String): StreamingQuery =
-    readEventIngestDir(spark, dir)
-      .writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val h = graft.operators.Events.ddHistogramBy(
-          batch.select(col("event_type").as("grp"), col("value")))
-        val folded = readFold(spark, stateDir, Some(batchId),
-          Seq("grp", "digits", "first2", "cnt")) match {
-          case None => h
-          case Some(p) => p.unionByName(h)
-            .groupBy(col("grp"), col("digits"), col("first2"))
-            .agg(sum(col("cnt")).cast("long").as("cnt"))
-        }
-        folded.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(stateDir)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    Fold.start(readEventIngestDir(spark, dir), stateDir, checkpointPath, DdState) { batch =>
+      graft.operators.Events.ddHistogramBy(
+        batch.select(col("event_type").as("grp"), col("value")))
+    } {
+      _.groupBy(col("grp"), col("digits"), col("first2"))
+        .agg(sum(col("cnt")).cast("long").as("cnt"))
+    }
 
   /** Daily event-count series maintained at the ingest door — the
     * FOURTH monitor beside the sketch trio, and the one whose state is
@@ -529,91 +484,41 @@ object EventStream {
     * reads off committed state with results IDENTICAL to the batch
     * queries over the same events — no re-scan of history. State is
     * bounded by the calendar span in days, never event count; replay
-    * after a crash is idempotent (fold reads only `batch_id < current`,
-    * rewrites its own partition — the sketch-trio recovery discipline). */
+    * after a crash is idempotent ([[Fold]]). */
   def startDayCounts(
       spark: SparkSession,
       dir: String,
       stateDir: String,
       checkpointPath: String): StreamingQuery =
-    readEventIngestDir(spark, dir)
-      .writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val counts = graft.operators.Events.dayCounts(batch)
-        val folded = readFold(spark, stateDir, Some(batchId),
-          Seq("d", "y")) match {
-          case None => counts
-          case Some(p) => p.unionByName(counts)
-            .groupBy(col("d")).agg(sum(col("y")).cast("long").as("y"))
-        }
-        folded.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(stateDir)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    Fold.start(readEventIngestDir(spark, dir), stateDir, checkpointPath, DayState) {
+      graft.operators.Events.dayCounts
+    }(_.groupBy(col("d")).agg(sum(col("y")).cast("long").as("y")))
+
+  private val CmState = StructType.fromDDL(
+    "`row` INT NOT NULL, cell BIGINT NOT NULL, cell_n BIGINT NOT NULL")
+  private val LcState = StructType.fromDDL("grp STRING NOT NULL, cell BIGINT NOT NULL")
+  private val DdState = StructType.fromDDL(
+    "grp STRING NOT NULL, digits BIGINT NOT NULL, first2 BIGINT NOT NULL, cnt BIGINT NOT NULL")
+  private val DayState = StructType.fromDDL("d BIGINT NOT NULL, y BIGINT NOT NULL")
 
   /** The newest committed `(d, y)` day-count series from a
     * [[startDayCounts]] state dir — empty when no fold committed. */
   def dayCountState(spark: SparkSession, stateDir: String): DataFrame =
-    readFold(spark, stateDir, beforeBatch = None, Seq("d", "y")).getOrElse(
-      spark.emptyDataFrame
-        .select(lit(0L).as("d"), lit(0L).as("y"))
-        .where(lit(false)))
+    Fold.state(spark, stateDir, DayState)
 
   /** The newest committed `(grp, digits, first2, cnt)` histogram from a
     * [[startDdHistogram]] state dir — empty when no fold committed. */
   def ddHistogramState(spark: SparkSession, stateDir: String): DataFrame =
-    readFold(spark, stateDir, beforeBatch = None,
-      Seq("grp", "digits", "first2", "cnt")).getOrElse(
-      spark.emptyDataFrame
-        .select(lit("").as("grp"), lit(0L).as("digits"),
-          lit(0L).as("first2"), lit(0L).as("cnt"))
-        .where(lit(false)))
+    Fold.state(spark, stateDir, DdState)
 
   /** The newest committed `(grp, cell)` occupancy set from a
     * [[startLcSketch]] state dir — empty when no fold committed. */
   def lcState(spark: SparkSession, stateDir: String): DataFrame =
-    readFold(spark, stateDir, beforeBatch = None, Seq("grp", "cell")).getOrElse(
-      spark.emptyDataFrame
-        .select(lit("").as("grp"), lit(0L).as("cell"))
-        .where(lit(false)))
+    Fold.state(spark, stateDir, LcState)
 
   /** The newest committed sketch in a [[startCmSketch]] state dir —
     * empty (a valid all-zeros sketch: estimates come out 0) when no
     * fold has committed yet. */
   def cmSketchState(spark: SparkSession, stateDir: String): DataFrame =
-    readCmState(spark, stateDir, beforeBatch = None).getOrElse(
-      spark.emptyDataFrame
-        .select(lit(0).as("row"), lit(0L).as("cell"), lit(0L).as("cell_n"))
-        .where(lit(false)))
-
-  private def readCmState(spark: SparkSession, stateDir: String,
-      beforeBatch: Option[Long]): Option[DataFrame] =
-    readFold(spark, stateDir, beforeBatch, Seq("row", "cell", "cell_n"))
-
-  /** Newest committed fold (`cols` projected) with `batch_id <` the
-    * bound — `None` only for the two no-state conditions (missing dir,
-    * dir with no readable footer from a crashed FIRST write); any other
-    * analysis error propagates rather than silently re-basing the
-    * cumulative fold (the narrow-catch discipline, see [[DocIngest]]). */
-  private def readFold(spark: SparkSession, stateDir: String,
-      beforeBatch: Option[Long], cols: Seq[String]): Option[DataFrame] = {
-    val st =
-      try {
-        val full = spark.read.parquet(stateDir)
-        beforeBatch.fold(full)(b => full.where(col("batch_id") < b))
-      } catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getCondition == "PATH_NOT_FOUND" ||
-              e.getCondition == "UNABLE_TO_INFER_SCHEMA" =>
-          return None
-      }
-    val mb = st.agg(max(col("batch_id").cast("long"))).head()
-    if (mb.isNullAt(0)) None
-    else Some(st.where(col("batch_id").cast("long") === mb.getLong(0))
-      .select(cols.map(col): _*))
-  }
+    Fold.state(spark, stateDir, CmState)
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.operators.IvfIndex
+import graft.sources.Commit
 import graft.types.Metric
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -137,14 +138,8 @@ object VectorIngest {
         val parsed = batch.persist()
         try {
           val (good, bad) = graft.sources.Records.splitValidated(parsed, dim)
-          good.withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id").parquet(goodPath)
-          bad.withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id").parquet(quarantinePath)
+          Commit.writeBatch(good, batchId, goodPath)
+          Commit.writeBatch(bad, batchId, quarantinePath)
         } finally parsed.unpersist()
       }
       .trigger(Trigger.AvailableNow())
@@ -171,9 +166,10 @@ object VectorIngest {
     * ([[startToPartitionedStore]]) gets exactly-once appends from the
     * sink's commit log; `foreachBatch` + rewrite is at-least-once on
     * batch retry (a retried batch may re-append). The versioned-directory
-    * swap keeps refines atomic for readers — a version directory is
-    * either fully written by [[graft.operators.IvfIndex.writePartitioned]]
-    * or not yet current.
+    * swap keeps refines and compactions atomic for readers: a new version
+    * is staged and published by checked rename
+    * ([[graft.sources.Commit.publishVersion]]), so it is either complete
+    * with its centroids or not yet listable.
     */
   def startMaintained(
       spark: SparkSession,
@@ -235,12 +231,8 @@ object VectorIngest {
       .writeStream
       .option("checkpointLocation", checkpointPath)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        IvfIndex.queryMipsBatch(augCentroids, assigned, batch, k, probes)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(resultPath)
-        ()
+        Commit.writeBatch(IvfIndex.queryMipsBatch(augCentroids, assigned, batch, k, probes),
+          batchId, resultPath)
       }
       .trigger(Trigger.AvailableNow())
       .start()
@@ -266,8 +258,10 @@ object VectorIngest {
     * fitted `cos_top`/`share_top`) — a self-describing audit trail
     * whose newest row is the current state. Each batch reads the
     * newest row with `batch_id < current` and dynamically overwrites
-    * its own partition, so an at-least-once `foreachBatch` retry
-    * recomputes identical content instead of double-counting. */
+    * its own partition ([[graft.sources.Commit.newestBatch]],
+    * [[graft.sources.Commit.writeBatch]]), so an at-least-once
+    * `foreachBatch` retry recomputes identical content instead of
+    * double-counting. */
   def startDriftMonitor(
       spark: SparkSession,
       dir: String,
@@ -290,24 +284,8 @@ object VectorIngest {
           val bn = g.getLong(0)
           val bs1 = g.getSeq[Long](1)
           val bs2 = g.getSeq[Long](2)
-          // a crashed FIRST write can leave stateDir existing but with
-          // no committed parquet; an existence check alone would then
-          // wedge every retry on "unable to infer schema". ONLY the two
-          // no-state conditions map to None (the readNewestState
-          // discipline) — any other analysis error (schema drift, a
-          // misconfigured stateDir) must propagate: mapping it to None
-          // would silently re-base the cumulative fold from the current
-          // batch and break the streaming==batch moments law quietly
-          val prior =
-            try spark.read.parquet(stateDir)
-              .where(col("batch_id") < batchId)
-              .orderBy(col("batch_id").desc).limit(1)
-              .select(col("n"), col("s1"), col("s2")).collect().headOption
-            catch {
-              case e: org.apache.spark.sql.AnalysisException
-                  if e.getCondition == "PATH_NOT_FOUND" ||
-                    e.getCondition == "UNABLE_TO_INFER_SCHEMA" => None
-            }
+          val prior = Commit.newestBatch(spark, stateDir, Some(batchId),
+            Seq("n", "s1", "s2")).flatMap(_.collect().headOption)
           // zip would silently TRUNCATE on width mismatch — a monitor
           // restarted at a different dim than its state dir would mix
           // moments from two geometries into plausible-looking garbage
@@ -327,11 +305,8 @@ object VectorIngest {
           val cos = math.abs(xs.zip(baseline)
             .foldLeft(0.0)((acc, t) => acc + t._1 * t._2))
           import spark.implicits._
-          Seq((batchId, n, s1, s2, cos, share))
-            .toDF("batch_id", "n", "s1", "s2", "cos_top", "share_top")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id").parquet(stateDir)
+          Commit.writeBatch(Seq((n, s1, s2, cos, share))
+            .toDF("n", "s1", "s2", "cos_top", "share_top"), batchId, stateDir)
         }
       }
       .trigger(Trigger.AvailableNow())
@@ -388,34 +363,21 @@ final class MaintainedIngest private[streaming] (
   // silently re-assigning against stale initial centroids or missing a
   // density violation that predates the restart.
   locally {
-    val p = new org.apache.hadoop.fs.Path(storeBase)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // ONE version-listing definition across the lifecycle tools
-    val versions = graft.sources.Records.listVersions(fs, storeBase)
+    val versions = Commit.listVersions(fileSystem, storeBase)
     if (versions.nonEmpty) {
       val v = versions.max
       // Refine/compact publish atomically (staged rename, data last),
       // so a listable version is complete — but the FIRST append into
       // v0 is the streaming engine's own parquet append, and a crash
       // there can leave the dir with only _temporary debris. Both
-      // recovery reads therefore map exactly the two no-data analysis
-      // errors to "empty"; anything else (schema drift, wrong dir)
-      // still fails loudly.
-      def orEmpty[T](read: => Seq[T]): Seq[T] =
-        try read catch {
-          case e: org.apache.spark.sql.AnalysisException
-              if e.getCondition == "PATH_NOT_FOUND" ||
-                e.getCondition == "UNABLE_TO_INFER_SCHEMA" => Seq.empty
-        }
-      val c =
-        if (fs.exists(new org.apache.hadoop.fs.Path(centroidsPath(v)))) {
-          val rows = orEmpty(Seq(spark.read.parquet(centroidsPath(v))))
-          rows.headOption.getOrElse(initialCentroids)
-        } else initialCentroids
-      published = (c, v)
-      orEmpty(spark.read.parquet(storePath)
-        .groupBy(col("cluster_id")).agg(count(lit(1)).as("n"))
-        .collect().toSeq)
+      // recovery reads therefore read "nothing committed" as empty
+      // (v0 has no centroids companion: the caller's are current)
+      published = (Commit.ifCommitted(spark.read.parquet(Commit.centroidsDir(storeBase, v)))
+        .getOrElse(initialCentroids), v)
+      Commit.ifCommitted(spark.read.parquet(storePath)
+          .groupBy(col("cluster_id")).agg(count(lit(1)).as("n"))
+          .collect().toSeq).getOrElse(Seq.empty)
         .foreach(r => sizes(r.getInt(0)) = r.getLong(1))
       relistFiles()
     }
@@ -449,21 +411,19 @@ final class MaintainedIngest private[streaming] (
     fileCount = clusterFiles.values.sum
   }
 
-  private def centroidsPath(v: Int): String = s"$storeBase/centroids_v$v"
-
   private var query: StreamingQuery = _
   private[streaming] def attach(q: StreamingQuery): Unit = query = q
 
   /** The running stream (await it to drain an AvailableNow window). */
   def streamingQuery: StreamingQuery = query
   /** Current store version directory (readers open this). */
-  def storePath: String = s"$storeBase/v$vers"
+  def storePath: String = Commit.versionDir(storeBase, vers)
   /** Current index view over the store — probe with
     * [[graft.operators.IvfIndex.query]]. One volatile read: the
     * centroids and the store version are always from the SAME commit. */
   def model: IvfIndex.Model = {
     val (c, v) = published
-    IvfIndex.Model(c, spark.read.parquet(s"$storeBase/v$v"))
+    IvfIndex.Model(c, spark.read.parquet(Commit.versionDir(storeBase, v)))
   }
   /** How many automated refine passes have fired. */
   def refineCount: Int = refines
@@ -498,36 +458,6 @@ final class MaintainedIngest private[streaming] (
     else if (maxStoreFiles > 0 && storeFileCount > maxStoreFiles) compactNow()
   }
 
-  /** Staged publish of the NEXT version (the [[graft.sources.Records]]
-    * `restoreVersion` discipline): `write` fills hidden `.tmp` dirs,
-    * then checked renames publish — centroids FIRST, data LAST — so the
-    * version becomes listable (`listVersions` keys on `v\d+`) only with
-    * its companion centroids already in place. A crash anywhere before
-    * the final rename leaves only invisible staging debris, which the
-    * next attempt deletes; a direct write to the listable path would
-    * instead make a partial or centroid-less version the authoritative
-    * newest version at restart. */
-  private def publishVersion(next: Int)(write: (String, String) => Unit): Unit = {
-    val fs = fileSystem
-    val dtmp = new org.apache.hadoop.fs.Path(s"$storeBase/.v$next.tmp")
-    val ctmp = new org.apache.hadoop.fs.Path(s"$storeBase/.centroids_v$next.tmp")
-    fs.delete(dtmp, true) // stale staging from an earlier crash
-    fs.delete(ctmp, true)
-    write(dtmp.toString, ctmp.toString)
-    // rename-into-existing-dir NESTS silently (posix mv semantics) —
-    // delete any stale target from a crashed earlier attempt and fail
-    // loudly if the rename itself reports false
-    def publish(src: org.apache.hadoop.fs.Path, dstName: String): Unit = {
-      val dst = new org.apache.hadoop.fs.Path(s"$storeBase/$dstName")
-      fs.delete(dst, true)
-      // soft-failed delete (dst still present) → the rename would nest
-      require(!fs.exists(dst), s"delete $dst failed — refusing nested rename")
-      require(fs.rename(src, dst), s"rename $src -> $dst failed")
-    }
-    publish(ctmp, s"centroids_v$next")
-    publish(dtmp, s"v$next")
-  }
-
   /** Layout-only rewrite: same rows, same assignment, same centroids —
     * the NEXT version directory holds one consolidated file per cluster
     * (`repartition(cluster_id)` puts each cluster in exactly one task).
@@ -537,7 +467,7 @@ final class MaintainedIngest private[streaming] (
   private def compactNow(): Unit = {
     val next = vers + 1
     val snapshot = cents
-    publishVersion(next) { (dataTmp, centTmp) =>
+    Commit.publishVersion(spark, storeBase, next) { (dataTmp, centTmp) =>
       spark.read.parquet(storePath)
         .repartition(col("cluster_id"))
         .write.mode("overwrite").partitionBy("cluster_id").parquet(dataTmp)
@@ -583,14 +513,14 @@ final class MaintainedIngest private[streaming] (
     }
     failedAt = Map.empty
     val next = vers + 1
-    publishVersion(next) { (dataTmp, centTmp) =>
+    Commit.publishVersion(spark, storeBase, next) { (dataTmp, centTmp) =>
       m.assigned.write.mode("overwrite").partitionBy("cluster_id").parquet(dataTmp)
       m.centroids.write.mode("overwrite").parquet(centTmp)
     }
-    val recovered = spark.read.parquet(centroidsPath(next))
+    val recovered = spark.read.parquet(Commit.centroidsDir(storeBase, next))
     // re-seed the running sizes from the rewritten store's partition
     // column only (footer-cheap; bounded output by cluster count)
-    val refinedCounts = spark.read.parquet(s"$storeBase/v$next")
+    val refinedCounts = spark.read.parquet(Commit.versionDir(storeBase, next))
       .groupBy(col("cluster_id")).agg(count(lit(1)).as("n"))
       .collect().map(r => r.getInt(0) -> r.getLong(1))
     sizes.clear()

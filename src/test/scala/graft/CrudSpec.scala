@@ -383,6 +383,35 @@ class CrudSpec extends SparkSpec {
       !fs.exists(new org.apache.hadoop.fs.Path(dir + ".__stage")))
   }
 
+  test("writePartitioned: a failed rewrite leaves the previous index readable") {
+    import graft.operators.IvfIndex
+    val dir = java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get("target").toAbsolutePath, "index_staged").toString + "/index"
+    val cents = Seq((0, Seq(0f, 0f))).toDF("cluster_id", "centroid")
+    // a range, not a local frame: the poisoned row must fail inside the
+    // write job, not when the optimizer folds a local relation
+    val assigned = spark.range(10).select(col("id"),
+      array(col("id").cast("float"), col("id").cast("float")).as("embedding"),
+      map(lit("k"), col("id").cast("string")).as("metadata"),
+      (col("id") % 3).cast("int").as("cluster_id"))
+    IvfIndex.writePartitioned(IvfIndex.Model(cents, assigned), dir)
+    def rows() = Records.open(spark, dir).select("id", "cluster_id")
+      .as[(Long, Int)].collect().sorted.toSeq
+    val before = rows()
+    assert(before.length === 10)
+    // the rewrite's job fails on one row, after other rows were written
+    val poisoned = assigned.withColumn("id",
+      when(col("id") === 7L, raise_error(lit("poisoned row"))).otherwise(col("id")))
+    intercept[Exception](IvfIndex.writePartitioned(IvfIndex.Model(cents, poisoned), dir))
+    assert(rows() === before, "a failed rewrite destroyed the previous index")
+    // a good rewrite still replaces it, and leaves no stage behind
+    IvfIndex.writePartitioned(IvfIndex.Model(cents, assigned.where(col("id") < 4)), dir)
+    assert(rows().map(_._1) === Seq(0L, 1L, 2L, 3L))
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(dir + ".__stage")))
+  }
+
   test("snapshotById: fresh staged publish under dynamic overwrite mode, ids sorted per bucket") {
     val dir = java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get("/root/repo/target"), "snap_dyn").toString + "/store"

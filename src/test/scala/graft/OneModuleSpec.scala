@@ -6,10 +6,13 @@ import scala.jdk.CollectionConverters._
 
 /** Source guard: lineage truncation and session memoization are each
   * decided in one place, `Caching.scala` ([[Caching.truncate]],
-  * [[SessionMemo]]), and the batch IVF probe order in one window,
-  * `IvfIndex.probeBatch`. Any other main source that checkpoints
-  * directly, hand-rolls a session-keyed map or writes its own centroid
-  * ranking window fails here. */
+  * [[SessionMemo]]), the batch IVF probe order in one window,
+  * `IvfIndex.probeBatch`, and the commit protocol of durable writes in
+  * one module, `Commit.scala` ([[graft.sources.Commit]]). Any other main
+  * source that checkpoints directly, hand-rolls a session-keyed map,
+  * writes its own centroid ranking window, renames its own stage into
+  * place, decides for itself what "nothing committed" means or writes
+  * its own replay-idempotent batch partition fails here. */
 class OneModuleSpec extends SparkSpec {
 
   private val mainRoot = Paths.get("src", "main")
@@ -55,5 +58,25 @@ class OneModuleSpec extends SparkSpec {
       p.getFileName.toString -> ranking.findAllMatchIn(code).size
     }.filter(_._2 > 0)
     assert(sites === Seq("IvfIndex.scala" -> 1))
+  }
+
+  private def onlyInCommit(pattern: String): Unit = {
+    assert(offenders(pattern, _.getFileName.toString == "Commit.scala").isEmpty)
+    assert(sources.exists { case (p, code) =>
+      p.getFileName.toString == "Commit.scala" && code.contains(pattern)
+    }, s"Commit.scala no longer holds $pattern")
+  }
+
+  test("the checked rename is written once: only Commit.scala refuses a nested rename") {
+    onlyInCommit("refusing nested rename")
+  }
+
+  test("the no-state read is written once: only Commit.scala names UNABLE_TO_INFER_SCHEMA") {
+    onlyInCommit("UNABLE_TO_INFER_SCHEMA")
+  }
+
+  test("the replay-idempotent batch write is written once: " +
+    "only Commit.scala sets partitionOverwriteMode") {
+    onlyInCommit("partitionOverwriteMode")
   }
 }

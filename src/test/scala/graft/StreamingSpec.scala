@@ -741,6 +741,62 @@ class StreamingSpec extends SparkSpec {
     assert(versions.length === 2, versions.mkString(","))
   }
 
+  test("NB count store publish is STAGED: a failed wave is invisible to " +
+    "readers, and the retry publishes it and clears the staging") {
+    import graft.streaming.DocIngest
+    import graft.operators.TextOps
+    val root = java.nio.file.Files.createTempDirectory("graft_nbcounts_staged")
+    val inDir = s"$root/in"; val store = s"$root/store"; val ckpt = s"$root/ckpt"
+    def docsDF(rows: Seq[(Long, String, String)]) = rows
+      .toDF("doc_id", "text", "lang")
+      .withColumn("source", lit("s"))
+      .withColumn("n_chars", length(col("text")).cast("long"))
+    val w1 = Seq((1L, "aaab aaba abaa", "aa"), (3L, "xxxy xyxx yxxx", "xx"))
+    val w2 = Seq((2L, "aaaa baaa aaab", "aa"))
+    docsDF(w1).write.mode("append").parquet(inDir)
+    DocIngest.startNbCountsMaintenance(spark, inDir, store, ckpt).awaitTermination()
+
+    // poison v=0 with a second row for one of its grams at Long.MaxValue:
+    // batch 1's merge then overflows (ANSI sum) in the grams leg, after
+    // its docs leg is complete — the write fails half-way through a wave
+    val v0 = s"$store/grams/v=0"
+    val v0Schema = spark.read.parquet(v0).schema
+    val v0Rows = spark.read.parquet(v0).collect()
+    val poison = v0Rows.head
+    spark.createDataFrame(java.util.List.of(
+        org.apache.spark.sql.Row(poison.get(0), poison.get(1), Long.MaxValue)), v0Schema)
+      .write.mode("append").parquet(v0)
+    docsDF(w2).write.mode("append").parquet(inDir)
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      DocIngest.startNbCountsMaintenance(spark, inDir, store, ckpt).awaitTermination())
+    finally spark.conf.set("spark.sql.ansi.enabled", ansi)
+    val fs = new org.apache.hadoop.fs.Path(store)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def exists(p: String) = fs.exists(new org.apache.hadoop.fs.Path(s"$store/$p"))
+    assert(!exists("grams/v=1") && !exists("docs/v=1"),
+      "a failed wave must publish neither leg")
+    // readers still see v=0 — no listed version that cannot be read
+    assert(DocIngest.nbCountsAt(spark, store).get.docCounts
+      .as[(String, Long)].collect().toSet === Set("aa" -> 1L, "xx" -> 1L))
+
+    // the retry (batch 1 again, off the checkpoint) over the repaired v=0
+    spark.createDataFrame(java.util.List.of(v0Rows: _*), v0Schema)
+      .write.mode("overwrite").parquet(v0)
+    DocIngest.startNbCountsMaintenance(spark, inDir, store, ckpt).awaitTermination()
+    val maintained = DocIngest.nbCountsAt(spark, store).get
+    val retrained = TextOps.nbCharGramCounts(docsDF(w1 ++ w2), col("text"), col("lang"))
+    assert(maintained.gramCounts.as[(String, String, Long)].collect().toSet ===
+      retrained.gramCounts.as[(String, String, Long)].collect().toSet)
+    assert(maintained.docCounts.as[(String, Long)].collect().toSet ===
+      retrained.docCounts.as[(String, Long)].collect().toSet)
+    assert(exists("grams/v=1") && exists("docs/v=1"))
+    val staging = new org.apache.hadoop.fs.Path(s"$store/.staging")
+    assert(!fs.exists(staging) || fs.listStatus(staging).isEmpty,
+      "the retry's publish must consume the staging debris")
+  }
+
   test("streaming admission: quality + language + near-dup gates compose end-to-end") {
     import graft.streaming.DocIngest
     val base = "the quick brown fox jumps over the lazy dog and it is " +
@@ -1427,6 +1483,73 @@ class StreamingSpec extends SparkSpec {
       .as[(Long, Seq[Long], Seq[Long])].head()
     assert(last._2 === g._1 && last._3 === g._2 && last._4 === g._3,
       "cumulative moments diverged from the single-pass batch moments")
+  }
+
+  test("monitor folds and the drift monitor are replay-idempotent: a batch " +
+    "re-run over its own written partition counts nothing twice") {
+    import graft.streaming.{DocIngest, VectorIngest}
+    import graft.operators.{Corpus, Events}
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.streaming.StreamingQuery
+    val t0 = java.sql.Timestamp.valueOf("2024-03-01 00:00:00").getTime
+    def events(ids: Range) = ids.map(i => (i.toLong, new java.sql.Timestamp(t0 + i * 7200000L),
+        i % 7L, if (i % 2 == 0) "view" else "click", 1.0 + i % 13))
+      .toDF("event_id", "ts", "user_id", "event_type", "value")
+    def docs(ids: Range) = ids.map(i => (i.toLong, s"doc $i of ${i % 4}", "en", s"s${i % 3}",
+        10L + i)).toDF("doc_id", "text", "lang", "source", "n_chars")
+    def vecs(ids: Range) = ids.map(i => (i.toLong,
+        Seq.tabulate(4)(k => ((i * 7 + k * 3) % 11).toFloat), Map.empty[String, String]))
+      .toDF("id", "embedding", "metadata")
+    val moments = (df: DataFrame) => df
+      .agg(graft.functions.GramSumAgg.gramSum(
+        graft.operators.VectorOps.quantizeQ3(col("embedding"))).as("g"))
+      .select(col("g.n"), col("g.s1"), col("g.s2"))
+    // (door, its two waves, start, committed state, batch twin over all waves)
+    val doors: Seq[(String, Seq[DataFrame], (String, String, String) => StreamingQuery,
+        String => DataFrame, DataFrame => DataFrame)] = Seq(
+      ("cm", Seq(events(0 until 40), events(40 until 70)),
+        EventStream.startCmSketch(spark, _, _, _, w = 8), EventStream.cmSketchState(spark, _),
+        all => Events.cmSketch(all.groupBy(col("user_id").cast("long").as("key"))
+          .agg(count(lit(1)).as("n")), w = 8)),
+      ("lc", Seq(events(0 until 40), events(40 until 70)),
+        EventStream.startLcSketch(spark, _, _, _, k = 64), EventStream.lcState(spark, _),
+        all => Events.lcCells(all.select(col("event_type").as("grp"),
+          col("user_id").cast("long").as("key")), k = 64)),
+      ("dd", Seq(events(0 until 40), events(40 until 70)),
+        EventStream.startDdHistogram(spark, _, _, _), EventStream.ddHistogramState(spark, _),
+        all => Events.ddHistogramBy(all.select(col("event_type").as("grp"), col("value")))),
+      ("days", Seq(events(0 until 40), events(40 until 70)),
+        EventStream.startDayCounts(spark, _, _, _), EventStream.dayCountState(spark, _),
+        Events.dayCounts),
+      ("checksum", Seq(docs(0 until 12), docs(12 until 20)),
+        DocIngest.startChecksum(spark, _, _, _), DocIngest.checksumManifest(spark, _),
+        all => Corpus.checksum(all, col("source"), col("text"), col("n_chars"))
+          .select("source", "n_docs", "checksum_hi", "checksum_lo", "total_chars")),
+      ("drift", Seq(vecs(0 until 30), vecs(30 until 50)),
+        VectorIngest.startDriftMonitor(spark, _, 4, Seq(1.0, 0.0, 0.0, 0.0), _, _),
+        st => spark.read.parquet(st).orderBy(col("batch_id").desc).limit(1)
+          .select("n", "s1", "s2"),
+        moments))
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    doors.foreach { case (name, waves, start, state, batch) =>
+      val root = java.nio.file.Files.createTempDirectory(s"graft_replay_$name")
+      val (in, st, ck) = (s"$root/in", s"$root/state", s"$root/ckpt")
+      waves.foreach { w =>
+        w.write.mode("append").parquet(in)
+        start(in, st, ck).awaitTermination()
+      }
+      // un-commit the newest batch: the restart re-runs it over the
+      // partition it already wrote
+      val last = new java.io.File(s"$ck/commits/${waves.length - 1}")
+      assert(last.exists(), s"$name: expected one batch per wave")
+      assert(last.delete())
+      new java.io.File(s"$ck/commits/.${last.getName}.crc").delete()
+      start(in, st, ck).awaitTermination()
+      assert(last.exists(), s"$name: the un-committed batch was not re-run")
+      assert(rows(state(st)) === rows(batch(waves.reduce(_ unionByName _))),
+        s"$name: the replayed batch changed the state")
+      assert(spark.read.parquet(st).select("batch_id").distinct().count() === waves.length)
+    }
   }
 
   test("legacy TIMESTAMP(NANOS) parquet: the refusal's error class and message " +

@@ -60,7 +60,7 @@ class MaintainedLifecycleSpec extends graft.SparkSpec {
     assert(!names.exists(_.endsWith(".tmp")), s"staging debris left: $names")
     // v0 is the append-created initial version (centroids live with the
     // caller); every PUBLISHED version must carry its companion
-    graft.sources.Records.listVersions(fs, storeBase).filter(_ > 0).foreach { v =>
+    graft.sources.Commit.listVersions(fs, storeBase).filter(_ > 0).foreach { v =>
       assert(names.contains(s"centroids_v$v"),
         s"listable v$v lacks its centroids companion")
     }
