@@ -91,7 +91,7 @@ object Bench {
       // measured as an otherwise-unattributable 4-7 s tax on whatever
       // query followed the build.
       // embed_knn_accuracy materializes the shared blocked pair-distance
-      // frame (Queries.blockedSqPairs) — session state for the embed/ann
+      // frame (`Shared.blockedSqPairs`) — session state for the embed/ann
       // consumer family, same once-per-corpus-version argument.
       //
       // The builds run as TWO concurrent lanes (Spark's scheduler
@@ -129,7 +129,7 @@ object Bench {
         Seq("embed_knn_accuracy", "dedup_semantic", "corpus_substring_dedup",
           "corpus_checksum", "corpus_assemble"),
         // corpus_decontaminate materializes the standing split-gram
-        // index (Queries.splitGrams8) its decontamination-family
+        // index (`CorpusQueries.splitGrams8`) its decontamination-family
         // siblings share; the two rank builds the converged PageRank
         // frames — all "built once per corpus version" session state
         Seq("corpus_decontaminate", "dedup_pagerank",
@@ -204,7 +204,7 @@ object Bench {
         // the artifact: the compile cost now lands inside dedup_apply's
         // reported corpus-state time.
       }
-      Queries.deferBuilderCacheClear.set(true)
+      catalog.Shared.deferBuilderCacheClear.set(true)
       // finally-reset: a lane failure rethrows below, and leaving the
       // global defer flag stuck true would make any later builder call
       // in this JVM (e.g. a test harness reusing the session) silently
@@ -247,7 +247,7 @@ object Bench {
         }
         warmupLaneWalls("jit") = laneWalls.getOrDefault("jit", -1.0)
         jitTimes.forEach((k, v) => { warmupJit(k) = v; () })
-      } finally Queries.deferBuilderCacheClear.set(false)
+      } finally catalog.Shared.deferBuilderCacheClear.set(false)
       // one post-lane clear: drops the builders' dead LSH intermediates
       // AND the jit lane's 512-doc slice frames (plan-keyed, so they
       // could never serve a timed query anyway — only compiled code

@@ -8,7 +8,7 @@ import org.apache.spark.storage.StorageLevel
 /** How intermediates persist: the scoped-persist helper shared by the
   * operators that cache reusable intermediates ([[operators.Dedup]]'s
   * signature/candidate frames, [[streaming.DocIngest.corpusIndex]],
-  * [[Queries]]' fixed-model assignment), [[truncate]] — the one lineage
+  * `catalog.Shared.fixedModel`'s assignment), [[truncate]] — the one lineage
   * cut every checkpoint site goes through — and [[SessionMemo]], the one
   * per-session memo every session fixture goes through.
   *

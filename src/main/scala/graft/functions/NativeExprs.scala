@@ -605,7 +605,7 @@ object NativeExprs {
   def repetitionStats(tokens: Column): Column = asCol(RepetitionStatsExpr(ex(tokens)))
 
   /** Fused PQ encode — compiled twin of
-    * [[graft.operators.VectorOps.pqCodesHof]]'s
+    * `HofTwins.pqCodesHof`'s (in the tests)
     * `transform(books, (book, sub) -> aggregate(book, ...argmin...))`:
     * per subspace, the code of the squared-L2-nearest codebook entry
     * (ties → smaller code; NaN distances never win). The HOF runs an
@@ -982,7 +982,7 @@ object NativeExprs {
   def householder(v: Column, w: Seq[Double]): Column = asCol(HouseholderExpr(ex(v), w))
 
   /** Sign-bit pack to `ceil(d/64)` longs — the fused twin of
-    * [[graft.operators.VectorOps.binaryCodesHof]], which walks an
+    * `HofTwins.binaryCodesHof` (in the tests), which walks an
     * interpreted 64-step fold per word per row; this kernel is one
     * branchy scan per row. Semantics replicated from the HOF exactly:
     * bit set iff the component compares `> 0.0` under SPARK SQL
@@ -1137,7 +1137,8 @@ object NativeExprs {
   def charDiversity(text: Column): Column = asCol(CharDiversityExpr(ex(text)))
 
   /** Fused per-token Gopher counters — compiled twin of the four HOF
-    * passes over a lowercased token array (`TextOps.gopherFlagsHof`):
+    * passes over a lowercased token array (`HofTwins.gopherFlagsHof`,
+    * in the tests):
     * `struct(n_words, len_sum, n_alpha, stop_hits)` where `len_sum`
     * sums code-point lengths (Spark `length` semantics), `n_alpha`
     * counts tokens containing at least one ASCII `[a-z]` (the regex

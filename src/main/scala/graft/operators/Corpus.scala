@@ -1039,7 +1039,7 @@ object Corpus {
   /** [[checksum]] over an ALREADY-HASHED projection `(source, __h
     * DECIMAL(20,0) 56-bit content hash, __nc BIGINT)` — the shape a
     * warehouse corpus maintains as ingest-written columns, and the shape
-    * [[graft.Queries]] memoizes once per (session, corpus) so the
+    * `catalog.Shared.hashedDocsMemo` memoizes once per (session, corpus) so the
     * checksum/funnel/exact-dedup consumers share ONE digest pass instead
     * of each re-hashing the full text column. */
   def checksumFromProjected(projected: DataFrame): DataFrame =

@@ -29,9 +29,9 @@ object Dedup {
 
   /** [[exact]] over a PRE-HASHED content key — the entry point for a
     * corpus whose sha-256 digest is a maintained column (written at
-    * ingest; [[graft.Queries]] memoizes that projection per session so
-    * the exact-dedup / checksum / funnel consumers share one digest
-    * pass). Only the 64-byte key and the id shuffle, never text. */
+    * ingest; `catalog.Shared.hashedDocsMemo` memoizes that projection
+    * per session so the exact-dedup / checksum / funnel consumers share
+    * one digest pass). Only the 64-byte key and the id shuffle, never text. */
   def exactFromHashed(docs: DataFrame, key: Column): DataFrame =
     docs.groupBy(key.as("__h"))
       .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_dups"))

@@ -164,7 +164,8 @@ object TextOps {
   /** Language ID: convenience composition of [[langVotes]] +
     * [[langFromVotes]] for tests/small frames. Hot paths MUST materialize
     * the token and vote columns as attributes first (see
-    * [[shinglesFromTokens]] for why) — `Queries.lang_id` does. */
+    * [[shinglesFromTokens]] for why) — the catalog's `lang_id`
+    * (`catalog.ReferenceQueries`) does. */
   def langId(text: Column): Column = {
     // one aggregate-and-fold per row; votes appears once per element_at,
     // so this form re-evaluates the aggregate per language — fine for
@@ -245,36 +246,10 @@ object TextOps {
     *     longs (see [[shingleHashes]]).
     * Map-only: one pass per document, no shuffle, no state. Native
     * kernel ([[graft.functions.NativeExprs.RepetitionStatsExpr]]); the
-    * declarative twin ([[repetitionStatsHof]]) is what the oracle
-    * mirrors and the spec pins equal. */
+    * declarative twin (`HofTwins.repetitionStatsHof`, in the tests) is
+    * what the oracle mirrors and the spec pins equal. */
   def repetitionStats(t: Column): Column =
     graft.functions.NativeExprs.repetitionStats(t)
-
-  /** The HOF twin of [[repetitionStats]]: top token as the longest equal
-    * run of the sorted copy (an O(n log n) fold), dup fractions via
-    * `array_distinct` on the 56-bit shingle hashes. ~4× the kernel's
-    * cost (interpreted HOF lambdas + the sort) — kept as the
-    * twin-contract witness, not the hot path. */
-  private[graft] def repetitionStatsHof(t: Column): Column = {
-    val n = size(t)
-    val best = aggregate(
-      array_sort(t),
-      struct(lit("").as("prev"), lit(0L).as("run"), lit(0L).as("best")),
-      (acc, x) => {
-        val run = when(x === acc("prev"), acc("run") + lit(1L)).otherwise(lit(1L))
-        struct(x.as("prev"), run.as("run"), greatest(acc("best"), run).as("best"))
-      },
-      acc => acc("best"))
-    def dupFrac(ngr: Column): Column = {
-      val m = size(ngr)
-      when(m > 0, (m - size(array_distinct(ngr))).cast("double") / m)
-        .otherwise(lit(0.0))
-    }
-    struct(
-      when(n > 0, best.cast("double") / n).otherwise(lit(0.0)).as("top_token_frac"),
-      dupFrac(shingleHashes(shinglesFromTokens(t, 2))).as("dup_2gram_frac"),
-      dupFrac(shingleHashes(shinglesFromTokens(t, 3))).as("dup_3gram_frac"))
-  }
 
   /** Rolling-hash document fingerprint: md5 over every `window`-char
     * sliding window, keep the lexicographic minimum (winnowing-style
@@ -620,33 +595,7 @@ object TextOps {
       graft.functions.NativeExprs.gopherTokenStats(t, GopherStopwords),
       graft.functions.NativeExprs.gopherLineStats(text))
 
-  /** Interpreted HOF twin of [[gopherFlags]] — the formulation the
-    * DuckDB oracle mirrors (four token passes + two line filters),
-    * retained as the native kernels' executable specification and fuzz
-    * oracle (integer counters — exact equality pinned in
-    * NativeExprsSpec). */
-  def gopherFlagsHof(text: Column, t: Column): Column = {
-    val tokenStats = struct(
-      size(t).cast("long").as("n_words"),
-      aggregate(t, lit(0L), (acc, x) => acc + length(x).cast("long")).as("len_sum"),
-      size(filter(t, w => w.rlike("[a-z]"))).cast("long").as("n_alpha"),
-      size(array_intersect(t, array(GopherStopwords.map(lit): _*)))
-        .cast("long").as("stop_hits"))
-    val lines = split(text, "\n")
-    val lineStats = struct(
-      size(lines).cast("long").as("n_lines"),
-      size(filter(lines, l => {
-        val h = substring(ltrim(l), 1, 1)
-        h === "-" || h === "*" || h === "•"
-      })).cast("long").as("n_bullet"),
-      size(filter(lines, l => {
-        val r = rtrim(l)
-        r.endsWith("...") || r.endsWith("…")
-      })).cast("long").as("n_ellend"))
-    gopherFlagsFromCounters(text, tokenStats, lineStats)
-  }
-
-  private def gopherFlagsFromCounters(
+  private[graft] def gopherFlagsFromCounters(
       text: Column, tokenStats: Column, lineStats: Column): Column = {
     val nWords = tokenStats.getField("n_words")
     val nWordsD = nWords.cast("double")
@@ -708,15 +657,6 @@ object TextOps {
   /** Character n-gram windows in code points (native kernel). */
   def charNgrams(text: Column, n: Int): Column =
     graft.functions.NativeExprs.charNgrams(text, n)
-
-  /** Interpreted HOF twin of [[charNgrams]] — the formulation the DuckDB
-    * oracle mirrors (`substr(text, i, n)` over `generate_series`),
-    * retained as the native kernel's executable spec and fuzz oracle.
-    * The `length < n` guard matters: `sequence(1, 0)` descends. */
-  def charNgramsHof(text: Column, n: Int): Column =
-    when(length(text) < n, array().cast("array<string>"))
-      .otherwise(transform(sequence(lit(1), length(text) - (n - 1)),
-        i => text.substr(i, lit(n))))
 
   /** Corpus character-trigram language model — the CCNet-style
     * perplexity-proxy quality filter: documents whose character

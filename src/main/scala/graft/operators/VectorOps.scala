@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * 64 float dims). Everything here except [[pqTrain]] is a pure Catalyst
   * expression: map-only, codegen-friendly, and reproducible 1:1 in the
   * DuckDB oracle (all arithmetic in double, round-half-up via
-  * `floor(x + 0.5)` — the same convention as [[graft.Queries]]'s r4).
+  * `floor(x + 0.5)` — the same convention as `catalog.Shared.r4`).
   */
 object VectorOps {
 
@@ -69,27 +69,10 @@ object VectorOps {
     * Runs the fused native kernel
     * ([[graft.functions.NativeExprs.PqCodesExpr]]): the code scan is the
     * per-row hot loop of the PQ serving path, and the HOF formulation
-    * below walks an interpreted expression tree per (entry × component).
+    * (`HofTwins.pqCodesHof`, in the tests) walks an interpreted expression tree per (entry × component).
     * Bit-identity between the two is fuzz-pinned in NativeExprsSpec. */
   def pqCodes(v: Column, books: Column): Column =
     graft.functions.NativeExprs.pqCodes(v, books)
-
-  /** Interpreted HOF twin of [[pqCodes]] — the formulation the DuckDB
-    * oracle SQL mirrors, retained as the native kernel's executable
-    * specification (and its fuzz oracle). Not used on any hot path. */
-  def pqCodesHof(v: Column, books: Column): Column =
-    transform(books, (book, sub) => {
-      val dsub = size(element_at(book, 1).getField("cvec"))
-      val sv = slice(v, sub * dsub + lit(1), dsub)
-      val init = struct(lit(-1).as("code"), lit(Double.MaxValue).as("d"))
-      aggregate(book, init, (acc, e) => {
-        val d = graft.functions.NativeExprs.sqEuclidean(sv, e.getField("cvec"))
-        val better = !isnan(d) && (d < acc.getField("d") ||
-          (d === acc.getField("d") && e.getField("code") < acc.getField("code")))
-        when(better, struct(e.getField("code").as("code"), d.as("d")))
-          .otherwise(acc)
-      }, acc => acc.getField("code"))
-    })
 
   /** Pinned OPQ-lite reflection direction: 64 small integers from a
     * fixed formula (`((i·7 + 3) mod 13) − 6` — dense, mixed-sign,
@@ -107,18 +90,6 @@ object VectorOps {
     * [[graft.functions.NativeExprs.HouseholderExpr]]); array<double>. */
   def householderReflect(v: Column, w: Seq[Double] = OpqDirection): Column =
     graft.functions.NativeExprs.householder(v, w)
-
-  /** Declarative HOF twin of [[householderReflect]] — the formulation
-    * the DuckDB oracle mirrors (left-fold dot product, then one
-    * element-wise map); retained as the kernel's executable spec and
-    * fuzz oracle. */
-  def householderReflectHof(v: Column, w: Seq[Double] = OpqDirection): Column = {
-    val wl = array(w.map(lit): _*)
-    val wv = aggregate(zip_with(v, wl, (a, b) => a.cast("double") * b),
-      lit(0.0), (acc, x) => acc + x)
-    val ww = lit(w.map(x => x * x).sum)
-    zip_with(v, wl, (a, b) => a.cast("double") - lit(2.0) * wv / ww * b)
-  }
 
   /** PQ decode: concatenate each subspace's looked-up codebook entry.
     * `‖q − reconstruction‖²` IS the ADC distance for squared L2. */
@@ -262,27 +233,11 @@ object VectorOps {
     * Runs the fused native kernel
     * ([[graft.functions.NativeExprs.BinaryCodesExpr]]): the encode is
     * the store-side hot loop of the binary serving path, and the HOF
-    * formulation below walks a 64-step interpreted fold per word per
+    * formulation (`HofTwins.binaryCodesHof`, in the tests) walks a 64-step interpreted fold per word per
     * row — the same overhead class the PQ-encode kernel killed.
     * Bit-identity between the two is fuzz-pinned in NativeExprsSpec. */
   def binaryCodes(v: Column): Column =
     graft.functions.NativeExprs.binaryCodes(v)
-
-  /** Interpreted HOF twin of [[binaryCodes]] — the formulation the
-    * DuckDB oracle SQL mirrors, retained as the native kernel's
-    * executable specification (and its fuzz oracle). Not used on any
-    * hot path. Guarded for empty vectors (Spark's `sequence(0, -1)`
-    * would otherwise DESCEND and index out of bounds). */
-  def binaryCodesHof(v: Column): Column = {
-    val bitVals = array(BinaryBitValues.map(lit): _*)
-    val nWords = floor((size(v).cast("double") + 63.0) / 64.0).cast("int")
-    when(size(v) === 0, array().cast("array<long>")).otherwise(
-      transform(sequence(lit(0), nWords - lit(1)), w =>
-        aggregate(sequence(lit(0), lit(63)), lit(0L), (acc, i) =>
-          when(w * lit(64) + i < size(v) &&
-              element_at(v, w * lit(64) + i + lit(1)).cast("double") > lit(0.0),
-            acc.bitwiseOR(element_at(bitVals, i + lit(1)))).otherwise(acc))))
-  }
 
   /** Hamming distance between two packed codes: `Σ_w popcount(a_w XOR
     * b_w)` — exact integers, so the oracle hash-compares with no
@@ -294,7 +249,7 @@ object VectorOps {
     * EQUAL-WIDTH PRECONDITION: both codes must have the same word
     * count (one store, one encode dimension). Ragged inputs yield NULL
     * — `zip_with` pads the shorter side with null and the fold
-    * propagates it — and the SQL twin (`Queries.sqlHamming`) guards on
+    * propagates it — and the SQL twin (`catalog.Shared.sqlHamming`) guards on
     * `len(a) = len(b)` to return NULL identically, never a partial
     * sum over the overlapping prefix. */
   def hammingDistance(a: Column, b: Column): Column =

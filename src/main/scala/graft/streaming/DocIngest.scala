@@ -24,9 +24,9 @@ import org.apache.spark.sql.types._
   *
   * A candidate pair may collide in several bands, so [[matches]] emits
   * at-least-once per matching band; batch consumers `.distinct()` (see
-  * `Queries.dedup_incremental`), streaming sinks dedupe per micro-batch
-  * in `foreachBatch` — cheap, because the frame is (new_id, corpus_id,
-  * jaccard) rows only.
+  * `dedup_incremental` in `catalog.DedupQueries`), streaming sinks
+  * dedupe per micro-batch in `foreachBatch` — cheap, because the frame
+  * is (new_id, corpus_id, jaccard) rows only.
   */
 object DocIngest {
 

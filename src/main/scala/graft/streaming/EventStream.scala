@@ -10,9 +10,10 @@ import org.apache.spark.sql.types._
   * The reference has no streaming operators (SURVEY.md §2.2) — its only
   * periodic behavior is the 600 s snapshot thread (`src/main.rs:57-61`).
   * This module is the north-star extension: the same windowed aggregation
-  * [[graft.Queries]] runs in batch (`events_window_agg`), executed as an
-  * incremental streaming query with event-time watermarking, so batch and
-  * stream share one semantic definition (verified equal in ScalaTest).
+  * [[graft.catalog.EventQueries]] runs in batch (`events_window_agg`),
+  * executed as an incremental streaming query with event-time
+  * watermarking, so batch and stream share one semantic definition
+  * (verified equal in ScalaTest).
   *
   * Scale notes: the aggregation state is keyed by (window, event_type) —
   * bounded by the watermark horizon; at 100 TB/day the same plan shards

@@ -900,8 +900,8 @@ class CorpusSpec extends SparkSpec {
     // 100 TB the shard count must scale with the corpus (each shard's
     // window is ONE sequential pass), so pin the operator is correct at
     // a non-fixture count too
-    val base = Queries.assembleFiltered(spark, sf0001)
-    def run(shards: Long) = Queries.assemblePacked(base, shards = shards)
+    val base = catalog.CorpusQueries.assembleFiltered(spark, sf0001)
+    def run(shards: Long) = catalog.CorpusQueries.assemblePacked(base, shards = shards)
       .select("doc_id", "split", "shard", "pack_id", "tok_offset")
       .as[(Long, String, Long, Long, Long)].collect()
     val p4 = run(4L)

@@ -118,7 +118,7 @@ class NativeExprsSpec extends SparkSpec {
     val w = graft.operators.VectorOps.OpqDirection
     val df = (0 until 25).map(i => (i.toLong, randVec(dim))).toDF("id", "v")
     assertSame(NativeExprs.householder(col("v"), w),
-      graft.operators.VectorOps.householderReflectHof(col("v"), w), df)
+      HofTwins.householderReflectHof(col("v"), w), df)
     // length mismatch fails closed (the HOF's zip would pad instead)
     val short = Seq((1L, randVec(10))).toDF("id", "v")
     assert(short.select(NativeExprs.householder(col("v"), w)).head().isNullAt(0))
@@ -273,7 +273,7 @@ class NativeExprsSpec extends SparkSpec {
     val withT = docsDf.withColumn("__t", hofTokens(col("text")))
     assertSame(
       NativeExprs.repetitionStats(col("__t")),
-      TextOps.repetitionStatsHof(col("__t")),
+      HofTwins.repetitionStatsHof(col("__t")),
       withT)
   }
 
@@ -292,7 +292,7 @@ class NativeExprsSpec extends SparkSpec {
     val df = docs.toDF("id", "__t")
     val bad = df.select(
         NativeExprs.repetitionStats(col("__t")).as("got"),
-        TextOps.repetitionStatsHof(col("__t")).as("want"))
+        HofTwins.repetitionStatsHof(col("__t")).as("want"))
       .where(!(col("got") <=> col("want")))
     assert(bad.count() === 0, bad.take(3).mkString(", "))
   }
@@ -326,20 +326,20 @@ class NativeExprsSpec extends SparkSpec {
       .toDF("doc_id", "text")
       .withColumn("__t", hofTokens(col("text")))
     assertSame(TextOps.gopherFlags(col("text"), col("__t")),
-      TextOps.gopherFlagsHof(col("text"), col("__t")), df)
+      HofTwins.gopherFlagsHof(col("text"), col("__t")), df)
   }
 
   test("charNgrams == substr/sequence HOF twin incl. unicode and short docs") {
     import graft.operators.TextOps
     for (n <- Seq(1, 3, 8)) {
       assertSame(TextOps.charNgrams(col("text"), n),
-        TextOps.charNgramsHof(col("text"), n), docsDf)
+        HofTwins.charNgramsHof(col("text"), n), docsDf)
     }
     // supplementary-plane text: windows count CODE POINTS, not UTF-16 units
     val emoji = Seq((1L, "a😀b😀c"), (2L, "😀😀"), (3L, ""), (4L, "ab"))
       .toDF("doc_id", "text")
     assertSame(TextOps.charNgrams(col("text"), 3),
-      TextOps.charNgramsHof(col("text"), 3), emoji)
+      HofTwins.charNgramsHof(col("text"), 3), emoji)
     val got = emoji.where(col("doc_id") === 1)
       .select(TextOps.charNgrams(col("text"), 3)).as[Seq[String]].head()
     assert(got === Seq("a😀b", "😀b😀", "b😀c"))
@@ -369,7 +369,7 @@ class NativeExprsSpec extends SparkSpec {
         .crossJoin(broadcast(books))
       assertSame(
         VectorOps.pqCodes(col("embedding"), col("books")),
-        VectorOps.pqCodesHof(col("embedding"), col("books")), vecs)
+        HofTwins.pqCodesHof(col("embedding"), col("books")), vecs)
     }
   }
 
@@ -384,7 +384,7 @@ class NativeExprsSpec extends SparkSpec {
       .toDF("id", "embedding").crossJoin(broadcast(books))
     assertSame(
       VectorOps.pqCodes(col("embedding"), col("books")),
-      VectorOps.pqCodesHof(col("embedding"), col("books")), shortVecs)
+      HofTwins.pqCodesHof(col("embedding"), col("books")), shortVecs)
     // null vector: HOF yields an array of −1 (slice(null) nulls every
     // distance), NOT a null array
     val nullVec = Seq(Tuple1(3L)).toDF("id")
@@ -392,7 +392,7 @@ class NativeExprsSpec extends SparkSpec {
       .crossJoin(broadcast(books))
     assertSame(
       VectorOps.pqCodes(col("embedding"), col("books")),
-      VectorOps.pqCodesHof(col("embedding"), col("books")), nullVec)
+      HofTwins.pqCodesHof(col("embedding"), col("books")), nullVec)
     val got = nullVec.select(VectorOps.pqCodes(col("embedding"), col("books")))
       .as[Seq[Int]].head()
     assert(got === Seq(-1, -1, -1, -1))
@@ -438,12 +438,12 @@ class NativeExprsSpec extends SparkSpec {
     val df = rows.toDF("id", "v")
     assertSame(
       VectorOps.binaryCodes(col("v")),
-      VectorOps.binaryCodesHof(col("v")), df)
+      HofTwins.binaryCodesHof(col("v")), df)
     // empty vector: both sides yield an empty word array, not an error
     val empty = Seq((0L, Seq.empty[Float])).toDF("id", "v")
     assertSame(
       VectorOps.binaryCodes(col("v")),
-      VectorOps.binaryCodesHof(col("v")), empty)
+      HofTwins.binaryCodesHof(col("v")), empty)
   }
 
   test("scriptMix: scala-model equality incl. supplementary planes; " +

@@ -16,12 +16,12 @@ class PlanShapeSpec extends SparkSpec {
   private def plan(df: DataFrame): String = df.queryExecution.executedPlan.toString
 
   test("single-query kNN plans a bounded TakeOrderedAndProject, not a global sort") {
-    val p = plan(Queries.queries("knn_euclidean")(spark, sf))
+    val p = plan(SparkEntry.queries("knn_euclidean")(spark, sf))
     assert(p.contains("TakeOrderedAndProject"), p.linesIterator.take(5).mkString("\n"))
   }
 
   test("batch kNN (two-phase top-k) has NO per-query ranking window") {
-    val p = plan(Queries.queries("ann_topk_batch")(spark, sf))
+    val p = plan(SparkEntry.queries("ann_topk_batch")(spark, sf))
     assert(!p.contains("Window"), "ranking window would funnel each query through one task")
     assert(p.contains("BroadcastExchange"), "final metadata re-attach must broadcast the k-row side")
   }
@@ -45,7 +45,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("ivf_mips_batch: bounded-heap rerank (no ranking window over the " +
     "data) and a broadcast probe join, like ivf_adc_batch") {
-    val p = plan(Queries.queries("ivf_mips_batch")(spark, sf))
+    val p = plan(SparkEntry.queries("ivf_mips_batch")(spark, sf))
     // exactly one window shape is admissible: the probe ranking over the
     // tiny centroids × queries frame (partitioned by query_id); the dot
     // rerank itself must be the two-phase TopKPairsAgg heap
@@ -58,14 +58,14 @@ class PlanShapeSpec extends SparkSpec {
 
   test("metadata-only queries never read the embedding column") {
     // filter_and scans the embeddings TABLE but only needs (vec_id, label)
-    val p = plan(Queries.queries("filter_and")(spark, sf))
+    val p = plan(SparkEntry.queries("filter_and")(spark, sf))
     val schemas = "ReadSchema: (\\S+)".r.findAllMatchIn(p).map(_.group(1)).toSeq
     assert(schemas.nonEmpty, p.linesIterator.take(8).mkString("\n"))
     schemas.foreach(s => assert(!s.contains("embedding"), s"column pruning lost: $s"))
   }
 
   test("point lookup pushes the id predicate into the parquet scan") {
-    val df = Queries.queries("get_by_id")(spark, sf)
+    val df = SparkEntry.queries("get_by_id")(spark, sf)
     val p = plan(df)
     assert(p.contains("PushedFilters: [IsNotNull(vec_id), EqualTo(vec_id,42)]")
       || p.contains("EqualTo(vec_id,42)"), p)
@@ -128,9 +128,9 @@ class PlanShapeSpec extends SparkSpec {
     // geometry must reach the parquet scan as STATIC partition pruning —
     // a cluster_id filter naming exactly the probed ids, and only those
     // partitions read — without it every MIPS serve reads the full store
-    val df = Queries.queries("ivf_mips_store_query")(spark, sf)
+    val df = SparkEntry.queries("ivf_mips_store_query")(spark, sf)
     assert(df.collect().length === 10)
-    val index = Queries.mipsFixedIndex(spark, sf).get
+    val index = catalog.IvfQueries.mipsFixedIndex(spark, sf).get
     val q = graft.sources.Records.fromEmbeddings(spark, sf).where(col("id") === 0)
       .select(col("embedding").as("qvec"))
     val probed = ProbeReference.probedIds(index.centroids, ProbeReference.padded(q), 3,
@@ -217,7 +217,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("minhash LSH tokenizes each doc ONCE (verification reads the cached hashes)") {
-    val exec = Queries.queries("dedup_minhash")(spark, sf).queryExecution.executedPlan
+    val exec = SparkEntry.queries("dedup_minhash")(spark, sf).queryExecution.executedPlan
     // tokenization/hashing must live only INSIDE cached relations (whose
     // internals are not operator-tree nodes); a kernel in the outer tree
     // means some leg re-tokenizes docs instead of reading the cache
@@ -233,14 +233,14 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("mixSample plans the bounded-heap aggregate, no ranking window, broadcast keep-list") {
-    val p = plan(Queries.queries("mix_sample")(spark, sf))
+    val p = plan(SparkEntry.queries("mix_sample")(spark, sf))
     assert(!p.contains("Window"),
       "per-source ranking window would funnel each source's rows through one task")
     assert(p.contains("BroadcastExchange"), "kept (source, doc_id) pairs must broadcast")
   }
 
   test("seq_pack's only window is partitioned by shard (no global running sum)") {
-    val p = plan(Queries.queries("seq_pack")(spark, sf))
+    val p = plan(SparkEntry.queries("seq_pack")(spark, sf))
     val windows = p.linesIterator.filter(_.contains("Window [")).toSeq
     assert(windows.nonEmpty, "packing needs the per-shard running sum")
     windows.foreach(w => assert(w.contains("shard"),
@@ -261,7 +261,7 @@ class PlanShapeSpec extends SparkSpec {
     "one shared tokenize pass before the dedup groupBy") {
     // pin the UN-checkpointed front half (the memoized assembleFiltered
     // truncates the plan at the localCheckpoint scan)
-    val p = plan(Queries.assembleFilteredDag(spark, sf))
+    val p = plan(catalog.CorpusQueries.assembleFilteredDag(spark, sf))
     assert(!p.contains("Join"),
       "the BPE budget kernel must not plan a vocabulary join")
     assert(p.toLowerCase.contains("bpeapply"),
@@ -273,7 +273,7 @@ class PlanShapeSpec extends SparkSpec {
         s"wide column in assemble shuffle: $e")
     }
     // and the full query keeps corpus_assemble's packing shape
-    val full = plan(Queries.queries("corpus_assemble_bpe")(spark, sf))
+    val full = plan(SparkEntry.queries("corpus_assemble_bpe")(spark, sf))
     val windows = full.linesIterator.filter(_.contains("Window [")).toSeq
     assert(windows.nonEmpty)
     windows.foreach(w => assert(w.contains("split") && w.contains("shard"),
@@ -282,7 +282,7 @@ class PlanShapeSpec extends SparkSpec {
     // keeps the same discipline: the kernel's verdict rides the shared
     // front half (pinned above), the CC anti-join and packing shuffles
     // stay narrow, and the packing window partitions by (split, shard)
-    val dedup = plan(Queries.queries("corpus_assemble_dedup_bpe")(spark, sf))
+    val dedup = plan(SparkEntry.queries("corpus_assemble_dedup_bpe")(spark, sf))
     dedup.linesIterator.filter(_.contains("Exchange")).foreach { e =>
       assert(!e.contains("text#") && !e.contains("__toks#"),
         s"wide column in deduped-assemble shuffle: $e")
@@ -295,7 +295,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("dedup_store_stats: a PURE scan of the maintained store — zero " +
     "signature kernels, no documents scan, narrow columns only") {
-    val p = plan(Queries.queries("dedup_store_stats")(spark, sf))
+    val p = plan(SparkEntry.queries("dedup_store_stats")(spark, sf))
     // the census must read the on-disk banded table, never re-run the
     // signature pipeline over the corpus (at 100 TB the recompute costs
     // an index rebuild; the store exists to avoid exactly that)
@@ -313,7 +313,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("ivf_merge_stats: the store never shuffles wide — merge joins broadcast " +
     "the cluster-count-bounded sides, embeddings stay out of data shuffles") {
-    val p = plan(Queries.queries("ivf_merge_stats")(spark, sf))
+    val p = plan(SparkEntry.queries("ivf_merge_stats")(spark, sf))
     // survivor-id and change-log sides are bounded frames: a sort-merge
     // join here would shuffle the full store at 100 TB
     assert(!p.contains("SortMergeJoin"),
@@ -329,7 +329,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("corpus_release_manifest rides the memos: no text column anywhere, " +
     "no fresh digest kernels, narrow shuffles only") {
-    val p = plan(Queries.queries("corpus_release_manifest")(spark, sf))
+    val p = plan(SparkEntry.queries("corpus_release_manifest")(spark, sf))
     // both inputs are checkpoint-backed narrow projections (assemble
     // front half + content-hash projection): a text#/md5/sha in this
     // plan means the manifest re-scanned the corpus
@@ -342,7 +342,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("corpus_assemble shuffles are narrow (no text/token arrays) and packing partitions by (split, shard)") {
-    val p = plan(Queries.queries("corpus_assemble")(spark, sf))
+    val p = plan(SparkEntry.queries("corpus_assemble")(spark, sf))
     p.linesIterator.filter(_.contains("Exchange")).foreach { e =>
       assert(!e.contains("text#") && !e.contains("__toks#"),
         s"wide column in shuffle: $e")
@@ -375,7 +375,7 @@ class PlanShapeSpec extends SparkSpec {
       // partition count is AQE-coalesced and irrelevant here)
       assert(spark.read.parquet(s"$dir/documents.parquet")
         .rdd.getNumPartitions >= 4, "fixture must present a wide scan")
-      val df = Queries.queries("corpus_chunk_text")(spark, dir)
+      val df = SparkEntry.queries("corpus_chunk_text")(spark, dir)
       val p = plan(df)
       p.linesIterator.filter(_.contains("Exchange")).foreach { e =>
         assert(e.contains("rangepartitioning"),
@@ -393,7 +393,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("dedup_incremental_store: the corpus side is a PURE SCAN of the " +
     "on-disk index — signature kernels run only on the arriving slice") {
-    val p = plan(Queries.queries("dedup_incremental_store")(spark, sf))
+    val p = plan(SparkEntry.queries("dedup_incremental_store")(spark, sf))
     val kernelLines = p.linesIterator
       .filter(_.toLowerCase.contains("minhashsighashesexpr")).toSeq
     assert(kernelLines.nonEmpty, "the arriving slice must be signed")
@@ -410,7 +410,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("pack_bpe: trained-token count is map-only (no vocabulary join); " +
     "only the shard window and the output sort exchange, never text") {
-    val df = Queries.queries("pack_bpe")(spark, sf)
+    val df = SparkEntry.queries("pack_bpe")(spark, sf)
     val p = plan(df)
     assert(!p.contains("Join"),
       "the per-instance BPE kernel must not plan a vocabulary join")
@@ -462,7 +462,7 @@ class PlanShapeSpec extends SparkSpec {
   test("standing gram index: once materialized, every decontamination-family " +
     "consumer plans over the checkpointed RDD — zero documents-parquet rescans") {
     // materialize the memo (any consumer builds it)
-    Queries.queries("corpus_decontaminate")(spark, sf)
+    SparkEntry.queries("corpus_decontaminate")(spark, sf)
       .write.format("noop").mode("overwrite").save()
     // each sibling's physical plan must read the memoized index (an
     // ExistingRDD scan), never re-tokenize the corpus: a regression here
@@ -470,7 +470,7 @@ class PlanShapeSpec extends SparkSpec {
     Seq("corpus_decontaminate", "corpus_decontaminate_bloom",
       "corpus_decontaminate_13", "corpus_contamination_report",
       "corpus_novelty", "corpus_gram_index_stats").foreach { q =>
-      val p = plan(Queries.queries(q)(spark, sf))
+      val p = plan(SparkEntry.queries(q)(spark, sf))
       assert(!p.contains("documents.parquet"),
         s"$q re-scans the corpus instead of the standing gram index")
       assert(p.contains("ExistingRDD"), s"$q must scan the checkpointed index")
@@ -487,7 +487,7 @@ class PlanShapeSpec extends SparkSpec {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val p = plan(Queries.queries("events_salted_enrich")(spark, sf))
+      val p = plan(SparkEntry.queries("events_salted_enrich")(spark, sf))
       val saltedExchange = p.linesIterator.exists(l =>
         l.contains("hashpartitioning") && l.contains("user_id") && l.contains("__salt"))
       assert(saltedExchange,
@@ -544,7 +544,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("dedup_apply anti-join shuffles only the doc_id key, scan is column-pruned") {
-    val p = plan(Queries.queries("dedup_apply")(spark, sf))
+    val p = plan(SparkEntry.queries("dedup_apply")(spark, sf))
     // a dedup drop list can be a large fraction of the corpus, so the
     // scale-correct shape is a shuffled anti-join on the 8-byte key (AQE
     // converts to broadcast when the list turns out small) — what must
@@ -564,7 +564,7 @@ class PlanShapeSpec extends SparkSpec {
     // nothing. The fact-fact joins (lineitem⋈orders⋈customer) are NOT
     // pinned: those scale together and sort-merge is the correct shape.
     Seq("sales_by_nation", "supplier_by_region").foreach { q =>
-      val p = plan(Queries.queries(q)(spark, sf))
+      val p = plan(SparkEntry.queries(q)(spark, sf))
       p.linesIterator.filter(_.contains("SortMergeJoin")).foreach { l =>
         assert(!l.contains("n_nationkey") && !l.contains("r_regionkey"),
           s"$q plans a sort-merge join against a fixed-size dim:\n$l")
@@ -575,26 +575,26 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("events_user_activity distinct-user rollup plans without Expand") {
-    val p = plan(Queries.queries("events_user_activity")(spark, sf))
+    val p = plan(SparkEntry.queries("events_user_activity")(spark, sf))
     assert(!p.contains("Expand"),
       "count-distinct must run as the two-stage rollup, not an Expand")
   }
 
   test("corpus_stats rollup plans without Expand") {
-    val p = plan(Queries.queries("corpus_stats")(spark, sf))
+    val p = plan(SparkEntry.queries("corpus_stats")(spark, sf))
     assert(!p.contains("Expand"),
       "exact uniques must run as the two-stage rollup, not an Expand")
   }
 
   test("temporal queries prune the events scan (props column never read)") {
     Seq("events_asof_join", "events_range_join", "events_next_purchase").foreach { q =>
-      val p = plan(Queries.queries(q)(spark, sf))
+      val p = plan(SparkEntry.queries(q)(spark, sf))
       assert(!p.contains("props"), s"$q reads the unused props column")
     }
   }
 
   test("ivf_adc_query: code scan plans bounded top-k; no sort-merge or cartesian join") {
-    val p = plan(Queries.queries("ivf_adc_query")(spark, sf))
+    val p = plan(SparkEntry.queries("ivf_adc_query")(spark, sf))
     assert(p.contains("TakeOrderedAndProject"),
       "ADC top-k must be a bounded TakeOrdered, not a global sort\n" + p.take(1500))
     // the only joins are the broadcast probe semi-join and 1-row
@@ -603,7 +603,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("ivf_adc_residual_query: broadcast-only joins, bounded top-k") {
-    val p = plan(Queries.queries("ivf_adc_residual_query")(spark, sf))
+    val p = plan(SparkEntry.queries("ivf_adc_residual_query")(spark, sf))
     assert(p.contains("TakeOrderedAndProject"),
       "residual ADC top-k must be a bounded TakeOrdered, not a global sort\n" +
         p.take(1500))
@@ -614,27 +614,27 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("text_bm25_topk plans the bounded heap per query: no ranking window") {
-    val p = plan(Queries.queries("text_bm25_topk")(spark, sf))
+    val p = plan(SparkEntry.queries("text_bm25_topk")(spark, sf))
     assert(!p.contains("Window"),
       "a ranking window would funnel the scored corpus through one task per query")
     assert(p.contains("TopKPairsAgg") || p.contains("topkpairsagg"), p.take(2000))
   }
 
   test("events_top_users plans the bounded heap: no ranking window over the data") {
-    val p = plan(Queries.queries("events_top_users")(spark, sf))
+    val p = plan(SparkEntry.queries("events_top_users")(spark, sf))
     assert(!p.contains("Window"),
       "top-N per group must run through TopKPairsAgg, not a row_number window")
     assert(p.contains("ObjectHashAggregate"), "expected the heap aggregate")
   }
 
   test("events_funnel: three chained reductions, no window, no nested loop") {
-    val p = plan(Queries.queries("events_funnel")(spark, sf))
+    val p = plan(SparkEntry.queries("events_funnel")(spark, sf))
     assert(!p.contains("Window") && !p.contains("BroadcastNestedLoopJoin") &&
       !p.contains("CartesianProduct"), p.linesIterator.take(8).mkString("\n"))
   }
 
   test("corpus_funnel's only nested-loop joins are single-row aggregate cross joins") {
-    val df = Queries.queries("corpus_funnel")(spark, sf)
+    val df = SparkEntry.queries("corpus_funnel")(spark, sf)
     val bnl = df.queryExecution.executedPlan.collect {
       case e if e.nodeName.contains("BroadcastNestedLoopJoin") => e
     }
@@ -650,13 +650,13 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("events_retention: reductions only — no window, no event-log self-join blowup") {
-    val p = plan(Queries.queries("events_retention")(spark, sf))
+    val p = plan(SparkEntry.queries("events_retention")(spark, sf))
     assert(!p.contains("Window") && !p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"), p.linesIterator.take(8).mkString("\n"))
   }
 
   test("text_lm_score: fused scoring is map-only — no join, no explode") {
-    val p = plan(Queries.queries("text_lm_score")(spark, sf))
+    val p = plan(SparkEntry.queries("text_lm_score")(spark, sf))
     assert(!p.contains("Join"),
       "fused LM scoring must not join the model\n" +
         p.linesIterator.filter(_.contains("Join")).mkString("\n"))
@@ -665,7 +665,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("corpus_decon_semantic: block-bounded hash join, never a corpus x benchmark cartesian") {
-    val p = plan(Queries.queries("corpus_decon_semantic")(spark, sf))
+    val p = plan(SparkEntry.queries("corpus_decon_semantic")(spark, sf))
     assert(!p.contains("CartesianProduct"),
       p.linesIterator.filter(_.contains("Join")).mkString("\n"))
     // candidate pairs come from an equi-join on the block id (the
@@ -676,14 +676,14 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("corpus_line_dedup counts line frequency without Expand") {
-    val p = plan(Queries.queries("corpus_line_dedup")(spark, sf))
+    val p = plan(SparkEntry.queries("corpus_line_dedup")(spark, sf))
     assert(!p.contains("Expand"),
       "distinct-doc counting must be the two-stage shape, not count(DISTINCT)+Expand\n" +
         p.linesIterator.take(10).mkString("\n"))
   }
 
   test("corpus_split_safe shuffles ids only, never text") {
-    val df = Queries.queries("corpus_split_safe")(spark, sf)
+    val df = SparkEntry.queries("corpus_split_safe")(spark, sf)
     val exchanges = df.queryExecution.executedPlan.collect {
       case e if e.nodeName == "Exchange" || e.nodeName.contains("ShuffleExchange") => e.toString
     }
@@ -691,7 +691,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("exact dedup groups by a hash key, never shuffling full text") {
-    val df = Queries.queries("dedup_exact")(spark, sf)
+    val df = SparkEntry.queries("dedup_exact")(spark, sf)
     val exchanges = df.queryExecution.executedPlan.collect {
       case e if e.nodeName == "Exchange" || e.nodeName.contains("ShuffleExchange") => e.toString
     }
@@ -701,7 +701,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("substring dedup: no window function, no cartesian, text never shuffled") {
-    val df = Queries.queries("corpus_substring_dedup")(spark, sf)
+    val df = SparkEntry.queries("corpus_substring_dedup")(spark, sf)
     val p = plan(df)
     assert(!p.contains("Window"),
       "interval union must fold over sorted starts, not a window function")
@@ -740,7 +740,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("NB classifier: model rides broadcasts, no shuffle ever carries text") {
-    val df = Queries.queries("text_nb_langid")(spark, sf)
+    val df = SparkEntry.queries("text_nb_langid")(spark, sf)
     val p = plan(df)
     assert(!p.contains("SortMergeJoin"),
       "the charset³-bounded model frames must broadcast:\n" +
@@ -753,7 +753,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("DSIR: bounded top-k, broadcast log-ratio join, and a single token explode") {
-    val df = Queries.queries("corpus_dsir")(spark, sf)
+    val df = SparkEntry.queries("corpus_dsir")(spark, sf)
     val p = plan(df)
     assert(p.contains("TakeOrderedAndProject"),
       "top-100 selection must be a bounded heap, not a global sort")
@@ -768,13 +768,13 @@ class PlanShapeSpec extends SparkSpec {
     assert(p.contains("InMemoryTableScan") || p.contains("Scan ExistingRDD"),
       p.linesIterator.take(12).mkString("\n"))
     df.collect()
-    val mix = Queries.queries("corpus_dsir_mix")(spark, sf)
+    val mix = SparkEntry.queries("corpus_dsir_mix")(spark, sf)
     assert(plan(mix).contains("InMemoryTableScan"),
       "corpus_dsir_mix must read the memoized weights, not refit")
   }
 
   test("BPE merge pairs: bounded top-k over the vocab, never a corpus-wide sort") {
-    val p = plan(Queries.queries("vocab_bpe_pairs")(spark, sf))
+    val p = plan(SparkEntry.queries("vocab_bpe_pairs")(spark, sf))
     assert(p.contains("TakeOrderedAndProject"), p.linesIterator.take(5).mkString("\n"))
     assert(!p.contains("Window"), "no ranking window — ties resolve inside the bounded heap")
   }
@@ -806,13 +806,13 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("embed_outliers: two bounded heaps, no ranking window") {
-    val p = plan(Queries.queries("embed_outliers")(spark, sf))
+    val p = plan(SparkEntry.queries("embed_outliers")(spark, sf))
     assert(!p.contains("Window"),
       "kNN-outlier scoring must use the bounded heap, not a rank window")
   }
 
   test("events_bot_cadence: bounded top-k heap, per-user window only") {
-    val df = Queries.queries("events_bot_cadence")(spark, sf)
+    val df = SparkEntry.queries("events_bot_cadence")(spark, sf)
     val p = plan(df)
     assert(p.contains("TakeOrderedAndProject"),
       "lowest-CV selection must be a bounded heap, not a global sort")
@@ -836,8 +836,8 @@ class PlanShapeSpec extends SparkSpec {
                                // construction; the wrapper's lit grp folds away)
       "events_cusum")          // cumulative sum over the DAY frame — bounded
                                // by calendar span, never event count
-    val offenders = Queries.queries.keys.toSeq.sorted.flatMap { name =>
-      val df = Queries.queries(name)(spark, sf)
+    val offenders = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
+      val df = SparkEntry.queries(name)(spark, sf)
       val globalWindows = df.queryExecution.optimizedPlan.collect {
         case w: org.apache.spark.sql.catalyst.plans.logical.Window
             if w.partitionSpec.isEmpty => w
@@ -872,11 +872,11 @@ class PlanShapeSpec extends SparkSpec {
 
   test("binary Hamming funnels: chained bounded heaps, no ranking window, " +
     "no cartesian") {
-    val p = plan(Queries.queries("ann_hamming_rerank")(spark, sf))
+    val p = plan(SparkEntry.queries("ann_hamming_rerank")(spark, sf))
     assert(p.split("TakeOrderedAndProject").length - 1 === 2,
       "funnel must be exactly two chained bounded heaps\n" + p.take(1500))
     assert(!p.contains("Window") && !p.contains("CartesianProduct"), p.take(1500))
-    val pb = plan(Queries.queries("ann_hamming_batch")(spark, sf))
+    val pb = plan(SparkEntry.queries("ann_hamming_batch")(spark, sf))
     assert(!pb.contains("Window"),
       "batch top-k must use the bounded-heap aggregate, not a ranking window\n"
         + pb.take(1500))
@@ -885,7 +885,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("sales_by_nation: dim tables broadcast, lineitem scan pruned to 3 columns") {
-    val p = plan(Queries.queries("sales_by_nation")(spark, sf))
+    val p = plan(SparkEntry.queries("sales_by_nation")(spark, sf))
     assert(p.contains("BroadcastHashJoin"),
       "nation (25 rows) must ride a broadcast join\n" + p.take(1500))
     assert(!p.contains("CartesianProduct"), p)

@@ -34,7 +34,7 @@ object ProbeReference extends AdaptiveSparkPlanHelper {
     query.select(concat(col("qvec").cast("array<double>"), array(lit(0.0))).as("qvec"))
 
   /** A norm-augmented MIPS index over `records` (the geometry of
-    * `Queries.mipsFixedIndex`): the records with id < `nCentroids` as
+    * `IvfQueries.mipsFixedIndex`): the records with id < `nCentroids` as
     * AUGMENTED centroids, every record assigned in augmented space and
     * stored with its ORIGINAL embedding and its other columns. */
   def mipsIndex(records: DataFrame, nCentroids: Int): IvfIndex.Model = {

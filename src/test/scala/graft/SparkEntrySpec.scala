@@ -18,6 +18,23 @@ class SparkEntrySpec extends SparkSpec {
     assert(noOracle.isEmpty, s"queries without oracles: $noOracle")
   }
 
+  test("the catalog defines each query once, and SparkEntry keeps every definition") {
+    val names = catalog.Catalog.all.map(_.name)
+    assert(names.distinct.size === names.size,
+      s"defined more than once: ${names.diff(names.distinct).distinct.sorted}")
+    assert(SparkEntry.queries.size === catalog.Catalog.all.size)
+    assert(SparkEntry.oracleSql.size === catalog.Catalog.all.size)
+  }
+
+  test("a name defined twice fails the catalog's construction") {
+    val a = catalog.Catalog.all.head
+    val b = catalog.Catalog.all(1)
+    assert(catalog.Catalog.requireDistinct(Seq(a, b)) === Seq(a, b))
+    val e = intercept[IllegalArgumentException](
+      catalog.Catalog.requireDistinct(Seq(a, b, a.copy(oracleSql = "SELECT 1"))))
+    assert(e.getMessage.contains(a.name))
+  }
+
   test("every oracle translate() case fold is the canonical alphabet pair") {
     // The ASCII fold appears verbatim in dozens of oracle strings (plain
     // string literals can't interpolate a shared constant); a one-letter

@@ -142,7 +142,7 @@ class StreamingSpec extends SparkSpec {
     val rnd = new scala.util.Random(7)
     val recs = (0 until 120).map(i => (i.toLong, Seq.fill(dim)(rnd.nextFloat())))
       .toDF("id", "embedding")
-    // the fixed augmented geometry (Queries.mipsFixedIndex's shape)
+    // the fixed augmented geometry (IvfQueries.mipsFixedIndex's shape)
     val base = recs.withColumn("__n2",
       graft.functions.NativeExprs.dot(col("embedding"), col("embedding")))
     val m2 = base.agg(max(col("__n2"))).head().getDouble(0)
