@@ -8,9 +8,19 @@ import org.apache.spark.sql.SparkSession
   * so projection-heavy queries (md5 fingerprints, quality scores) would
   * never execute their real work. Failures are loud: the failing queries
   * are reported in the JSON and the process exits nonzero.
+  *
+  * The warmup builds the catalog's declared session fixtures
+  * (`Catalog.fixtures`), each on its own thread, and reports each build's
+  * wall under `warmup_fixtures`; the timed queries then run through
+  * `Catalog.run`, which decides the cache lifetime.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
+    // Optional positional args narrow the run to the named queries — a
+    // local-iteration aid; no args runs every query.
+    // An unknown name fails here, before the session starts.
+    val only = args.toSet
+    catalog.Catalog.select(only)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
@@ -19,17 +29,14 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Session warmup (JIT, codegen compiler, parquet reader init, shuffle
-    // machinery) so the first timed query isn't charged for JVM cold
-    // start; touches each table once and exercises agg+sort+join codegen
-    // on a 64-row slice, but runs none of the timed queries.
-    // Warmup is timed and reported (warmup_s + per-step breakdown): the
-    // one-time corpus-state builds below are real cost a production
-    // session pays once per corpus version — invisible steady-state
-    // numbers alone would under-state total cost of ownership.
+    // Session warmup, timed and reported (warmup_s and its per-step
+    // breakdown): the catalog's declared session fixtures, each built once
+    // as a production session builds them once per corpus version, and the
+    // one-time JIT work (codegen compiler, MLlib and text-kernel classes,
+    // parquet reader init) on small slices, so the first timed query is
+    // charged for neither. It runs none of the timed queries.
     val warmupSteps = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val corpusStateTimes = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val warmupLaneWalls = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    val fixtureTimes = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val warmupJit = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     // Host-contention instrumentation (r10 finding: driver-run warmup
     // numbers contradicted quiet-host claims and were only reconcilable
@@ -71,85 +78,14 @@ object Bench {
     }
     locally {
       import org.apache.spark.sql.functions._
-      // a BOUNDED slice per table: the step only needs to warm the
-      // parquet footer/reader init and the noop sink — the corpus-state
-      // lanes below run full scans anyway, and min-of-2 absorbs any
-      // first-pass residue. Measured honesty: this step's ~3.7 s is
-      // almost entirely one-time JVM/reader/sink initialization, not
-      // scan volume (full scans measured 3.8 s) — the slice just stops
-      // charging the step for data the lanes re-read
-      // (the reader-init "tables" touch now runs as the jit lane's first
-      // step — the corpus-state lanes read the same parquet files anyway,
-      // so a sequential pre-touch only added its wall to warmup_s)
-      // Session-lifecycle corpus state (the memoized duplicate-group
-      // maps): a production session computes these ONCE per corpus
-      // version; every query that consumes them reads the converged,
-      // checkpoint-backed map. Materializing them FIRST (a) keeps the
-      // one-time build out of whichever consumer query runs first
-      // alphabetically and (b) lets the block/shuffle cleaner churn the
-      // build leaves behind drain while the remaining warmup steps run —
-      // measured as an otherwise-unattributable 4-7 s tax on whatever
-      // query followed the build.
-      // embed_knn_accuracy materializes the shared blocked pair-distance
-      // frame (`Shared.blockedSqPairs`) — session state for the embed/ann
-      // consumer family, same once-per-corpus-version argument.
-      //
-      // The builds run as TWO concurrent lanes (Spark's scheduler
-      // interleaves their jobs across the executor threads): the MinHash
-      // lane is sequential internally (dedup_multi extends dedup_apply's
-      // converged map incrementally), the blocked-pairs lane likewise
-      // (dedup_semantic reads the frame embed_knn_accuracy materializes).
-      // Lanes share no MEMO state with each other, so overlapping them
-      // cuts the session-boot wall-clock to max(lane) instead of sum —
-      // the same overlap a production cluster gets from concurrent jobs.
-      // They DO share the session CacheManager: the group-map builders
-      // end with a global clearCache (dropping the LSH pipeline's dead
-      // intermediates), which mid-lane would evict the other lane's
-      // live ensureCached frames — bounded and correctness-neutral
-      // (checkpoint-backed memos are immune, ensureCached re-persists),
-      // but it jitters exactly the per-lane timings bench_diff gates
-      // on. Defer the builders' clear to the single post-lane clear.
-      // Per-build times are still measured inside each lane.
-      // Lane balance (measured at sf0.1): apply+multi ≈ 13 s,
-      // knn+semantic ≈ 12 s, decon+substring+rank frames ≈ 12 s — max
-      // lane ≈ 13 s vs 18 s when the rank builds trailed the MinHash
-      // lane. Cross-lane memo dependencies are SAFE, not racy: the
-      // memos are `SessionMemo` (computeIfAbsent), so when lane 3's
-      // pagerank reaches for the MinHash pair list while lane 1's
-      // dedup_apply is still building it, it blocks on the same
-      // compute and reuses the one result.
-      val lanes = Seq(
-        // dedup_multi extends dedup_apply's converged map incrementally
-        Seq("dedup_apply", "dedup_multi"),
-        // corpus_substring_dedup materializes the ExactSubstr census
-        // memo; corpus_checksum / corpus_assemble materialize the r12
-        // content-hash and assembly-verdict projections their families
-        // share (~1.2 s on the shortest lane — attribution, not wall:
-        // lane1's sequential apply→multi chain still binds)
-        Seq("embed_knn_accuracy", "dedup_semantic", "corpus_substring_dedup",
-          "corpus_checksum", "corpus_assemble"),
-        // corpus_decontaminate materializes the standing split-gram
-        // index (`CorpusQueries.splitGrams8`) its decontamination-family
-        // siblings share; the two rank builds the converged PageRank
-        // frames — all "built once per corpus version" session state
-        Seq("corpus_decontaminate", "dedup_pagerank",
-          "dedup_pagerank_seeded"))
-      val laneTimes = new java.util.concurrent.ConcurrentHashMap[String, Double]()
-      // per-lane WALL time (thread start → last build done): under host
-      // contention the concurrent lanes are exactly what degrades first,
-      // so the artifact carries each lane's wall next to the step's
-      // process-CPU — a reader sees which lane was the straggler and
-      // whether the JVM was actually computing during it
-      val laneWalls = new java.util.concurrent.ConcurrentHashMap[String, Double]()
-      val laneError = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-      // 4th concurrent lane: the one-time JIT warmups (whole-stage
-      // codegen compiler, MLlib BLAS/kmeans class-loading, native text
-      // kernels, the LSH pipeline's Janino classes). These ~4.5 s of
-      // one-time cost used to run SEQUENTIALLY after the lanes; they
-      // touch only tiny bounded slices and never clear the cache, so
-      // overlapping them with the ~16 s corpus-state lane walls hides
-      // them entirely (driver-measured warmup 26.9 s with a ≤25 s
-      // target → ~22 s). Per-step attribution moves to "warmup_jit".
+      // Every declared fixture builds on its own thread, next to the JIT
+      // thread; Spark's scheduler interleaves their jobs across the
+      // executor threads, so the warmup wall is the longest build chain,
+      // not the sum. A fixture that reads another (the rank frames read
+      // the MinHash pair list) blocks on that memo's one build
+      // (`SessionMemo` is a computeIfAbsent) and reuses its result. No
+      // fixture build clears the cache, so the threads never evict each
+      // other's cached frames.
       val jitTimes = new java.util.concurrent.ConcurrentHashMap[String, Double]()
       def jitLane(): Unit = {
         import graft.operators.TextOps
@@ -159,10 +95,8 @@ object Bench {
           jitTimes.put(label, (System.nanoTime() - t0) / 1e9); ()
         }
         // 4096 rows: the step exists for one-time reader/codec/sink init,
-        // which is size-independent — r11 spent 6.8 s here at 20k rows
-        // while the corpus-state lanes re-read the same files in full
-        // anyway; every surplus row is CPU stolen from the lanes that ARE
-        // the warmup critical path (lane1's sequential apply→multi chain)
+        // which is size-independent; the fixture builds read the same
+        // files in full, so every extra row here is CPU taken from them
         jstep("tables") { Seq("embeddings", "documents").foreach { t =>
           spark.read.parquet(s"$sfDir/$t.parquet").limit(4096)
             .write.format("noop").mode("overwrite").save()
@@ -195,76 +129,41 @@ object Bench {
               graft.functions.NativeExprs.simhash60(col("__toks")))
             .write.format("noop").mode("overwrite").save()
         }
-        // (r12) lsh_pipeline_jit REMOVED: the dedup_apply corpus-state
-        // lane compiles the exact same LSH/CC expression classes at real
-        // scale CONCURRENTLY with this lane — the 512-doc rehearsal was
-        // 7.3 s of duplicated compile+pipeline CPU competing with the
-        // lanes it was supposed to hide behind (r11: lane1 27.3 s was the
-        // warmup wall while jit idled at 22.3 s). Nothing is hidden from
-        // the artifact: the compile cost now lands inside dedup_apply's
-        // reported corpus-state time.
+        // No LSH-pipeline step: the MinHash group-map fixture compiles the
+        // same LSH and connected-component classes at full scale on its
+        // own thread (a 512-doc rehearsal here was 7.3 s of duplicated
+        // compile and pipeline CPU).
       }
-      catalog.Shared.deferBuilderCacheClear.set(true)
-      // finally-reset: a lane failure rethrows below, and leaving the
-      // global defer flag stuck true would make any later builder call
-      // in this JVM (e.g. a test harness reusing the session) silently
-      // skip its cache clear
-      try {
-        val threads = lanes.zipWithIndex.map { case (lane, li) =>
-          val t = new Thread(() => {
-            val lt0 = System.nanoTime()
-            try lane.foreach { q =>
-              val t0 = System.nanoTime()
-              SparkEntry.queries(q)(spark, sfDir)
-                .write.format("noop").mode("overwrite").save()
-              laneTimes.put(q, (System.nanoTime() - t0) / 1e9)
-            } catch { case e: Throwable => laneError.compareAndSet(null, e) }
-            finally laneWalls.put(s"lane${li + 1}",
-              (System.nanoTime() - lt0) / 1e9)
-          })
-          t.setDaemon(true); t.start(); t
-        } :+ {
-          val t = new Thread(() => {
-            val lt0 = System.nanoTime()
-            try jitLane()
-            catch { case e: Throwable => laneError.compareAndSet(null, e) }
-            finally laneWalls.put("jit", (System.nanoTime() - lt0) / 1e9)
-          })
-          t.setDaemon(true); t.start(); t
+      val built = new java.util.concurrent.ConcurrentHashMap[String, Double]()
+      val warmupError = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+      def thread(body: => Unit): Thread = {
+        val t = new Thread(() =>
+          try body catch { case e: Throwable => warmupError.compareAndSet(null, e); () })
+        t.setDaemon(true); t.start(); t
+      }
+      val threads = thread(jitLane()) +: catalog.Catalog.fixtures.map { f =>
+        thread {
+          val t0 = System.nanoTime()
+          f.build(spark, sfDir).write.format("noop").mode("overwrite").save()
+          built.put(f.name, (System.nanoTime() - t0) / 1e9); ()
         }
-        step("corpus_state") { threads.foreach(_.join()) }
-        // a failed state build would silently re-run inside whichever timed
-        // consumer query comes first — fail the bench loudly instead
-        if (laneError.get() != null) throw laneError.get()
-        // per-build attribution (concurrent, so NOT added into warmup_s —
-        // the "corpus_state" wall-clock step above carries the real cost)
-        lanes.flatten.foreach { q =>
-          corpusStateTimes(q) = laneTimes.getOrDefault(q, -1.0)
-        }
-        lanes.indices.foreach { li =>
-          val k = s"lane${li + 1}"
-          warmupLaneWalls(k) = laneWalls.getOrDefault(k, -1.0)
-        }
-        warmupLaneWalls("jit") = laneWalls.getOrDefault("jit", -1.0)
-        jitTimes.forEach((k, v) => { warmupJit(k) = v; () })
-      } finally catalog.Shared.deferBuilderCacheClear.set(false)
-      // one post-lane clear: drops the builders' dead LSH intermediates
-      // AND the jit lane's 512-doc slice frames (plan-keyed, so they
-      // could never serve a timed query anyway — only compiled code
-      // shapes are reused, the steady-state of a long-lived session)
-      spark.catalog.clearCache()
+      }
+      step("fixtures") { threads.foreach(_.join()) }
+      // a failed fixture build would silently re-run inside whichever
+      // timed query reads it first: fail the bench loudly instead
+      if (warmupError.get() != null) throw warmupError.get()
+      // per-fixture wall from warmup start, waits on other fixtures
+      // included (concurrent, so not added into warmup_s; the "fixtures"
+      // step carries the real cost)
+      catalog.Catalog.fixtures.foreach(f => fixtureTimes(f.name) = built.get(f.name))
+      jitTimes.forEach((k, v) => { warmupJit(k) = v; () })
     }
-    // Optional positional args narrow the run to the named queries — a
-    // local-iteration aid; the driver invokes with no args (= run all).
-    val only = args.toSet
     val queriesT0 = System.nanoTime(); val queriesC0 = procCpuNs
     // GC baseline at the start of the timed section: queries_gc_s must be
     // the DELTA over the queries phase (like queries_wall_s/queries_cpu_s),
     // not cumulative-since-JVM-start, or it silently includes warmup GC.
     val queriesG0 = gcMs
     var failed = List.empty[String]
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.isEmpty || only(name) }
     // Noise robustness: each query is timed over TWO full materializations
     // and the MIN is recorded. One pass has ±1 s machine-load noise at
     // sf0.1 — the same order as most queries' runtime — so single-pass
@@ -273,21 +172,16 @@ object Bench {
     // session observes, and is stable run-to-run. Both raw passes are
     // emitted under "passes" so a reader can see the spread.
     //
-    // Cache hygiene: persisted intermediates live per QUERY FAMILY (the
-    // name's prefix up to the first '_'): queries within a family share
-    // plan-level caches (sig/candidate frames, the fixed-model assignment),
-    // and the cache is cleared at each family boundary so dead blocks
-    // never accumulate across the run. Frames cleared here re-persist on
-    // next use (Caching.ensureCached).
-    var prevFamily = ""
+    // Cache lifetime is the catalog runner's: it clears the session cache
+    // at each family boundary, the first one dropping what the warmup
+    // cached (`Catalog.run`).
     val gcSpikes = scala.collection.mutable.LinkedHashMap.empty[String, List[Double]]
-    val results = selected.map { case (name, fn) =>
-      val family = name.takeWhile(_ != '_')
-      if (family != prevFamily) { spark.catalog.clearCache(); prevFamily = family }
+    val results = catalog.Catalog.run(spark, only) { q =>
+      val name = q.name
       // (wall seconds, stop-the-world GC seconds) per pass
       def onePass(): (Double, Double) = {
         val t0 = System.nanoTime(); val g0 = gcMs
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        q.build(spark, sfDir).write.format("noop").mode("overwrite").save()
         ((System.nanoTime() - t0) / 1e9, (gcMs - g0) / 1e3)
       }
       val timed =
@@ -326,40 +220,25 @@ object Bench {
     // decimals is far below run-to-run noise and halves the line.
     def f4(v: Double): String = BigDecimal(v)
       .setScale(4, BigDecimal.RoundingMode.HALF_UP).toString
+    def obj(m: Iterable[(String, Double)]): String =
+      m.map { case (k, v) => "\"" + k + "\":" + f4(v) }.mkString("{", ",", "}")
+    def arrays(m: Iterable[(String, List[Double])]): String =
+      m.map { case (k, vs) => "\"" + k + "\":" + vs.map(f4).mkString("[", ",", "]") }
+        .mkString("{", ",", "}")
     val mins = results.map { case (k, ps) => k -> (if (ps.isEmpty) 0.0 else ps.min) }
-    val qs = mins.map { case (k, v) => s"\"" + k + "\":" + f4(v) }
-      .mkString("{", ",", "}")
-    val passesJson = results.map { case (k, ps) =>
-      s"\"" + k + "\":" + ps.map(f4).mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
     val total = if (mins.nonEmpty) mins.values.sum else 0.0
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val warmupTotal = warmupSteps.values.sum
-    val warmupJson = warmupSteps.map { case (k, v) => s"\"" + k + "\":" + f4(v) }
-      .mkString("{", ",", "}")
-    val corpusStateJson = corpusStateTimes.map { case (k, v) => s"\"" + k + "\":" + f4(v) }
-      .mkString("{", ",", "}")
-    val warmupCpuJson = warmupCpu.map { case (k, v) => s"\"" + k + "\":" + f4(v) }
-      .mkString("{", ",", "}")
-    val laneWallsJson = warmupLaneWalls
-      .map { case (k, v) => s"\"" + k + "\":" + f4(v) }
-      .mkString("{", ",", "}")
-    val warmupJitJson = warmupJit
-      .map { case (k, v) => s"\"" + k + "\":" + f4(v) }
-      .mkString("{", ",", "}")
     // the contention block repeats on BOTH lines: the compact last line
     // is often the only part of the artifact that survives log-tail
     // truncation, and it must be self-interpreting on its own
-    val gcSpikesJson = gcSpikes.map { case (k, gs) =>
-      s"\"" + k + "\":" + gs.map(f4).mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val hostJson = s""""load_avg_start":${f4(loadAvgStart)},"load_avg_end":${f4(loadAvgEnd)},"cpus":$cpus,"queries_wall_s":${f4(queriesWall)},"queries_cpu_s":${f4(queriesCpu)},"queries_gc_s":${f4((gcMs - queriesG0) / 1e3)},"gc_spikes":$gcSpikesJson"""
+    val hostJson = s""""load_avg_start":${f4(loadAvgStart)},"load_avg_end":${f4(loadAvgEnd)},"cpus":$cpus,"queries_wall_s":${f4(queriesWall)},"queries_cpu_s":${f4(queriesCpu)},"queries_gc_s":${f4((gcMs - queriesG0) / 1e3)},"gc_spikes":${arrays(gcSpikes)}"""
     // The full-detail line is tagged "total_detail" so exactly ONE line
     // in the whole output carries "metric":"total" (the compact last
     // line below) — a consumer grepping for the total can neither hit
     // the ~8 KB detail line (truncated in the driver's log tail,
     // r6-r9's "parsed": null) nor double-count two totals.
-    val line = s"""{"metric":"total_detail","value":${f4(total)},"unit":"sec","n_queries":${results.size},"queries":$qs,"passes":$passesJson,"failed":$failedJson,"warmup_s":${f4(warmupTotal)},"warmup":$warmupJson,"warmup_cpu":$warmupCpuJson,"warmup_lanes":$laneWallsJson,"warmup_jit":$warmupJitJson,"warmup_corpus_state":$corpusStateJson,$hostJson,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total_detail","value":${f4(total)},"unit":"sec","n_queries":${results.size},"queries":${obj(mins)},"passes":${arrays(results)},"failed":$failedJson,"warmup_s":${f4(warmupTotal)},"warmup":${obj(warmupSteps)},"warmup_cpu":${obj(warmupCpu)},"warmup_jit":${obj(warmupJit)},"warmup_fixtures":${obj(fixtureTimes)},$hostJson,"sf":"$sfDir"}"""
     println(line)
     // Also persist to a file: the stdout line can land inside a
     // truncated log tail (r6/r7 artifacts show "parsed": null), and a
@@ -385,9 +264,7 @@ object Bench {
     // the full map by merging every {"metric":"query_min"} line; all
     // chunks also remain in the total_detail line and target/bench.json.
     mins.toSeq.sortBy { case (k, v) => (v, k) }.grouped(6).foreach { chunk =>
-      val m = chunk.map { case (k, v) => "\"" + k + "\":" + f4(v) }
-        .mkString("{", ",", "}")
-      println(s"""{"metric":"query_min","queries":$m}""")
+      println(s"""{"metric":"query_min","queries":${obj(chunk)}}""")
     }
     // LAST line: a compact summary that fits the driver's 2000-char log
     // tail whole (the full line above is ~8 KB and lands truncated →

@@ -23,6 +23,11 @@ import org.apache.spark.storage.StorageLevel
   * `spark.catalog.clearCache()` (or targeted unpersist) when the caller
   * is done with the query family. Frames cleared that way simply
   * re-persist on next use.
+  *
+  * The caller owns cache lifetime: no operator and no session fixture
+  * clears the cache. For the query catalog that caller is
+  * [[catalog.Catalog.run]], which clears before each family's first
+  * query; checkpoint-backed fixtures ([[truncate]]) survive it.
   */
 object Caching {
 

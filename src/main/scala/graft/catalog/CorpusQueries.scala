@@ -289,6 +289,12 @@ object CorpusQueries {
          |    AND stop_hits >= 2) AS gp
          |  FROM m)""".stripMargin
 
+  /** The session fixtures defined here, for [[Catalog.fixtures]]. */
+  val fixtures: Seq[Fixture] = Seq(
+    Fixture("substringSpans10", substringSpans10),
+    Fixture("assembleFiltered", assembleFiltered),
+    Fixture("splitGrams8", splitGrams8))
+
   val all: Seq[QueryDef] = Seq(
     // extension: rendezvous (highest-random-weight) shard assignment —
     // the deterministic distributed-writer primitive: each doc goes to

@@ -237,6 +237,43 @@ object DedupQueries {
         docs(s, dir).select(col("doc_id").as("node")).where(col("doc_id") % 2 === 0),
         iters = 8), eager = true))
 
+  /** MULTI-SIGNAL duplicate-group map: MinHash-LSH ∪ SimHash pair sets
+    * fed into one connected-component pass — production dedup runs
+    * several cheap signals and unions their results (each signal has
+    * blind spots: MinHash misses low-Jaccard paraphrase, SimHash misses
+    * long-doc partial overlap). Same memoized lifecycle as
+    * [[cappedGroups]]. */
+  private val multiGroupsCache = new SessionMemo[String, DataFrame]
+  private def multiGroups(s: SparkSession, dir: String): DataFrame =
+    multiGroupsCache(s, dir) {
+      val sh = Dedup.simhashPairs(docs(s, dir), maxHamming = 8,
+        maxBucket = Dedup.DefaultPipelineMaxBucket)
+        .select(col("doc_id_a"), col("doc_id_b"))
+      // INCREMENTAL over the memoized MinHash map: contract the SimHash
+      // pairs through [[cappedGroups]] and converge only the rep-graph
+      // (law: equals duplicateGroups(mh ∪ sh) — DedupSpec) instead of
+      // re-running label propagation over the MinHash edge set the
+      // session already converged.
+      Caching.truncate(Dedup.extendGroups(cappedGroups(s, dir), sh), eager = true)
+    }
+
+  /** The SEMANTIC duplicate-group map, memoized per (session, dir) — the
+    * embedding-space twin of [[cappedGroups]], with the same lifecycle
+    * argument: a pipeline computes the keep/drop map ONCE per corpus
+    * version and every consumer reads that map. [[Dedup.duplicateGroups]]
+    * is eager, so the memo holds the converged label table. */
+  private val semanticGroupsCache = new SessionMemo[String, DataFrame]
+  private def semanticGroups(s: SparkSession, dir: String): DataFrame =
+    semanticGroupsCache(s, dir)(Dedup.duplicateGroups(
+      Dedup.embeddingNearDup(top2Blocked(s, dir), threshold = 0.2)
+        .select(col("id_a"), col("id_b")).distinct(),
+      srcCol = "id_a", dstCol = "id_b"))
+
+  /** The session fixtures defined here, for [[Catalog.fixtures]]. */
+  val fixtures: Seq[Fixture] = Seq(
+    Fixture("multiGroups", multiGroups), Fixture("semanticGroups", semanticGroups),
+    Fixture("pageRankFrame", pageRankFrame), Fixture("pprFrame", pprFrame))
+
   val all: Seq[QueryDef] = Seq(
     // extension: shingle document-frequency histogram — the blocking
     // profile behind every MinHash/containment tuning decision ("is the

@@ -157,8 +157,8 @@ object IvfQueries {
     * sequential Lloyd stages per consuming query is a batch-harness
     * artifact (r10: ivf_balanced_stats paid the full build per pass,
     * #2 on the bench). The build is deterministic (seeded), so results
-    * are identical either way; checkpoint backing survives the bench's
-    * between-family clearCache. */
+    * are identical either way; checkpoint backing survives the
+    * between-family clear in [[Catalog.run]]. */
   private val balancedModelCache = new SessionMemo[String, IvfIndex.Model]
   /** r12: the build behind `ivf_balanced_stats` switched from
     * [[IvfIndex.buildBalanced]] (MLlib coarse fit — engine-internal, so

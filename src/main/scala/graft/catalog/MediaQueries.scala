@@ -2,6 +2,7 @@ package graft
 package catalog
 
 import graft.operators.{Dedup, Multimodal}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import Shared._
 
@@ -15,6 +16,27 @@ object MediaQueries {
   private val phashOffsetsSql = phashLayout.map(_._1).mkString("[", ",", "]")
   private val phashMasksSql =
     phashLayout.map { case (_, w) => (1L << w) - 1 }.mkString("[", ",", "]")
+
+  /** The perceptual-hash duplicate-group map (media_id, rep_id),
+    * memoized per (session, dir) with the converged label table
+    * checkpoint-backed — the image-space twin of [[cappedGroups]], same
+    * lifecycle: decode + grid-8 aHash + banded pairs + CC is a build a
+    * pipeline runs once per corpus version. [[Dedup.duplicateGroups]]
+    * materializes eagerly, so the memo holds the fixed point. */
+  private val mediaGroupsCache = new SessionMemo[String, DataFrame]
+  private def mediaPhashGroups(s: SparkSession, dir: String): DataFrame =
+    mediaGroupsCache(s, dir) {
+      val hashed = Multimodal.perceptualHash(
+        Multimodal.codecMedia(docs(s, dir)).where(col("kind") === "image"),
+        grid = 8)
+      val pairs = Dedup.fingerprintPairs(hashed, "media_id", "ahash", bits = 64,
+        maxHamming = 2, maxBucket = Dedup.DefaultPipelineMaxBucket)
+      Dedup.duplicateGroups(pairs, srcCol = "id_a", dstCol = "id_b")
+        .select(col("doc_id").as("media_id"), col("rep_id"))
+    }
+
+  /** The session fixtures defined here, for [[Catalog.fixtures]]. */
+  val fixtures: Seq[Fixture] = Seq(Fixture("mediaPhashGroups", mediaPhashGroups))
 
   val all: Seq[QueryDef] = Seq(
     // extension: multimodal feature extraction (stub codec; real plumbing).

@@ -537,8 +537,8 @@ object Corpus {
     // entries are plan-matched and re-registered per distinct input —
     // they cannot be unpersisted here without forcing eager execution,
     // so a LONG-LIVED session calling this operator over varying inputs
-    // must clearCache at its own task boundaries (the bench's
-    // family-boundary clear is that contract).
+    // must clearCache at its own task boundaries (the query catalog's
+    // family-boundary clear in `Catalog.run` is that contract).
     val hits = graft.Caching.ensureCached(bg.join(tg, Seq("h")))
     val docsPer = hits.select(col("bench_id"), col("doc_id")).distinct()
       .groupBy(col("bench_id")).agg(count(lit(1)).as("n_train_docs"))

@@ -195,10 +195,11 @@ object Dedup {
     // — so LSH verification costs zero re-tokenization/re-hashing (round
     // 2 recomputed shingles+md5 for every candidate doc). At warehouse
     // scale both would be materialized storage tables instead.
-    // Cache lifecycle: the two persists below live as long as the
-    // returned (lazy) plan — MEMORY_AND_DISK evicts under pressure, and a
-    // caller done with the result can `spark.catalog.clearCache()`; they
-    // cannot be unpersisted here without forcing eager execution.
+    // Cache lifecycle: the two persists below live until the caller
+    // clears the cache (the query catalog's runner, `Catalog.run`, does at
+    // each family boundary) — MEMORY_AND_DISK evicts under pressure; they
+    // cannot be unpersisted here without forcing eager execution, and
+    // this operator does not clear the cache itself.
     // `ensureCached` registers each distinct plan once: repeated
     // invocations over the same input reuse the live cache entry instead
     // of re-registering it (see [[graft.Caching]]).

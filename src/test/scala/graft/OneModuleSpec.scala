@@ -14,7 +14,9 @@ import scala.jdk.CollectionConverters._
   * place, decides for itself what "nothing committed" means or writes
   * its own replay-idempotent batch partition fails here, and so does a
   * main source over 3,000 lines (the query catalog is split by family,
-  * `graft/catalog/`). */
+  * `graft/catalog/`). Cache lifetime is the catalog runner's
+  * (`Catalog.run`): no other main source clears the session cache, and
+  * Bench warms the declared fixtures, not query names. */
 class OneModuleSpec extends SparkSpec {
 
   private val mainRoot = Paths.get("src", "main")
@@ -65,12 +67,14 @@ class OneModuleSpec extends SparkSpec {
     assert(sites === Seq("IvfIndex.scala" -> 1))
   }
 
-  private def onlyInCommit(pattern: String): Unit = {
-    assert(offenders(pattern, _.getFileName.toString == "Commit.scala").isEmpty)
+  private def onlyIn(file: String, pattern: String): Unit = {
+    assert(offenders(pattern, _.getFileName.toString == file).isEmpty)
     assert(sources.exists { case (p, code) =>
-      p.getFileName.toString == "Commit.scala" && code.contains(pattern)
-    }, s"Commit.scala no longer holds $pattern")
+      p.getFileName.toString == file && code.contains(pattern)
+    }, s"$file no longer holds $pattern")
   }
+
+  private def onlyInCommit(pattern: String): Unit = onlyIn("Commit.scala", pattern)
 
   test("the checked rename is written once: only Commit.scala refuses a nested rename") {
     onlyInCommit("refusing nested rename")
@@ -83,6 +87,17 @@ class OneModuleSpec extends SparkSpec {
   test("the replay-idempotent batch write is written once: " +
     "only Commit.scala sets partitionOverwriteMode") {
     onlyInCommit("partitionOverwriteMode")
+  }
+
+  test("cache lifetime is decided once: only Catalog.scala calls clearCache(") {
+    onlyIn("Catalog.scala", "clearCache(")
+  }
+
+  test("Bench names no catalog query: its warmup builds the declared fixtures") {
+    val bench = files.find(_.getFileName.toString == "Bench.scala").get
+    val text = new String(Files.readAllBytes(bench), "UTF-8")
+    val named = SparkEntry.queries.keySet.filter(n => text.contains("\"" + n + "\"")).toSeq.sorted
+    assert(named.isEmpty, s"Bench.scala names catalog queries: $named")
   }
 
   test("no main Scala source is over 3,000 lines") {

@@ -35,6 +35,24 @@ class SparkEntrySpec extends SparkSpec {
     assert(e.getMessage.contains(a.name))
   }
 
+  test("an unknown query name fails the catalog runner and both mains, listing it") {
+    val visited = scala.collection.mutable.Buffer.empty[String]
+    val e = intercept[IllegalArgumentException](
+      catalog.Catalog.run(spark, Set("knn_euclidean", "knn_euclidaen", "no_such_query"))(
+        q => visited += q.name))
+    assert(e.getMessage.contains("knn_euclidaen, no_such_query"), e.getMessage)
+    assert(!e.getMessage.contains("knn_euclidean,"), e.getMessage)
+    assert(visited.isEmpty, "the runner ran a query before refusing the names")
+    // both mains refuse before they start a session, so the exception ends
+    // the JVM with a non-zero status
+    val out = java.nio.file.Files.createTempDirectory("verify_unknown").toString
+    assert(intercept[IllegalArgumentException](
+      Verify.main(Array(sf0001, out, "knn_euclidaen"))).getMessage.contains("knn_euclidaen"))
+    assert(intercept[IllegalArgumentException](
+      Bench.main(Array("knn_euclidaen"))).getMessage.contains("knn_euclidaen"))
+    assert(!spark.sparkContext.isStopped)
+  }
+
   test("every oracle translate() case fold is the canonical alphabet pair") {
     // The ASCII fold appears verbatim in dozens of oracle strings (plain
     // string literals can't interpolate a shared constant); a one-letter

@@ -59,11 +59,14 @@ def load_queries(path):
     #
     # Per-query times live ONLY in the "queries":{...} summary and the
     # "passes":{...} arrays, which Bench prints BEFORE the run metadata.
-    # Everything from "failed": onward — warmup_corpus_state, warmup_jit,
-    # gc_spikes — is a map whose KEYS reuse query names with non-query
-    # values (r13 verdict: r12's tail fed warmup_corpus_state.dedup_pagerank
-    # = 22.08s into the gate as a query time). Cut the tail at the first
-    # metadata marker so those maps can never shadow a truncated query.
+    # Everything from "failed": onward — warmup_fixtures, warmup_jit,
+    # gc_spikes — is a map of non-query values; gc_spikes and the old
+    # artifacts' warmup_corpus_state key them by query name (BENCH_r12.json's
+    # tail fed warmup_corpus_state.dedup_pagerank = 22.08s into the gate as
+    # a query time). Cut the tail at the first metadata marker so
+    # those maps can never shadow a truncated query. warmup_fixtures keys
+    # are fixture names (camelCase, never a query's), so the name pattern
+    # below skips them even in a tail cut inside that map.
     tail = d.get('tail', '')
     for marker in ('"failed":', '"warmup', '"gc_spikes"', '"load_avg'):
         j = tail.find(marker)

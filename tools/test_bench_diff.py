@@ -3,6 +3,10 @@
 `python3 tools/test_bench_diff.py` from the repo root (part of the round
 close-out; no framework so it runs anywhere the gate runs).
 
+Since the warmup reports its fixture builds under warmup_fixtures (keyed
+by fixture names, which are never query names), a case checks that none
+of those entries reaches the per-query map either.
+
 The load-bearing case (r13 verdict, What's wrong #2): a driver wrapper
 whose parsed=null tail TRUNCATED a query's pass array but kept the
 same-named warmup_corpus_state entry must NOT report the warmup seconds
@@ -69,6 +73,27 @@ def main():
           q.get('q_alpha') == 1.23 and q.get('q_beta') == 0.5, f'got {q}')
     check('synthetic: warmup entry q_gamma excluded', 'q_gamma' not in q)
     check('synthetic: gc_spikes entry q_delta excluded', 'q_delta' not in q)
+
+    # 2b) the warmup_fixtures map (keyed by fixture name) next to the
+    #     per-query maps: no fixture entry reaches the per-query map,
+    #     neither behind the "failed": marker nor in a tail that was cut
+    #     inside the fixtures map (so no marker precedes its entries)
+    fixtures = ('"warmup_fixtures":{"cappedGroups":12.5000,"splitGrams8":3.2000,'
+                '"pprFrame":9.1000,"hashedDocsMemo":1.4000}')
+    head = ('"queries":{"q_alpha":1.2300,"q_beta":0.5000},'
+            '"passes":{"q_alpha":[1.2300,1.4000],"q_beta":[0.5000]},'
+            '"failed":[],"warmup_s":9.9,"warmup":{"fixtures":14.0000},')
+    names = ('cappedGroups', 'splitGrams8', 'pprFrame', 'hashedDocsMemo', 'fixtures')
+    for label, ftail, want in (
+            ('full', head + fixtures + ',"load_avg_start":0.5',
+             {'q_alpha': 1.23, 'q_beta': 0.5}),
+            ('cut inside the map', fixtures[30:] + ',"gc_spikes":{},"load_avg_start":0.5', {})):
+        json.dump({'parsed': None, 'tail': ftail}, open(tmp, 'w'))
+        _, q = bd.load_queries(tmp)
+        check(f'warmup_fixtures ({label}): no fixture entry in the per-query map',
+              not any(n in q for n in names), f'got {q}')
+        check(f'warmup_fixtures ({label}): exactly the real queries recovered',
+              q == want, f'got {q}')
 
     # 3) the BENCH_r15.json shape: "parsed" is a summary dict without a
     #    "queries" map. The tail is scraped, the summary total is kept,
