@@ -173,9 +173,9 @@ object IvfQueries {
     balancedModelCache(s, dir) {
       val m = IvfIndex.buildBalancedRefine(recs(s, dir),
         fixedCentroids(s, dir).where(col("cluster_id") < 4),
-        density = 64, Metric.Euclidean, maxRounds = 12)
-      IvfIndex.Model(Caching.truncate(m.centroids, eager = true),
-        Caching.truncate(m.assigned, eager = true))
+        density = 64, Metric.Euclidean)
+      // the build's last step already checkpointed the assignment
+      IvfIndex.Model(Caching.truncate(m.centroids, eager = true), m.assigned)
     }
 
   /** The fixed augmented MIPS geometry shared by the `ivf_mips_*` family
@@ -234,17 +234,13 @@ object IvfQueries {
 
   /** The (pre-refine, post-refine) pair over the forced-oversized
     * 4-fixed-centroid model, memoized per (session, dir) with the
-    * refined assignment eagerly checkpoint-backed — the same
-    * memoize-converged-results argument as [[balancedModel]]: refine is
-    * a deterministic build step a production session runs once per
-    * corpus version, and `ivf_refine_stats` only AGGREGATES its result.
-    * History of this query's cost: r10 regressed 1.5 → 3.9 s when a
-    * warmup-lane rebalance exposed refine()'s eager members-cache
-    * unpersist (the after-stats legs recomputed the oversized-members
-    * semi-join); routing through refineKeepCache cut it to 1.4 s, and
-    * memoizing the converged model removes the per-pass Lloyd-chain
-    * re-execution entirely. The members cache is unpersisted here —
-    * the checkpoint holds the materialized result. */
+    * refined assignment checkpoint-backed ([[IvfIndex.refine]] returns
+    * it so) — the same memoize-converged-results argument as
+    * [[balancedModel]]: refine is a deterministic build step a production
+    * session runs once per corpus version, and `ivf_refine_stats` only
+    * AGGREGATES its result, so memoizing it removes the per-pass
+    * Lloyd-chain re-execution entirely. One refine step, not the
+    * split-round loop: the oracle replays exactly one round. */
   private val refinedFixedModelCache =
     new SessionMemo[String, (IvfIndex.Model, IvfIndex.Model)]
   private def refinedFixedModel(
@@ -253,16 +249,8 @@ object IvfQueries {
       val c = fixedCentroids(s, dir).where(col("cluster_id") < 4)
       val model = IvfIndex.Model(c,
         Caching.ensureCached(IvfIndex.assign(recs(s, dir), c, Metric.Euclidean)))
-      val refined = IvfIndex.refineKeepCache(model, density = 100,
-          Metric.Euclidean) match {
-        case None => model
-        case Some((m, members)) =>
-          val checkpointed = IvfIndex.Model(Caching.truncate(m.centroids, eager = true),
-            Caching.truncate(m.assigned, eager = true))
-          members.unpersist()
-          checkpointed
-      }
-      (model, refined)
+      val refined = IvfIndex.refine(model, density = 100, Metric.Euclidean)
+      (model, IvfIndex.Model(Caching.truncate(refined.centroids, eager = true), refined.assigned))
     }
 
   /** The L2-NORMALIZED record frame and its fixed-centroid assignment,
@@ -1815,7 +1803,7 @@ object IvfQueries {
     // fixed centroids, so the initial clusters all violate density),
     // then the adaptive-split loop restores the max-records-per-cluster
     // contract. EXACT census (r12, like ivf_refine_stats): the oracle
-    // replays the whole deterministic build — up to 6 binary-split
+    // replays the whole deterministic build — up to 12 binary-split
     // rounds, each an unrolled refine — and states n_clusters/max_size
     // as values; booleans are derived, not pinned.
     QueryDef("ivf_balanced_stats", ((s, dir) => {

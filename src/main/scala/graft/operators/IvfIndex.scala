@@ -196,7 +196,7 @@ object IvfIndex {
 
     // density=0 would silently yield k=kMax (n/0.0 → ∞ → Int.MaxValue →
     // min kMax): a 65536-cluster fit over a possibly tiny sample, with
-    // no error. Fail fast like every sibling knob (k, maxWay, prefixDim).
+    // no error. Fail fast like every sibling knob (k, prefixDim).
     require(density > 0, s"density must be positive, got $density")
     val n = records.count()
     val k = math.max(1, math.min(kMax, math.ceil(n.toDouble / density).toInt))
@@ -719,7 +719,7 @@ object IvfIndex {
     * O10 — its running-mean formula is a documented bug, SURVEY.md §2).
     *
     * All set-based: sizes via one groupBy; the 2-means loop joins members
-    * against a broadcast 2-row-per-cluster centroid frame (`iters` fixed
+    * against a broadcast 2-row-per-cluster centroid frame (3 fixed
     * rounds, each materializing only the tiny centroid frame ON THE
     * EXECUTORS via `localCheckpoint` — no driver round-trip); ALL
     * oversized clusters split concurrently in one pass — the batch shape
@@ -731,55 +731,56 @@ object IvfIndex {
     * set — its rows keep their assignment and no empty centroid is
     * appended. When nothing is splittable the input model is returned
     * UNCHANGED (reference-equal, `eq`), so fixed-point loops like
-    * [[buildBalanced]] terminate instead of appending empty clusters
-    * forever. Call repeatedly (or use [[buildBalanced]]) until
-    * `maxClusterSize ≤ density` or the model stops changing. */
-  def refine(
-      model: Model,
-      density: Int,
-      metric: Metric = Metric.Euclidean,
-      // 3 Lloyd steps: farthest-point seeds separate a 2-means in 1-2
-      // steps; extra steps are extra sequential stages in the one
-      // checkpoint chain for no measurable balance gain
-      iters: Int = 3): Model = {
+    * [[splitRounds]] terminate instead of appending empty clusters
+    * forever.
+    *
+    * The result is a finished index version: its assignment is
+    * checkpointed once ([[graft.Caching.truncate]], eager) and the step's
+    * oversized-members cache is released before it returns, so a caller
+    * reads and re-reads it without re-running the Lloyd chain. Run it to
+    * `maxClusterSize ≤ density` with [[splitRounds]]. */
+  def refine(model: Model, density: Int, metric: Metric = Metric.Euclidean): Model = {
     require(density > 0, s"density must be positive, got $density")
-    refineImpl(model, density, metric, iters) match {
+    val oversizedIds = splitSet(model.assigned, density).select("cluster_id")
+    if (oversizedIds.isEmpty) model
+    else finished(model,
+      model.assigned.join(broadcast(oversizedIds), Seq("cluster_id"), "left_semi"))(
+      refineMembers(model, _, metric))
+  }
+
+  /** The split set both split steps share: every cluster over `density`
+    * with its size `__n`. The unassigned sentinel `cluster_id = -1` (a
+    * row with no finite distance to any centroid, [[assign]]) is not a
+    * cluster — it has no centroid, and its rows may not even have the
+    * index's width — so it is never split; [[maintenancePlan]], which
+    * lists the centroid set, never plans it either. */
+  private def splitSet(assigned: DataFrame, density: Int): DataFrame =
+    assigned.where(col("cluster_id") >= 0)
+      .groupBy(col("cluster_id")).agg(count(lit(1)).as("__n"))
+      .where(col("__n") > density)
+
+  /** A split step's result as a finished index version: `split` runs over
+    * the persisted `members` of the split set, its assignment is
+    * checkpointed once, and the members cache is released before the
+    * step returns — the checkpoint holds everything the new version
+    * reads. Only the BIG frame is checkpointed: the centroid plan nests
+    * one tiny, broadcast-joined layer per round (linear growth; its
+    * anti-join/union stats don't multiply), so re-evaluating it stays
+    * cheap while skipping a materialization job per round.
+    * `None` (no cluster in the split set could be separated)
+    * returns `model` itself, the fixed point [[splitRounds]] stops on. */
+  private def finished(model: Model, members: DataFrame)(
+      split: DataFrame => Option[Model]): Model = {
+    members.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try split(members) match {
       case None => model
-      case Some((refined, members)) =>
-        // the returned plan is lazy; its sub-assignment legs recompute the
-        // members semi-join once when the caller materializes (callers that
-        // materialize eagerly use refineKeepCache to skip that recompute)
-        members.unpersist()
-        refined
-    }
+      case Some(m) => Model(m.centroids, graft.Caching.truncate(m.assigned, eager = true))
+    } finally members.unpersist()
   }
 
-  /** [[refine]] for callers that materialize eagerly (the streaming
-    * maintenance loop, mirroring [[splitKWayKeepCache]]): the
-    * oversized-member cache stays alive through the caller's
-    * materialization — unpersist it afterwards. `None` at the fixed
-    * point (nothing splittable). */
-  private[graft] def refineKeepCache(
-      model: Model,
-      density: Int,
-      metric: Metric,
-      iters: Int = 3): Option[(Model, DataFrame)] = {
-    require(density > 0, s"density must be positive, got $density")
-    refineImpl(model, density, metric, iters)
-  }
-
-  private def refineImpl(
-      model: Model,
-      density: Int,
-      metric: Metric,
-      iters: Int): Option[(Model, DataFrame)] = {
+  /** [[refine]]'s binary 2-means over the persisted split-set members. */
+  private def refineMembers(model: Model, members: DataFrame, metric: Metric): Option[Model] = {
     val assigned = model.assigned
-    val sizes = assigned.groupBy(col("cluster_id")).agg(count(lit(1)).as("__n"))
-    val oversizedIds = sizes.where(col("__n") > density).select("cluster_id")
-    if (oversizedIds.isEmpty) return None
-
-    val members = assigned.join(broadcast(oversizedIds), Seq("cluster_id"), "left_semi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // Deterministic seeding: sub-0 = the min-id member; sub-1 = the
     // member farthest from it (ties → min id) — the farthest-point
@@ -853,7 +854,7 @@ object IvfIndex {
     // exactly the mean of the members assigned to it).
     var centPrev = graft.Caching.truncate(seed0.join(seed1, Seq("cluster_id")), eager = false)
     var cent = centPrev
-    (1 to math.max(iters, 1)).foreach { _ =>
+    (1 to SplitIters).foreach { _ =>
       centPrev = cent
       cent = graft.Caching.truncate(lloydRound(cent), eager = false)
     }
@@ -874,7 +875,7 @@ object IvfIndex {
     // `WindowExec: No Partition Defined`).
     val effIds = cent.where(col("__has1")).select("cluster_id")
       .collect().map(_.getInt(0)).sorted
-    if (effIds.isEmpty) { members.unpersist(); return None }
+    if (effIds.isEmpty) return None
     val maxId = model.centroids.agg(max(col("cluster_id"))).head().getInt(0)
     val spark = assigned.sparkSession
     import spark.implicits._
@@ -907,15 +908,34 @@ object IvfIndex {
       .unionByName(splitCentroids.select(col("cluster_id"), col("__s0").as("centroid")))
       .unionByName(splitCentroids.select(col("__new_id").as("cluster_id"), col("__s1").as("centroid")))
 
-    Some((Model(newCentroids, newAssigned), members))
+    Some(Model(newCentroids, newAssigned))
   }
 
-  /** Cap on how many sub-clusters one [[splitKWay]] round creates per
+  /** Lloyd steps per split step, both [[refine]] and [[splitKWay]]: 1
+    * step leaves seed-Voronoi cuts so lopsided that a split loop needs
+    * extra full rounds (measured strictly slower end-to-end); past ~3,
+    * extra steps no longer reduce the round count under the 1.3×
+    * over-split — they are pure added stage latency in the checkpoint
+    * chain. The `ivf_refine_stats` / `ivf_balanced_stats` oracles unroll
+    * exactly 3. */
+  private val SplitIters = 3
+
+  /** Cap on how many sub-clusters one [[splitKWay]] step creates per
     * oversized cluster: bounds the per-row argmin fold and the packed
-    * broadcast sub-centroid row. A cluster needing more than `maxWay`
-    * pieces is split again next round — maxWay-ary instead of binary
-    * progress, so the round count is log_maxWay, not log_2. */
-  val DefaultMaxWay = 256
+    * broadcast sub-centroid row. A cluster needing more pieces is split
+    * again next round — 256-ary instead of binary progress, so the round
+    * count is log_256, not log_2. */
+  private val MaxWay = 256
+
+  /** [[splitKWay]]'s piece count for a cluster of `n` rows, which
+    * [[maintenancePlan]] reports as `split_way`: `ceil(n·1.3/density)`,
+    * at most [[MaxWay]]. The 1.3× over-split: pieces sized for MEAN
+    * fill = density would leave every above-average Lloyd cell a
+    * straggler needing another full round (assignment pass +
+    * checkpoint); 30% slack lands most cells under density in one round,
+    * trading slightly lower fill for round count. */
+  private def splitWay(n: Column, density: Int): Column =
+    least(ceil(n.cast("double") * 1.3 / density), lit(MaxWay)).cast("int")
 
   /** Per-cluster sub-centroid argmin — the [[assign]] fold scoped to the
     * packed `(cluster_id, array<(sub, centroid)>)` row each member joined.
@@ -935,9 +955,10 @@ object IvfIndex {
 
   /** K-WAY batch split — [[refine]]'s multi-round 2-means collapsed into
     * one round: every cluster over `density` splits directly into
-    * `min(ceil(n/density), maxWay)` sub-clusters via a seeded per-cluster
-    * Lloyd. [[refine]] keeps the reference's replace-and-append semantics
-    * exactly (ONE appended cluster per split, `index.rs:295-300`); this
+    * [[splitWay]] sub-clusters (`ceil(n·1.3/density)`, at most 256) via a
+    * seeded per-cluster Lloyd. [[refine]] keeps the reference's
+    * replace-and-append semantics exactly (ONE appended cluster per
+    * split, `index.rs:295-300`); this
     * is the scale path for [[buildBalanced]], where walking from a
     * kMax-capped coarse build down to density with binary splits costs
     * log2(coarse/density) full assignment passes + checkpoints.
@@ -955,53 +976,21 @@ object IvfIndex {
     * frame itself). Degenerate clusters (one live sub — e.g. all-identical
     * members) drop out of the split set unchanged; when nothing is
     * splittable the input model is returned unchanged (`eq`), so
-    * fixed-point loops terminate. */
-  def splitKWay(
-      model: Model,
-      density: Int,
-      metric: Metric = Metric.Euclidean,
-      iters: Int = 5,
-      maxWay: Int = DefaultMaxWay): Model = {
+    * [[splitRounds]] terminates. Like [[refine]]'s, the result is a
+    * finished version: assignment checkpointed, members cache released. */
+  def splitKWay(model: Model, density: Int, metric: Metric = Metric.Euclidean): Model = {
     require(density > 0, s"density must be positive, got $density")
-    splitKWayImpl(model, density, metric, iters, maxWay) match {
-      case None => model
-      case Some((split, members)) =>
-        members.unpersist()
-        split
-    }
+    val targets = splitSet(model.assigned, density)
+      .select(col("cluster_id"), splitWay(col("__n"), density).as("__kc"))
+    if (targets.isEmpty) model
+    else finished(model, model.assigned.join(broadcast(targets), Seq("cluster_id")))(
+      splitKWayMembers(model, _, metric))
   }
 
-  /** [[splitKWay]] for callers that materialize eagerly (the
-    * [[buildBalanced]] round loop): the oversized-member cache stays
-    * alive through the caller's materialization; unpersist afterwards. */
-  private[graft] def splitKWayKeepCache(
-      model: Model,
-      density: Int,
-      metric: Metric,
-      iters: Int,
-      maxWay: Int): Option[(Model, DataFrame)] =
-    splitKWayImpl(model, density, metric, iters, maxWay)
-
-  private def splitKWayImpl(
-      model: Model,
-      density: Int,
-      metric: Metric,
-      iters: Int,
-      maxWay: Int): Option[(Model, DataFrame)] = {
-    require(maxWay >= 2, s"maxWay must be at least 2, got $maxWay")
+  /** [[splitKWay]]'s seeded per-cluster Lloyd over the persisted
+    * split-set members, each carrying its piece count `__kc`. */
+  private def splitKWayMembers(model: Model, members: DataFrame, metric: Metric): Option[Model] = {
     val assigned = model.assigned
-    val sizes = assigned.groupBy(col("cluster_id")).agg(count(lit(1)).as("__n"))
-    // 1.3× over-split: k_c sized for MEAN fill = density would leave every
-    // above-average Lloyd cell a straggler needing another full round
-    // (assignment pass + checkpoint); 30% slack lands most cells under
-    // density in one round, trading slightly lower fill for round count.
-    val targets = sizes.where(col("__n") > density)
-      .select(col("cluster_id"),
-        least(ceil(col("__n").cast("double") * 1.3 / density), lit(maxWay)).cast("int").as("__kc"))
-    if (targets.isEmpty) return None
-
-    val members = assigned.join(broadcast(targets), Seq("cluster_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // Seeds: the min-id member of each of k_c id-hash buckets — a
     // deterministic pseudo-random spread in ONE map-side-combinable
@@ -1037,7 +1026,7 @@ object IvfIndex {
     // mean of its final members — one consistent Lloyd step, like refine).
     var centPrev = graft.Caching.truncate(seed, eager = false)
     var cent = centPrev.withColumn("__live", lit(true))
-    (1 to math.max(iters, 1)).foreach { _ =>
+    (1 to SplitIters).foreach { _ =>
       val base = cent.select("cluster_id", "__sub", "__c")
       centPrev = base
       cent = graft.Caching.truncate(lloydRound(base), eager = false)
@@ -1048,7 +1037,7 @@ object IvfIndex {
     val live = cent.where(col("__live")).select(col("cluster_id"), col("__sub"))
       .collect().map(r => (r.getInt(0), r.getInt(1)))
     val bySplit = live.groupBy(_._1).filter(_._2.length >= 2)
-    if (bySplit.isEmpty) { members.unpersist(); return None }
+    if (bySplit.isEmpty) return None
     val maxId = model.centroids.agg(max(col("cluster_id"))).head().getInt(0)
     // lowest live sub keeps the old cluster id; the rest append in
     // deterministic (cluster_id, sub) order. The (cid, -1, cid) row keeps
@@ -1080,7 +1069,7 @@ object IvfIndex {
       .select(col("__tid").as("cluster_id"), col("__c").as("centroid"))
     val newCentroids = keptCentroids.unionByName(splitCentroids)
 
-    Some((Model(newCentroids, newAssigned), members))
+    Some(Model(newCentroids, newAssigned))
   }
 
   /** Cluster COMPACTION — the inverse of [[splitKWay]]: clusters drained
@@ -1160,10 +1149,10 @@ object IvfIndex {
     * populated cluster is under the floor, the one that would survive
     * (largest fill, ties → lowest id) reads `ok`, so the plan never
     * schedules a merge the executor would refuse.
-    * `split_way` is [[splitKWay]]'s own target arithmetic
-    * (`ceil(n·1.3/density)` clamped to `maxWay` — the 30 % over-split
-    * documented there), null for non-split rows, so the plan states
-    * exactly what the executor would do, not an approximation of it.
+    * `split_way` is [[splitKWay]]'s own piece count, the one
+    * [[splitWay]] column both use (`ceil(n·1.3/density)`, at most 256),
+    * null for non-split rows, so the plan states exactly what the
+    * executor would do, not an approximation of it.
     *
     * The plan enumerates the CENTROID set: assigned rows under a
     * cluster_id with no centroid row (a corrupt store) are not listed —
@@ -1176,8 +1165,7 @@ object IvfIndex {
   def maintenancePlan(
       model: Model,
       density: Int,
-      minSize: Long,
-      maxWay: Int = DefaultMaxWay): DataFrame = {
+      minSize: Long): DataFrame = {
     require(density > 0, s"density must be positive, got $density")
     require(minSize > 0, s"minSize must be positive, got $minSize")
     val sizes = model.assigned.groupBy(col("cluster_id"))
@@ -1202,18 +1190,35 @@ object IvfIndex {
             !(col("__anyBig") === 0 && (col("cluster_id") <=> col("__topc"))),
             lit("merge"))
           .otherwise(lit("ok")))
-      .withColumn("split_way",
-        when(col("n") > density,
-          least(ceil(col("n").cast("double") * 1.3 / density), lit(maxWay))
-            .cast("int")))
+      .withColumn("split_way", when(col("n") > density, splitWay(col("n"), density)))
       .drop("__anyBig", "__topc")
   }
 
-  /** Default bound on [[buildBalanced]]'s split rounds. With the k-way
-    * split each round multiplies the worst cluster's piece count by up to
-    * `maxWay`; 32 rounds is unreachable headroom (binary-split refine
-    * would already cover a 2^32× density violation in 32). */
-  val DefaultMaxRefineRounds = 32
+  /** What a [[splitRounds]] loop ran: the last index version, how many
+    * split rounds changed it, and whether it stopped at the fixed point
+    * (a round returned its input, `eq` — nothing left it could split)
+    * rather than at the round cap. */
+  final case class SplitRun(model: Model, rounds: Int, converged: Boolean)
+
+  /** The split-round loop — split to density in one place: apply `step`
+    * ([[refine]] or [[splitKWay]] at the caller's density; the choice of
+    * binary or k-way splitting is the caller's) until a round returns its
+    * input unchanged or `maxRounds` rounds have changed it. Each step
+    * returns a finished version (checkpointed assignment), so rounds
+    * never nest lineage and nothing here touches a step's caches. At the
+    * cap the run reports `converged = false` with `rounds == maxRounds`;
+    * a model with nothing splittable comes back as itself (`eq`), 0
+    * rounds, converged. */
+  def splitRounds(model: Model, maxRounds: Int)(step: Model => Model): SplitRun = {
+    @annotation.tailrec
+    def loop(m: Model, rounds: Int): SplitRun =
+      if (rounds >= maxRounds) SplitRun(m, rounds, converged = false)
+      else {
+        val next = step(m)
+        if (next eq m) SplitRun(m, rounds, converged = true) else loop(next, rounds + 1)
+      }
+    loop(model, 0)
+  }
 
   /** Two-level build (SURVEY.md §2 O9 at any n): [[build]]'s single-level
     * k-means caps k at `kMax`, beyond which the density contract degrades
@@ -1238,15 +1243,7 @@ object IvfIndex {
       density: Int,
       metric: Metric = Metric.Euclidean,
       seed: Long = 42L,
-      kMax: Int = DefaultKMax,
-      maxRounds: Int = DefaultMaxRefineRounds,
-      // 3 Lloyd steps per split round: 1 step leaves seed-Voronoi cuts
-      // so lopsided the loop needs extra full rounds (measured strictly
-      // slower end-to-end); past ~3, extra steps no longer reduce round
-      // count under the 1.3× over-split — they are pure added stage
-      // latency in the checkpoint chain.
-      iters: Int = 3,
-      maxWay: Int = DefaultMaxWay): Model = {
+      kMax: Int = DefaultKMax): Model = {
     // loose coarse fit (3 Lloyd iterations): the split loop below refines
     // every oversized cluster anyway, so converging the coarse centroids
     // first is wasted work — only their seeded determinism and rough
@@ -1255,67 +1252,40 @@ object IvfIndex {
     val coarse = build(records, density, metric, seed, kMax, maxIter = 3)
     // checkpoint the coarse assignment once: each split round actions the
     // assignment several times (sizes, members, final anti-join) — raw,
-    // every action would re-run the scan + argmin assign pass
-    var m = Model(coarse.centroids, graft.Caching.truncate(coarse.assigned, eager = true))
-    var rounds = 0
-    var progressed = true
-    while (progressed && rounds < maxRounds) {
-      splitKWayKeepCache(m, density, metric, iters, maxWay) match {
-        case None => progressed = false // nothing splittable: fixed point
-        case Some((split, members)) =>
-          // only the BIG frame needs the per-round checkpoint: the
-          // centroid plan nests one (tiny, broadcast-joined) layer per
-          // round — linear growth, and anti-join/union stats don't
-          // multiply — so re-evaluating it stays cheap while skipping a
-          // materialization job per round.
-          m = Model(split.centroids, graft.Caching.truncate(split.assigned, eager = true))
-          members.unpersist() // checkpoint is materialized; cache done
-          rounds += 1
-      }
-    }
-    m
+    // every action would re-run the scan + argmin assign pass.
+    // 32 rounds is unreachable headroom: each k-way round multiplies the
+    // worst cluster's piece count by up to 256 (binary-split refine would
+    // already cover a 2^32× density violation in 32).
+    splitRounds(Model(coarse.centroids, graft.Caching.truncate(coarse.assigned, eager = true)),
+      maxRounds = 32)(splitKWay(_, density, metric)).model
   }
 
   /** DETERMINISTIC two-level build: a caller-supplied coarse partition
     * (fixed centroids here; any kMax-bounded coarse model) refined to
     * the density contract by repeated BINARY adaptive splits
-    * ([[refine]]), at most `maxRounds` rounds, stopping early at the
-    * fixed point. [[buildBalanced]] (k-way splits over an MLlib coarse
-    * fit) is the production fast path — log_maxWay rounds instead of
+    * ([[refine]]), at most 12 rounds, stopping early at the fixed
+    * point. [[buildBalanced]] (k-way splits over an MLlib coarse
+    * fit) is the production fast path — log_256 rounds instead of
     * log₂ — but its coarse fit is engine-internal; THIS build is
     * replayable step by step by an independent engine (seeded argmin
     * assignment, min-id/farthest-point 2-means seeding, r4-quantized
     * exact means), which is what lets the `ivf_balanced_stats` oracle
     * state the exact final cluster census instead of boolean
-    * invariants. Semantics of "up to maxRounds" are part of the
+    * invariants. Semantics of "up to 12 rounds" are part of the
     * contract both engines share: a corpus that needs more rounds
     * leaves the same residual oversize on both sides. */
   def buildBalancedRefine(
       records: DataFrame,
       coarse: DataFrame,
       density: Int,
-      metric: Metric = Metric.Euclidean,
-      // binary splits are UNEVEN (farthest-point seeds cut where the
-      // data is widest, not where the median sits), so the round budget
-      // must exceed log2(coarse cluster / density): 6 rounds left a
-      // 92-doc cluster at density 64 from ~500-doc coarse clusters
-      maxRounds: Int = 12,
-      iters: Int = 3): Model = {
-    require(maxRounds > 0, s"maxRounds must be positive, got $maxRounds")
-    var m = Model(coarse, graft.Caching.truncate(assign(records, coarse, metric), eager = true))
-    var rounds = 0
-    var progressed = true
-    while (progressed && rounds < maxRounds) {
-      refineKeepCache(m, density, metric, iters) match {
-        case None => progressed = false
-        case Some((split, members)) =>
-          m = Model(split.centroids, graft.Caching.truncate(split.assigned, eager = true))
-          members.unpersist()
-          rounds += 1
-      }
-    }
-    m
-  }
+      metric: Metric = Metric.Euclidean): Model =
+    // 12 rounds, the count the `ivf_balanced_stats` oracle unrolls: binary
+    // splits are UNEVEN (farthest-point seeds cut where the data is
+    // widest, not where the median sits), so the budget must exceed
+    // log2(coarse cluster / density) — 6 rounds left a 92-doc cluster at
+    // density 64 from ~500-doc coarse clusters
+    splitRounds(Model(coarse, graft.Caching.truncate(assign(records, coarse, metric), eager = true)),
+      maxRounds = 12)(refine(_, density, metric)).model
 
   /** Batch probed ANN: many queries against the index at once, each
     * pruned to its own nearest `probes` clusters.
@@ -1577,7 +1547,8 @@ object IvfIndex {
     * `applyDiff(indexOf(old), diff(old, new))` holds exactly the same
     * (id, cluster) rows as assigning `new` from scratch against the
     * same centroids. Centroids are NOT refit here — density repair
-    * stays [[refine]]'s job, exactly as in the ingest path.
+    * stays the split loop's job ([[splitRounds]] of [[splitKWay]] or
+    * [[refine]]), exactly as in the ingest path.
     *
     * Plan: one anti-join of the store against the (typically tiny,
     * AQE-broadcast) touched-id set + a map-only assign of the upserts +

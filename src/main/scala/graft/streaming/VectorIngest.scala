@@ -86,9 +86,12 @@ object VectorIngest {
     * queries over the store keep their partition-pruning path while
     * ingest is running. The built-in parquet file sink gives exactly-once
     * appends via its commit log (`_spark_metadata`) — a failed batch
-    * never double-writes. Periodic [[graft.operators.IvfIndex.refine]]
-    * over the store is the maintenance half of the reference's adaptive
-    * split (run it between ingest windows, not per record). */
+    * never double-writes. A periodic split to density over the store
+    * ([[graft.operators.IvfIndex.splitRounds]] of
+    * [[graft.operators.IvfIndex.splitKWay]] or
+    * [[graft.operators.IvfIndex.refine]]) is the maintenance half of the
+    * reference's adaptive split (run it between ingest windows, not per
+    * record); [[startMaintained]] schedules it automatically. */
   def startToPartitionedStore(
       spark: SparkSession,
       dir: String,
@@ -156,11 +159,13 @@ object VectorIngest {
     * density contract from a driver-side running size map (updated from
     * the batch's per-cluster counts — bounded by cluster count, never a
     * store rescan), and when any cluster exceeds `density` it runs
-    * [[graft.operators.IvfIndex.refine]] to its fixed point, writes the
-    * refined index as the NEXT store version directory, and swaps
-    * centroids + store path for subsequent batches and readers — the
-    * batch analog of the reference's per-insert adaptive split, amortized
-    * to once per violation instead of once per record.
+    * k-way splits ([[graft.operators.IvfIndex.splitKWay]] through
+    * [[graft.operators.IvfIndex.splitRounds]], at most 16 rounds) to the
+    * fixed point, writes the refined index as the NEXT store version
+    * directory, and swaps centroids + store path for subsequent batches
+    * and readers — the batch analog of the reference's per-insert
+    * adaptive split, amortized to once per violation instead of once per
+    * record.
     *
     * Consistency note: the plain file-sink path
     * ([[startToPartitionedStore]]) gets exactly-once appends from the
@@ -180,10 +185,9 @@ object VectorIngest {
       storeBase: String,
       checkpointPath: String,
       density: Int,
-      maxRefineRounds: Int = 16,
       maxStoreFiles: Int = 0): MaintainedIngest = {
     val state = new MaintainedIngest(spark, initialCentroids, metric, dim,
-      storeBase, density, maxRefineRounds, maxStoreFiles)
+      storeBase, density, maxStoreFiles)
     val query = readRecords(spark, dir)
       .writeStream
       .foreachBatch((batch: DataFrame, _: Long) => state.processBatch(batch))
@@ -330,7 +334,6 @@ final class MaintainedIngest private[streaming] (
     dim: Int,
     storeBase: String,
     density: Int,
-    maxRefineRounds: Int,
     maxStoreFiles: Int = 0) {
   import org.apache.spark.sql.functions.{col, count, lit}
 
@@ -479,33 +482,19 @@ final class MaintainedIngest private[streaming] (
   }
 
   private def refineNow(): Unit = {
-    var m = IvfIndex.Model(cents, spark.read.parquet(storePath))
-    var rounds = 0
-    var fixedPoint = false
-    // per-round truncation — the buildBalanced discipline: each refine
-    // round nests a union+join layer and the loop (plus the final
-    // rewrite) actions the frame several times; raw, every action would
-    // re-run the whole nested lineage from the parquet scan.
     // K-WAY splits (the buildBalanced operator), not binary refine: the
     // r13 duplicate-skew fixture showed binary 2-means peels background
     // off a duplicate-heavy ball a fringe at a time (farthest-point
     // seeds land on outliers; the tight ball drags both means), needing
     // rounds ∝ the co-resident population instead of log — a streaming
-    // maintenance loop must restore density in O(log_maxWay) rounds of
-    // the worst violation regardless of WHY the cluster is hot.
-    while (!fixedPoint && rounds < maxRefineRounds) {
-      IvfIndex.splitKWayKeepCache(m, density, metric, iters = 3,
-          maxWay = IvfIndex.DefaultMaxWay) match {
-        case None => fixedPoint = true
-        case Some((refined, members)) =>
-          m = IvfIndex.Model(refined.centroids,
-            graft.Caching.truncate(refined.assigned, eager = true))
-          members.unpersist() // checkpoint is materialized; cache done
-          rounds += 1
-      }
-    }
-    if (rounds == 0) {
-      // no cluster could be split (refine's fixed point is the input):
+    // maintenance loop must restore density in O(log_256) rounds of the
+    // worst violation regardless of WHY the cluster is hot. Each round
+    // is a checkpointed version, so the final rewrite below reads no
+    // nested lineage; 16 rounds is far past any reachable violation.
+    val run = IvfIndex.splitRounds(IvfIndex.Model(cents, spark.read.parquet(storePath)),
+      maxRounds = 16)(IvfIndex.splitKWay(_, density, metric))
+    if (run.rounds == 0) {
+      // no cluster could be split (the split's fixed point is the input):
       // a rewrite would copy the store for nothing, every batch — record
       // the failed violation size and keep serving the current version
       failedAt = sizes.filter(_._2 > density).toMap
@@ -514,8 +503,8 @@ final class MaintainedIngest private[streaming] (
     failedAt = Map.empty
     val next = vers + 1
     Commit.publishVersion(spark, storeBase, next) { (dataTmp, centTmp) =>
-      m.assigned.write.mode("overwrite").partitionBy("cluster_id").parquet(dataTmp)
-      m.centroids.write.mode("overwrite").parquet(centTmp)
+      run.model.assigned.write.mode("overwrite").partitionBy("cluster_id").parquet(dataTmp)
+      run.model.centroids.write.mode("overwrite").parquet(centTmp)
     }
     val recovered = spark.read.parquet(Commit.centroidsDir(storeBase, next))
     // re-seed the running sizes from the rewritten store's partition
@@ -529,7 +518,7 @@ final class MaintainedIngest private[streaming] (
     // (not the round cap) are exactly the unsplittable ones — record
     // them so the next batch doesn't burn a refine attempt rediscovering
     // that; a round-capped pass leaves them re-attemptable
-    if (fixedPoint) failedAt = sizes.filter(_._2 > density).toMap
+    if (run.converged) failedAt = sizes.filter(_._2 > density).toMap
     // subsequent batches assign against the PERSISTED centroids — a flat
     // parquet scan, not the refine loop's lineage — and centroids+version
     // publish as ONE volatile pair (reader consistency)

@@ -344,6 +344,64 @@ class IvfIndexSpec extends SparkSpec {
     assert(m.assigned.count() === 200)
   }
 
+  test("the unassigned sentinel cluster_id = -1 is never split: wrong-width rows " +
+    "leave both split steps at the input model") {
+    // an 8-dim store: two populated centroids within density, plus 40
+    // DISTINCT 4-wide rows — no finite distance to any centroid, so
+    // assign leaves them at -1. They are more than density and
+    // separable, so a split set that counted -1 would split it into
+    // centroids of the wrong width.
+    val w = 8
+    val rnd = new scala.util.Random(3)
+    val good = (0 until 10).map(i =>
+      (i.toLong, Seq.fill(w)(rnd.nextFloat() + (i % 2) * 5f), Map("k" -> "g")))
+    val ragged = (100 until 140).map(i =>
+      (i.toLong, Seq.fill(4)(rnd.nextFloat() * i), Map("k" -> "r")))
+    val df = (good ++ ragged).toDF("id", "embedding", "metadata")
+    val c = Seq((0, Seq.fill(w)(0.5f)), (1, Seq.fill(w)(5.5f))).toDF("cluster_id", "centroid")
+      .withColumn("centroid", col("centroid").cast("array<float>"))
+    val model = IvfIndex.Model(c, IvfIndex.assign(df, c, Metric.Euclidean))
+    assert(model.assigned.where(col("cluster_id") === -1).count() === 40,
+      "fixture: the 4-wide rows must stay unassigned")
+    assert(IvfIndex.refine(model, density = 10, Metric.Euclidean) eq model)
+    assert(IvfIndex.splitKWay(model, density = 10, Metric.Euclidean) eq model)
+    assert(model.centroids.count() === 2, "no centroid added")
+  }
+
+  test("the split-round loop tells the round cap from the fixed point") {
+    val centroids = records.where(col("id") < 4)
+      .select(col("id").cast("int").as("cluster_id"), col("embedding").as("centroid"))
+    val model = IvfIndex.Model(centroids, IvfIndex.assign(records, centroids, Metric.Euclidean))
+    // 1000 rows from 4 clusters to density 50 take more than 2 binary rounds
+    val capped = IvfIndex.splitRounds(model, maxRounds = 2)(
+      IvfIndex.refine(_, density = 50, Metric.Euclidean))
+    assert(!capped.converged, "stopped by the cap, not at the fixed point")
+    assert(capped.rounds === 2)
+    assert(capped.model.centroids.count() > 4)
+    // run on to density: converged, and every cluster within it
+    val done = IvfIndex.splitRounds(model, maxRounds = 32)(
+      IvfIndex.splitKWay(_, density = 50, Metric.Euclidean))
+    assert(done.converged && done.rounds >= 1)
+    assert(done.model.assigned.groupBy("cluster_id").count().agg(max("count"))
+      .as[Long].head() <= 50L)
+    // a degenerate-only store (all-identical members): nothing either step
+    // can split — 0 rounds, converged, the input model itself
+    val identical = (0 until 200).map(i => (i.toLong, Seq.fill(dim)(0.5f), Map("k" -> "v")))
+      .toDF("id", "embedding", "metadata")
+    val c = Seq((0, Seq.fill(dim)(0.5f))).toDF("cluster_id", "centroid")
+      .withColumn("centroid", col("centroid").cast("array<float>"))
+    val degenerate = IvfIndex.Model(c, IvfIndex.assign(identical, c, Metric.Euclidean))
+    val steps: Seq[IvfIndex.Model => IvfIndex.Model] = Seq(
+      IvfIndex.refine(_, density = 50, Metric.Euclidean),
+      IvfIndex.splitKWay(_, density = 50, Metric.Euclidean))
+    steps.foreach { step =>
+      val run = IvfIndex.splitRounds(degenerate, maxRounds = 16)(step)
+      assert(run.model eq degenerate)
+      assert(run.rounds === 0)
+      assert(run.converged)
+    }
+  }
+
   test("splitKWay keeps a NaN-embedding member under its old cluster id (no record lost)") {
     val rnd = new scala.util.Random(5)
     val rows = (0 until 150).map(i => (i.toLong, Seq.fill(dim)(rnd.nextFloat()), Map("k" -> "v"))) :+
@@ -1015,23 +1073,8 @@ class IvfIndexSpec extends SparkSpec {
   // outliers, the tight ball drags both means; measured ~10%/round on
   // this fixture), needing rounds ∝ co-resident population instead of
   // log — which is exactly why refineNow switched to splitKWay (r13).
-  private def kwayToDensity(m0: IvfIndex.Model, density: Int): IvfIndex.Model = {
-    var m = m0
-    var rounds = 0
-    var done = false
-    while (!done && rounds < 32) {
-      IvfIndex.splitKWayKeepCache(m, density, Metric.Euclidean,
-          iters = 3, maxWay = IvfIndex.DefaultMaxWay) match {
-        case None => done = true
-        case Some((split, members)) =>
-          m = IvfIndex.Model(split.centroids,
-            Caching.truncate(split.assigned, eager = true))
-          members.unpersist()
-          rounds += 1
-      }
-    }
-    m
-  }
+  private def kwayToDensity(m0: IvfIndex.Model, density: Int): IvfIndex.Model =
+    IvfIndex.splitRounds(m0, maxRounds = 32)(IvfIndex.splitKWay(_, density, Metric.Euclidean)).model
 
   test("adversarial skew: a near-duplicate family at 5x density collapses " +
     "into one coarse cluster and the maintained path (build -> applyDiff " +

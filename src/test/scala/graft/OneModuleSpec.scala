@@ -16,7 +16,9 @@ import scala.jdk.CollectionConverters._
   * main source over 3,000 lines (the query catalog is split by family,
   * `graft/catalog/`). Cache lifetime is the catalog runner's
   * (`Catalog.run`): no other main source clears the session cache, and
-  * Bench warms the declared fixtures, not query names. */
+  * Bench warms the declared fixtures, not query names. A split step
+  * ([[graft.operators.IvfIndex.refine]], `splitKWay`) returns a finished
+  * version, so only `IvfIndex.scala` releases a split's members cache. */
 class OneModuleSpec extends SparkSpec {
 
   private val mainRoot = Paths.get("src", "main")
@@ -98,6 +100,12 @@ class OneModuleSpec extends SparkSpec {
     val text = new String(Files.readAllBytes(bench), "UTF-8")
     val named = SparkEntry.queries.keySet.filter(n => text.contains("\"" + n + "\"")).toSeq.sorted
     assert(named.isEmpty, s"Bench.scala names catalog queries: $named")
+  }
+
+  test("a split step owns its members cache: no KeepCache fork, " +
+    "and only IvfIndex.scala unpersists split members") {
+    assert(offenders("KeepCache", _ => false).isEmpty)
+    onlyIn("IvfIndex.scala", "members.unpersist")
   }
 
   test("no main Scala source is over 3,000 lines") {

@@ -204,16 +204,35 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("refine plans no Window operator (seeds/ids via aggregates, not sorts)") {
+    // each step returns a checkpointed version, so its result's own plan is
+    // a scan; the seeding and the Lloyd rounds ran as the checkpoints'
+    // executions, which a QueryExecutionListener sees one by one
     val r = graft.sources.Records.fromEmbeddings(spark, sf)
     val c = r.where(col("id") < 2)
       .select(col("id").cast("int").as("cluster_id"), col("embedding").as("centroid"))
-    val model = IvfIndex.Model(c, IvfIndex.assign(r, c, graft.types.Metric.Euclidean))
-    val refined = IvfIndex.refine(model, density = 100, graft.types.Metric.Euclidean)
-    val windows = refined.assigned.queryExecution.executedPlan.collect {
-      case w if w.nodeName.contains("Window") => w
+    val model = IvfIndex.Model(c, IvfIndex.assign(r, c, Metric.Euclidean))
+    val plans = scala.collection.mutable.ArrayBuffer.empty[String]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        plans.synchronized { plans += qe.executedPlan.toString }
+      def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
     }
-    assert(windows.isEmpty,
-      "refine must not sort members through a window (row_number seeds were replaced by min_by/max_by)")
+    spark.listenerManager.register(listener)
+    val (refined, split) =
+      try {
+        val out = (IvfIndex.refine(model, density = 100, Metric.Euclidean),
+          IvfIndex.splitKWay(model, density = 100, Metric.Euclidean))
+        org.apache.spark.graft.ListenerDrain(spark.sparkContext)
+        out
+      } finally spark.listenerManager.unregister(listener)
+    assert(!(refined eq model) && !(split eq model), "both steps must split")
+    assert(plans.exists(_.contains("min_by")), "the seed aggregates must be among the captured plans")
+    val windowed = plans.filter(_.contains("Window"))
+    assert(windowed.isEmpty,
+      "a split step sorted members through a window (seeds and ids are " +
+        "min_by/max_by aggregates, not row_number):\n" + windowed.headOption.getOrElse(""))
   }
 
   test("minhash LSH tokenizes each doc ONCE (verification reads the cached hashes)") {

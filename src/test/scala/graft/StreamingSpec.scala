@@ -321,17 +321,12 @@ class StreamingSpec extends SparkSpec {
       Metric.Euclidean, dim, store, ckpt).awaitTermination()
 
     // maintenance: refine the store to the density fixed point (the
-    // reference splits per insert; batch-side the scheduled job calls
-    // refine until the contract holds — `eq` return marks the fixed point)
+    // reference splits per insert; batch-side the scheduled job runs the
+    // split-round loop until the contract holds — `eq` return marks the
+    // fixed point)
     val density = 40
-    var m = IvfIndex.Model(centroids, spark.read.parquet(store))
-    var prev: IvfIndex.Model = null
-    var rounds = 0
-    while (!(m eq prev) && rounds < 16) {
-      prev = m
-      m = IvfIndex.refine(m, density, Metric.Euclidean)
-      rounds += 1
-    }
+    val m = IvfIndex.splitRounds(IvfIndex.Model(centroids, spark.read.parquet(store)),
+      maxRounds = 16)(IvfIndex.refine(_, density, Metric.Euclidean)).model
     val sizes = m.assigned.groupBy(col("cluster_id")).count()
       .as[(Int, Long)].collect().toMap
     assert(sizes.values.sum === 300L, "records lost during maintenance")

@@ -19,7 +19,7 @@ class MaintainedSuppressionSpec extends graft.SparkSpec {
     val c1 = Seq.fill(dim)(5.0f)
     val centroids = Seq((0, c0), (1, c1)).toDF("cluster_id", "centroid")
     val job = new MaintainedIngest(spark, centroids, Metric.Euclidean, dim,
-      s"$base/store", density = 10, maxRefineRounds = 16)
+      s"$base/store", density = 10)
 
     // batch 1: 25 IDENTICAL records at c0 — the cluster violates density
     // but 2-means cannot split identical points: refine attempt fails,
