@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: one JSON line of per-query wall times at the target SF.
   *
@@ -22,13 +21,8 @@ object Bench {
     val only = args.toSet
     catalog.Catalog.select(only)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession()
+    val cpus = spark.conf.get("spark.sql.shuffle.partitions")
     // Session warmup, timed and reported (warmup_s and its per-step
     // breakdown): the catalog's declared session fixtures, each built once
     // as a production session builds them once per corpus version, and the

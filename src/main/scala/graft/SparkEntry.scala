@@ -18,4 +18,20 @@ object SparkEntry {
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   val oracleSql: Map[String, String] = Catalog.all.map(q => q.name -> q.oracleSql).toMap
+
+  /** The session `Verify` and `Bench` run in, so both run one program:
+    * `local[$SPARK_GRAFT_CPUS]` (default 4) with one shuffle partition per
+    * core, the UTC session time zone (the queries that format times read
+    * it) and no UI. */
+  def localSession(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

@@ -1,6 +1,5 @@
 package graft
 import graft.catalog.Catalog
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Correctness dump: each SparkEntry.queries result → parquet, plus
   * oracle_sql.json, for the DuckDB compare (`tools/compare.py`). The queries run
@@ -14,14 +13,7 @@ object Verify {
     // An unknown name fails here, before the session starts.
     val only = args.drop(2).toSet
     Catalog.select(only)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession()
     // A FULL run owns its dumps: clear stale per-query dumps first, so a
     // leftover parquet from an earlier narrowed run (or a renamed query)
     // can never satisfy the compare with pre-change results. Only entries

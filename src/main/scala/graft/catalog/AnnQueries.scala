@@ -45,7 +45,7 @@ object AnnQueries {
          |    THEN (CAST(1 AS BIGINT) << CAST(pr.i AS INT)) ELSE 0 END) AS BIGINT) AS bucket
          |  FROM embeddings e CROSS JOIN pr GROUP BY e.vec_id),
          |qb AS (SELECT bucket FROM bk WHERE vec_id = 0),
-         |q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0),
+         |$sqlQ0,
          |cand AS (
          |  SELECT e.vec_id, e.embedding FROM embeddings e JOIN bk ON e.vec_id = bk.vec_id, qb
          |  WHERE list_contains(list_transform([0, 1, 2, 4, 8, 16, 32],
@@ -73,7 +73,7 @@ object AnnQueries {
          |    THEN (CAST(1 AS BIGINT) << CAST(pr.i AS INT)) ELSE 0 END) AS BIGINT) AS bucket
          |  FROM embeddings e CROSS JOIN pr GROUP BY e.vec_id),
          |qb AS (SELECT bucket FROM bk WHERE vec_id = 0),
-         |q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0),
+         |$sqlQ0,
          |cand AS (
          |  SELECT e.vec_id, e.embedding FROM embeddings e JOIN bk ON e.vec_id = bk.vec_id, qb
          |  WHERE list_contains(list_transform([0, 1, 2, 4, 8, 16, 32],
@@ -104,7 +104,7 @@ object AnnQueries {
          |  SELECT e.vec_id, CAST(sum(CASE WHEN ${sqlDot("e.embedding", "pr.h")} > 0
          |    THEN (CAST(1 AS BIGINT) << CAST(pr.i AS INT)) ELSE 0 END) AS BIGINT) AS bucket
          |  FROM embeddings e CROSS JOIN pr GROUP BY e.vec_id),
-         |q AS (SELECT vec_id AS query_id, embedding AS qvec FROM embeddings WHERE vec_id < 5),
+         |$sqlQBatch,
          |qb AS (SELECT q.query_id, q.qvec, bk.bucket AS qbucket FROM q JOIN bk ON bk.vec_id = q.query_id),
          |cand AS (
          |  SELECT qb.query_id, e.vec_id, ${sqlCosDist("e.embedding", "qb.qvec")} AS dist
@@ -127,7 +127,7 @@ object AnnQueries {
         .orderBy(col("query_id"), col("distance"), col("id"))
         .select(col("query_id"), col("id").as("vec_id"), r4(col("distance")).as("distance"))
     }),
-      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qvec FROM embeddings WHERE vec_id < 5),
+      s"""WITH $sqlQBatch,
          |d AS (SELECT q.query_id, e.vec_id, ${sqlCosDist("e.embedding", "q.qvec")} AS dist FROM embeddings e CROSS JOIN q),
          |r AS (SELECT query_id, vec_id, dist, row_number() OVER (PARTITION BY query_id ORDER BY dist ASC, vec_id ASC) AS rn FROM d)
          |SELECT query_id, vec_id, ${sqlR4("dist")} AS distance FROM r WHERE rn <= 5 ORDER BY query_id, dist, vec_id""".stripMargin),
@@ -354,10 +354,7 @@ object AnnQueries {
         .select(col("id").as("vec_id"), col("nn_id"),
           r4(col("distance")).as("distance"))
         .orderBy("vec_id")),
-      s"""WITH c AS (SELECT CAST(vec_id AS INTEGER) AS cid, embedding AS cvec FROM embeddings WHERE vec_id < 8),
-         |asg AS (SELECT vec_id, cid FROM (
-         |  SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id ORDER BY ${sqlSq("e.embedding", "c.cvec")} ASC, c.cid ASC) AS rn
-         |  FROM embeddings e CROSS JOIN c) WHERE rn <= 2),
+      s"""WITH $sqlTop2Blocks,
          |cand AS (SELECT a.vec_id AS id, b.vec_id AS nn_id, ${sqlSq("a.embedding", "b.embedding")} AS d
          |  FROM embeddings a JOIN asg aa ON a.vec_id = aa.vec_id
          |  JOIN asg ab ON aa.cid = ab.cid

@@ -15,18 +15,10 @@ object CorpusQueries {
     * `corpus_assemble_dedup` (which splices the CC drop set after it). */
   private val sqlAssembleKeptCtes: String =
     s"""keep AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY sha256(text)),
-       |t AS (SELECT doc_id, regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+') AS tk FROM documents),
-       |lang AS (SELECT doc_id, CASE WHEN coalesce(greatest(e, sp, f, d, z), 0) = 0 THEN 'und'
-       |    WHEN e >= sp AND e >= f AND e >= d AND e >= z THEN 'en'
-       |    WHEN sp >= f AND sp >= d AND sp >= z THEN 'es'
-       |    WHEN f >= d AND f >= z THEN 'fr'
-       |    WHEN d >= z THEN 'de' ELSE 'zh' END AS lang_pred
+       |t AS (SELECT doc_id, ${sqlTokens("text")} AS tk FROM documents),
+       |lang AS (SELECT doc_id, $sqlLangPick AS lang_pred
        |  FROM (SELECT doc_id,
-       |    len(list_filter(tk, x -> list_contains(['the','a','of','to','and','is','in','it'], x))) AS e,
-       |    len(list_filter(tk, x -> list_contains(['el','la','de','que','y','en','un','es'], x))) AS sp,
-       |    len(list_filter(tk, x -> list_contains(['le','la','de','et','un','que','les','des'], x))) AS f,
-       |    len(list_filter(tk, x -> list_contains(['der','die','das','und','ist','ein','zu','den'], x))) AS d,
-       |    len(list_filter(tk, x -> list_contains(['de','shi','bu','le','zai','ren','you','wo'], x))) AS z
+       |    $sqlLangVotes
        |    FROM t)),
        |qb AS (SELECT doc_id, tk, CAST(length(text) AS DOUBLE) AS nc,
        |    CAST(length(regexp_replace(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9\\s]', '', 'g')) AS DOUBLE) AS punct
@@ -48,10 +40,9 @@ object CorpusQueries {
     * with the r4-rounded importance log-weight. Shared by `corpus_dsir`
     * (global top-100) and `corpus_dsir_mix` (per-source quota). */
   private val sqlDsirCtes: String =
-    s"""tok AS (SELECT doc_id, source, unnest(regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+')) AS t
+    s"""tok AS (SELECT doc_id, source, unnest(${sqlTokens("text")}) AS t
        |  FROM documents),
-       |hb AS (SELECT doc_id, source, list_reduce(list_transform(string_split_regex(substr(md5(t), 1, 14), ''),
-       |    c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b) % 64 AS b
+       |hb AS (SELECT doc_id, source, ${sqlMd5Hex("t", 14)} % 64 AS b
        |  FROM tok),
        |rawc AS (SELECT b, count(*) AS cr FROM hb GROUP BY b),
        |tgtc AS (SELECT b, count(*) AS ct FROM hb WHERE source = 'src0' GROUP BY b),
@@ -69,9 +60,8 @@ object CorpusQueries {
     * parameterized by the keep-set CTE it packs. */
   private def sqlAssembleTail(kept: String): String =
     s"""m AS (SELECT d.doc_id,
-       |    list_reduce(list_transform(string_split_regex(substr(md5(d.text), 1, 8), ''),
-       |      c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b) % 100 AS b,
-       |    CAST(len(regexp_split_to_array(translate(trim(d.text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+')) AS BIGINT) AS n_tokens
+       |    ${sqlMd5Hex("d.text", 8)} % 100 AS b,
+       |    CAST(len(${sqlTokens("d.text")}) AS BIGINT) AS n_tokens
        |  FROM documents d JOIN $kept USING (doc_id)),
        |s AS (SELECT doc_id, CASE WHEN b < 90 THEN 'train' ELSE 'val' END AS split,
        |    doc_id % 4 AS shard, n_tokens FROM m),
@@ -88,7 +78,7 @@ object CorpusQueries {
     * coalesce to 0 (see [[sqlAssembleBpeTail]]'s reachability note).
     * Shared by the two BPE assemble tails and the release manifest. */
   private def sqlBpeDocCounts(kept: String): String =
-    s"""abdoc AS (SELECT d.doc_id, unnest(regexp_split_to_array(translate(trim(d.text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+')) AS token
+    s"""abdoc AS (SELECT d.doc_id, unnest(${sqlTokens("d.text")}) AS token
        |  FROM documents d JOIN $kept USING (doc_id)),
        |adn AS (SELECT doc_id, CAST(sum(n_sym) AS BIGINT) AS n_tokens
        |  FROM abdoc JOIN bseg USING (token) WHERE token <> '' GROUP BY doc_id)""".stripMargin
@@ -107,8 +97,7 @@ object CorpusQueries {
   private def sqlAssembleBpeTail(kept: String): String =
     s"""${sqlBpeDocCounts(kept)},
        |m AS (SELECT d.doc_id,
-       |    list_reduce(list_transform(string_split_regex(substr(md5(d.text), 1, 8), ''),
-       |      c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b) % 100 AS b,
+       |    ${sqlMd5Hex("d.text", 8)} % 100 AS b,
        |    coalesce(adn.n_tokens, 0) AS n_tokens
        |  FROM documents d JOIN $kept USING (doc_id) LEFT JOIN adn ON adn.doc_id = d.doc_id),
        |s AS (SELECT doc_id, CASE WHEN b < 90 THEN 'train' ELSE 'val' END AS split,
@@ -253,12 +242,23 @@ object CorpusQueries {
       "src7" -> 0.1)
   private val epochPlanBudget: Long = 100000L
 
+  /** Twin of the content-hash split and the decontamination gram set:
+    * each doc's bucket `h(doc_id, text, bucket)` (train < 80 ≤ val < 90 ≤
+    * test) and its distinct token `n`-grams `toks(doc_id, bucket, sh)`. */
+  private def sqlBucketGrams(n: Int): String = {
+    val gram = (0 until n).map(k => if (k == 0) "tk[i]" else s"tk[i+$k]").mkString(" || ' ' || ")
+    s"""h AS (SELECT doc_id, text, ${sqlMd5Hex("text", 8)} % 100 AS bucket FROM documents),
+       |toks AS (SELECT doc_id, bucket, list_distinct(list_transform(generate_series(1, greatest(len(tk) - ${n - 1}, 0)),
+       |    i -> $gram)) AS sh
+       |  FROM (SELECT doc_id, bucket, ${sqlTokens("text")} AS tk FROM h))""".stripMargin
+  }
+
   /** Quality-score + Gopher-flag CTE block (`b` → `m` → `d`, with
     * `d(source, qq, gp)`) shared by the `corpus_source_quality` and
     * `corpus_quality_calibration` oracles — ONE restatement of the
     * scoring arithmetic, two consumers. */
   private def sqlQualityGopherCtes: String =
-    s"""b AS (SELECT source, text, regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+') AS tk,
+    s"""b AS (SELECT source, text, ${sqlTokens("text")} AS tk,
          |    string_split(text, chr(10)) AS ls,
          |    CAST(length(text) AS DOUBLE) AS nc,
          |    CAST(length(regexp_replace(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9\\s]', '', 'g')) AS DOUBLE) AS punct
@@ -267,15 +267,7 @@ object CorpusQueries {
          |  CASE WHEN nc > 0 THEN punct / nc ELSE 0.0 END AS punct_ratio,
          |  CASE WHEN len(tk) > 0 THEN CAST(len(list_filter(tk, x -> list_contains($stopAllSql, x))) AS DOUBLE) / len(tk) ELSE 0.0 END AS stop_ratio,
          |  CASE WHEN len(tk) > 0 THEN list_sum(list_transform(tk, x -> CAST(length(x) AS DOUBLE))) / len(tk) ELSE 0.0 END AS avg_len,
-         |  CAST(len(tk) AS BIGINT) AS n_words,
-         |  CAST(coalesce(list_sum(list_transform(tk, x -> CAST(length(x) AS BIGINT))), 0) AS BIGINT) AS len_sum,
-         |  CAST(length(text) - length(replace(text, '#', '')) AS BIGINT) AS n_hash,
-         |  CAST((length(text) - length(replace(text, '...', ''))) // 3 AS BIGINT) AS n_ell,
-         |  CAST(len(list_filter(tk, x -> regexp_matches(x, '[a-z]'))) AS BIGINT) AS n_alpha,
-         |  CAST(len(ls) AS BIGINT) AS n_lines,
-         |  CAST(len(list_filter(ls, l -> ltrim(l) LIKE '-%' OR ltrim(l) LIKE '*%' OR ltrim(l) LIKE '•%')) AS BIGINT) AS n_bullet,
-         |  CAST(len(list_filter(ls, l -> rtrim(l) LIKE '%...' OR rtrim(l) LIKE '%…')) AS BIGINT) AS n_ellend,
-         |  CAST(len(list_intersect(tk, ['the','be','to','of','and','that','have','with'])) AS BIGINT) AS stop_hits
+         |  $sqlGopherCounts
          |  FROM b),
          |d AS (SELECT source,
          |  CAST(floor(least(1.0, greatest(0.0, 0.2 + 0.5 * stop_ratio + 0.05 * avg_len - punct_ratio)) * 10000.0 + 0.5) AS BIGINT) AS qq,
@@ -405,10 +397,7 @@ object CorpusQueries {
         .agg(count(lit(1)).as("n_bench"), r4(max(col("cos_sim"))).as("max_sim"))
         .orderBy("vec_id")
     }),
-      s"""WITH c AS (SELECT CAST(vec_id AS INTEGER) AS cid, embedding AS cvec FROM embeddings WHERE vec_id < 8),
-         |asg AS (SELECT vec_id, cid FROM (
-         |  SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id ORDER BY ${sqlSq("e.embedding", "c.cvec")} ASC, c.cid ASC) AS rn
-         |  FROM embeddings e CROSS JOIN c) WHERE rn <= 2),
+      s"""WITH $sqlTop2Blocks,
          |pairs AS (SELECT DISTINCT co.vec_id AS vec_id, be.vec_id AS bench_id,
          |    ${sqlCosSim("co.embedding", "be.embedding")} AS s
          |  FROM embeddings co JOIN asg ac ON co.vec_id = ac.vec_id
@@ -492,19 +481,11 @@ object CorpusQueries {
       // rolled to the agreement matrix with per-cell correctness counts
       s"""WITH lbl AS (SELECT doc_id, lang AS label, text FROM documents),
          |$nbPredSql,
-         |t2 AS (SELECT doc_id, lang, regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+') AS tk FROM te),
+         |t2 AS (SELECT doc_id, lang, ${sqlTokens("text")} AS tk FROM te),
          |s2 AS (SELECT doc_id, lang,
-         |  len(list_filter(tk, x -> list_contains(['the','a','of','to','and','is','in','it'], x))) AS e,
-         |  len(list_filter(tk, x -> list_contains(['el','la','de','que','y','en','un','es'], x))) AS sp,
-         |  len(list_filter(tk, x -> list_contains(['le','la','de','et','un','que','les','des'], x))) AS f,
-         |  len(list_filter(tk, x -> list_contains(['der','die','das','und','ist','ein','zu','den'], x))) AS d,
-         |  len(list_filter(tk, x -> list_contains(['de','shi','bu','le','zai','ren','you','wo'], x))) AS z
+         |  $sqlLangVotes
          |  FROM t2),
-         |hx AS (SELECT doc_id, lang, CASE WHEN coalesce(greatest(e, sp, f, d, z), 0) = 0 THEN 'und'
-         |  WHEN e >= sp AND e >= f AND e >= d AND e >= z THEN 'en'
-         |  WHEN sp >= f AND sp >= d AND sp >= z THEN 'es'
-         |  WHEN f >= d AND f >= z THEN 'fr'
-         |  WHEN d >= z THEN 'de' ELSE 'zh' END AS hx_pred
+         |hx AS (SELECT doc_id, lang, $sqlLangPick AS hx_pred
          |FROM s2),
          |j AS (SELECT hx.hx_pred, coalesce(pred.pred_lang, 'und') AS nb_pred, hx.lang
          |  FROM hx LEFT JOIN pred ON hx.doc_id = pred.doc_id),
@@ -558,26 +539,14 @@ object CorpusQueries {
       // label, then the same fit/score/argmax machinery; the rollup is
       // the teacher×student agreement matrix
       s"""WITH gb AS (SELECT doc_id, text,
-         |    regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+') AS tk,
+         |    ${sqlTokens("text")} AS tk,
          |    string_split(text, chr(10)) AS ls
          |  FROM documents),
          |gm AS (SELECT doc_id,
-         |  CAST(len(tk) AS BIGINT) AS n_words,
-         |  CAST(coalesce(list_sum(list_transform(tk, x -> CAST(length(x) AS BIGINT))), 0) AS BIGINT) AS len_sum,
-         |  CAST(length(text) - length(replace(text, '#', '')) AS BIGINT) AS n_hash,
-         |  CAST((length(text) - length(replace(text, '...', ''))) // 3 AS BIGINT) AS n_ell,
-         |  CAST(len(list_filter(tk, x -> regexp_matches(x, '[a-z]'))) AS BIGINT) AS n_alpha,
-         |  CAST(len(ls) AS BIGINT) AS n_lines,
-         |  CAST(len(list_filter(ls, l -> ltrim(l) LIKE '-%' OR ltrim(l) LIKE '*%' OR ltrim(l) LIKE '•%')) AS BIGINT) AS n_bullet,
-         |  CAST(len(list_filter(ls, l -> rtrim(l) LIKE '%...' OR rtrim(l) LIKE '%…')) AS BIGINT) AS n_ellend,
-         |  CAST(len(list_intersect(tk, ['the','be','to','of','and','that','have','with'])) AS BIGINT) AS stop_hits
+         |  $sqlGopherCounts
          |  FROM gb),
          |gd AS (SELECT doc_id, n_words,
-         |  CASE WHEN n_words > 0 THEN CAST(len_sum AS DOUBLE) / n_words ELSE 0.0 END AS mean_word_len,
-         |  CASE WHEN n_words > 0 THEN CAST(n_hash + n_ell AS DOUBLE) / n_words ELSE 0.0 END AS symbol_ratio,
-         |  CASE WHEN n_words > 0 THEN CAST(n_alpha AS DOUBLE) / n_words ELSE 0.0 END AS alpha_frac,
-         |  CASE WHEN n_lines > 0 THEN CAST(n_bullet AS DOUBLE) / n_lines ELSE 0.0 END AS bullet_frac,
-         |  CASE WHEN n_lines > 0 THEN CAST(n_ellend AS DOUBLE) / n_lines ELSE 0.0 END AS ellipsis_frac
+         |  $sqlGopherFracs
          |  FROM gm),
          |lbl AS (SELECT d.doc_id,
          |  CASE WHEN (g.n_words >= 50 AND g.n_words <= 100000
@@ -639,10 +608,9 @@ object CorpusQueries {
       // same 56-bit md5-prefix window identity as the Spark kernel;
       // covered_tokens recomputed the expensive way (explode + distinct) —
       // the oracle needn't scale, the operator's interval-union fold must
-      """WITH tk AS (SELECT doc_id, regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+') AS t FROM documents),
+      s"""WITH tk AS (SELECT doc_id, ${sqlTokens("text")} AS t FROM documents),
         |w AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS n_tokens, CAST(u.i - 1 AS BIGINT) AS pos,
-        |    list_reduce(list_transform(string_split_regex(substr(md5(array_to_string(t[CAST(u.i AS INT):CAST(u.i + 9 AS INT)], ' ')), 1, 14), ''),
-        |      c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b) AS h
+        |    ${sqlMd5Hex("array_to_string(t[CAST(u.i AS INT):CAST(u.i + 9 AS INT)], ' ')", 14)} AS h
         |  FROM tk, unnest(generate_series(1, greatest(len(t) - 9, 0))) AS u(i)),
         |rep AS (SELECT h FROM w GROUP BY h HAVING count(*) >= 2),
         |f AS (SELECT w.doc_id, w.n_tokens, w.pos FROM w JOIN rep USING (h)),
@@ -660,10 +628,9 @@ object CorpusQueries {
       Dedup.substringScrubWith(docs(s, dir),
           substringSpans10(s, dir), windowTokens = 10)
         .orderBy("doc_id")),
-      """WITH tk AS (SELECT doc_id, regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+') AS t FROM documents),
+      s"""WITH tk AS (SELECT doc_id, ${sqlTokens("text")} AS t FROM documents),
         |w AS (SELECT doc_id, CAST(u.i - 1 AS BIGINT) AS pos,
-        |    list_reduce(list_transform(string_split_regex(substr(md5(array_to_string(t[CAST(u.i AS INT):CAST(u.i + 9 AS INT)], ' ')), 1, 14), ''),
-        |      c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b) AS h
+        |    ${sqlMd5Hex("array_to_string(t[CAST(u.i AS INT):CAST(u.i + 9 AS INT)], ' ')", 14)} AS h
         |  FROM tk, unnest(generate_series(1, greatest(len(t) - 9, 0))) AS u(i)),
         |rep AS (SELECT h FROM w GROUP BY h HAVING count(*) >= 2),
         |f AS (SELECT w.doc_id, w.pos FROM w JOIN rep USING (h)),
@@ -688,27 +655,19 @@ object CorpusQueries {
         .select(col("source"), col("lang"), col("n_docs"), col("n_unique"),
           col("total_tokens"), r4(col("avg_quality")).as("avg_quality"))
         .orderBy("source", "lang")),
-      s"""WITH b AS (SELECT source, text, regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+') AS tk,
+      s"""WITH b AS (SELECT source, text, ${sqlTokens("text")} AS tk,
          |  CAST(length(text) AS DOUBLE) AS nc,
          |  CAST(length(regexp_replace(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9\\s]', '', 'g')) AS DOUBLE) AS punct
          |  FROM documents),
          |m AS (SELECT source, text, tk,
-         |  len(list_filter(tk, x -> list_contains(['the','a','of','to','and','is','in','it'], x))) AS e,
-         |  len(list_filter(tk, x -> list_contains(['el','la','de','que','y','en','un','es'], x))) AS sp,
-         |  len(list_filter(tk, x -> list_contains(['le','la','de','et','un','que','les','des'], x))) AS f,
-         |  len(list_filter(tk, x -> list_contains(['der','die','das','und','ist','ein','zu','den'], x))) AS d,
-         |  len(list_filter(tk, x -> list_contains(['de','shi','bu','le','zai','ren','you','wo'], x))) AS z,
+         |  $sqlLangVotes,
          |  CAST(len(tk) AS BIGINT) AS nt,
          |  least(1.0, greatest(0.0, 0.2
          |    + 0.5 * (CASE WHEN len(tk) > 0 THEN CAST(len(list_filter(tk, x -> list_contains($stopAllSql, x))) AS DOUBLE) / len(tk) ELSE 0.0 END)
          |    + 0.05 * (CASE WHEN len(tk) > 0 THEN list_sum(list_transform(tk, x -> CAST(length(x) AS DOUBLE))) / len(tk) ELSE 0.0 END)
          |    - (CASE WHEN nc > 0 THEN punct / nc ELSE 0.0 END))) AS q
          |  FROM b),
-         |l AS (SELECT source, CASE WHEN coalesce(greatest(e, sp, f, d, z), 0) = 0 THEN 'und'
-         |  WHEN e >= sp AND e >= f AND e >= d AND e >= z THEN 'en'
-         |  WHEN sp >= f AND sp >= d AND sp >= z THEN 'es'
-         |  WHEN f >= d AND f >= z THEN 'fr'
-         |  WHEN d >= z THEN 'de' ELSE 'zh' END AS lang, nt, q, sha256(text) AS h FROM m)
+         |l AS (SELECT source, $sqlLangPick AS lang, nt, q, sha256(text) AS h FROM m)
          |SELECT source, lang, count(*) AS n_docs,
          |  -- the engine's two-stage distinct counts the null-hash group
          |  -- as one unique (all null-text docs collapse together), while
@@ -744,10 +703,10 @@ object CorpusQueries {
       // GROUP BY ROLLUP replays the grouping sets; same 'ALL' coalesce
       // grouping()-labeled subtotals: a NULL-lang data row keeps its own
       // '(null)' identity instead of conflating with the subtotal row
-      """SELECT CASE WHEN grouping(source) = 1 THEN 'ALL' ELSE coalesce(source, '(null)') END AS source,
+      s"""SELECT CASE WHEN grouping(source) = 1 THEN 'ALL' ELSE coalesce(source, '(null)') END AS source,
         |  CASE WHEN grouping(lang) = 1 THEN 'ALL' ELSE coalesce(lang, '(null)') END AS lang,
         |  CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(len(regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+'))) AS BIGINT) AS total_tokens
+        |  CAST(sum(len(${sqlTokens("text")})) AS BIGINT) AS total_tokens
         |FROM documents GROUP BY ROLLUP (source, lang)
         |ORDER BY source, lang""".stripMargin),
 
@@ -833,7 +792,7 @@ object CorpusQueries {
       // same quality CTEs as text_stats, r4-quantized BEFORE ranking so the
       // (quality, doc_id) total order is engine-independent; percent_rank
       // spelled as (row_number − 1)/(n − 1) — tie-free by construction
-      s"""WITH b AS (SELECT doc_id, text, regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+') AS tk,
+      s"""WITH b AS (SELECT doc_id, text, ${sqlTokens("text")} AS tk,
          |  CAST(length(text) AS DOUBLE) AS nc,
          |  CAST(length(regexp_replace(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9\\s]', '', 'g')) AS DOUBLE) AS punct
          |  FROM documents),
@@ -922,18 +881,10 @@ object CorpusQueries {
         .where(col("__lang") === "en" && col("__q") >= 0.45)
         .select(col("doc_id")).orderBy("doc_id")),
       s"""WITH keep AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY sha256(text)),
-         |t AS (SELECT doc_id, regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+') AS tk FROM documents),
-         |lang AS (SELECT doc_id, CASE WHEN coalesce(greatest(e, sp, f, d, z), 0) = 0 THEN 'und'
-         |    WHEN e >= sp AND e >= f AND e >= d AND e >= z THEN 'en'
-         |    WHEN sp >= f AND sp >= d AND sp >= z THEN 'es'
-         |    WHEN f >= d AND f >= z THEN 'fr'
-         |    WHEN d >= z THEN 'de' ELSE 'zh' END AS lang_pred
+         |t AS (SELECT doc_id, ${sqlTokens("text")} AS tk FROM documents),
+         |lang AS (SELECT doc_id, $sqlLangPick AS lang_pred
          |  FROM (SELECT doc_id,
-         |    len(list_filter(tk, x -> list_contains(['the','a','of','to','and','is','in','it'], x))) AS e,
-         |    len(list_filter(tk, x -> list_contains(['el','la','de','que','y','en','un','es'], x))) AS sp,
-         |    len(list_filter(tk, x -> list_contains(['le','la','de','et','un','que','les','des'], x))) AS f,
-         |    len(list_filter(tk, x -> list_contains(['der','die','das','und','ist','ein','zu','den'], x))) AS d,
-         |    len(list_filter(tk, x -> list_contains(['de','shi','bu','le','zai','ren','you','wo'], x))) AS z
+         |    $sqlLangVotes
          |    FROM t)),
          |qb AS (SELECT doc_id, tk, CAST(length(text) AS DOUBLE) AS nc,
          |    CAST(length(regexp_replace(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9\\s]', '', 'g')) AS DOUBLE) AS punct
@@ -1075,14 +1026,12 @@ object CorpusQueries {
          |kept2 AS MATERIALIZED (SELECT doc_id FROM kept WHERE doc_id NOT IN (SELECT node FROM drops)),
          |${sqlBpeDocCounts("kept2")},
          |hb AS (SELECT d.doc_id,
-         |    CASE WHEN list_reduce(list_transform(string_split_regex(substr(md5(d.text), 1, 8), ''),
-         |      c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b) % 100 < 90
+         |    CASE WHEN ${sqlMd5Hex("d.text", 8)} % 100 < 90
          |      THEN 'train' ELSE 'val' END AS split,
          |    d.source AS source,
-         |    CAST(len(regexp_split_to_array(translate(trim(d.text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+')) AS BIGINT) AS n_tokens,
+         |    CAST(len(${sqlTokens("d.text")}) AS BIGINT) AS n_tokens,
          |    coalesce(adn.n_tokens, 0) AS n_bpe,
-         |    list_reduce(list_transform(string_split_regex(substr(md5(d.text), 1, 14), ''),
-         |      c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b) AS hv,
+         |    ${sqlMd5Hex("d.text", 14)} AS hv,
          |    CAST(d.n_chars AS BIGINT) AS nc
          |  FROM documents d JOIN kept2 USING (doc_id)
          |  LEFT JOIN adn ON adn.doc_id = d.doc_id)
@@ -1123,7 +1072,7 @@ object CorpusQueries {
          |$sqlAssembleKeptCtes,
          |drops AS (SELECT node FROM (SELECT node, min(lab) AS rep FROM reach GROUP BY node) WHERE node <> rep),
          |kept2 AS (SELECT doc_id FROM kept WHERE doc_id NOT IN (SELECT node FROM drops)),
-         |tok AS (SELECT doc_id, CAST(len(regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+')) AS BIGINT) AS n
+         |tok AS (SELECT doc_id, CAST(len(${sqlTokens("text")}) AS BIGINT) AS n
          |  FROM documents)
          |SELECT (SELECT count(*) FROM documents) AS n_raw,
          |  -- distinct-then-count on the Spark side groups null-text
@@ -1143,8 +1092,7 @@ object CorpusQueries {
       graft.operators.Corpus.assignSplit(docs(s, dir), col("text"))
         .select(col("doc_id"), col("bucket"), col("split"))
         .orderBy("doc_id")),
-      """WITH h AS (SELECT doc_id, list_reduce(list_transform(string_split_regex(substr(md5(text), 1, 8), ''),
-        |    c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b) % 100 AS bucket
+      s"""WITH h AS (SELECT doc_id, ${sqlMd5Hex("text", 8)} % 100 AS bucket
         |  FROM documents)
         |SELECT doc_id, bucket,
         |  CASE WHEN bucket < 80 THEN 'train' WHEN bucket < 90 THEN 'val' ELSE 'test' END AS split
@@ -1161,8 +1109,7 @@ object CorpusQueries {
          |g AS (SELECT node AS doc_id, min(lab) AS rep_id FROM reach GROUP BY node),
          |ar AS (SELECT d.doc_id, coalesce(g.rep_id, d.doc_id) AS rep_id
          |  FROM documents d LEFT JOIN g ON d.doc_id = g.doc_id),
-         |h AS (SELECT doc_id AS rep_id, list_reduce(list_transform(string_split_regex(substr(md5(text), 1, 8), ''),
-         |    c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b) % 100 AS bucket
+         |h AS (SELECT doc_id AS rep_id, ${sqlMd5Hex("text", 8)} % 100 AS bucket
          |  FROM documents)
          |SELECT ar.doc_id, ar.rep_id, h.bucket,
          |  CASE WHEN h.bucket < 80 THEN 'train' WHEN h.bucket < 90 THEN 'val' ELSE 'test' END AS split
@@ -1176,8 +1123,8 @@ object CorpusQueries {
           docsSpread(s, dir),
           size(TextOps.tokens(col("text"))), budget = 32, overlap = 8)
         .orderBy("doc_id", "chunk_idx")),
-      """WITH t AS (SELECT doc_id,
-        |    CAST(len(regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+')) AS BIGINT) AS n
+      s"""WITH t AS (SELECT doc_id,
+        |    CAST(len(${sqlTokens("text")}) AS BIGINT) AS n
         |  FROM documents),
         |tp AS (SELECT * FROM t WHERE n >= 1),
         |x AS (SELECT doc_id, n, u.i AS chunk_start
@@ -1196,8 +1143,8 @@ object CorpusQueries {
         .orderBy("doc_id", "chunk_idx")),
       // same window arithmetic, plus the 1-based-inclusive list slice;
       // empty text is one empty token on both engines (split convention)
-      """WITH t AS (SELECT doc_id,
-        |    regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+') AS tk
+      s"""WITH t AS (SELECT doc_id,
+        |    ${sqlTokens("text")} AS tk
         |  FROM documents),
         |tp AS (SELECT doc_id, tk, CAST(len(tk) AS BIGINT) AS n FROM t WHERE len(tk) >= 1),
         |x AS (SELECT doc_id, tk, n, u.i AS chunk_start
@@ -1215,16 +1162,10 @@ object CorpusQueries {
       graft.operators.Corpus.decontaminateFromGrams(
           splitGramRows(s, dir, "train"), splitGramRows(s, dir, "val"))
         .orderBy("doc_id")),
-      s"""WITH h AS (SELECT doc_id, text, list_reduce(list_transform(string_split_regex(substr(md5(text), 1, 8), ''),
-         |    c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b) % 100 AS bucket FROM documents),
-         |toks AS (SELECT doc_id, bucket, list_distinct(list_transform(generate_series(1, greatest(len(tk) - 7, 0)),
-         |    i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] || ' ' || tk[i+3] || ' ' || tk[i+4] || ' ' || tk[i+5] || ' ' || tk[i+6] || ' ' || tk[i+7])) AS sh
-         |  FROM (SELECT doc_id, bucket, regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+') AS tk FROM h)),
-         |tg AS (SELECT doc_id, list_reduce(list_transform(string_split_regex(substr(md5(u.s), 1, 14), ''),
-         |    c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b) AS hh
+      s"""WITH ${sqlBucketGrams(8)},
+         |tg AS (SELECT doc_id, ${sqlMd5Hex("u.s", 14)} AS hh
          |  FROM toks, unnest(sh) AS u(s) WHERE bucket < 80),
-         |vg AS (SELECT DISTINCT list_reduce(list_transform(string_split_regex(substr(md5(u.s), 1, 14), ''),
-         |    c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b) AS hh
+         |vg AS (SELECT DISTINCT ${sqlMd5Hex("u.s", 14)} AS hh
          |  FROM toks, unnest(sh) AS u(s) WHERE bucket >= 80 AND bucket < 90)
          |SELECT doc_id, count(DISTINCT hh) AS n_shared
          |FROM tg JOIN vg USING (hh) GROUP BY doc_id ORDER BY doc_id""".stripMargin),
@@ -1253,16 +1194,10 @@ object CorpusQueries {
     }),
       // the decontaminate oracle pivoted to the source axis: flagged train
       // docs left-joined back onto the full doc roster, '(null)' sentinel
-      s"""WITH h AS (SELECT doc_id, text, list_reduce(list_transform(string_split_regex(substr(md5(text), 1, 8), ''),
-         |    c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b) % 100 AS bucket FROM documents),
-         |toks AS (SELECT doc_id, bucket, list_distinct(list_transform(generate_series(1, greatest(len(tk) - 7, 0)),
-         |    i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] || ' ' || tk[i+3] || ' ' || tk[i+4] || ' ' || tk[i+5] || ' ' || tk[i+6] || ' ' || tk[i+7])) AS sh
-         |  FROM (SELECT doc_id, bucket, regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+') AS tk FROM h)),
-         |tg AS (SELECT doc_id, list_reduce(list_transform(string_split_regex(substr(md5(u.s), 1, 14), ''),
-         |    c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b) AS hh
+      s"""WITH ${sqlBucketGrams(8)},
+         |tg AS (SELECT doc_id, ${sqlMd5Hex("u.s", 14)} AS hh
          |  FROM toks, unnest(sh) AS u(s) WHERE bucket < 80),
-         |vg AS (SELECT DISTINCT list_reduce(list_transform(string_split_regex(substr(md5(u.s), 1, 14), ''),
-         |    c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b) AS hh
+         |vg AS (SELECT DISTINCT ${sqlMd5Hex("u.s", 14)} AS hh
          |  FROM toks, unnest(sh) AS u(s) WHERE bucket >= 80 AND bucket < 90),
          |fl AS (SELECT doc_id, CAST(count(DISTINCT hh) AS BIGINT) AS n_shared
          |  FROM tg JOIN vg USING (hh) GROUP BY doc_id)
@@ -1283,16 +1218,10 @@ object CorpusQueries {
           splitGramRows(s, dir, "val", n = 13))
         .orderBy("doc_id")),
       // the 8-gram oracle at the GPT-3 13-gram window
-      s"""WITH h AS (SELECT doc_id, text, list_reduce(list_transform(string_split_regex(substr(md5(text), 1, 8), ''),
-         |    c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b) % 100 AS bucket FROM documents),
-         |toks AS (SELECT doc_id, bucket, list_distinct(list_transform(generate_series(1, greatest(len(tk) - 12, 0)),
-         |    i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] || ' ' || tk[i+3] || ' ' || tk[i+4] || ' ' || tk[i+5] || ' ' || tk[i+6] || ' ' || tk[i+7] || ' ' || tk[i+8] || ' ' || tk[i+9] || ' ' || tk[i+10] || ' ' || tk[i+11] || ' ' || tk[i+12])) AS sh
-         |  FROM (SELECT doc_id, bucket, regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+') AS tk FROM h)),
-         |tg AS (SELECT doc_id, list_reduce(list_transform(string_split_regex(substr(md5(u.s), 1, 14), ''),
-         |    c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b) AS hh
+      s"""WITH ${sqlBucketGrams(13)},
+         |tg AS (SELECT doc_id, ${sqlMd5Hex("u.s", 14)} AS hh
          |  FROM toks, unnest(sh) AS u(s) WHERE bucket < 80),
-         |vg AS (SELECT DISTINCT list_reduce(list_transform(string_split_regex(substr(md5(u.s), 1, 14), ''),
-         |    c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b) AS hh
+         |vg AS (SELECT DISTINCT ${sqlMd5Hex("u.s", 14)} AS hh
          |  FROM toks, unnest(sh) AS u(s) WHERE bucket >= 80 AND bucket < 90)
          |SELECT doc_id, count(DISTINCT hh) AS n_shared
          |FROM tg JOIN vg USING (hh) GROUP BY doc_id ORDER BY doc_id""".stripMargin),
@@ -1312,16 +1241,10 @@ object CorpusQueries {
       // the Bloom pre-filter is invisible to exact semantics (no false
       // negatives): the oracle is the plain exact decontamination against
       // the TEST split's gram set
-      s"""WITH h AS (SELECT doc_id, text, list_reduce(list_transform(string_split_regex(substr(md5(text), 1, 8), ''),
-         |    c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b) % 100 AS bucket FROM documents),
-         |toks AS (SELECT doc_id, bucket, list_distinct(list_transform(generate_series(1, greatest(len(tk) - 7, 0)),
-         |    i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] || ' ' || tk[i+3] || ' ' || tk[i+4] || ' ' || tk[i+5] || ' ' || tk[i+6] || ' ' || tk[i+7])) AS sh
-         |  FROM (SELECT doc_id, bucket, regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+') AS tk FROM h)),
-         |tg AS (SELECT doc_id, list_reduce(list_transform(string_split_regex(substr(md5(u.s), 1, 14), ''),
-         |    c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b) AS hh
+      s"""WITH ${sqlBucketGrams(8)},
+         |tg AS (SELECT doc_id, ${sqlMd5Hex("u.s", 14)} AS hh
          |  FROM toks, unnest(sh) AS u(s) WHERE bucket < 80),
-         |vg AS (SELECT DISTINCT list_reduce(list_transform(string_split_regex(substr(md5(u.s), 1, 14), ''),
-         |    c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b) AS hh
+         |vg AS (SELECT DISTINCT ${sqlMd5Hex("u.s", 14)} AS hh
          |  FROM toks, unnest(sh) AS u(s) WHERE bucket >= 90)
          |SELECT doc_id, count(DISTINCT hh) AS n_shared
          |FROM tg JOIN vg USING (hh) GROUP BY doc_id ORDER BY doc_id""".stripMargin),
@@ -1336,9 +1259,8 @@ object CorpusQueries {
             .cast("int").as("fold"))
         .orderBy("doc_id")),
       // the same first-8-md5-hex content hash mod k
-      """SELECT doc_id,
-        |  CAST(list_reduce(list_transform(string_split_regex(substr(md5(text), 1, 8), ''),
-        |    c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b) % 5 AS INT) AS fold
+      s"""SELECT doc_id,
+        |  CAST(${sqlMd5Hex("text", 8)} % 5 AS INT) AS fold
         |FROM documents ORDER BY doc_id""".stripMargin),
 
     // extension: data-quality EXPECTATIONS — the declared-constraint
@@ -1366,7 +1288,7 @@ object CorpusQueries {
          |  CAST(sum(CASE WHEN NOT coalesce(lang IN ('en','de','zh','fr','es'), FALSE) THEN 1 ELSE 0 END) AS BIGINT) AS v2,
          |  CAST(sum(CASE WHEN NOT coalesce(n_chars = length(text), FALSE) THEN 1 ELSE 0 END) AS BIGINT) AS v3,
          |  CAST(sum(CASE WHEN NOT coalesce(length(text) >= 50, FALSE) THEN 1 ELSE 0 END) AS BIGINT) AS v4,
-         |  CAST(sum(CASE WHEN NOT coalesce(len(regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+')) >= 1, FALSE) THEN 1 ELSE 0 END) AS BIGINT) AS v5,
+         |  CAST(sum(CASE WHEN NOT coalesce(len(${sqlTokens("text")}) >= 1, FALSE) THEN 1 ELSE 0 END) AS BIGINT) AS v5,
          |  CAST(count(DISTINCT doc_id) AS BIGINT) AS d FROM documents)
          |SELECT * FROM (
          |  SELECT 'doc_id_not_null' AS "check", n AS n_rows, v1 AS n_violations, v1 = 0 AS pass FROM base
@@ -1390,16 +1312,10 @@ object CorpusQueries {
         .orderBy("bench_id")),
       // the benchmark-axis pivot of the same gram pipeline: the base list
       // comes from ALL val docs (h), so gram-less short docs keep zeros
-      s"""WITH h AS (SELECT doc_id, text, list_reduce(list_transform(string_split_regex(substr(md5(text), 1, 8), ''),
-         |    c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b) % 100 AS bucket FROM documents),
-         |toks AS (SELECT doc_id, bucket, list_distinct(list_transform(generate_series(1, greatest(len(tk) - 7, 0)),
-         |    i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] || ' ' || tk[i+3] || ' ' || tk[i+4] || ' ' || tk[i+5] || ' ' || tk[i+6] || ' ' || tk[i+7])) AS sh
-         |  FROM (SELECT doc_id, bucket, regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+') AS tk FROM h)),
-         |vg AS (SELECT DISTINCT doc_id AS bench_id, list_reduce(list_transform(string_split_regex(substr(md5(u.s), 1, 14), ''),
-         |    c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b) AS hh
+      s"""WITH ${sqlBucketGrams(8)},
+         |vg AS (SELECT DISTINCT doc_id AS bench_id, ${sqlMd5Hex("u.s", 14)} AS hh
          |  FROM toks, unnest(sh) AS u(s) WHERE bucket >= 80 AND bucket < 90),
-         |tg AS (SELECT DISTINCT doc_id, list_reduce(list_transform(string_split_regex(substr(md5(u.s), 1, 14), ''),
-         |    c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b) AS hh
+         |tg AS (SELECT DISTINCT doc_id, ${sqlMd5Hex("u.s", 14)} AS hh
          |  FROM toks, unnest(sh) AS u(s) WHERE bucket < 80),
          |hits AS (SELECT bench_id, CAST(count(DISTINCT tg.doc_id) AS BIGINT) AS n_train_docs,
          |    CAST(count(DISTINCT vg.hh) AS BIGINT) AS n_leaked_grams
@@ -1422,7 +1338,7 @@ object CorpusQueries {
       // the same quantize-each-root-then-integer-sum construction; every
       // double op replays in the same operand order
       s"""WITH t AS (SELECT source,
-         |  CAST(sum(len(regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+'))) AS BIGINT) AS n_tokens
+         |  CAST(sum(len(${sqlTokens("text")})) AS BIGINT) AS n_tokens
          |  FROM documents GROUP BY source),
          |q AS (SELECT source, n_tokens,
          |  CAST(floor(sqrt(CAST(n_tokens AS DOUBLE)) * 10000.0 + 0.5) AS BIGINT) AS qq FROM t),
@@ -1472,15 +1388,13 @@ object CorpusQueries {
       // the standing index replayed: same split CASE (NULL bucket → ELSE
       // 'test', matching Spark's when-otherwise on a null hash), same
       // 56-bit md5-prefix gram hashes, single-distinct rollups
-      s"""WITH h AS (SELECT doc_id, text, list_reduce(list_transform(string_split_regex(substr(md5(text), 1, 8), ''),
-         |    c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b) % 100 AS bucket FROM documents),
+      s"""WITH h AS (SELECT doc_id, text, ${sqlMd5Hex("text", 8)} % 100 AS bucket FROM documents),
          |sp AS (SELECT doc_id, text,
          |  CASE WHEN bucket < 80 THEN 'train' WHEN bucket < 90 THEN 'val' ELSE 'test' END AS split FROM h),
          |toks AS (SELECT doc_id, split, list_distinct(list_transform(generate_series(1, greatest(len(tk) - 7, 0)),
          |    i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] || ' ' || tk[i+3] || ' ' || tk[i+4] || ' ' || tk[i+5] || ' ' || tk[i+6] || ' ' || tk[i+7])) AS sh
-         |  FROM (SELECT doc_id, split, regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+') AS tk FROM sp)),
-         |gd AS (SELECT DISTINCT split, doc_id, list_reduce(list_transform(string_split_regex(substr(md5(u.s), 1, 14), ''),
-         |    c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b) AS hh
+         |  FROM (SELECT doc_id, split, ${sqlTokens("text")} AS tk FROM sp)),
+         |gd AS (SELECT DISTINCT split, doc_id, ${sqlMd5Hex("u.s", 14)} AS hh
          |  FROM toks, unnest(sh) AS u(s)),
          |nd AS (SELECT split, CAST(count(*) AS BIGINT) AS n_docs FROM sp GROUP BY split),
          |x AS (SELECT split, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs_with_grams,
@@ -1500,16 +1414,10 @@ object CorpusQueries {
         .orderBy("doc_id")),
       // novelty = decontaminate's complement: val-doc grams LEFT-joined
       // against the train gram set; same gram-hash pipeline as above
-      s"""WITH h AS (SELECT doc_id, text, list_reduce(list_transform(string_split_regex(substr(md5(text), 1, 8), ''),
-         |    c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b) % 100 AS bucket FROM documents),
-         |toks AS (SELECT doc_id, bucket, list_distinct(list_transform(generate_series(1, greatest(len(tk) - 7, 0)),
-         |    i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] || ' ' || tk[i+3] || ' ' || tk[i+4] || ' ' || tk[i+5] || ' ' || tk[i+6] || ' ' || tk[i+7])) AS sh
-         |  FROM (SELECT doc_id, bucket, regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+') AS tk FROM h)),
-         |vg AS (SELECT DISTINCT doc_id, list_reduce(list_transform(string_split_regex(substr(md5(u.s), 1, 14), ''),
-         |    c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b) AS hh
+      s"""WITH ${sqlBucketGrams(8)},
+         |vg AS (SELECT DISTINCT doc_id, ${sqlMd5Hex("u.s", 14)} AS hh
          |  FROM toks, unnest(sh) AS u(s) WHERE bucket >= 80 AND bucket < 90),
-         |rg AS (SELECT DISTINCT list_reduce(list_transform(string_split_regex(substr(md5(u.s), 1, 14), ''),
-         |    c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b) AS hh
+         |rg AS (SELECT DISTINCT ${sqlMd5Hex("u.s", 14)} AS hh
          |  FROM toks, unnest(sh) AS u(s) WHERE bucket < 80)
          |SELECT vg.doc_id AS doc_id, count(*) AS n_grams,
          |  CAST(sum(CASE WHEN rg.hh IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_novel,
@@ -1527,9 +1435,8 @@ object CorpusQueries {
           docsSpread(s, dir), col("text"),
           size(TextOps.tokens(col("text"))), budget = 12000L)
         .orderBy("doc_id")),
-      """WITH h AS (SELECT doc_id, list_reduce(list_transform(string_split_regex(substr(md5(text), 1, 8), ''),
-        |    c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b) AS hv,
-        |    CAST(len(regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+')) AS BIGINT) AS n
+      s"""WITH h AS (SELECT doc_id, ${sqlMd5Hex("text", 8)} AS hv,
+        |    CAST(len(${sqlTokens("text")}) AS BIGINT) AS n
         |  FROM documents),
         |p AS (SELECT doc_id, n,
         |    sum(n) OVER (ORDER BY hv, doc_id ROWS UNBOUNDED PRECEDING) AS cum
@@ -1568,7 +1475,7 @@ object CorpusQueries {
       val caseW = epochPlanWeights
         .map { case (k, v) => s"WHEN '$k' THEN $v" }.mkString(" ")
       s"""WITH t AS (SELECT source,
-         |  CAST(sum(len(regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+'))) AS BIGINT) AS n_tokens
+         |  CAST(sum(len(${sqlTokens("text")})) AS BIGINT) AS n_tokens
          |  FROM documents GROUP BY source),
          |p AS (SELECT source, n_tokens,
          |  CASE source $caseW ELSE 0.0 END AS weight FROM t),
@@ -1611,8 +1518,7 @@ object CorpusQueries {
           hashedDocsMemo(s, dir)
             .select(col("source"), col("__h56").as("__h"), col("__nc")))
         .orderBy("source")),
-      s"""WITH h AS (SELECT source, n_chars, list_reduce(list_transform(string_split_regex(substr(md5(text), 1, 14), ''),
-         |    c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b) AS hv
+      s"""WITH h AS (SELECT source, n_chars, ${sqlMd5Hex("text", 14)} AS hv
          |  FROM documents)
          |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
          |  CAST(count(DISTINCT hv) AS BIGINT) AS n_unique,
@@ -1654,8 +1560,7 @@ object CorpusQueries {
       // across engines even on bit-identical values (r7 red row)
       // the manifest DELTA between the < 400 ancestor slice and the full
       // corpus, replayed from scratch (the engine rides the hash memo)
-      s"""WITH h AS (SELECT doc_id, source, n_chars, list_reduce(list_transform(string_split_regex(substr(md5(text), 1, 14), ''),
-         |    c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b) AS hv
+      s"""WITH h AS (SELECT doc_id, source, n_chars, ${sqlMd5Hex("text", 14)} AS hv
          |  FROM documents),
          |nw AS (SELECT source, CAST(count(*) AS BIGINT) AS n, sum(hv) AS hs, CAST(sum(n_chars) AS BIGINT) AS tc FROM h GROUP BY source),
          |od AS (SELECT source, CAST(count(*) AS BIGINT) AS n, sum(hv) AS hs, CAST(sum(n_chars) AS BIGINT) AS tc FROM h WHERE doc_id < 400 GROUP BY source),
@@ -1850,19 +1755,11 @@ object CorpusQueries {
     }),
       // the lang_id argmax CTE crossed with source; fractions divide
       // exact counts
-      s"""WITH t AS (SELECT source, regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+') AS tk FROM documents),
+      s"""WITH t AS (SELECT source, ${sqlTokens("text")} AS tk FROM documents),
          |s AS (SELECT source,
-         |  len(list_filter(tk, x -> list_contains(['the','a','of','to','and','is','in','it'], x))) AS e,
-         |  len(list_filter(tk, x -> list_contains(['el','la','de','que','y','en','un','es'], x))) AS sp,
-         |  len(list_filter(tk, x -> list_contains(['le','la','de','et','un','que','les','des'], x))) AS f,
-         |  len(list_filter(tk, x -> list_contains(['der','die','das','und','ist','ein','zu','den'], x))) AS d,
-         |  len(list_filter(tk, x -> list_contains(['de','shi','bu','le','zai','ren','you','wo'], x))) AS z
+         |  $sqlLangVotes
          |  FROM t),
-         |l AS (SELECT source, CASE WHEN coalesce(greatest(e, sp, f, d, z), 0) = 0 THEN 'und'
-         |  WHEN e >= sp AND e >= f AND e >= d AND e >= z THEN 'en'
-         |  WHEN sp >= f AND sp >= d AND sp >= z THEN 'es'
-         |  WHEN f >= d AND f >= z THEN 'fr'
-         |  WHEN d >= z THEN 'de' ELSE 'zh' END AS lang_pred
+         |l AS (SELECT source, $sqlLangPick AS lang_pred
          |  FROM s),
          |c AS (SELECT source, lang_pred, CAST(count(*) AS BIGINT) AS n
          |  FROM l GROUP BY source, lang_pred),
@@ -1897,26 +1794,14 @@ object CorpusQueries {
     }),
       // same cumulative flag conjunctions over the Gopher CTE
       s"""WITH b AS (SELECT doc_id, text,
-         |    regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+') AS tk,
+         |    ${sqlTokens("text")} AS tk,
          |    string_split(text, chr(10)) AS ls
          |  FROM documents),
          |m AS (SELECT doc_id,
-         |  CAST(len(tk) AS BIGINT) AS n_words,
-         |  CAST(coalesce(list_sum(list_transform(tk, x -> CAST(length(x) AS BIGINT))), 0) AS BIGINT) AS len_sum,
-         |  CAST(length(text) - length(replace(text, '#', '')) AS BIGINT) AS n_hash,
-         |  CAST((length(text) - length(replace(text, '...', ''))) // 3 AS BIGINT) AS n_ell,
-         |  CAST(len(list_filter(tk, x -> regexp_matches(x, '[a-z]'))) AS BIGINT) AS n_alpha,
-         |  CAST(len(ls) AS BIGINT) AS n_lines,
-         |  CAST(len(list_filter(ls, l -> ltrim(l) LIKE '-%' OR ltrim(l) LIKE '*%' OR ltrim(l) LIKE '•%')) AS BIGINT) AS n_bullet,
-         |  CAST(len(list_filter(ls, l -> rtrim(l) LIKE '%...' OR rtrim(l) LIKE '%…')) AS BIGINT) AS n_ellend,
-         |  CAST(len(list_intersect(tk, ['the','be','to','of','and','that','have','with'])) AS BIGINT) AS stop_hits
+         |  $sqlGopherCounts
          |  FROM b),
          |d AS (SELECT doc_id, n_words, stop_hits,
-         |  CASE WHEN n_words > 0 THEN CAST(len_sum AS DOUBLE) / n_words ELSE 0.0 END AS mean_word_len,
-         |  CASE WHEN n_words > 0 THEN CAST(n_hash + n_ell AS DOUBLE) / n_words ELSE 0.0 END AS symbol_ratio,
-         |  CASE WHEN n_words > 0 THEN CAST(n_alpha AS DOUBLE) / n_words ELSE 0.0 END AS alpha_frac,
-         |  CASE WHEN n_lines > 0 THEN CAST(n_bullet AS DOUBLE) / n_lines ELSE 0.0 END AS bullet_frac,
-         |  CASE WHEN n_lines > 0 THEN CAST(n_ellend AS DOUBLE) / n_lines ELSE 0.0 END AS ellipsis_frac
+         |  $sqlGopherFracs
          |  FROM m),
          |f AS (SELECT
          |  (n_words >= 50 AND n_words <= 100000) AS k1,
@@ -1959,7 +1844,7 @@ object CorpusQueries {
     }),
       // multiset n-gram windows over nonempty tokens (the shingles
       // contract); instance/type counts are exact ints
-      s"""WITH tk AS (SELECT list_filter(regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+'), x -> x <> '') AS t
+      s"""WITH tk AS (SELECT list_filter(${sqlTokens("text")}, x -> x <> '') AS t
          |  FROM documents),
          |g1 AS (SELECT unnest(t) AS g FROM tk),
          |g2 AS (SELECT t[i] || ' ' || t[i + 1] AS g
@@ -2001,12 +1886,11 @@ object CorpusQueries {
     }),
       // same LC tail over the 56-bit shingle hashes (the minhash oracle's
       // hash fold), grouped by source
-      s"""WITH tk AS (SELECT source AS grp, regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+') AS t
+      s"""WITH tk AS (SELECT source AS grp, ${sqlTokens("text")} AS t
          |  FROM documents),
          |sh AS (SELECT grp, unnest(list_transform(generate_series(1, greatest(len(t) - 2, 0)),
          |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS g FROM tk),
-         |kk AS (SELECT grp, list_reduce(list_transform(string_split_regex(substr(md5(g), 1, 14), ''),
-         |    c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b) AS key
+         |kk AS (SELECT grp, ${sqlMd5Hex("g", 14)} AS key
          |  FROM sh),
          |${sqlLcCtes(16384)}
          |SELECT grp AS source, n_exact, occupied, ${sqlR4("est")} AS est,
@@ -2027,9 +1911,8 @@ object CorpusQueries {
       // u from the first-8-hex-digit content hash (exact in double), then
       // ((-ln(u)) / w) * 1e9 + 0.5 floored — quantized-then-ranked with
       // the doc_id tiebreak (the BM25/DSIR ln() portability discipline)
-      """WITH h AS (SELECT doc_id, source, CAST(length(text) AS BIGINT) AS weight,
-        |    list_reduce(list_transform(string_split_regex(substr(md5(text), 1, 8), ''),
-        |      c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b) AS hv
+      s"""WITH h AS (SELECT doc_id, source, CAST(length(text) AS BIGINT) AS weight,
+        |    ${sqlMd5Hex("text", 8)} AS hv
         |  FROM documents WHERE text IS NOT NULL AND length(text) > 0),
         |k AS (SELECT doc_id, source, weight,
         |    CAST(floor(((-ln((CAST(hv % 1048576 AS DOUBLE) + 0.5) / 1048576.0))
@@ -2052,7 +1935,7 @@ object CorpusQueries {
           r4(col("n").cast("double") / col("__t")).as("share"))
         .orderBy("bucket")
     }),
-      s"""WITH b AS (SELECT CAST(len(regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+')) AS BIGINT) // 64 AS bucket
+      s"""WITH b AS (SELECT CAST(len(${sqlTokens("text")}) AS BIGINT) // 64 AS bucket
          |  FROM documents),
          |c AS (SELECT bucket, CAST(count(*) AS BIGINT) AS n FROM b GROUP BY bucket),
          |t AS (SELECT CAST(sum(n) AS BIGINT) AS t FROM c)

@@ -119,6 +119,16 @@ object DedupQueries {
 
   private val sqlDedupIncremental: String = sqlDedupIncrementalVariant(capped = false)
 
+  /** Twin of [[Dedup.minhashLsh]]'s candidate pairs with their exact
+    * Jaccard: the banded signatures and every same-bucket pair
+    * `j(doc_id_a, doc_id_b, jaccard)`, doc_id_a < doc_id_b. */
+  private val sqlMinhashJaccardCtes: String =
+    s"""$sqlMinhashSig,
+       |bands AS ($sqlMinhashBands),
+       |j AS (SELECT DISTINCT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b,
+       |  CAST(len(list_intersect(a.h1, b.h1)) AS DOUBLE) / len(list_distinct(a.h1 || b.h1)) AS jaccard
+       |  FROM bands a JOIN bands b ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id)""".stripMargin
+
   /** The MinHash banding pipeline through `bands(doc_id, h1, band_idx,
     * band_hash)` as DuckDB CTEs — the (3, 16, 4) geometry every banded
     * consumer replays. Shared by the incremental-gate oracles and the
@@ -126,21 +136,8 @@ object DedupQueries {
     * declared above) evaluates at object init, before a later plain val
     * here would initialize. */
   private lazy val sqlBandsCtes: String =
-      s"""toks AS (SELECT doc_id, list_distinct(list_transform(generate_series(1, greatest(len(tk) - 2, 0)),
-         |    i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS sh
-         |  FROM (SELECT doc_id, regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+') AS tk FROM documents)),
-         |ne AS (SELECT doc_id, sh FROM toks WHERE len(sh) > 0),
-         |hh AS (SELECT doc_id, sh,
-         |  list_transform(sh, s -> list_reduce(list_transform(string_split_regex(substr(md5(s), 1, 14), ''),
-         |    c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b)) AS h1,
-         |  list_transform(sh, s -> list_reduce(list_transform(string_split_regex(substr(md5(s), 17, 14), ''),
-         |    c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b)) AS h2
-         |  FROM ne),
-         |sig AS (SELECT doc_id, h1, list_transform(generate_series(0, 15), i ->
-         |  list_min(list_transform(list_zip(h1, h2), p -> p[1] + i * p[2]))) AS sg FROM hh),
-         |bands AS MATERIALIZED (SELECT doc_id, h1, u.b AS band_idx,
-         |  md5(array_to_string(list_slice(sg, u.b * 4 + 1, u.b * 4 + 4), '|')) AS band_hash
-         |  FROM sig, (SELECT unnest([0, 1, 2, 3]) AS b) u)""".stripMargin
+      s"""$sqlMinhashSig,
+         |bands AS MATERIALIZED ($sqlMinhashBands)""".stripMargin
 
   private def sqlDedupIncrementalBody(cbCte: String, corpusLeg: String): String =
       s"""WITH $sqlBandsCtes$cbCte,
@@ -293,9 +290,7 @@ object DedupQueries {
         .groupBy(col("df_band")).agg(count(lit(1)).as("n_shingles"))
         .orderBy("df_band")
     }),
-      s"""WITH toks AS (SELECT doc_id, list_distinct(list_transform(generate_series(1, greatest(len(tk) - 2, 0)),
-         |    i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS sh
-         |  FROM (SELECT doc_id, regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+') AS tk FROM documents)),
+      s"""WITH $sqlShingles3,
          |df AS (SELECT md5(u.s) AS k, CAST(count(*) AS BIGINT) AS df
          |  FROM toks, unnest(sh) AS u(s) GROUP BY md5(u.s))
          |SELECT CASE WHEN df = 1 THEN '1' WHEN df = 2 THEN '2'
@@ -342,24 +337,7 @@ object DedupQueries {
       Dedup.minhashLsh(docs(s, dir), shingleN = 3, perms = 16, bands = 4, threshold = 0.5)
         .select(col("doc_id_a"), col("doc_id_b"), r4(col("jaccard")).as("jaccard"))
         .orderBy("doc_id_a", "doc_id_b")),
-      s"""WITH toks AS (SELECT doc_id, list_distinct(list_transform(generate_series(1, greatest(len(tk) - 2, 0)),
-         |    i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS sh
-         |  FROM (SELECT doc_id, regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+') AS tk FROM documents)),
-         |ne AS (SELECT doc_id, sh FROM toks WHERE len(sh) > 0),
-         |hh AS (SELECT doc_id, sh,
-         |  list_transform(sh, s -> list_reduce(list_transform(string_split_regex(substr(md5(s), 1, 14), ''),
-         |    c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b)) AS h1,
-         |  list_transform(sh, s -> list_reduce(list_transform(string_split_regex(substr(md5(s), 17, 14), ''),
-         |    c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b)) AS h2
-         |  FROM ne),
-         |sig AS (SELECT doc_id, h1, list_transform(generate_series(0, 15), i ->
-         |  list_min(list_transform(list_zip(h1, h2), p -> p[1] + i * p[2]))) AS sg FROM hh),
-         |bands AS (SELECT doc_id, h1, u.b AS band_idx,
-         |  md5(array_to_string(list_slice(sg, u.b * 4 + 1, u.b * 4 + 4), '|')) AS band_hash
-         |  FROM sig, (SELECT unnest([0, 1, 2, 3]) AS b) u),
-         |j AS (SELECT DISTINCT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b,
-         |  CAST(len(list_intersect(a.h1, b.h1)) AS DOUBLE) / len(list_distinct(a.h1 || b.h1)) AS jaccard
-         |  FROM bands a JOIN bands b ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id)
+      s"""WITH $sqlMinhashJaccardCtes
          |SELECT doc_id_a, doc_id_b, ${sqlR4("jaccard")} AS jaccard FROM j WHERE jaccard >= 0.5 ORDER BY doc_id_a, doc_id_b""".stripMargin),
 
     // extension: CONTAINMENT near-dup pairs — the asymmetric detector
@@ -378,13 +356,10 @@ object DedupQueries {
       // containment/jaccard over the distinct 56-bit shingle hashes; both
       // ratios are exact small-integer rationals, so the 0.8 gate and r4
       // are boundary-identical across engines
-      s"""WITH toks AS (SELECT doc_id, list_distinct(list_transform(generate_series(1, greatest(len(tk) - 2, 0)),
-         |    i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS sh
-         |  FROM (SELECT doc_id, regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+') AS tk FROM documents)),
+      s"""WITH $sqlShingles3,
          |ne AS (SELECT doc_id, sh FROM toks WHERE len(sh) > 0),
          |hh AS (SELECT doc_id,
-         |  list_distinct(list_transform(sh, s -> list_reduce(list_transform(string_split_regex(substr(md5(s), 1, 14), ''),
-         |    c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b))) AS hs
+         |  list_distinct(list_transform(sh, s -> ${sqlMd5Hex("s", 14)})) AS hs
          |  FROM ne),
          |p AS (SELECT doc_id, unnest(hs) AS h FROM hh),
          |df AS (SELECT h, count(*) AS df FROM p GROUP BY h),
@@ -552,7 +527,7 @@ object DedupQueries {
       // the CC map's non-representative members joined to token counts
       s"""$sqlCcCte,
          |g AS (SELECT node AS doc_id, min(lab) AS rep_id FROM reach GROUP BY node),
-         |tk AS (SELECT doc_id, CAST(len(regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+')) AS BIGINT) AS nt
+         |tk AS (SELECT doc_id, CAST(len(${sqlTokens("text")}) AS BIGINT) AS nt
          |  FROM documents),
          |tot AS (SELECT CAST(count(*) AS BIGINT) AS n_docs, CAST(sum(nt) AS BIGINT) AS total_tokens FROM tk),
          |dr AS (SELECT CAST(count(*) AS BIGINT) AS n_dropped,
@@ -590,24 +565,7 @@ object DedupQueries {
       // the verified pair list with RAW jaccard (a ratio of exact ints —
       // bit-identical across engines), then each band layout's unrolled
       // S-curve chain summed over r4-quantized per-pair probabilities
-      s"""WITH toks AS (SELECT doc_id, list_distinct(list_transform(generate_series(1, greatest(len(tk) - 2, 0)),
-         |    i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS sh
-         |  FROM (SELECT doc_id, regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+') AS tk FROM documents)),
-         |ne AS (SELECT doc_id, sh FROM toks WHERE len(sh) > 0),
-         |hh AS (SELECT doc_id, sh,
-         |  list_transform(sh, s -> list_reduce(list_transform(string_split_regex(substr(md5(s), 1, 14), ''),
-         |    c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b)) AS h1,
-         |  list_transform(sh, s -> list_reduce(list_transform(string_split_regex(substr(md5(s), 17, 14), ''),
-         |    c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b)) AS h2
-         |  FROM ne),
-         |sig AS (SELECT doc_id, h1, list_transform(generate_series(0, 15), i ->
-         |  list_min(list_transform(list_zip(h1, h2), p -> p[1] + i * p[2]))) AS sg FROM hh),
-         |bands AS (SELECT doc_id, h1, u.b AS band_idx,
-         |  md5(array_to_string(list_slice(sg, u.b * 4 + 1, u.b * 4 + 4), '|')) AS band_hash
-         |  FROM sig, (SELECT unnest([0, 1, 2, 3]) AS b) u),
-         |j AS (SELECT DISTINCT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b,
-         |  CAST(len(list_intersect(a.h1, b.h1)) AS DOUBLE) / len(list_distinct(a.h1 || b.h1)) AS jaccard
-         |  FROM bands a JOIN bands b ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id),
+      s"""WITH $sqlMinhashJaccardCtes,
          |jf AS (SELECT jaccard FROM j WHERE jaccard >= 0.5)
          |${lshPlanLayouts.map { case (b, r) =>
              s"""SELECT CAST($b AS INT) AS bands, CAST($r AS INT) AS rows_per_band,
@@ -805,9 +763,9 @@ object DedupQueries {
       // minhash pairs (j) reused verbatim; simhash chain renamed s* to
       // avoid CTE collisions; both pair sets union into one edge list
       s"""WITH RECURSIVE $sqlMinhashPairsCtes,
-         |stoks AS (SELECT doc_id, regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+') AS t FROM documents),
+         |stoks AS (SELECT doc_id, ${sqlTokens("text")} AS t FROM documents),
          |sh0 AS (SELECT doc_id, list_transform(t, tk -> list_reduce(
-         |  list_transform(string_split_regex(substr(md5(tk), 1, 15), ''), c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)),
+         |  ${sqlHexNibbles("substr(md5(tk), 1, 15)")},
          |  (a, b) -> a * 16 + b)) AS hs FROM stoks),
          |ss AS (SELECT doc_id, list_reduce(list_transform(generate_series(0, 59), b ->
          |  CASE WHEN list_sum(list_transform(hs, v -> CASE WHEN (v >> b) & 1 = 1 THEN 1 ELSE -1 END)) > 0
@@ -828,9 +786,9 @@ object DedupQueries {
       Dedup.simhashPairs(docs(s, dir), maxHamming = 8)
         .select(col("doc_id_a"), col("doc_id_b"), col("hamming").cast("int").as("hamming"))
         .orderBy("doc_id_a", "doc_id_b")),
-      s"""WITH toks AS (SELECT doc_id, regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+') AS t FROM documents),
+      s"""WITH toks AS (SELECT doc_id, ${sqlTokens("text")} AS t FROM documents),
          |h AS (SELECT doc_id, list_transform(t, tk -> list_reduce(
-         |  list_transform(string_split_regex(substr(md5(tk), 1, 15), ''), c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)),
+         |  ${sqlHexNibbles("substr(md5(tk), 1, 15)")},
          |  (a, b) -> a * 16 + b)) AS hs FROM toks),
          |s AS (SELECT doc_id, list_reduce(list_transform(generate_series(0, 59), b ->
          |  CASE WHEN list_sum(list_transform(hs, v -> CASE WHEN (v >> b) & 1 = 1 THEN 1 ELSE -1 END)) > 0
@@ -849,10 +807,7 @@ object DedupQueries {
     // pairs. Fixed centroids + deterministic pair set keep the whole
     // composition oracle-exact (recursive CTE on the DuckDB side).
     QueryDef("dedup_semantic", ((s, dir) => semanticGroups(s, dir).orderBy("doc_id")),
-      s"""WITH RECURSIVE c AS (SELECT CAST(vec_id AS INTEGER) AS cid, embedding AS cvec FROM embeddings WHERE vec_id < 8),
-         |asg AS (SELECT vec_id, cid FROM (
-         |  SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id ORDER BY ${sqlSq("e.embedding", "c.cvec")} ASC, c.cid ASC) AS rn
-         |  FROM embeddings e CROSS JOIN c) WHERE rn <= 2),
+      s"""WITH RECURSIVE $sqlTop2Blocks,
          |j AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
          |  FROM embeddings a JOIN asg aa ON a.vec_id = aa.vec_id
          |  JOIN asg ab ON aa.cid = ab.cid
@@ -913,24 +868,7 @@ object DedupQueries {
       // the dedup_minhash pipeline with a threshold-ladder rollup tail;
       // jaccards are exact rationals so the >= comparisons are
       // engine-independent
-      s"""WITH toks AS (SELECT doc_id, list_distinct(list_transform(generate_series(1, greatest(len(tk) - 2, 0)),
-         |    i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS sh
-         |  FROM (SELECT doc_id, regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+') AS tk FROM documents)),
-         |ne AS (SELECT doc_id, sh FROM toks WHERE len(sh) > 0),
-         |hh AS (SELECT doc_id, sh,
-         |  list_transform(sh, s -> list_reduce(list_transform(string_split_regex(substr(md5(s), 1, 14), ''),
-         |    c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b)) AS h1,
-         |  list_transform(sh, s -> list_reduce(list_transform(string_split_regex(substr(md5(s), 17, 14), ''),
-         |    c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b)) AS h2
-         |  FROM ne),
-         |sig AS (SELECT doc_id, h1, list_transform(generate_series(0, 15), i ->
-         |  list_min(list_transform(list_zip(h1, h2), p -> p[1] + i * p[2]))) AS sg FROM hh),
-         |bands AS (SELECT doc_id, h1, u.b AS band_idx,
-         |  md5(array_to_string(list_slice(sg, u.b * 4 + 1, u.b * 4 + 4), '|')) AS band_hash
-         |  FROM sig, (SELECT unnest([0, 1, 2, 3]) AS b) u),
-         |j AS (SELECT DISTINCT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b,
-         |  CAST(len(list_intersect(a.h1, b.h1)) AS DOUBLE) / len(list_distinct(a.h1 || b.h1)) AS jaccard
-         |  FROM bands a JOIN bands b ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id),
+      s"""WITH $sqlMinhashJaccardCtes,
          |jf AS (SELECT jaccard FROM j WHERE jaccard >= 0.5)
          |SELECT t.threshold, CAST(sum(CASE WHEN jf.jaccard >= t.threshold THEN 1 ELSE 0 END) AS BIGINT) AS n_pairs
          |FROM jf CROSS JOIN (SELECT unnest([0.5, 0.6, 0.7, 0.8, 0.9]) AS threshold) t

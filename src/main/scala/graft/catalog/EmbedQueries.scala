@@ -229,10 +229,7 @@ object EmbedQueries {
       // the blocked-candidate CTE with labels; two ranked branches pick
       // the positive and the hard negative; margins subtract unrounded
       // doubles before r4 in both engines
-      s"""WITH c AS (SELECT CAST(vec_id AS INTEGER) AS cid, embedding AS cvec FROM embeddings WHERE vec_id < 8),
-         |asg AS (SELECT vec_id, cid FROM (
-         |  SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id ORDER BY ${sqlSq("e.embedding", "c.cvec")} ASC, c.cid ASC) AS rn
-         |  FROM embeddings e CROSS JOIN c) WHERE rn <= 2),
+      s"""WITH $sqlTop2Blocks,
          |cand AS (SELECT a.vec_id AS id, b.vec_id AS cand_id, a.label AS la, b.label AS lb,
          |    ${sqlSq("a.embedding", "b.embedding")} AS d
          |  FROM embeddings a JOIN asg aa ON a.vec_id = aa.vec_id
@@ -328,10 +325,7 @@ object EmbedQueries {
     }),
       // same blocked candidate set, DISTINCT pairs, rank-3 per id, then
       // the global top-10 by (kd DESC, id ASC)
-      s"""WITH c AS (SELECT CAST(vec_id AS INTEGER) AS cid, embedding AS cvec FROM embeddings WHERE vec_id < 8),
-         |asg AS (SELECT vec_id, cid FROM (
-         |  SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id ORDER BY ${sqlSq("e.embedding", "c.cvec")} ASC, c.cid ASC) AS rn
-         |  FROM embeddings e CROSS JOIN c) WHERE rn <= 2),
+      s"""WITH $sqlTop2Blocks,
          |cand AS (SELECT DISTINCT a.vec_id AS id, b.vec_id AS cand_id,
          |    ${sqlSq("a.embedding", "b.embedding")} AS d
          |  FROM embeddings a JOIN asg aa ON a.vec_id = aa.vec_id
@@ -358,10 +352,7 @@ object EmbedQueries {
           r4(col("n_correct").cast("double") / col("n")).as("accuracy"))
         .orderBy("label")
     }),
-      s"""WITH c AS (SELECT CAST(vec_id AS INTEGER) AS cid, embedding AS cvec FROM embeddings WHERE vec_id < 8),
-         |asg AS (SELECT vec_id, cid FROM (
-         |  SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id ORDER BY ${sqlSq("e.embedding", "c.cvec")} ASC, c.cid ASC) AS rn
-         |  FROM embeddings e CROSS JOIN c) WHERE rn <= 2),
+      s"""WITH $sqlTop2Blocks,
          |cand AS (SELECT a.vec_id AS id, b.vec_id AS nn_id, ${sqlSq("a.embedding", "b.embedding")} AS d
          |  FROM embeddings a JOIN asg aa ON a.vec_id = aa.vec_id
          |  JOIN asg ab ON aa.cid = ab.cid
@@ -405,7 +396,7 @@ object EmbedQueries {
       // distances (ties → smaller cid, matching the engine fold), s =
       // (d2−d1)/d2 quantized to 1e-4 ints before the per-cluster sum;
       // all-NaN/null rows drop on both engines (engine: cluster_id = −1)
-      s"""WITH c AS (SELECT CAST(vec_id AS INTEGER) AS cid, embedding AS cvec FROM embeddings WHERE vec_id < 8),
+      s"""WITH c AS ($sqlFixedCentroids),
          |d AS (SELECT e.vec_id, c.cid, ${sqlSq("e.embedding", "c.cvec")} AS d
          |  FROM embeddings e CROSS JOIN c),
          |r AS (SELECT vec_id, cid, d,
@@ -528,10 +519,7 @@ object EmbedQueries {
         .select(col("id_a"), col("id_b"), r4(col("cos_sim")).as("cos_sim"))
         .distinct() // a pair sharing both blocks matches twice, identically
         .orderBy("id_a", "id_b")),
-      s"""WITH c AS (SELECT CAST(vec_id AS INTEGER) AS cid, embedding AS cvec FROM embeddings WHERE vec_id < 8),
-         |asg AS (SELECT vec_id, cid FROM (
-         |  SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id ORDER BY ${sqlSq("e.embedding", "c.cvec")} ASC, c.cid ASC) AS rn
-         |  FROM embeddings e CROSS JOIN c) WHERE rn <= 2)
+      s"""WITH $sqlTop2Blocks
          |SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b, ${sqlR4(sqlCosSim("a.embedding", "b.embedding"))} AS cos_sim
          |FROM embeddings a JOIN asg aa ON a.vec_id = aa.vec_id
          |JOIN asg ab ON aa.cid = ab.cid

@@ -270,24 +270,51 @@ object IvfQueries {
     Caching.ensureCached(normalizedAssignedCache(s, dir)(
       IvfIndex.assign(normalizedRecs(s, dir), normalizedCentroids(s, dir), Metric.Euclidean)))
 
+  /** Twin of `IvfIndex.query(fixedModel(…), qvec0(…), k = 10, probes = 3)`
+    * under `dist`: the exact top 10 of the probed clusters. */
+  private def sqlProbeTop10(dist: (String, String) => String): String =
+    s"""WITH ${sqlProbedFixed(dist)}
+       |SELECT e.vec_id AS vec_id, ${sqlR4(dist("e.embedding", "q.qvec"))} AS distance
+       |FROM embeddings e JOIN asg ON e.vec_id = asg.vec_id JOIN probed ON asg.cid = probed.cid, q
+       |ORDER BY ${dist("e.embedding", "q.qvec")} ASC, e.vec_id ASC LIMIT 10""".stripMargin
+
+  /** Twin of [[IvfIndex.queryAdc]]'s distance: per candidate, the
+    * squared distances of `q`'s sub-vectors to the encoded sub-codebook
+    * entries of `enc` (at rn = 1), summed in sub_idx order. */
+  private val sqlAdc: String =
+    s"""adc AS (SELECT enc.vec_id,
+       |  list_sum(list((${sqlSq(sqlPqSlice("q.qvec", "enc.sub_idx"), "enc.cvec")}) ORDER BY enc.sub_idx)) AS dist
+       |  FROM enc, q WHERE rn = 1 GROUP BY enc.vec_id)""".stripMargin
+
+  /** Twin of [[IvfIndex.queryMips]]'s norm augmentation x ++ √(M² − |x|²)
+    * (NaN norms dropped): `n2` → `m` → `aug(cols, a)`, and the fixed
+    * centroids over the augmented vectors `c(cid, ca)`. `cols` are the
+    * embeddings columns carried through. */
+  private def sqlMipsAug(cols: String): String =
+    s"""n2 AS (SELECT $cols, ${sqlDot("embedding", "embedding")} AS nn
+       |  FROM embeddings WHERE NOT isnan(${sqlDot("embedding", "embedding")})),
+       |m AS (SELECT max(nn) AS m2 FROM n2),
+       |aug AS (SELECT $cols,
+       |  list_append(list_transform(embedding, v -> CAST(v AS DOUBLE)), sqrt(m.m2 - nn)) AS a
+       |  FROM n2, m),
+       |c AS (SELECT CAST(vec_id AS INT) AS cid, a AS ca FROM aug WHERE vec_id < 8)""".stripMargin
+
+  /** Each augmented vector's nearest augmented centroid `(vec_id, cid)`. */
+  private val sqlMipsAssign: String =
+    s"""SELECT vec_id, cid FROM (
+       |  SELECT aug.vec_id, c.cid, row_number() OVER (PARTITION BY aug.vec_id ORDER BY ${sqlSq("aug.a", "c.ca")} ASC, c.cid ASC) AS rn
+       |  FROM aug CROSS JOIN c) WHERE rn = 1""".stripMargin
+
   /** The ivf_mips_query funnel replay (augmentation + assignment +
     * probe + dot rerank, list-for-list, NaN scores dropped as
     * [[IvfIndex.queryMips]] drops them) — shared VERBATIM by
     * `ivf_mips_store_query`: the on-disk posting-list roundtrip must
     * not change a single row, so the two queries carry one oracle. */
   private lazy val mipsQueryOracleSql: String =
-    s"""WITH q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0),
-       |n2 AS (SELECT vec_id, embedding, ${sqlDot("embedding", "embedding")} AS nn
-       |  FROM embeddings WHERE NOT isnan(${sqlDot("embedding", "embedding")})),
-       |m AS (SELECT max(nn) AS m2 FROM n2),
-       |aug AS (SELECT vec_id, embedding,
-       |  list_append(list_transform(embedding, v -> CAST(v AS DOUBLE)), sqrt(m.m2 - nn)) AS a
-       |  FROM n2, m),
-       |c AS (SELECT CAST(vec_id AS INT) AS cid, a AS ca FROM aug WHERE vec_id < 8),
+    s"""WITH $sqlQ0,
+       |${sqlMipsAug("vec_id, embedding")},
        |qa AS (SELECT qvec, list_append(list_transform(qvec, v -> CAST(v AS DOUBLE)), CAST(0.0 AS DOUBLE)) AS qaug FROM q),
-       |asg AS (SELECT vec_id, cid FROM (
-       |  SELECT aug.vec_id, c.cid, row_number() OVER (PARTITION BY aug.vec_id ORDER BY ${sqlSq("aug.a", "c.ca")} ASC, c.cid ASC) AS rn
-       |  FROM aug CROSS JOIN c) WHERE rn = 1),
+       |asg AS ($sqlMipsAssign),
        |probed AS (SELECT c.cid FROM c, qa ORDER BY ${sqlSq("c.ca", "qa.qaug")} ASC, c.cid ASC LIMIT 3)
        |SELECT aug.vec_id AS vec_id, ${sqlR4(sqlDot("aug.embedding", "q.qvec"))} AS score
        |FROM aug JOIN asg ON aug.vec_id = asg.vec_id JOIN probed ON asg.cid = probed.cid, q
@@ -323,18 +350,10 @@ object IvfQueries {
         filter = FilterDsl.predicate(col("metadata"), "label >= 5")))),
       // the filtered twin: same augmented probe replay, predicate applied
       // to the probed candidates BEFORE the top-k (filter precedes ranking)
-      s"""WITH q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0),
-         |n2 AS (SELECT vec_id, embedding, label, ${sqlDot("embedding", "embedding")} AS nn
-         |  FROM embeddings WHERE NOT isnan(${sqlDot("embedding", "embedding")})),
-         |m AS (SELECT max(nn) AS m2 FROM n2),
-         |aug AS (SELECT vec_id, embedding, label,
-         |  list_append(list_transform(embedding, v -> CAST(v AS DOUBLE)), sqrt(m.m2 - nn)) AS a
-         |  FROM n2, m),
-         |c AS (SELECT CAST(vec_id AS INT) AS cid, a AS ca FROM aug WHERE vec_id < 8),
+      s"""WITH $sqlQ0,
+         |${sqlMipsAug("vec_id, embedding, label")},
          |qa AS (SELECT qvec, list_append(list_transform(qvec, v -> CAST(v AS DOUBLE)), CAST(0.0 AS DOUBLE)) AS qaug FROM q),
-         |asg AS (SELECT vec_id, cid FROM (
-         |  SELECT aug.vec_id, c.cid, row_number() OVER (PARTITION BY aug.vec_id ORDER BY ${sqlSq("aug.a", "c.ca")} ASC, c.cid ASC) AS rn
-         |  FROM aug CROSS JOIN c) WHERE rn = 1),
+         |asg AS ($sqlMipsAssign),
          |probed AS (SELECT c.cid FROM c, qa ORDER BY ${sqlSq("c.ca", "qa.qaug")} ASC, c.cid ASC LIMIT 3)
          |SELECT aug.vec_id AS vec_id, ${sqlR4(sqlDot("aug.embedding", "q.qvec"))} AS score
          |FROM aug JOIN asg ON aug.vec_id = asg.vec_id JOIN probed ON asg.cid = probed.cid, q
@@ -385,19 +404,11 @@ object IvfQueries {
       // batch twin: augmentation + assignment + PER-QUERY probe + dot
       // rerank replayed with window functions (the per-query top-5 of the
       // bounded-heap reduction == the rn<=5 slice of the ranked rerank)
-      s"""WITH n2 AS (SELECT vec_id, embedding, ${sqlDot("embedding", "embedding")} AS nn
-         |  FROM embeddings WHERE NOT isnan(${sqlDot("embedding", "embedding")})),
-         |m AS (SELECT max(nn) AS m2 FROM n2),
-         |aug AS (SELECT vec_id, embedding,
-         |  list_append(list_transform(embedding, v -> CAST(v AS DOUBLE)), sqrt(m.m2 - nn)) AS a
-         |  FROM n2, m),
-         |c AS (SELECT CAST(vec_id AS INT) AS cid, a AS ca FROM aug WHERE vec_id < 8),
+      s"""WITH ${sqlMipsAug("vec_id, embedding")},
          |q AS (SELECT vec_id AS query_id, embedding AS qvec,
          |  list_append(list_transform(embedding, v -> CAST(v AS DOUBLE)), CAST(0.0 AS DOUBLE)) AS qaug
          |  FROM embeddings WHERE vec_id < 5),
-         |asg AS (SELECT vec_id, cid FROM (
-         |  SELECT aug.vec_id, c.cid, row_number() OVER (PARTITION BY aug.vec_id ORDER BY ${sqlSq("aug.a", "c.ca")} ASC, c.cid ASC) AS rn
-         |  FROM aug CROSS JOIN c) WHERE rn = 1),
+         |asg AS ($sqlMipsAssign),
          |probed AS (SELECT query_id, cid FROM (
          |  SELECT q.query_id, c.cid, row_number() OVER (PARTITION BY q.query_id ORDER BY ${sqlSq("c.ca", "q.qaug")} ASC, c.cid ASC) AS rn
          |  FROM c CROSS JOIN q) WHERE rn <= 3),
@@ -451,18 +462,10 @@ object IvfQueries {
       // augmented probe funnel replayed at each probe count via the
       // centroid-rank derivation (rank <= p == ORDER BY … LIMIT p), recall
       // vs the exact dot top-10 — NaN scores excluded on both paths
-      s"""WITH q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0),
-         |n2 AS (SELECT vec_id, embedding, ${sqlDot("embedding", "embedding")} AS nn
-         |  FROM embeddings WHERE NOT isnan(${sqlDot("embedding", "embedding")})),
-         |m AS (SELECT max(nn) AS m2 FROM n2),
-         |aug AS (SELECT vec_id, embedding,
-         |  list_append(list_transform(embedding, v -> CAST(v AS DOUBLE)), sqrt(m.m2 - nn)) AS a
-         |  FROM n2, m),
-         |c AS (SELECT CAST(vec_id AS INT) AS cid, a AS ca FROM aug WHERE vec_id < 8),
+      s"""WITH $sqlQ0,
+         |${sqlMipsAug("vec_id, embedding")},
          |qa AS (SELECT qvec, list_append(list_transform(qvec, v -> CAST(v AS DOUBLE)), CAST(0.0 AS DOUBLE)) AS qaug FROM q),
-         |asg AS (SELECT vec_id, cid FROM (
-         |  SELECT aug.vec_id, c.cid, row_number() OVER (PARTITION BY aug.vec_id ORDER BY ${sqlSq("aug.a", "c.ca")} ASC, c.cid ASC) AS rn
-         |  FROM aug CROSS JOIN c) WHERE rn = 1),
+         |asg AS ($sqlMipsAssign),
          |crank AS (SELECT c.cid, row_number() OVER (ORDER BY ${sqlSq("c.ca", "qa.qaug")} ASC, c.cid ASC) AS prank FROM c, qa),
          |ex AS (SELECT aug.vec_id FROM aug, q WHERE NOT isnan(${sqlDot("aug.embedding", "q.qvec")})
          |  ORDER BY ${sqlDot("aug.embedding", "q.qvec")} DESC, aug.vec_id ASC LIMIT 10),
@@ -499,7 +502,7 @@ object IvfQueries {
       // must hold: the transformed store (deletes out, vector perturbation
       // applied, fresh insert in) assigned to the fixed centroids; the
       // metadata rewrite keeps id and vector, so it cannot move a row
-      s"""WITH c AS (SELECT CAST(vec_id AS INTEGER) AS cid, embedding AS cvec FROM embeddings WHERE vec_id < 8),
+      s"""WITH c AS ($sqlFixedCentroids),
          |base AS (
          |  SELECT vec_id,
          |    CASE WHEN vec_id % 101 = 7
@@ -537,12 +540,8 @@ object IvfQueries {
       // the drain + merge replayed end to end: assignment under the fixed
       // centroids, the delete rule, the ceil(n/16) floor, survivor
       // selection, and the survivor-only re-assignment of donor remnants
-      s"""WITH c AS MATERIALIZED (SELECT CAST(vec_id AS INTEGER) AS cid, embedding AS cvec FROM embeddings WHERE vec_id < 8),
-         |asg AS (SELECT vec_id, cid FROM (
-         |  SELECT e.vec_id, c.cid,
-         |    row_number() OVER (PARTITION BY e.vec_id
-         |      ORDER BY ${sqlSq("e.embedding", "c.cvec")} ASC, c.cid ASC) AS rn
-         |  FROM embeddings e CROSS JOIN c) WHERE rn = 1),
+      s"""WITH c AS MATERIALIZED ($sqlFixedCentroids),
+         |asg AS (${sqlAssign(sqlSq)}),
          |kept AS MATERIALIZED (SELECT vec_id, cid FROM asg
          |  WHERE NOT (cid IN (2, 5) AND vec_id % 7 <> 0)),
          |fl AS (SELECT (count(*) + 15) // 16 AS f FROM kept),
@@ -583,12 +582,8 @@ object IvfQueries {
       // centroid (LEFT JOIN — empty clusters are listed, at fill 0), the
       // density-64 / ceil(n/16)-floor action and splitKWay's exact
       // 1.3x-over-split target arithmetic
-      s"""WITH c AS MATERIALIZED (SELECT CAST(vec_id AS INTEGER) AS cid, embedding AS cvec FROM embeddings WHERE vec_id < 8),
-         |asg AS (SELECT vec_id, cid FROM (
-         |  SELECT e.vec_id, c.cid,
-         |    row_number() OVER (PARTITION BY e.vec_id
-         |      ORDER BY ${sqlSq("e.embedding", "c.cvec")} ASC, c.cid ASC) AS rn
-         |  FROM embeddings e CROSS JOIN c) WHERE rn = 1),
+      s"""WITH c AS MATERIALIZED ($sqlFixedCentroids),
+         |asg AS (${sqlAssign(sqlSq)}),
          |kept AS MATERIALIZED (SELECT vec_id, cid FROM asg
          |  WHERE NOT (cid IN (2, 5) AND vec_id % 7 <> 0)),
          |fl AS (SELECT (count(*) + 15) // 16 AS f FROM kept),
@@ -658,12 +653,9 @@ object IvfQueries {
       // drain, the merge (floor / survivors / re-assignment), then per
       // probe budget the cost census and the probed top-10 vs the exact
       // top-10 over the SAME live rows, for each geometry
-      s"""WITH c AS MATERIALIZED (SELECT CAST(vec_id AS INTEGER) AS cid, embedding AS cvec FROM embeddings WHERE vec_id < 8),
+      s"""WITH c AS MATERIALIZED ($sqlFixedCentroids),
          |q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 2),
-         |asg AS (SELECT vec_id, cid FROM (
-         |  SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id
-         |    ORDER BY ${sqlSq("e.embedding", "c.cvec")} ASC, c.cid ASC) AS rn
-         |  FROM embeddings e CROSS JOIN c) WHERE rn = 1),
+         |asg AS (${sqlAssign(sqlSq)}),
          |kept AS MATERIALIZED (SELECT vec_id, cid FROM asg
          |  WHERE NOT (cid IN (2, 5) AND vec_id % 7 <> 0)),
          |fl AS (SELECT (count(*) + 15) // 16 AS f FROM kept),
@@ -726,7 +718,7 @@ object IvfQueries {
     QueryDef("ivf_assignments", ((s, dir) =>
       fixedModel(s, dir, Metric.Euclidean).assigned
         .select(col("id").as("vec_id"), col("cluster_id")).orderBy("vec_id")),
-      s"""WITH c AS (SELECT CAST(vec_id AS INTEGER) AS cid, embedding AS cvec FROM embeddings WHERE vec_id < 8),
+      s"""WITH c AS ($sqlFixedCentroids),
          |d AS (SELECT e.vec_id, c.cid, ${sqlSq("e.embedding", "c.cvec")} AS dist FROM embeddings e CROSS JOIN c),
          |r AS (SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY dist ASC, cid ASC) AS rn FROM d)
          |SELECT vec_id, cid AS cluster_id FROM r WHERE rn = 1 ORDER BY vec_id""".stripMargin),
@@ -735,15 +727,7 @@ object IvfQueries {
     QueryDef("ivf_probe_query", ((s, dir) =>
       knnOut(IvfIndex.query(fixedModel(s, dir, Metric.Euclidean),
         qvec0(s, dir), k = 10, probes = 3, Metric.Euclidean))),
-      s"""WITH c AS (SELECT CAST(vec_id AS INTEGER) AS cid, embedding AS cvec FROM embeddings WHERE vec_id < 8),
-         |q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0),
-         |asg AS (SELECT vec_id, cid FROM (
-         |  SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id ORDER BY ${sqlSq("e.embedding", "c.cvec")} ASC, c.cid ASC) AS rn
-         |  FROM embeddings e CROSS JOIN c) WHERE rn = 1),
-         |probed AS (SELECT c.cid FROM c, q ORDER BY ${sqlSq("c.cvec", "q.qvec")} ASC, c.cid ASC LIMIT 3)
-         |SELECT e.vec_id AS vec_id, ${sqlR4(sqlSq("e.embedding", "q.qvec"))} AS distance
-         |FROM embeddings e JOIN asg ON e.vec_id = asg.vec_id JOIN probed ON asg.cid = probed.cid, q
-         |ORDER BY ${sqlSq("e.embedding", "q.qvec")} ASC, e.vec_id ASC LIMIT 10""".stripMargin),
+      sqlProbeTop10(sqlSq)),
 
     // extension: probe-cost OBSERVABILITY — per probe budget, the exact
     // clusters-probed / rows-scanned census vs store totals off the
@@ -760,11 +744,9 @@ object IvfQueries {
       // replay the probe ranking once, join each probe budget against the
       // ranked prefix, LEFT join sizes (a duplicate-tied-away centroid is
       // probed with zero rows)
-      s"""WITH c AS (SELECT CAST(vec_id AS INTEGER) AS cid, embedding AS cvec FROM embeddings WHERE vec_id < 8),
-         |q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0),
-         |asg AS (SELECT vec_id, cid FROM (
-         |  SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id ORDER BY ${sqlSq("e.embedding", "c.cvec")} ASC, c.cid ASC) AS rn
-         |  FROM embeddings e CROSS JOIN c) WHERE rn = 1),
+      s"""WITH c AS ($sqlFixedCentroids),
+         |$sqlQ0,
+         |asg AS (${sqlAssign(sqlSq)}),
          |sz AS (SELECT cid, CAST(count(*) AS BIGINT) AS n FROM asg GROUP BY cid),
          |pr AS (SELECT c.cid, row_number() OVER (ORDER BY ${sqlSq("c.cvec", "q.qvec")} ASC, c.cid ASC) AS prk FROM c, q),
          |tot AS (SELECT (SELECT CAST(count(*) AS BIGINT) FROM embeddings) AS store_rows,
@@ -797,15 +779,13 @@ object IvfQueries {
           r4(col("n_moved").cast("double") / col("n_common")).as("moved_frac"))
     }),
       // both assignments replayed against the ORIGINAL fixed centroids
-      s"""WITH c AS (SELECT CAST(vec_id AS INTEGER) AS cid, embedding AS cvec FROM embeddings WHERE vec_id < 8),
+      s"""WITH c AS ($sqlFixedCentroids),
          |newv AS (SELECT vec_id,
          |    CASE WHEN vec_id % 101 = 7
          |      THEN list_prepend(CAST(embedding[1] + CAST(1.0 AS REAL) AS REAL), embedding[2:])
          |      ELSE embedding END AS embedding
          |  FROM embeddings WHERE NOT (vec_id % 97 = 3)),
-         |ao AS (SELECT vec_id, cid FROM (
-         |  SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id ORDER BY ${sqlSq("e.embedding", "c.cvec")} ASC, c.cid ASC) AS rn
-         |  FROM embeddings e CROSS JOIN c) WHERE rn = 1),
+         |ao AS (${sqlAssign(sqlSq)}),
          |an AS (SELECT vec_id, cid FROM (
          |  SELECT n.vec_id, c.cid, row_number() OVER (PARTITION BY n.vec_id ORDER BY ${sqlSq("n.embedding", "c.cvec")} ASC, c.cid ASC) AS rn
          |  FROM newv n CROSS JOIN c) WHERE rn = 1),
@@ -835,10 +815,8 @@ object IvfQueries {
         .orderBy("cluster_id")
     }),
       // the assignment CTE + the same quantized-int distance aggregation
-      s"""WITH c AS (SELECT CAST(vec_id AS INTEGER) AS cid, embedding AS cvec FROM embeddings WHERE vec_id < 8),
-         |asg AS (SELECT vec_id, cid FROM (
-         |  SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id ORDER BY ${sqlSq("e.embedding", "c.cvec")} ASC, c.cid ASC) AS rn
-         |  FROM embeddings e CROSS JOIN c) WHERE rn = 1),
+      s"""WITH c AS ($sqlFixedCentroids),
+         |asg AS (${sqlAssign(sqlSq)}),
          |d AS (SELECT asg.cid AS cluster_id,
          |    CAST(floor(${sqlSq("e.embedding", "c2.cvec")} * 10000.0 + 0.5) AS BIGINT) AS qd
          |  FROM embeddings e JOIN asg ON e.vec_id = asg.vec_id JOIN c c2 ON asg.cid = c2.cid)
@@ -857,12 +835,7 @@ object IvfQueries {
         qvec0(s, dir), k = 10, probes = 3, prefixDim = 16, shortlist = 50))),
       // the full funnel replayed: probe selection, prefix shortlist
       // within probed clusters, exact rerank
-      s"""WITH c AS (SELECT CAST(vec_id AS INTEGER) AS cid, embedding AS cvec FROM embeddings WHERE vec_id < 8),
-         |q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0),
-         |asg AS (SELECT vec_id, cid FROM (
-         |  SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id ORDER BY ${sqlSq("e.embedding", "c.cvec")} ASC, c.cid ASC) AS rn
-         |  FROM embeddings e CROSS JOIN c) WHERE rn = 1),
-         |probed AS (SELECT c.cid FROM c, q ORDER BY ${sqlSq("c.cvec", "q.qvec")} ASC, c.cid ASC LIMIT 3),
+      s"""WITH ${sqlProbedFixed(sqlSq)},
          |cand AS (SELECT e.vec_id AS vec_id, e.embedding AS embedding, q.qvec AS qvec
          |  FROM embeddings e JOIN asg ON e.vec_id = asg.vec_id JOIN probed ON asg.cid = probed.cid, q),
          |sl AS (SELECT vec_id, embedding, qvec FROM cand
@@ -876,12 +849,10 @@ object IvfQueries {
     QueryDef("ivf_hamming_query", ((s, dir) =>
       knnOut(IvfIndex.queryHammingRerank(fixedModel(s, dir, Metric.Euclidean),
         qvec0(s, dir), k = 10, probes = 3, shortlist = 50))),
-      s"""WITH c AS (SELECT CAST(vec_id AS INTEGER) AS cid, embedding AS cvec FROM embeddings WHERE vec_id < 8),
+      s"""WITH c AS ($sqlFixedCentroids),
          |q AS (SELECT embedding AS qvec, ${sqlBinCode("embedding")} AS qc FROM embeddings WHERE vec_id = 0),
-         |asg AS (SELECT vec_id, cid FROM (
-         |  SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id ORDER BY ${sqlSq("e.embedding", "c.cvec")} ASC, c.cid ASC) AS rn
-         |  FROM embeddings e CROSS JOIN c) WHERE rn = 1),
-         |probed AS (SELECT c.cid FROM c, q ORDER BY ${sqlSq("c.cvec", "q.qvec")} ASC, c.cid ASC LIMIT 3),
+         |asg AS (${sqlAssign(sqlSq)}),
+         |${sqlProbed3(sqlSq)},
          |cand AS (SELECT e.vec_id AS vec_id, e.embedding AS embedding, q.qvec AS qvec, q.qc AS qc
          |  FROM embeddings e JOIN asg ON e.vec_id = asg.vec_id JOIN probed ON asg.cid = probed.cid, q),
          |sl AS (SELECT vec_id, embedding, qvec FROM cand
@@ -902,30 +873,14 @@ object IvfQueries {
       val disk = IvfIndex.Model(fixedCentroids(s, dir), s.read.parquet(path))
       knnOut(IvfIndex.query(disk, qvec0(s, dir), k = 10, probes = 3, Metric.Euclidean))
     }),
-      s"""WITH c AS (SELECT CAST(vec_id AS INTEGER) AS cid, embedding AS cvec FROM embeddings WHERE vec_id < 8),
-         |q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0),
-         |asg AS (SELECT vec_id, cid FROM (
-         |  SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id ORDER BY ${sqlSq("e.embedding", "c.cvec")} ASC, c.cid ASC) AS rn
-         |  FROM embeddings e CROSS JOIN c) WHERE rn = 1),
-         |probed AS (SELECT c.cid FROM c, q ORDER BY ${sqlSq("c.cvec", "q.qvec")} ASC, c.cid ASC LIMIT 3)
-         |SELECT e.vec_id AS vec_id, ${sqlR4(sqlSq("e.embedding", "q.qvec"))} AS distance
-         |FROM embeddings e JOIN asg ON e.vec_id = asg.vec_id JOIN probed ON asg.cid = probed.cid, q
-         |ORDER BY ${sqlSq("e.embedding", "q.qvec")} ASC, e.vec_id ASC LIMIT 10""".stripMargin),
+      sqlProbeTop10(sqlSq)),
 
     // O6,O9 under the COSINE metric — assignment, probe ranking, and
     // re-rank all run cosine distance (reference metric.rs:30-31)
     QueryDef("ivf_probe_cosine", ((s, dir) =>
       knnOut(IvfIndex.query(fixedModel(s, dir, Metric.Cosine),
         qvec0(s, dir), k = 10, probes = 3, Metric.Cosine))),
-      s"""WITH c AS (SELECT CAST(vec_id AS INTEGER) AS cid, embedding AS cvec FROM embeddings WHERE vec_id < 8),
-         |q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0),
-         |asg AS (SELECT vec_id, cid FROM (
-         |  SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id ORDER BY ${sqlCosDist("e.embedding", "c.cvec")} ASC, c.cid ASC) AS rn
-         |  FROM embeddings e CROSS JOIN c) WHERE rn = 1),
-         |probed AS (SELECT c.cid FROM c, q ORDER BY ${sqlCosDist("c.cvec", "q.qvec")} ASC, c.cid ASC LIMIT 3)
-         |SELECT e.vec_id AS vec_id, ${sqlR4(sqlCosDist("e.embedding", "q.qvec"))} AS distance
-         |FROM embeddings e JOIN asg ON e.vec_id = asg.vec_id JOIN probed ON asg.cid = probed.cid, q
-         |ORDER BY ${sqlCosDist("e.embedding", "q.qvec")} ASC, e.vec_id ASC LIMIT 10""".stripMargin),
+      sqlProbeTop10(sqlCosDist)),
 
     // extension: batch ANN through the IVF index — per-query probe
     // pruning (each record meets only the queries probing its cluster),
@@ -938,11 +893,9 @@ object IvfQueries {
         .orderBy(col("query_id"), col("distance"), col("id"))
         .select(col("query_id"), col("id").as("vec_id"), r4(col("distance")).as("distance"))
     }),
-      s"""WITH c AS (SELECT CAST(vec_id AS INTEGER) AS cid, embedding AS cvec FROM embeddings WHERE vec_id < 8),
-         |q AS (SELECT vec_id AS query_id, embedding AS qvec FROM embeddings WHERE vec_id < 5),
-         |asg AS (SELECT vec_id, cid FROM (
-         |  SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id ORDER BY ${sqlSq("e.embedding", "c.cvec")} ASC, c.cid ASC) AS rn
-         |  FROM embeddings e CROSS JOIN c) WHERE rn = 1),
+      s"""WITH c AS ($sqlFixedCentroids),
+         |$sqlQBatch,
+         |asg AS (${sqlAssign(sqlSq)}),
          |probed AS (SELECT query_id, cid FROM (
          |  SELECT q.query_id, c.cid, row_number() OVER (PARTITION BY q.query_id ORDER BY ${sqlSq("c.cvec", "q.qvec")} ASC, c.cid ASC) AS rn
          |  FROM c CROSS JOIN q) WHERE rn <= 3),
@@ -963,11 +916,9 @@ object IvfQueries {
         .orderBy(col("query_id"), col("distance"), col("id"))
         .select(col("query_id"), col("id").as("vec_id"), r4(col("distance")).as("distance"))
     }),
-      s"""WITH c AS (SELECT CAST(vec_id AS INTEGER) AS cid, embedding AS cvec FROM embeddings WHERE vec_id < 8),
-         |q AS (SELECT vec_id AS query_id, embedding AS qvec FROM embeddings WHERE vec_id < 5),
-         |asg AS (SELECT vec_id, cid FROM (
-         |  SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id ORDER BY ${sqlSq("e.embedding", "c.cvec")} ASC, c.cid ASC) AS rn
-         |  FROM embeddings e CROSS JOIN c) WHERE rn = 1),
+      s"""WITH c AS ($sqlFixedCentroids),
+         |$sqlQBatch,
+         |asg AS (${sqlAssign(sqlSq)}),
          |probed AS (SELECT query_id, cid FROM (
          |  SELECT q.query_id, c.cid, row_number() OVER (PARTITION BY q.query_id ORDER BY ${sqlSq("c.cvec", "q.qvec")} ASC, c.cid ASC) AS rn
          |  FROM c CROSS JOIN q) WHERE rn <= 4),
@@ -996,12 +947,7 @@ object IvfQueries {
       knnOut(IvfIndex.query(IvfIndex.Model(model.centroids, qstore),
         qvec0(s, dir), k = 10, probes = 3, Metric.Euclidean))
     }),
-      s"""WITH c AS (SELECT CAST(vec_id AS INTEGER) AS cid, embedding AS cvec FROM embeddings WHERE vec_id < 8),
-         |q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0),
-         |asg AS (SELECT vec_id, cid FROM (
-         |  SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id ORDER BY ${sqlSq("e.embedding", "c.cvec")} ASC, c.cid ASC) AS rn
-         |  FROM embeddings e CROSS JOIN c) WHERE rn = 1),
-         |probed AS (SELECT c.cid FROM c, q ORDER BY ${sqlSq("c.cvec", "q.qvec")} ASC, c.cid ASC LIMIT 3),
+      s"""WITH ${sqlProbedFixed(sqlSq)},
          |dq AS (SELECT e.vec_id, asg.cid,
          |  list_transform(e.embedding, x -> CAST(
          |    CAST(CASE WHEN sc.scale > 0 THEN floor(CAST(x AS DOUBLE) / sc.scale + 0.5) ELSE 0 END AS INT) * sc.scale
@@ -1030,19 +976,9 @@ object IvfQueries {
       knnOut(IvfIndex.query(IvfIndex.Model(model.centroids, qstore),
         qvec0(s, dir), k = 10, probes = 3, Metric.Euclidean))
     }),
-      s"""WITH c AS (SELECT CAST(vec_id AS INTEGER) AS cid, embedding AS cvec FROM embeddings WHERE vec_id < 8),
-         |q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0),
-         |asg AS (SELECT vec_id, cid FROM (
-         |  SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id ORDER BY ${sqlSq("e.embedding", "c.cvec")} ASC, c.cid ASC) AS rn
-         |  FROM embeddings e CROSS JOIN c) WHERE rn = 1),
-         |probed AS (SELECT c.cid FROM c, q ORDER BY ${sqlSq("c.cvec", "q.qvec")} ASC, c.cid ASC LIMIT 3),
-         |cb AS (SELECT CAST(vec_id AS INT) AS code, embedding FROM embeddings WHERE vec_id < 16),
-         |books AS (SELECT u.s AS sub_idx, code,
-         |  list_slice(embedding, CAST(u.s * 16 + 1 AS INT), CAST(u.s * 16 + 16 AS INT)) AS cvec
-         |  FROM cb, unnest(generate_series(0, 3)) AS u(s)),
-         |enc AS (SELECT e.vec_id, b.sub_idx, b.cvec,
-         |  row_number() OVER (PARTITION BY e.vec_id, b.sub_idx ORDER BY ${sqlSq("list_slice(e.embedding, CAST(b.sub_idx * 16 + 1 AS INT), CAST(b.sub_idx * 16 + 16 AS INT))", "b.cvec")} ASC, b.code ASC) AS rn
-         |  FROM embeddings e CROSS JOIN books b),
+      s"""WITH ${sqlProbedFixed(sqlSq)},
+         |$sqlPqBooks,
+         |${sqlPqEncode("embeddings")},
          |recon AS (SELECT vec_id, flatten(list(cvec ORDER BY sub_idx)) AS deq FROM enc WHERE rn = 1 GROUP BY vec_id)
          |SELECT r.vec_id AS vec_id, ${sqlR4(sqlSq("r.deq", "q.qvec"))} AS distance
          |FROM recon r JOIN asg ON asg.vec_id = r.vec_id JOIN probed ON asg.cid = probed.cid, q
@@ -1068,22 +1004,10 @@ object IvfQueries {
     }),
       // ADC distance = per-subspace grouped sum of the same terms the
       // ivf_pq_query oracle sums flat; r4 absorbs the regrouping ulps
-      s"""WITH c AS (SELECT CAST(vec_id AS INTEGER) AS cid, embedding AS cvec FROM embeddings WHERE vec_id < 8),
-         |q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0),
-         |asg AS (SELECT vec_id, cid FROM (
-         |  SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id ORDER BY ${sqlSq("e.embedding", "c.cvec")} ASC, c.cid ASC) AS rn
-         |  FROM embeddings e CROSS JOIN c) WHERE rn = 1),
-         |probed AS (SELECT c.cid FROM c, q ORDER BY ${sqlSq("c.cvec", "q.qvec")} ASC, c.cid ASC LIMIT 3),
-         |cb AS (SELECT CAST(vec_id AS INT) AS code, embedding FROM embeddings WHERE vec_id < 16),
-         |books AS (SELECT u.s AS sub_idx, code,
-         |  list_slice(embedding, CAST(u.s * 16 + 1 AS INT), CAST(u.s * 16 + 16 AS INT)) AS cvec
-         |  FROM cb, unnest(generate_series(0, 3)) AS u(s)),
-         |enc AS (SELECT e.vec_id, b.sub_idx, b.cvec,
-         |  row_number() OVER (PARTITION BY e.vec_id, b.sub_idx ORDER BY ${sqlSq("list_slice(e.embedding, CAST(b.sub_idx * 16 + 1 AS INT), CAST(b.sub_idx * 16 + 16 AS INT))", "b.cvec")} ASC, b.code ASC) AS rn
-         |  FROM embeddings e CROSS JOIN books b),
-         |adc AS (SELECT enc.vec_id,
-         |  list_sum(list((${sqlSq("list_slice(q.qvec, CAST(enc.sub_idx * 16 + 1 AS INT), CAST(enc.sub_idx * 16 + 16 AS INT))", "enc.cvec")}) ORDER BY enc.sub_idx)) AS dist
-         |  FROM enc, q WHERE rn = 1 GROUP BY enc.vec_id)
+      s"""WITH ${sqlProbedFixed(sqlSq)},
+         |$sqlPqBooks,
+         |${sqlPqEncode("embeddings")},
+         |$sqlAdc
          |SELECT adc.vec_id AS vec_id, ${sqlR4("adc.dist")} AS distance
          |FROM adc JOIN asg ON asg.vec_id = adc.vec_id JOIN probed ON asg.cid = probed.cid
          |ORDER BY adc.dist ASC, adc.vec_id ASC LIMIT 10""".stripMargin),
@@ -1124,18 +1048,14 @@ object IvfQueries {
          |q AS (SELECT rv AS qvec FROM rot WHERE vec_id = 0),
          |asg AS (SELECT vec_id, cid FROM (
          |  SELECT e.vec_id, c0.cid, row_number() OVER (PARTITION BY e.vec_id ORDER BY ${sqlSq("e.embedding", "c0.cvec")} ASC, c0.cid ASC) AS rn
-         |  FROM embeddings e CROSS JOIN (SELECT CAST(vec_id AS INTEGER) AS cid, embedding AS cvec FROM embeddings WHERE vec_id < 8) c0) WHERE rn = 1),
-         |probed AS (SELECT c.cid FROM c, q ORDER BY ${sqlSq("c.cvec", "q.qvec")} ASC, c.cid ASC LIMIT 3),
+         |  FROM embeddings e CROSS JOIN ($sqlFixedCentroids) c0) WHERE rn = 1),
+         |${sqlProbed3(sqlSq)},
          |cb AS (SELECT CAST(vec_id AS INT) AS code, rv AS embedding FROM rot WHERE vec_id < 16),
-         |books AS (SELECT u.s AS sub_idx, code,
-         |  list_slice(embedding, CAST(u.s * 16 + 1 AS INT), CAST(u.s * 16 + 16 AS INT)) AS cvec
-         |  FROM cb, unnest(generate_series(0, 3)) AS u(s)),
+         |$sqlPqSubBooks,
          |enc AS (SELECT e.vec_id, b.sub_idx, b.cvec,
          |  row_number() OVER (PARTITION BY e.vec_id, b.sub_idx ORDER BY ${sqlSq("list_slice(e.rv, CAST(b.sub_idx * 16 + 1 AS INT), CAST(b.sub_idx * 16 + 16 AS INT))", "b.cvec")} ASC, b.code ASC) AS rn
          |  FROM rot e CROSS JOIN books b),
-         |adc AS (SELECT enc.vec_id,
-         |  list_sum(list((${sqlSq("list_slice(q.qvec, CAST(enc.sub_idx * 16 + 1 AS INT), CAST(enc.sub_idx * 16 + 16 AS INT))", "enc.cvec")}) ORDER BY enc.sub_idx)) AS dist
-         |  FROM enc, q WHERE rn = 1 GROUP BY enc.vec_id)
+         |$sqlAdc
          |SELECT adc.vec_id AS vec_id, ${sqlR4("adc.dist")} AS distance
          |FROM adc JOIN asg ON asg.vec_id = adc.vec_id JOIN probed ON asg.cid = probed.cid
          |ORDER BY adc.dist ASC, adc.vec_id ASC LIMIT 10""".stripMargin),
@@ -1170,22 +1090,10 @@ object IvfQueries {
       //
       // same grouped-sum ADC oracle as ivf_adc_query, with the metadata
       // predicate applied before the top-k (filter composes pre-ranking)
-      s"""WITH c AS (SELECT CAST(vec_id AS INTEGER) AS cid, embedding AS cvec FROM embeddings WHERE vec_id < 8),
-         |q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0),
-         |asg AS (SELECT vec_id, cid FROM (
-         |  SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id ORDER BY ${sqlSq("e.embedding", "c.cvec")} ASC, c.cid ASC) AS rn
-         |  FROM embeddings e CROSS JOIN c) WHERE rn = 1),
-         |probed AS (SELECT c.cid FROM c, q ORDER BY ${sqlSq("c.cvec", "q.qvec")} ASC, c.cid ASC LIMIT 3),
-         |cb AS (SELECT CAST(vec_id AS INT) AS code, embedding FROM embeddings WHERE vec_id < 16),
-         |books AS (SELECT u.s AS sub_idx, code,
-         |  list_slice(embedding, CAST(u.s * 16 + 1 AS INT), CAST(u.s * 16 + 16 AS INT)) AS cvec
-         |  FROM cb, unnest(generate_series(0, 3)) AS u(s)),
-         |enc AS (SELECT e.vec_id, b.sub_idx, b.cvec,
-         |  row_number() OVER (PARTITION BY e.vec_id, b.sub_idx ORDER BY ${sqlSq("list_slice(e.embedding, CAST(b.sub_idx * 16 + 1 AS INT), CAST(b.sub_idx * 16 + 16 AS INT))", "b.cvec")} ASC, b.code ASC) AS rn
-         |  FROM embeddings e CROSS JOIN books b),
-         |adc AS (SELECT enc.vec_id,
-         |  list_sum(list((${sqlSq("list_slice(q.qvec, CAST(enc.sub_idx * 16 + 1 AS INT), CAST(enc.sub_idx * 16 + 16 AS INT))", "enc.cvec")}) ORDER BY enc.sub_idx)) AS dist
-         |  FROM enc, q WHERE rn = 1 GROUP BY enc.vec_id)
+      s"""WITH ${sqlProbedFixed(sqlSq)},
+         |$sqlPqBooks,
+         |${sqlPqEncode("embeddings")},
+         |$sqlAdc
          |SELECT adc.vec_id AS vec_id, ${sqlR4("adc.dist")} AS distance
          |FROM adc JOIN asg ON asg.vec_id = adc.vec_id JOIN probed ON asg.cid = probed.cid
          |JOIN embeddings e ON e.vec_id = adc.vec_id
@@ -1213,22 +1121,10 @@ object IvfQueries {
     }),
       // the disk layout changes the files, never the rows — the
       // ivf_adc_query oracle applies verbatim
-      s"""WITH c AS (SELECT CAST(vec_id AS INTEGER) AS cid, embedding AS cvec FROM embeddings WHERE vec_id < 8),
-         |q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0),
-         |asg AS (SELECT vec_id, cid FROM (
-         |  SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id ORDER BY ${sqlSq("e.embedding", "c.cvec")} ASC, c.cid ASC) AS rn
-         |  FROM embeddings e CROSS JOIN c) WHERE rn = 1),
-         |probed AS (SELECT c.cid FROM c, q ORDER BY ${sqlSq("c.cvec", "q.qvec")} ASC, c.cid ASC LIMIT 3),
-         |cb AS (SELECT CAST(vec_id AS INT) AS code, embedding FROM embeddings WHERE vec_id < 16),
-         |books AS (SELECT u.s AS sub_idx, code,
-         |  list_slice(embedding, CAST(u.s * 16 + 1 AS INT), CAST(u.s * 16 + 16 AS INT)) AS cvec
-         |  FROM cb, unnest(generate_series(0, 3)) AS u(s)),
-         |enc AS (SELECT e.vec_id, b.sub_idx, b.cvec,
-         |  row_number() OVER (PARTITION BY e.vec_id, b.sub_idx ORDER BY ${sqlSq("list_slice(e.embedding, CAST(b.sub_idx * 16 + 1 AS INT), CAST(b.sub_idx * 16 + 16 AS INT))", "b.cvec")} ASC, b.code ASC) AS rn
-         |  FROM embeddings e CROSS JOIN books b),
-         |adc AS (SELECT enc.vec_id,
-         |  list_sum(list((${sqlSq("list_slice(q.qvec, CAST(enc.sub_idx * 16 + 1 AS INT), CAST(enc.sub_idx * 16 + 16 AS INT))", "enc.cvec")}) ORDER BY enc.sub_idx)) AS dist
-         |  FROM enc, q WHERE rn = 1 GROUP BY enc.vec_id)
+      s"""WITH ${sqlProbedFixed(sqlSq)},
+         |$sqlPqBooks,
+         |${sqlPqEncode("embeddings")},
+         |$sqlAdc
          |SELECT adc.vec_id AS vec_id, ${sqlR4("adc.dist")} AS distance
          |FROM adc JOIN asg ON asg.vec_id = adc.vec_id JOIN probed ON asg.cid = probed.cid
          |ORDER BY adc.dist ASC, adc.vec_id ASC LIMIT 10""".stripMargin),
@@ -1259,7 +1155,7 @@ object IvfQueries {
             .as("codes_sum"))
         .orderBy("cluster_id")
     }),
-      s"""WITH c AS (SELECT CAST(vec_id AS INTEGER) AS cid, embedding AS cvec FROM embeddings WHERE vec_id < 8),
+      s"""WITH c AS ($sqlFixedCentroids),
          |base AS (
          |  SELECT vec_id,
          |    CASE WHEN vec_id % 101 = 7
@@ -1274,10 +1170,7 @@ object IvfQueries {
          |    row_number() OVER (PARTITION BY b.vec_id
          |      ORDER BY ${sqlSq("b.embedding", "c.cvec")} ASC, c.cid ASC) AS rn
          |  FROM base b CROSS JOIN c) WHERE rn = 1),
-         |cb AS (SELECT CAST(vec_id AS INT) AS code, embedding FROM embeddings WHERE vec_id < 16),
-         |books AS (SELECT u.s AS sub_idx, code,
-         |  list_slice(embedding, CAST(u.s * 16 + 1 AS INT), CAST(u.s * 16 + 16 AS INT)) AS cvec
-         |  FROM cb, unnest(generate_series(0, 3)) AS u(s)),
+         |$sqlPqBooks,
          |enc AS (SELECT bb.vec_id, b.sub_idx, b.code,
          |  row_number() OVER (PARTITION BY bb.vec_id, b.sub_idx
          |    ORDER BY ${sqlSq("list_slice(bb.embedding, CAST(b.sub_idx * 16 + 1 AS INT), CAST(b.sub_idx * 16 + 16 AS INT))", "b.cvec")} ASC, b.code ASC) AS rn
@@ -1306,21 +1199,14 @@ object IvfQueries {
         .select(col("query_id"), col("id").as("vec_id"),
           r4(col("distance")).as("distance"))
     }),
-      s"""WITH c AS (SELECT CAST(vec_id AS INTEGER) AS cid, embedding AS cvec FROM embeddings WHERE vec_id < 8),
-         |q AS (SELECT vec_id AS query_id, embedding AS qvec FROM embeddings WHERE vec_id < 5),
-         |asg AS (SELECT vec_id, cid FROM (
-         |  SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id ORDER BY ${sqlSq("e.embedding", "c.cvec")} ASC, c.cid ASC) AS rn
-         |  FROM embeddings e CROSS JOIN c) WHERE rn = 1),
+      s"""WITH c AS ($sqlFixedCentroids),
+         |$sqlQBatch,
+         |asg AS (${sqlAssign(sqlSq)}),
          |probed AS (SELECT query_id, cid FROM (
          |  SELECT q.query_id, c.cid, row_number() OVER (PARTITION BY q.query_id ORDER BY ${sqlSq("c.cvec", "q.qvec")} ASC, c.cid ASC) AS rn
          |  FROM c CROSS JOIN q) WHERE rn <= 3),
-         |cb AS (SELECT CAST(vec_id AS INT) AS code, embedding FROM embeddings WHERE vec_id < 16),
-         |books AS (SELECT u.s AS sub_idx, code,
-         |  list_slice(embedding, CAST(u.s * 16 + 1 AS INT), CAST(u.s * 16 + 16 AS INT)) AS cvec
-         |  FROM cb, unnest(generate_series(0, 3)) AS u(s)),
-         |enc AS (SELECT e.vec_id, b.sub_idx, b.cvec,
-         |  row_number() OVER (PARTITION BY e.vec_id, b.sub_idx ORDER BY ${sqlSq("list_slice(e.embedding, CAST(b.sub_idx * 16 + 1 AS INT), CAST(b.sub_idx * 16 + 16 AS INT))", "b.cvec")} ASC, b.code ASC) AS rn
-         |  FROM embeddings e CROSS JOIN books b),
+         |$sqlPqBooks,
+         |${sqlPqEncode("embeddings")},
          |adc AS (SELECT q.query_id, enc.vec_id,
          |  list_sum(list((${sqlSq("list_slice(q.qvec, CAST(enc.sub_idx * 16 + 1 AS INT), CAST(enc.sub_idx * 16 + 16 AS INT))", "enc.cvec")}) ORDER BY enc.sub_idx)) AS dist
          |  FROM enc, q WHERE rn = 1 GROUP BY q.query_id, enc.vec_id),
@@ -1350,16 +1236,8 @@ object IvfQueries {
       // (v − own-centroid) slices against the books, the ADC distance
       // compares (q − candidate's-cluster-centroid) slices against the
       // chosen entries — both joins replayed row-exactly
-      s"""WITH c AS (SELECT CAST(vec_id AS INTEGER) AS cid, embedding AS cvec FROM embeddings WHERE vec_id < 8),
-         |q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0),
-         |asg AS (SELECT vec_id, cid FROM (
-         |  SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id ORDER BY ${sqlSq("e.embedding", "c.cvec")} ASC, c.cid ASC) AS rn
-         |  FROM embeddings e CROSS JOIN c) WHERE rn = 1),
-         |probed AS (SELECT c.cid FROM c, q ORDER BY ${sqlSq("c.cvec", "q.qvec")} ASC, c.cid ASC LIMIT 3),
-         |cb AS (SELECT CAST(vec_id AS INT) AS code, embedding FROM embeddings WHERE vec_id < 16),
-         |books AS (SELECT u.s AS sub_idx, code,
-         |  list_slice(embedding, CAST(u.s * 16 + 1 AS INT), CAST(u.s * 16 + 16 AS INT)) AS cvec
-         |  FROM cb, unnest(generate_series(0, 3)) AS u(s)),
+      s"""WITH ${sqlProbedFixed(sqlSq)},
+         |$sqlPqBooks,
          |enc AS (SELECT e.vec_id, b.sub_idx, b.cvec,
          |  row_number() OVER (PARTITION BY e.vec_id, b.sub_idx ORDER BY ${sqlSq(sqlSub("list_slice(e.embedding, CAST(b.sub_idx * 16 + 1 AS INT), CAST(b.sub_idx * 16 + 16 AS INT))", "list_slice(cc.cvec, CAST(b.sub_idx * 16 + 1 AS INT), CAST(b.sub_idx * 16 + 16 AS INT))"), "b.cvec")} ASC, b.code ASC) AS rn
          |  FROM embeddings e JOIN asg ON asg.vec_id = e.vec_id JOIN c cc ON cc.cid = asg.cid CROSS JOIN books b),
@@ -1409,17 +1287,11 @@ object IvfQueries {
          |asg AS (SELECT vec_id, cid FROM (
          |  SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id ORDER BY ${sqlSq("e.embedding", "c.cvec")} ASC, c.cid ASC) AS rn
          |  FROM nv e CROSS JOIN c) WHERE rn = 1),
-         |probed AS (SELECT c.cid FROM c, q ORDER BY ${sqlSq("c.cvec", "q.qvec")} ASC, c.cid ASC LIMIT 3),
+         |${sqlProbed3(sqlSq)},
          |cb AS (SELECT CAST(vec_id AS INT) AS code, embedding FROM nv WHERE vec_id < 16),
-         |books AS (SELECT u.s AS sub_idx, code,
-         |  list_slice(embedding, CAST(u.s * 16 + 1 AS INT), CAST(u.s * 16 + 16 AS INT)) AS cvec
-         |  FROM cb, unnest(generate_series(0, 3)) AS u(s)),
-         |enc AS (SELECT e.vec_id, b.sub_idx, b.cvec,
-         |  row_number() OVER (PARTITION BY e.vec_id, b.sub_idx ORDER BY ${sqlSq("list_slice(e.embedding, CAST(b.sub_idx * 16 + 1 AS INT), CAST(b.sub_idx * 16 + 16 AS INT))", "b.cvec")} ASC, b.code ASC) AS rn
-         |  FROM nv e CROSS JOIN books b),
-         |adc AS (SELECT enc.vec_id,
-         |  list_sum(list((${sqlSq("list_slice(q.qvec, CAST(enc.sub_idx * 16 + 1 AS INT), CAST(enc.sub_idx * 16 + 16 AS INT))", "enc.cvec")}) ORDER BY enc.sub_idx)) AS dist
-         |  FROM enc, q WHERE rn = 1 GROUP BY enc.vec_id)
+         |$sqlPqSubBooks,
+         |${sqlPqEncode("nv")},
+         |$sqlAdc
          |SELECT adc.vec_id AS vec_id, ${sqlR4("adc.dist / 2.0")} AS distance
          |FROM adc JOIN asg ON asg.vec_id = adc.vec_id JOIN probed ON asg.cid = probed.cid
          |ORDER BY adc.dist ASC, adc.vec_id ASC LIMIT 10""".stripMargin),
@@ -1441,18 +1313,13 @@ object IvfQueries {
       // batch residual oracle: the enc/adc residual terms of
       // ivf_adc_residual_query inside the per-query structure of
       // ivf_adc_batch
-      s"""WITH c AS (SELECT CAST(vec_id AS INTEGER) AS cid, embedding AS cvec FROM embeddings WHERE vec_id < 8),
-         |q AS (SELECT vec_id AS query_id, embedding AS qvec FROM embeddings WHERE vec_id < 5),
-         |asg AS (SELECT vec_id, cid FROM (
-         |  SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id ORDER BY ${sqlSq("e.embedding", "c.cvec")} ASC, c.cid ASC) AS rn
-         |  FROM embeddings e CROSS JOIN c) WHERE rn = 1),
+      s"""WITH c AS ($sqlFixedCentroids),
+         |$sqlQBatch,
+         |asg AS (${sqlAssign(sqlSq)}),
          |probed AS (SELECT query_id, cid FROM (
          |  SELECT q.query_id, c.cid, row_number() OVER (PARTITION BY q.query_id ORDER BY ${sqlSq("c.cvec", "q.qvec")} ASC, c.cid ASC) AS rn
          |  FROM c CROSS JOIN q) WHERE rn <= 3),
-         |cb AS (SELECT CAST(vec_id AS INT) AS code, embedding FROM embeddings WHERE vec_id < 16),
-         |books AS (SELECT u.s AS sub_idx, code,
-         |  list_slice(embedding, CAST(u.s * 16 + 1 AS INT), CAST(u.s * 16 + 16 AS INT)) AS cvec
-         |  FROM cb, unnest(generate_series(0, 3)) AS u(s)),
+         |$sqlPqBooks,
          |enc AS (SELECT e.vec_id, b.sub_idx, b.cvec,
          |  row_number() OVER (PARTITION BY e.vec_id, b.sub_idx ORDER BY ${sqlSq(sqlSub("list_slice(e.embedding, CAST(b.sub_idx * 16 + 1 AS INT), CAST(b.sub_idx * 16 + 16 AS INT))", "list_slice(cc.cvec, CAST(b.sub_idx * 16 + 1 AS INT), CAST(b.sub_idx * 16 + 16 AS INT))"), "b.cvec")} ASC, b.code ASC) AS rn
          |  FROM embeddings e JOIN asg ON asg.vec_id = e.vec_id JOIN c cc ON cc.cid = asg.cid CROSS JOIN books b),
@@ -1485,17 +1352,10 @@ object IvfQueries {
     }),
       // full-probe shortlist: every step deterministic, so the rerank path
       // gets a row-exact oracle (ivf_pq_rerank keeps the invariant form)
-      s"""WITH q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0),
-         |cb AS (SELECT CAST(vec_id AS INT) AS code, embedding FROM embeddings WHERE vec_id < 16),
-         |books AS (SELECT u.s AS sub_idx, code,
-         |  list_slice(embedding, CAST(u.s * 16 + 1 AS INT), CAST(u.s * 16 + 16 AS INT)) AS cvec
-         |  FROM cb, unnest(generate_series(0, 3)) AS u(s)),
-         |enc AS (SELECT e.vec_id, b.sub_idx, b.cvec,
-         |  row_number() OVER (PARTITION BY e.vec_id, b.sub_idx ORDER BY ${sqlSq("list_slice(e.embedding, CAST(b.sub_idx * 16 + 1 AS INT), CAST(b.sub_idx * 16 + 16 AS INT))", "b.cvec")} ASC, b.code ASC) AS rn
-         |  FROM embeddings e CROSS JOIN books b),
-         |adc AS (SELECT enc.vec_id,
-         |  list_sum(list((${sqlSq("list_slice(q.qvec, CAST(enc.sub_idx * 16 + 1 AS INT), CAST(enc.sub_idx * 16 + 16 AS INT))", "enc.cvec")}) ORDER BY enc.sub_idx)) AS dist
-         |  FROM enc, q WHERE rn = 1 GROUP BY enc.vec_id),
+      s"""WITH $sqlQ0,
+         |$sqlPqBooks,
+         |${sqlPqEncode("embeddings")},
+         |$sqlAdc,
          |short AS (SELECT vec_id FROM adc ORDER BY dist ASC, vec_id ASC LIMIT 50)
          |SELECT e.vec_id AS vec_id, ${sqlR4(sqlSq("e.embedding", "q.qvec"))} AS distance
          |FROM embeddings e JOIN short USING (vec_id), q
@@ -1556,17 +1416,10 @@ object IvfQueries {
       // full-SQL replay of the PQ funnel (same CTE machinery as
       // ivf_adc_rerank): codebook assignment, full-probe LUT scan, raw
       // top-10 vs rerank-of-top-50, recall against the exact top-10
-      s"""WITH q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0),
-         |cb AS (SELECT CAST(vec_id AS INT) AS code, embedding FROM embeddings WHERE vec_id < 16),
-         |books AS (SELECT u.s AS sub_idx, code,
-         |  list_slice(embedding, CAST(u.s * 16 + 1 AS INT), CAST(u.s * 16 + 16 AS INT)) AS cvec
-         |  FROM cb, unnest(generate_series(0, 3)) AS u(s)),
-         |enc AS (SELECT e.vec_id, b.sub_idx, b.cvec,
-         |  row_number() OVER (PARTITION BY e.vec_id, b.sub_idx ORDER BY ${sqlSq("list_slice(e.embedding, CAST(b.sub_idx * 16 + 1 AS INT), CAST(b.sub_idx * 16 + 16 AS INT))", "b.cvec")} ASC, b.code ASC) AS rn
-         |  FROM embeddings e CROSS JOIN books b),
-         |adc AS (SELECT enc.vec_id,
-         |  list_sum(list((${sqlSq("list_slice(q.qvec, CAST(enc.sub_idx * 16 + 1 AS INT), CAST(enc.sub_idx * 16 + 16 AS INT))", "enc.cvec")}) ORDER BY enc.sub_idx)) AS dist
-         |  FROM enc, q WHERE rn = 1 GROUP BY enc.vec_id),
+      s"""WITH $sqlQ0,
+         |$sqlPqBooks,
+         |${sqlPqEncode("embeddings")},
+         |$sqlAdc,
          |pq10 AS (SELECT vec_id FROM adc ORDER BY dist ASC, vec_id ASC LIMIT 10),
          |short AS (SELECT vec_id FROM adc ORDER BY dist ASC, vec_id ASC LIMIT 50),
          |rr10 AS (SELECT e.vec_id FROM embeddings e JOIN short USING (vec_id), q
@@ -1590,7 +1443,7 @@ object IvfQueries {
       knnOut(IvfIndex.query(model, qvec0(s, dir), k = 10, probes = 64, Metric.Euclidean))
     }),
       // probes ≥ n_centroids ⇒ IVF result must equal the exact top-10
-      s"""WITH q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0)
+      s"""WITH $sqlQ0
          |SELECT e.vec_id AS vec_id, ${sqlR4(sqlSq("e.embedding", "q.qvec"))} AS distance
          |FROM embeddings e, q
          |ORDER BY ${sqlSq("e.embedding", "q.qvec")} ASC, e.vec_id ASC LIMIT 10""".stripMargin),
@@ -1675,11 +1528,9 @@ object IvfQueries {
       // full-SQL replay of the probe funnel at each probe count: fixed
       // centroids (vec_id < 8), nearest-cluster assignment, probe the p
       // closest clusters, exact top-10 inside them, recall vs global top-10
-      s"""WITH c AS (SELECT CAST(vec_id AS INTEGER) AS cid, embedding AS cvec FROM embeddings WHERE vec_id < 8),
-         |q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0),
-         |asg AS (SELECT vec_id, cid FROM (
-         |  SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id ORDER BY ${sqlSq("e.embedding", "c.cvec")} ASC, c.cid ASC) AS rn
-         |  FROM embeddings e CROSS JOIN c) WHERE rn = 1),
+      s"""WITH c AS ($sqlFixedCentroids),
+         |$sqlQ0,
+         |asg AS (${sqlAssign(sqlSq)}),
          |ex AS (SELECT e.vec_id FROM embeddings e, q ORDER BY ${sqlSq("e.embedding", "q.qvec")} ASC, e.vec_id ASC LIMIT 10),
          |crank AS (SELECT c.cid, row_number() OVER (ORDER BY ${sqlSq("c.cvec", "q.qvec")} ASC, c.cid ASC) AS prank FROM c, q),
          |p AS (SELECT unnest([1, 2, 4, 8, 999]) AS probes),
@@ -1725,11 +1576,9 @@ object IvfQueries {
       // cost and recall replayed on the same probes axis and joined —
       // the probe-cost census CTEs beside the recall-curve CTEs, one row
       // per probe budget
-      s"""WITH c AS (SELECT CAST(vec_id AS INTEGER) AS cid, embedding AS cvec FROM embeddings WHERE vec_id < 8),
-         |q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0),
-         |asg AS MATERIALIZED (SELECT vec_id, cid FROM (
-         |  SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id ORDER BY ${sqlSq("e.embedding", "c.cvec")} ASC, c.cid ASC) AS rn
-         |  FROM embeddings e CROSS JOIN c) WHERE rn = 1),
+      s"""WITH c AS ($sqlFixedCentroids),
+         |$sqlQ0,
+         |asg AS MATERIALIZED (${sqlAssign(sqlSq)}),
          |sz AS (SELECT cid, CAST(count(*) AS BIGINT) AS n FROM asg GROUP BY cid),
          |crank AS MATERIALIZED (SELECT c.cid, row_number() OVER (ORDER BY ${sqlSq("c.cvec", "q.qvec")} ASC, c.cid ASC) AS prank FROM c, q),
          |tot AS (SELECT (SELECT CAST(count(*) AS BIGINT) FROM embeddings) AS store_rows,
@@ -1849,13 +1698,10 @@ object IvfQueries {
         .orderBy("cluster_id", "vec_id")),
       // per-cluster hash-order prefix over the fixed-centroid assignment;
       // hv re-derives contentHash32 (first 8 md5 hex digits) in SQL
-      s"""WITH c AS (SELECT CAST(vec_id AS INTEGER) AS cid, embedding AS cvec FROM embeddings WHERE vec_id < 8),
-         |asg AS (SELECT vec_id, cid FROM (
-         |  SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id ORDER BY ${sqlSq("e.embedding", "c.cvec")} ASC, c.cid ASC) AS rn
-         |  FROM embeddings e CROSS JOIN c) WHERE rn = 1),
+      s"""WITH c AS ($sqlFixedCentroids),
+         |asg AS (${sqlAssign(sqlSq)}),
          |r AS (SELECT vec_id, cid, row_number() OVER (PARTITION BY cid
-         |  ORDER BY list_reduce(list_transform(string_split_regex(substr(md5(CAST(vec_id AS VARCHAR)), 1, 8), ''),
-         |    c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b), vec_id) AS rn
+         |  ORDER BY ${sqlMd5Hex("CAST(vec_id AS VARCHAR)", 8)}, vec_id) AS rn
          |  FROM asg)
          |SELECT cid AS cluster_id, vec_id FROM r WHERE rn <= 5
          |ORDER BY cluster_id, vec_id""".stripMargin)

@@ -39,7 +39,7 @@ object ReferenceQueries {
     val union = (1 to k)
       .map(i => s"SELECT $i AS rank, id, mmr FROM s$i")
       .mkString("\n UNION ALL ")
-    s"""WITH q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0),
+    s"""WITH $sqlQ0,
        |cand AS MATERIALIZED (SELECT e.vec_id AS id, e.embedding AS embedding,
        |    ${sqlSq("e.embedding", "q.qvec")} AS dq
        |  FROM embeddings e, q
@@ -186,7 +186,7 @@ object ReferenceQueries {
 
     QueryDef("knn_euclidean", ((s, dir) =>
       knnOut(Knn.search(recs(s, dir), qvec0(s, dir), 10, Metric.Euclidean))),
-      s"""WITH q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0)
+      s"""WITH $sqlQ0
          |SELECT e.vec_id AS vec_id, ${sqlR4(sqlSq("e.embedding", "q.qvec"))} AS distance
          |FROM embeddings e, q
          |ORDER BY ${sqlSq("e.embedding", "q.qvec")} ASC, e.vec_id ASC LIMIT 10""".stripMargin),
@@ -194,7 +194,7 @@ object ReferenceQueries {
     // O1,O2,O21 — exact top-k, cosine distance (reference metric.rs:30-31)
     QueryDef("knn_cosine", ((s, dir) =>
       knnOut(Knn.search(recs(s, dir), qvec0(s, dir), 10, Metric.Cosine))),
-      s"""WITH q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0)
+      s"""WITH $sqlQ0
          |SELECT e.vec_id AS vec_id, ${sqlR4(sqlCosDist("e.embedding", "q.qvec"))} AS distance
          |FROM embeddings e, q
          |ORDER BY ${sqlCosDist("e.embedding", "q.qvec")} ASC, e.vec_id ASC LIMIT 10""".stripMargin),
@@ -217,7 +217,7 @@ object ReferenceQueries {
           graft.functions.NativeExprs.dot(col("embedding"), col("qvec")))
         .orderBy(col("__s").desc, col("id").asc).limit(10)
         .select(col("id").as("vec_id"), r4(col("__s")).as("score"))),
-      s"""WITH q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0)
+      s"""WITH $sqlQ0
          |SELECT e.vec_id AS vec_id, ${sqlR4(sqlDot("e.embedding", "q.qvec"))} AS score
          |FROM embeddings e, q
          |WHERE NOT isnan(${sqlDot("e.embedding", "e.embedding")})
@@ -226,7 +226,7 @@ object ReferenceQueries {
     // O3 — radius gate, <= inclusive (reference index.rs:197)
     QueryDef("knn_radius", ((s, dir) =>
       knnOut(Knn.search(recs(s, dir), qvec0(s, dir), 50, Metric.Euclidean, radius = 1.7))),
-      s"""WITH q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0)
+      s"""WITH $sqlQ0
          |SELECT e.vec_id AS vec_id, ${sqlR4(sqlSq("e.embedding", "q.qvec"))} AS distance
          |FROM embeddings e, q
          |WHERE ${sqlSq("e.embedding", "q.qvec")} <= 1.7
@@ -236,7 +236,7 @@ object ReferenceQueries {
     QueryDef("knn_filtered", ((s, dir) =>
       knnOut(Knn.search(recs(s, dir), qvec0(s, dir), 10, Metric.Euclidean,
         filter = FilterDsl.predicate(col("metadata"), "label >= 5")))),
-      s"""WITH q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0)
+      s"""WITH $sqlQ0
          |SELECT e.vec_id AS vec_id, ${sqlR4(sqlSq("e.embedding", "q.qvec"))} AS distance
          |FROM embeddings e, q
          |WHERE e.label >= 5
@@ -661,9 +661,8 @@ object ReferenceQueries {
     }),
       s"""WITH t0 AS (SELECT doc_id, list_distinct(list_transform(generate_series(1, greatest(len(tk) - 2, 0)),
          |    i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS sh
-         |  FROM (SELECT doc_id, regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+') AS tk FROM documents)),
-         |t AS (SELECT doc_id, list_transform(sh, s -> list_reduce(list_transform(string_split_regex(substr(md5(s), 1, 14), ''),
-         |    c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b)) AS h
+         |  FROM (SELECT doc_id, ${sqlTokens("text")} AS tk FROM documents)),
+         |t AS (SELECT doc_id, list_transform(sh, s -> ${sqlMd5Hex("s", 14)}) AS h
          |  FROM t0),
          |q AS (SELECT h AS qh FROM t WHERE doc_id = 0)
          |SELECT t.doc_id AS doc_id,
@@ -681,7 +680,7 @@ object ReferenceQueries {
       // both stages replayed: prefix-dim shortlist (LIMIT 50, id
       // tiebreak) then exact full-dim rerank — list slice [1:16] is
       // 1-based inclusive, = Spark's slice(v, 1, 16)
-      s"""WITH q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0),
+      s"""WITH $sqlQ0,
          |s AS (SELECT e.vec_id AS vec_id, e.embedding AS embedding, q.qvec AS qvec
          |  FROM embeddings e, q
          |  ORDER BY ${sqlSq("e.embedding[1:16]", "q.qvec[1:16]")} ASC, e.vec_id ASC LIMIT 50)
@@ -713,10 +712,7 @@ object ReferenceQueries {
         .select(col("vec_id"), col("pos").cast("int").as("sub_idx"),
           col("col").as("code"))
         .orderBy("vec_id", "sub_idx")),
-      s"""WITH cb AS (SELECT CAST(vec_id AS INT) AS code, embedding FROM embeddings WHERE vec_id < 16),
-         |books AS (SELECT u.s AS sub_idx, code,
-         |  list_slice(embedding, CAST(u.s * 16 + 1 AS INT), CAST(u.s * 16 + 16 AS INT)) AS cvec
-         |  FROM cb, unnest(generate_series(0, 3)) AS u(s)),
+      s"""WITH $sqlPqBooks,
          |enc AS (SELECT e.vec_id, b.sub_idx, b.code,
          |  ${sqlSq("list_slice(e.embedding, CAST(b.sub_idx * 16 + 1 AS INT), CAST(b.sub_idx * 16 + 16 AS INT))", "b.cvec")} AS d
          |  FROM embeddings e CROSS JOIN books b)
@@ -797,23 +793,16 @@ object ReferenceQueries {
       // all three reconstruction paths replayed on the sample: int8
       // round-half-up dequant, PQ argmin + flatten-ordered reconstruct,
       // residual PQ via the assignment's own centroid
-      s"""WITH c AS (SELECT CAST(vec_id AS INTEGER) AS cid, embedding AS cvec FROM embeddings WHERE vec_id < 8),
-         |asg AS (SELECT vec_id, cid FROM (
-         |  SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id ORDER BY ${sqlSq("e.embedding", "c.cvec")} ASC, c.cid ASC) AS rn
-         |  FROM embeddings e CROSS JOIN c) WHERE rn = 1),
-         |cb AS (SELECT CAST(vec_id AS INT) AS code, embedding FROM embeddings WHERE vec_id < 16),
-         |books AS (SELECT u.s AS sub_idx, code,
-         |  list_slice(embedding, CAST(u.s * 16 + 1 AS INT), CAST(u.s * 16 + 16 AS INT)) AS cvec
-         |  FROM cb, unnest(generate_series(0, 3)) AS u(s)),
+      s"""WITH c AS ($sqlFixedCentroids),
+         |asg AS (${sqlAssign(sqlSq)}),
+         |$sqlPqBooks,
          |sm AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 50),
          |i8 AS (SELECT vec_id, embedding,
          |  list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) / 127.0 AS scale FROM sm),
          |i8d AS (SELECT vec_id, embedding, list_transform(embedding,
          |  x -> CASE WHEN scale > 0 THEN floor(CAST(x AS DOUBLE) / scale + 0.5) * scale ELSE 0.0 END) AS deq FROM i8),
          |e1 AS (SELECT vec_id, ${sqlSq("embedding", "deq")} AS err_int8 FROM i8d),
-         |enc AS (SELECT e.vec_id, b.sub_idx, b.cvec,
-         |  row_number() OVER (PARTITION BY e.vec_id, b.sub_idx ORDER BY ${sqlSq("list_slice(e.embedding, CAST(b.sub_idx * 16 + 1 AS INT), CAST(b.sub_idx * 16 + 16 AS INT))", "b.cvec")} ASC, b.code ASC) AS rn
-         |  FROM sm e CROSS JOIN books b),
+         |${sqlPqEncode("sm")},
          |rec AS (SELECT vec_id, flatten(list(cvec ORDER BY sub_idx)) AS deq FROM enc WHERE rn = 1 GROUP BY vec_id),
          |e2 AS (SELECT sm.vec_id, ${sqlSq("sm.embedding", "rec.deq")} AS err_pq FROM sm JOIN rec USING (vec_id)),
          |resid AS (SELECT sm.vec_id, ${sqlSub("sm.embedding", "cc.cvec")} AS rv
@@ -836,19 +825,11 @@ object ReferenceQueries {
         .select(col("doc_id"),
           TextOps.langFromVotes(col("__stats.votes")).as("lang_pred"))
         .orderBy("doc_id")),
-      s"""WITH t AS (SELECT doc_id, regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+') AS tk FROM documents),
+      s"""WITH t AS (SELECT doc_id, ${sqlTokens("text")} AS tk FROM documents),
          |s AS (SELECT doc_id,
-         |  len(list_filter(tk, x -> list_contains(['the','a','of','to','and','is','in','it'], x))) AS e,
-         |  len(list_filter(tk, x -> list_contains(['el','la','de','que','y','en','un','es'], x))) AS sp,
-         |  len(list_filter(tk, x -> list_contains(['le','la','de','et','un','que','les','des'], x))) AS f,
-         |  len(list_filter(tk, x -> list_contains(['der','die','das','und','ist','ein','zu','den'], x))) AS d,
-         |  len(list_filter(tk, x -> list_contains(['de','shi','bu','le','zai','ren','you','wo'], x))) AS z
+         |  $sqlLangVotes
          |  FROM t)
-         |SELECT doc_id, CASE WHEN coalesce(greatest(e, sp, f, d, z), 0) = 0 THEN 'und'
-         |  WHEN e >= sp AND e >= f AND e >= d AND e >= z THEN 'en'
-         |  WHEN sp >= f AND sp >= d AND sp >= z THEN 'es'
-         |  WHEN f >= d AND f >= z THEN 'fr'
-         |  WHEN d >= z THEN 'de' ELSE 'zh' END AS lang_pred
+         |SELECT doc_id, $sqlLangPick AS lang_pred
          |FROM s ORDER BY doc_id""".stripMargin),
 
     // extension: language-ID CONFUSION matrix — predicted × declared
@@ -871,19 +852,11 @@ object ReferenceQueries {
         .orderBy("declared", "predicted")),
       // same vote CTE, aggregated to the confusion matrix; the window
       // partitions by declared language (vocabulary-bounded)
-      s"""WITH t AS (SELECT doc_id, lang, regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+') AS tk FROM documents),
+      s"""WITH t AS (SELECT doc_id, lang, ${sqlTokens("text")} AS tk FROM documents),
          |s AS (SELECT doc_id, lang,
-         |  len(list_filter(tk, x -> list_contains(['the','a','of','to','and','is','in','it'], x))) AS e,
-         |  len(list_filter(tk, x -> list_contains(['el','la','de','que','y','en','un','es'], x))) AS sp,
-         |  len(list_filter(tk, x -> list_contains(['le','la','de','et','un','que','les','des'], x))) AS f,
-         |  len(list_filter(tk, x -> list_contains(['der','die','das','und','ist','ein','zu','den'], x))) AS d,
-         |  len(list_filter(tk, x -> list_contains(['de','shi','bu','le','zai','ren','you','wo'], x))) AS z
+         |  $sqlLangVotes
          |  FROM t),
-         |p AS (SELECT lang AS declared, CASE WHEN coalesce(greatest(e, sp, f, d, z), 0) = 0 THEN 'und'
-         |  WHEN e >= sp AND e >= f AND e >= d AND e >= z THEN 'en'
-         |  WHEN sp >= f AND sp >= d AND sp >= z THEN 'es'
-         |  WHEN f >= d AND f >= z THEN 'fr'
-         |  WHEN d >= z THEN 'de' ELSE 'zh' END AS predicted
+         |p AS (SELECT lang AS declared, $sqlLangPick AS predicted
          |FROM s),
          |c AS (SELECT declared, predicted, CAST(count(*) AS BIGINT) AS n FROM p GROUP BY 1, 2),
          |tt AS (SELECT declared, CAST(sum(n) AS BIGINT) AS t FROM c GROUP BY declared)
@@ -916,7 +889,7 @@ object ReferenceQueries {
       // lexical arm = the text_bm25_topk pipeline (single query, top-20);
       // semantic arm = the ivf_probe_query ranking (top-20); fusion sums
       // 1/(60+rank) — two terms per doc, so addition order can't matter
-      s"""WITH t AS (SELECT doc_id, regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+') AS tk FROM documents),
+      s"""WITH t AS (SELECT doc_id, ${sqlTokens("text")} AS tk FROM documents),
          |st AS (SELECT count(*) AS n, avg(len(tk)) AS avgdl FROM t),
          |terms AS (SELECT unnest(['key', 'table']) AS term),
          |tf AS (SELECT doc_id, term, len(list_filter(tk, x -> x = term)) AS tf, len(tk) AS dl FROM t, terms),
@@ -927,12 +900,7 @@ object ReferenceQueries {
          |lex AS (SELECT doc_id AS id, rank FROM (
          |  SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id ASC) AS rank
          |  FROM sc WHERE score > 0) WHERE rank <= 20),
-         |c AS (SELECT CAST(vec_id AS INTEGER) AS cid, embedding AS cvec FROM embeddings WHERE vec_id < 8),
-         |q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0),
-         |asg AS (SELECT vec_id, cid FROM (
-         |  SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id ORDER BY ${sqlSq("e.embedding", "c.cvec")} ASC, c.cid ASC) AS rn
-         |  FROM embeddings e CROSS JOIN c) WHERE rn = 1),
-         |probed AS (SELECT c.cid FROM c, q ORDER BY ${sqlSq("c.cvec", "q.qvec")} ASC, c.cid ASC LIMIT 3),
+         |${sqlProbedFixed(sqlSq)},
          |sem AS (SELECT id, rank FROM (
          |  SELECT e.vec_id AS id, row_number() OVER (ORDER BY ${sqlSq("e.embedding", "q.qvec")} ASC, e.vec_id ASC) AS rank
          |  FROM embeddings e JOIN asg ON asg.vec_id = e.vec_id JOIN probed ON asg.cid = probed.cid, q) WHERE rank <= 20),
@@ -959,8 +927,8 @@ object ReferenceQueries {
           docsSpread(s, dir),
           size(TextOps.tokens(col("text"))), budget = 512, nShards = 8)
         .orderBy("doc_id")),
-      """WITH t AS (SELECT doc_id, doc_id % 8 AS shard,
-        |    CAST(len(regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+')) AS BIGINT) AS n_tokens
+      s"""WITH t AS (SELECT doc_id, doc_id % 8 AS shard,
+        |    CAST(len(${sqlTokens("text")}) AS BIGINT) AS n_tokens
         |  FROM documents),
         |tp AS (SELECT * FROM t WHERE n_tokens >= 1),
         |c AS (SELECT doc_id, shard, n_tokens,
@@ -991,7 +959,7 @@ object ReferenceQueries {
       // to fixpoint per DISTINCT vocab token (the text_bpe_apply CTEs),
       // summed per token INSTANCE per doc, then the same pack arithmetic
       s"""WITH RECURSIVE $sqlBpeSegCtes,
-         |bdoc AS (SELECT doc_id, unnest(regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+')) AS token FROM documents),
+         |bdoc AS (SELECT doc_id, unnest(${sqlTokens("text")}) AS token FROM documents),
          |dn AS (SELECT d.doc_id, CAST(sum(b.n_sym) AS BIGINT) AS n_tokens
          |  FROM bdoc d JOIN bseg b USING (token) WHERE d.token <> '' GROUP BY d.doc_id),
          |base AS (SELECT doc_id, doc_id % 8 AS shard, n_tokens FROM dn WHERE n_tokens >= 1),
@@ -1018,8 +986,8 @@ object ReferenceQueries {
             (col("n_packs") * lit(512)).cast("double")).as("fill"))
         .orderBy("shard")),
       // the seq_pack CTE aggregated per shard
-      """WITH t AS (SELECT doc_id, doc_id % 8 AS shard,
-        |    CAST(len(regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+')) AS BIGINT) AS n_tokens
+      s"""WITH t AS (SELECT doc_id, doc_id % 8 AS shard,
+        |    CAST(len(${sqlTokens("text")}) AS BIGINT) AS n_tokens
         |  FROM documents),
         |tp AS (SELECT * FROM t WHERE n_tokens >= 1),
         |c AS (SELECT doc_id, shard, n_tokens,
@@ -1046,8 +1014,7 @@ object ReferenceQueries {
       // null text carries no content hash: the heap skips it (null-key
       // heap rule) — the oracle must too, or NULLS-LAST ranking would
       // smuggle the doc into an under-quota source's sample
-      """WITH h AS (SELECT doc_id, source, list_reduce(list_transform(string_split_regex(substr(md5(text), 1, 8), ''),
-        |    c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b) AS hv
+      s"""WITH h AS (SELECT doc_id, source, ${sqlMd5Hex("text", 8)} AS hv
         |  FROM documents WHERE text IS NOT NULL),
         |r AS (SELECT doc_id, source, row_number() OVER (PARTITION BY source ORDER BY hv, doc_id) AS rn FROM h)
         |SELECT doc_id, source FROM r WHERE rn <= 10 ORDER BY doc_id""".stripMargin),
@@ -1063,9 +1030,8 @@ object ReferenceQueries {
           size(TextOps.tokens(col("text"))),
           budgets = Map("src0" -> 800L, "src1" -> 5000L, "src3" -> 300L))
         .orderBy("doc_id")),
-      """WITH h AS (SELECT doc_id, source, list_reduce(list_transform(string_split_regex(substr(md5(text), 1, 8), ''),
-        |    c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b) AS hv,
-        |    CAST(len(regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+')) AS BIGINT) AS n
+      s"""WITH h AS (SELECT doc_id, source, ${sqlMd5Hex("text", 8)} AS hv,
+        |    CAST(len(${sqlTokens("text")}) AS BIGINT) AS n
         |  FROM documents WHERE source IN ('src0', 'src1', 'src3')),
         |p AS (SELECT doc_id, source, n,
         |    sum(n) OVER (PARTITION BY source ORDER BY hv, doc_id ROWS UNBOUNDED PRECEDING) AS cum
@@ -1112,7 +1078,7 @@ object ReferenceQueries {
         docsSpread(s, dir), k = 50)),
       // vocab-weighted adjacent-pair counts; substr/len count characters in
       // both engines, and the ORDER BY ties break on binary collation in both
-      """WITH tok AS (SELECT unnest(regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+')) AS t FROM documents),
+      s"""WITH tok AS (SELECT unnest(${sqlTokens("text")}) AS t FROM documents),
         |v AS (SELECT t, count(*) AS tf FROM tok GROUP BY t),
         |p AS (SELECT unnest(list_transform(generate_series(1, len(t) - 1), i -> substr(t, i, 2))) AS pair, tf
         |  FROM v WHERE len(t) >= 2),
@@ -1141,7 +1107,7 @@ object ReferenceQueries {
     }),
       // the 1000-word vocabulary cut is (tf DESC, token ASC) — fully
       // deterministic, so both engines cut the identical boundary
-      s"""WITH toks AS (SELECT source, unnest(regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+')) AS token
+      s"""WITH toks AS (SELECT source, unnest(${sqlTokens("text")}) AS token
          |  FROM documents),
          |tk AS (SELECT source, token FROM toks WHERE token <> ''),
          |v AS (SELECT token FROM (SELECT token, count(*) AS tf FROM tk
@@ -1174,7 +1140,7 @@ object ReferenceQueries {
           r4(col("__top1000").cast("double") / col("total")).as("cov1000"))
     }),
       // each coverage point is an ordered LIMIT + sum of exact integers
-      """WITH tok AS (SELECT unnest(regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+')) AS token FROM documents),
+      s"""WITH tok AS (SELECT unnest(${sqlTokens("text")}) AS token FROM documents),
         |v AS (SELECT token, count(*) AS tf FROM tok WHERE token <> '' GROUP BY token),
         |t AS (SELECT CAST(sum(tf) AS BIGINT) AS total, CAST(count(*) AS BIGINT) AS vocab_size FROM v),
         |k10 AS (SELECT CAST(coalesce(sum(tf), 0) AS BIGINT) AS s FROM (SELECT tf FROM v ORDER BY tf DESC, token ASC LIMIT 10)),
@@ -1192,7 +1158,7 @@ object ReferenceQueries {
     QueryDef("vocab_top", ((s, dir) =>
       graft.operators.TextOps.vocabTop(
         docsSpread(s, dir), k = 100)),
-      """WITH tok AS (SELECT doc_id, unnest(regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+')) AS token
+      s"""WITH tok AS (SELECT doc_id, unnest(${sqlTokens("text")}) AS token
         |  FROM documents),
         |pd AS (SELECT token, doc_id, count(*) AS c FROM tok GROUP BY token, doc_id),
         |g AS (SELECT token, CAST(sum(c) AS BIGINT) AS tf, CAST(count(*) AS BIGINT) AS df
@@ -1225,8 +1191,7 @@ object ReferenceQueries {
           quotas = Map("src0" -> 12, "src1" -> 5, "src2" -> 0, "src3" -> 30))
         .select(col("doc_id"), col("source"))
         .orderBy("doc_id")),
-      """WITH h AS (SELECT doc_id, source, list_reduce(list_transform(string_split_regex(substr(md5(text), 1, 8), ''),
-        |    c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b) AS hv
+      s"""WITH h AS (SELECT doc_id, source, ${sqlMd5Hex("text", 8)} AS hv
         |  FROM documents WHERE source IN ('src0', 'src1', 'src2', 'src3')),
         |r AS (SELECT doc_id, source, row_number() OVER (PARTITION BY source ORDER BY hv, doc_id) AS rn FROM h)
         |SELECT doc_id, source FROM r
@@ -1245,8 +1210,8 @@ object ReferenceQueries {
       graft.operators.Corpus.packedSequences(d, packed, col("text"))
         .orderBy("shard", "pack_id")
     }),
-      """WITH t AS (SELECT doc_id, doc_id % 8 AS shard,
-        |    CAST(len(regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+')) AS BIGINT) AS n_tokens
+      s"""WITH t AS (SELECT doc_id, doc_id % 8 AS shard,
+        |    CAST(len(${sqlTokens("text")}) AS BIGINT) AS n_tokens
         |  FROM documents),
         |tp AS (SELECT * FROM t WHERE n_tokens >= 1),
         |c AS (SELECT doc_id, shard, n_tokens,

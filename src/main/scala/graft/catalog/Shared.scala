@@ -9,7 +9,10 @@ import org.apache.spark.sql.functions._
 
 /** What more than one query family uses: the DuckDB SQL fragments, the table
   * readers and the session fixtures ([[SessionMemo]]) that two or more families
-  * share. A family file imports this object; nothing here refers to a family. */
+  * share. A family file imports this object; nothing here refers to a family.
+  * An oracle restates a shared engine decision by interpolating its one
+  * fragment, which sits next to its engine twin: here when two or more
+  * families use it, else in the one family file that does. */
 private[graft] object Shared {
   private[catalog] val Dim = 64 // embeddings.parquet vector width (all SFs)
 
@@ -48,6 +51,167 @@ private[graft] object Shared {
   private[catalog] def r4(c: Column): Column = floor(c * lit(10000.0) + lit(0.5)) / lit(10000.0)
 
   private[catalog] def sqlR4(e: String): String = s"floor(($e) * 10000.0 + 0.5) / 10000.0"
+
+  // ---------- oracle twins of the engine's shared decisions ----------
+  // Each fragment below restates, in DuckDB SQL built from constants, one
+  // decision the engine makes in one place; every oracle that replays the
+  // decision interpolates its fragment. None is derived from an engine code
+  // path, so the oracle stays an independent restatement.
+
+  /** Twin of [[fixedCentroids]]: records 0..7 as the IVF centroids
+    * `(cid, cvec)`. */
+  private[catalog] val sqlFixedCentroids: String =
+    "SELECT CAST(vec_id AS INTEGER) AS cid, embedding AS cvec FROM embeddings WHERE vec_id < 8"
+
+  /** Every embedding's centroids in a CTE `c` ranked by the metric's
+    * distance `dist`, the lower cid winning a tie — the twin of
+    * [[IvfIndex.assign]]'s nearest-centroid rule. */
+  private def sqlCentroidRank(dist: (String, String) => String): String =
+    s"""SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id ORDER BY ${dist("e.embedding", "c.cvec")} ASC, c.cid ASC) AS rn
+       |  FROM embeddings e CROSS JOIN c""".stripMargin
+
+  /** Twin of [[fixedModel]]'s assignment: each embedding's nearest
+    * centroid `(vec_id, cid)` in `c` under `dist`. */
+  private[catalog] def sqlAssign(dist: (String, String) => String): String =
+    s"SELECT vec_id, cid FROM (\n  ${sqlCentroidRank(dist)}) WHERE rn = 1"
+
+  /** Twin of [[top2Blocked]]: the centroids `c` and each embedding's two
+    * nearest of them, `asg(vec_id, cid)`. */
+  private[catalog] val sqlTop2Blocks: String =
+    s"""c AS ($sqlFixedCentroids),
+       |asg AS (SELECT vec_id, cid FROM (
+       |  ${sqlCentroidRank(sqlSq)}) WHERE rn <= 2)""".stripMargin
+
+  /** Twin of [[qvec0]]: the query row `q(qvec)`. */
+  private[catalog] val sqlQ0: String =
+    "q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0)"
+
+  /** The batch query rows `q(query_id, qvec)`: records 0..4. */
+  private[catalog] val sqlQBatch: String =
+    "q AS (SELECT vec_id AS query_id, embedding AS qvec FROM embeddings WHERE vec_id < 5)"
+
+  /** The 3 centroids in `c` nearest the query `q` under `dist`, ties to
+    * the lower cid — the probe list of `IvfIndex.query` at probes = 3. */
+  private[catalog] def sqlProbed3(dist: (String, String) => String): String =
+    s"probed AS (SELECT c.cid FROM c, q ORDER BY ${dist("c.cvec", "q.qvec")} ASC, c.cid ASC LIMIT 3)"
+
+  /** The fixed IVF model probed for the query row at probes = 3 under
+    * `dist` — `c`, `q`, `asg` and `probed`: the twin of
+    * `IvfIndex.query(fixedModel(…), qvec0(…), probes = 3)` up to its
+    * rerank. */
+  private[catalog] def sqlProbedFixed(dist: (String, String) => String): String =
+    s"""c AS ($sqlFixedCentroids),
+       |$sqlQ0,
+       |asg AS (${sqlAssign(dist)}),
+       |${sqlProbed3(dist)}""".stripMargin
+
+  /** Sub-vector `sub` (0..3, 16 wide) of the vector `v`. */
+  private[catalog] def sqlPqSlice(v: String, sub: String): String =
+    s"list_slice($v, CAST($sub * 16 + 1 AS INT), CAST($sub * 16 + 16 AS INT))"
+
+  /** The 4 × 16-wide sub-codebooks `books(sub_idx, code, cvec)` cut from a
+    * CTE `cb(code, embedding)`. */
+  private[catalog] val sqlPqSubBooks: String =
+    s"""books AS (SELECT u.s AS sub_idx, code,
+       |  ${sqlPqSlice("embedding", "u.s")} AS cvec
+       |  FROM cb, unnest(generate_series(0, 3)) AS u(s))""".stripMargin
+
+  /** Twin of [[pqFixedBooks]]: records 0..15 as `cb(code, embedding)` and
+    * their sub-codebooks `books`. */
+  private[catalog] val sqlPqBooks: String =
+    s"""cb AS (SELECT CAST(vec_id AS INT) AS code, embedding FROM embeddings WHERE vec_id < 16),
+       |$sqlPqSubBooks""".stripMargin
+
+  /** Twin of [[operators.VectorOps.pqCodes]]: every sub-vector of the
+    * rows of `from` ranked against its sub-codebook, the lower code
+    * winning a tie; `enc(vec_id, sub_idx, cvec, rn)`, the code at rn = 1. */
+  private[catalog] def sqlPqEncode(from: String): String =
+    s"""enc AS (SELECT e.vec_id, b.sub_idx, b.cvec,
+       |  row_number() OVER (PARTITION BY e.vec_id, b.sub_idx ORDER BY ${sqlSq(sqlPqSlice("e.embedding", "b.sub_idx"), "b.cvec")} ASC, b.code ASC) AS rn
+       |  FROM $from e CROSS JOIN books b)""".stripMargin
+
+  /** Twin of [[TextOps.tokens]]: ASCII-lowercase, trim, split on
+    * whitespace runs. */
+  private[catalog] def sqlTokens(x: String): String =
+    s"regexp_split_to_array(translate(trim($x), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+')"
+
+  /** The hex digits of the string `hex` as a list of BIGINT nibbles. */
+  private[catalog] def sqlHexNibbles(hex: String): String =
+    s"list_transform(string_split_regex($hex, ''),\n  c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT))"
+
+  private def sqlHexValue(hex: String): String =
+    s"list_reduce(${sqlHexNibbles(hex)}, (a, b) -> a * 16 + b)"
+
+  /** Twin of [[operators.Corpus.contentHash32]]'s reduction: the first
+    * `width` hex digits of `md5(x)` as a BIGINT. */
+  private[catalog] def sqlMd5Hex(x: String, width: Int): String =
+    sqlHexValue(s"substr(md5($x), 1, $width)")
+
+  /** Twin of [[TextOps.langVotes]]: the stopword hits of each language in
+    * the token list `tk`, as columns `e, sp, f, d, z`. */
+  private[catalog] val sqlLangVotes: String =
+    """len(list_filter(tk, x -> list_contains(['the','a','of','to','and','is','in','it'], x))) AS e,
+      |  len(list_filter(tk, x -> list_contains(['el','la','de','que','y','en','un','es'], x))) AS sp,
+      |  len(list_filter(tk, x -> list_contains(['le','la','de','et','un','que','les','des'], x))) AS f,
+      |  len(list_filter(tk, x -> list_contains(['der','die','das','und','ist','ein','zu','den'], x))) AS d,
+      |  len(list_filter(tk, x -> list_contains(['de','shi','bu','le','zai','ren','you','wo'], x))) AS z""".stripMargin
+
+  /** Twin of [[TextOps.langFromVotes]]: the language with the most votes
+    * in `e, sp, f, d, z`, the earlier one on a tie, 'und' with none. */
+  private[catalog] val sqlLangPick: String =
+    """CASE WHEN coalesce(greatest(e, sp, f, d, z), 0) = 0 THEN 'und'
+      |    WHEN e >= sp AND e >= f AND e >= d AND e >= z THEN 'en'
+      |    WHEN sp >= f AND sp >= d AND sp >= z THEN 'es'
+      |    WHEN f >= d AND f >= z THEN 'fr'
+      |    WHEN d >= z THEN 'de' ELSE 'zh' END""".stripMargin
+
+  /** Twin of [[TextOps.gopherFlags]]'s counters over the token list `tk`,
+    * the raw-text line list `ls` and `text`. */
+  private[catalog] val sqlGopherCounts: String =
+    """CAST(len(tk) AS BIGINT) AS n_words,
+      |  CAST(coalesce(list_sum(list_transform(tk, x -> CAST(length(x) AS BIGINT))), 0) AS BIGINT) AS len_sum,
+      |  CAST(length(text) - length(replace(text, '#', '')) AS BIGINT) AS n_hash,
+      |  CAST((length(text) - length(replace(text, '...', ''))) // 3 AS BIGINT) AS n_ell,
+      |  CAST(len(list_filter(tk, x -> regexp_matches(x, '[a-z]'))) AS BIGINT) AS n_alpha,
+      |  CAST(len(ls) AS BIGINT) AS n_lines,
+      |  CAST(len(list_filter(ls, l -> ltrim(l) LIKE '-%' OR ltrim(l) LIKE '*%' OR ltrim(l) LIKE '•%')) AS BIGINT) AS n_bullet,
+      |  CAST(len(list_filter(ls, l -> rtrim(l) LIKE '%...' OR rtrim(l) LIKE '%…')) AS BIGINT) AS n_ellend,
+      |  CAST(len(list_intersect(tk, ['the','be','to','of','and','that','have','with'])) AS BIGINT) AS stop_hits""".stripMargin
+
+  /** Twin of [[TextOps.gopherFlags]]'s ratios over [[sqlGopherCounts]],
+    * 0.0 for a doc without words or lines. */
+  private[catalog] val sqlGopherFracs: String =
+    """CASE WHEN n_words > 0 THEN CAST(len_sum AS DOUBLE) / n_words ELSE 0.0 END AS mean_word_len,
+      |  CASE WHEN n_words > 0 THEN CAST(n_hash + n_ell AS DOUBLE) / n_words ELSE 0.0 END AS symbol_ratio,
+      |  CASE WHEN n_words > 0 THEN CAST(n_alpha AS DOUBLE) / n_words ELSE 0.0 END AS alpha_frac,
+      |  CASE WHEN n_lines > 0 THEN CAST(n_bullet AS DOUBLE) / n_lines ELSE 0.0 END AS bullet_frac,
+      |  CASE WHEN n_lines > 0 THEN CAST(n_ellend AS DOUBLE) / n_lines ELSE 0.0 END AS ellipsis_frac""".stripMargin
+
+  /** Twin of [[Dedup]]'s shingling: each doc's distinct token 3-grams,
+    * `toks(doc_id, sh)`. */
+  private[catalog] val sqlShingles3: String =
+    s"""toks AS (SELECT doc_id, list_distinct(list_transform(generate_series(1, greatest(len(tk) - 2, 0)),
+       |    i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS sh
+       |  FROM (SELECT doc_id, ${sqlTokens("text")} AS tk FROM documents))""".stripMargin
+
+  /** Twin of [[Dedup.minhashSignature]] at (3-gram shingles, 16 perms):
+    * `toks` → `ne` → `hh(doc_id, sh, h1, h2)` → `sig(doc_id, h1, sg)`. */
+  private[catalog] val sqlMinhashSig: String =
+    s"""$sqlShingles3,
+       |ne AS (SELECT doc_id, sh FROM toks WHERE len(sh) > 0),
+       |hh AS (SELECT doc_id, sh,
+       |  list_transform(sh, s -> ${sqlMd5Hex("s", 14)}) AS h1,
+       |  list_transform(sh, s -> ${sqlHexValue("substr(md5(s), 17, 14)")}) AS h2
+       |  FROM ne),
+       |sig AS (SELECT doc_id, h1, list_transform(generate_series(0, 15), i ->
+       |  list_min(list_transform(list_zip(h1, h2), p -> p[1] + i * p[2]))) AS sg FROM hh)""".stripMargin
+
+  /** Twin of [[Dedup.bandedSignature]] at 4 bands of 4 rows over `sig`:
+    * `(doc_id, h1, band_idx, band_hash)`. */
+  private[catalog] val sqlMinhashBands: String =
+    """SELECT doc_id, h1, u.b AS band_idx,
+      |  md5(array_to_string(list_slice(sg, u.b * 4 + 1, u.b * 4 + 4), '|')) AS band_hash
+      |  FROM sig, (SELECT unnest([0, 1, 2, 3]) AS b) u""".stripMargin
 
   /** The 64 bit values of [[operators.VectorOps.BinaryBitValues]] as a
     * DuckDB BIGINT list literal — shared with the Spark side from ONE
@@ -112,7 +276,7 @@ private[graft] object Shared {
       s"""SELECT step, lft AS left_sym, rgt AS right_sym, c AS freq FROM (
          | $union)
          |ORDER BY step""".stripMargin)
-    s"""WITH tok AS (SELECT unnest(regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+')) AS token FROM documents),
+    s"""WITH tok AS (SELECT unnest(${sqlTokens("text")}) AS token FROM documents),
        |tv AS MATERIALIZED (SELECT token, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY token
        |  ORDER BY tf DESC, token ASC LIMIT $vocabCap),
        |w0 AS MATERIALIZED (SELECT token, tf,
@@ -134,21 +298,8 @@ private[graft] object Shared {
   /** MinHash-LSH verified-pair CTEs (`toks` → `j`) — the oracle twin of
     * [[Dedup.minhashLsh]]; consumers append their own edge/reach CTEs. */
   private[catalog] val sqlMinhashPairsCtes: String =
-    """toks AS (SELECT doc_id, list_distinct(list_transform(generate_series(1, greatest(len(tk) - 2, 0)),
-      |    i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS sh
-      |  FROM (SELECT doc_id, regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\s+') AS tk FROM documents)),
-      |ne AS (SELECT doc_id, sh FROM toks WHERE len(sh) > 0),
-      |hh AS (SELECT doc_id, sh,
-      |  list_transform(sh, s -> list_reduce(list_transform(string_split_regex(substr(md5(s), 1, 14), ''),
-      |    c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b)) AS h1,
-      |  list_transform(sh, s -> list_reduce(list_transform(string_split_regex(substr(md5(s), 17, 14), ''),
-      |    c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b)) AS h2
-      |  FROM ne),
-      |sig AS (SELECT doc_id, h1, list_transform(generate_series(0, 15), i ->
-      |  list_min(list_transform(list_zip(h1, h2), p -> p[1] + i * p[2]))) AS sg FROM hh),
-      |bands AS (SELECT doc_id, h1, u.b AS band_idx,
-      |  md5(array_to_string(list_slice(sg, u.b * 4 + 1, u.b * 4 + 4), '|')) AS band_hash
-      |  FROM sig, (SELECT unnest([0, 1, 2, 3]) AS b) u),
+    s"""$sqlMinhashSig,
+      |bands AS ($sqlMinhashBands),
       |j AS (SELECT DISTINCT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b
       |  FROM bands a JOIN bands b ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id
       |  WHERE CAST(len(list_intersect(a.h1, b.h1)) AS DOUBLE) / len(list_distinct(a.h1 || b.h1)) >= 0.5)""".stripMargin
@@ -177,7 +328,7 @@ private[graft] object Shared {
     * terminates). Yields `btok(source, token)` (raw token instances) and
     * `bseg(token, seg, n_sym)` (one row per distinct token). */
   private[catalog] val sqlBpeSegCtes: String =
-    s"""btok AS (SELECT source, unnest(regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+')) AS token FROM documents),
+    s"""btok AS (SELECT source, unnest(${sqlTokens("text")}) AS token FROM documents),
        |bv AS (SELECT DISTINCT token FROM btok WHERE token <> ''),
        |bm(mr, pat, rep) AS (VALUES
        |  (1, ' t h ', ' th '), (2, ' th e ', ' the '), (3, ' i n ', ' in '),
@@ -507,9 +658,8 @@ private[graft] object Shared {
     * `pred(doc_id, true_label, pred_label, score)`; callers prepend
     * `WITH lbl AS (...)` and select from `pred`. */
   private[catalog] lazy val nbPredSql: String =
-    """sp AS (SELECT doc_id, label AS lang, text,
-      |    list_reduce(list_transform(string_split_regex(substr(md5(text), 1, 8), ''),
-      |      c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b) % 100 AS bucket
+    s"""sp AS (SELECT doc_id, label AS lang, text,
+      |    ${sqlMd5Hex("text", 8)} % 100 AS bucket
       |  FROM lbl),
       |tr AS (SELECT * FROM sp WHERE bucket < 80),
       |te AS (SELECT * FROM sp WHERE bucket >= 80),

@@ -81,7 +81,7 @@ object TextQueries {
       {
       val lift = "((CAST(bc.n AS DOUBLE) * CAST(tot.nt AS DOUBLE) * CAST(tot.nt AS DOUBLE)) / " +
         "(CAST(tot.nb AS DOUBLE) * CAST(a.c AS DOUBLE) * CAST(b.c AS DOUBLE)))"
-      s"""WITH tok AS (SELECT regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+') AS t FROM documents),
+      s"""WITH tok AS (SELECT ${sqlTokens("text")} AS t FROM documents),
          |uni AS (SELECT w, CAST(count(*) AS BIGINT) AS c FROM
          |  (SELECT unnest(t) AS w FROM tok) GROUP BY w),
          |bi AS (SELECT t[g.i] AS w1, t[g.i + 1] AS w2
@@ -161,7 +161,7 @@ object TextQueries {
       // n-gram dup fractions mirror the multiset shingle construction of
       // the dedup oracles; top token via the grouped counts (the oracle
       // needn't be map-only — only the Spark plan does)
-      s"""WITH b AS (SELECT doc_id, regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+') AS tk FROM documents),
+      s"""WITH b AS (SELECT doc_id, ${sqlTokens("text")} AS tk FROM documents),
          |sh AS (SELECT doc_id,
          |  list_transform(generate_series(1, greatest(len(tk) - 1, 0)), i -> tk[i] || ' ' || tk[i+1]) AS g2,
          |  list_transform(generate_series(1, greatest(len(tk) - 2, 0)), i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]) AS g3
@@ -296,7 +296,7 @@ object TextQueries {
           TextOps.bpeTokenCount(col("text")).cast("long").as("n_bpe_tokens"),
           r4(TextOps.qualityFromStats(col("text"), col("__toks"), col("__stats"))).as("quality"))
         .orderBy("doc_id")),
-      s"""WITH b AS (SELECT doc_id, text, regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+') AS tk,
+      s"""WITH b AS (SELECT doc_id, text, ${sqlTokens("text")} AS tk,
          |  CAST(length(text) AS DOUBLE) AS nc,
          |  CAST(length(regexp_replace(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9\\s]', '', 'g')) AS DOUBLE) AS punct
          |  FROM documents),
@@ -319,7 +319,7 @@ object TextQueries {
           Seq("key", "table", "scan"))
         .select(col("doc_id"), r4(col("score")).as("score"))
         .orderBy("doc_id")),
-      s"""WITH t AS (SELECT doc_id, regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+') AS tk FROM documents),
+      s"""WITH t AS (SELECT doc_id, ${sqlTokens("text")} AS tk FROM documents),
          |st AS (SELECT count(*) AS n, avg(len(tk)) AS avgdl FROM t),
          |tf AS (SELECT doc_id, term, len(list_filter(tk, x -> x = term)) AS tf, len(tk) AS dl
          |  FROM t, (SELECT unnest(['key', 'table', 'scan']) AS term) q),
@@ -342,7 +342,7 @@ object TextQueries {
         .orderBy("query_id", "rank")),
       // ranking done with a window HERE is fine — the oracle is DuckDB
       // single-node; the Spark side uses the bounded heap
-      s"""WITH t AS (SELECT doc_id, regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+') AS tk FROM documents),
+      s"""WITH t AS (SELECT doc_id, ${sqlTokens("text")} AS tk FROM documents),
          |st AS (SELECT count(*) AS n, avg(len(tk)) AS avgdl FROM t),
          |q AS (SELECT * FROM (VALUES ('q_key_table', ['key','table']), ('q_scan', ['scan','key'])) v(query_id, terms)),
          |terms AS (SELECT DISTINCT unnest(terms) AS term FROM q),
@@ -450,7 +450,7 @@ object TextQueries {
       // exact-integer counters; constants explicitly CAST AS DOUBLE (the
       // note-26 decimal-literal trap)
       s"""WITH b AS (SELECT doc_id, text,
-         |    list_filter(regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+'), x -> x <> '') AS tk
+         |    list_filter(${sqlTokens("text")}, x -> x <> '') AS tk
          |  FROM documents),
          |m AS (SELECT doc_id,
          |  CAST(len(tk) AS BIGINT) AS n_words,
@@ -473,7 +473,7 @@ object TextQueries {
       // same quantize-then-rank order: floor(score·10⁴+0.5)/10⁴ DESC with
       // token tiebreak; ln's last ulp is absorbed by the quantization
       // (text_lm_score precedent)
-      s"""WITH toks AS (SELECT doc_id, unnest(regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+')) AS token
+      s"""WITH toks AS (SELECT doc_id, unnest(${sqlTokens("text")}) AS token
          |  FROM documents),
          |tf AS (SELECT doc_id, token, CAST(count(*) AS BIGINT) AS tf
          |  FROM toks WHERE token <> '' GROUP BY doc_id, token),
@@ -518,26 +518,14 @@ object TextQueries {
       // replace()-delta occurrence counts; list_intersect/array_intersect
       // both deduplicate, so stop_hits counts DISTINCT stopwords present
       s"""WITH b AS (SELECT doc_id, text,
-         |    regexp_split_to_array(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+') AS tk,
+         |    ${sqlTokens("text")} AS tk,
          |    string_split(text, chr(10)) AS ls
          |  FROM documents),
          |m AS (SELECT doc_id,
-         |  CAST(len(tk) AS BIGINT) AS n_words,
-         |  CAST(coalesce(list_sum(list_transform(tk, x -> CAST(length(x) AS BIGINT))), 0) AS BIGINT) AS len_sum,
-         |  CAST(length(text) - length(replace(text, '#', '')) AS BIGINT) AS n_hash,
-         |  CAST((length(text) - length(replace(text, '...', ''))) // 3 AS BIGINT) AS n_ell,
-         |  CAST(len(list_filter(tk, x -> regexp_matches(x, '[a-z]'))) AS BIGINT) AS n_alpha,
-         |  CAST(len(ls) AS BIGINT) AS n_lines,
-         |  CAST(len(list_filter(ls, l -> ltrim(l) LIKE '-%' OR ltrim(l) LIKE '*%' OR ltrim(l) LIKE '•%')) AS BIGINT) AS n_bullet,
-         |  CAST(len(list_filter(ls, l -> rtrim(l) LIKE '%...' OR rtrim(l) LIKE '%…')) AS BIGINT) AS n_ellend,
-         |  CAST(len(list_intersect(tk, ['the','be','to','of','and','that','have','with'])) AS BIGINT) AS stop_hits
+         |  $sqlGopherCounts
          |  FROM b),
          |d AS (SELECT doc_id, n_words, stop_hits,
-         |  CASE WHEN n_words > 0 THEN CAST(len_sum AS DOUBLE) / n_words ELSE 0.0 END AS mean_word_len,
-         |  CASE WHEN n_words > 0 THEN CAST(n_hash + n_ell AS DOUBLE) / n_words ELSE 0.0 END AS symbol_ratio,
-         |  CASE WHEN n_words > 0 THEN CAST(n_alpha AS DOUBLE) / n_words ELSE 0.0 END AS alpha_frac,
-         |  CASE WHEN n_lines > 0 THEN CAST(n_bullet AS DOUBLE) / n_lines ELSE 0.0 END AS bullet_frac,
-         |  CASE WHEN n_lines > 0 THEN CAST(n_ellend AS DOUBLE) / n_lines ELSE 0.0 END AS ellipsis_frac
+         |  $sqlGopherFracs
          |  FROM m)
          |SELECT doc_id, n_words,
          |  ${sqlR4("mean_word_len")} AS mean_word_len,

@@ -18,7 +18,10 @@ import scala.jdk.CollectionConverters._
   * (`Catalog.run`): no other main source clears the session cache, and
   * Bench warms the declared fixtures, not query names. A split step
   * ([[graft.operators.IvfIndex.refine]], `splitKWay`) returns a finished
-  * version, so only `IvfIndex.scala` releases a split's members cache. */
+  * version, so only `IvfIndex.scala` releases a split's members cache.
+  * The DuckDB oracle restates the fixed IVF centroids, the md5-hex
+  * reduction, the tokenizer and the stopword vote in one fragment each,
+  * in `catalog/Shared.scala`. */
 class OneModuleSpec extends SparkSpec {
 
   private val mainRoot = Paths.get("src", "main")
@@ -100,6 +103,19 @@ class OneModuleSpec extends SparkSpec {
     val text = new String(Files.readAllBytes(bench), "UTF-8")
     val named = SparkEntry.queries.keySet.filter(n => text.contains("\"" + n + "\"")).toSeq.sorted
     assert(named.isEmpty, s"Bench.scala names catalog queries: $named")
+  }
+
+  // each DuckDB restatement of a shared engine decision is one fragment in
+  // Shared.scala, beside its engine twin; an oracle interpolates it
+  Seq(
+    "the fixed IVF centroids" -> "AS cid, embedding AS cvec FROM embeddings WHERE vec_id < 8",
+    "the md5-hex reduction" -> "strpos('0123456789abcdef'",
+    "the tokenizer" -> "regexp_split_to_array(translate(trim(",
+    "the stopword language vote" -> "list_contains(['the','a','of'"
+  ).foreach { case (decision, anchor) =>
+    test(s"the oracle states $decision once: only Shared.scala holds its fragment") {
+      onlyIn("Shared.scala", anchor)
+    }
   }
 
   test("a split step owns its members cache: no KeepCache fork, " +

@@ -15,6 +15,15 @@ class PlanShapeSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
   private def plan(df: DataFrame): String = df.queryExecution.executedPlan.toString
 
+  /** The columns each shuffle in `df`'s executed plan carries, adaptive
+    * stages included: the exchange's own output, not its `toString`, which
+    * holds its whole subtree (a scan below may read text the shuffle drops). */
+  private def shuffledColumns(df: DataFrame): Seq[String] =
+    ProbeReference.collectPlan(df.queryExecution.executedPlan) {
+      case e if e.nodeName == "Exchange" || e.nodeName.contains("ShuffleExchange") =>
+        e.output.mkString(", ")
+    }
+
   test("single-query kNN plans a bounded TakeOrderedAndProject, not a global sort") {
     val p = plan(SparkEntry.queries("knn_euclidean")(spark, sf))
     assert(p.contains("TakeOrderedAndProject"), p.linesIterator.take(5).mkString("\n"))
@@ -240,7 +249,7 @@ class PlanShapeSpec extends SparkSpec {
     // tokenization/hashing must live only INSIDE cached relations (whose
     // internals are not operator-tree nodes); a kernel in the outer tree
     // means some leg re-tokenizes docs instead of reading the cache
-    val outerKernels = exec.collect { case p =>
+    val outerKernels = ProbeReference.collectPlan(exec) { case p =>
       p.expressions.flatMap(_.collect {
         case e: graft.functions.NativeExprs.WhitespaceTokensExpr => e
         case e: graft.functions.NativeExprs.MinhashSigHashesExpr => e
@@ -269,7 +278,7 @@ class PlanShapeSpec extends SparkSpec {
   test("corpus_split is map-only: no shuffle below the output sort") {
     val df = graft.operators.Corpus.assignSplit(
       graft.sources.Records.table(spark, sf, "documents"), col("text"))
-    val exchanges = df.queryExecution.executedPlan.collect {
+    val exchanges = ProbeReference.collectPlan(df.queryExecution.executedPlan) {
       case e if e.nodeName.contains("Exchange") => e
     }
     assert(exchanges.isEmpty, "content-keyed split must not shuffle")
@@ -449,7 +458,7 @@ class PlanShapeSpec extends SparkSpec {
     val df = graft.operators.Corpus.chunk(
       graft.sources.Records.table(spark, sf, "documents"),
       size(graft.operators.TextOps.tokens(col("text"))), budget = 32, overlap = 8)
-    val exchanges = df.queryExecution.executedPlan.collect {
+    val exchanges = ProbeReference.collectPlan(df.queryExecution.executedPlan) {
       case e if e.nodeName.contains("Exchange") => e
     }
     assert(exchanges.isEmpty, "window chunking must not shuffle")
@@ -654,7 +663,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("corpus_funnel's only nested-loop joins are single-row aggregate cross joins") {
     val df = SparkEntry.queries("corpus_funnel")(spark, sf)
-    val bnl = df.queryExecution.executedPlan.collect {
+    val bnl = ProbeReference.collectPlan(df.queryExecution.executedPlan) {
       case e if e.nodeName.contains("BroadcastNestedLoopJoin") => e
     }
     // each side of every BNL join is an Aggregate output (1 row); a
@@ -703,17 +712,13 @@ class PlanShapeSpec extends SparkSpec {
 
   test("corpus_split_safe shuffles ids only, never text") {
     val df = SparkEntry.queries("corpus_split_safe")(spark, sf)
-    val exchanges = df.queryExecution.executedPlan.collect {
-      case e if e.nodeName == "Exchange" || e.nodeName.contains("ShuffleExchange") => e.toString
-    }
+    val exchanges = shuffledColumns(df)
     exchanges.foreach(e => assert(!e.contains("text#"), s"text column in shuffle: $e"))
   }
 
   test("exact dedup groups by a hash key, never shuffling full text") {
     val df = SparkEntry.queries("dedup_exact")(spark, sf)
-    val exchanges = df.queryExecution.executedPlan.collect {
-      case e if e.nodeName == "Exchange" || e.nodeName.contains("ShuffleExchange") => e.toString
-    }
+    val exchanges = shuffledColumns(df)
     // the partitioning key of every shuffle is the md5 alias or an agg
     // output, never the raw text column
     exchanges.foreach(e => assert(!e.contains("text#"), s"text column in shuffle: $e"))
@@ -725,9 +730,7 @@ class PlanShapeSpec extends SparkSpec {
     assert(!p.contains("Window"),
       "interval union must fold over sorted starts, not a window function")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p)
-    val exchanges = df.queryExecution.executedPlan.collect {
-      case e if e.nodeName == "Exchange" || e.nodeName.contains("ShuffleExchange") => e.toString
-    }
+    val exchanges = shuffledColumns(df)
     // shuffles carry (doc_id, pos, hash) / per-doc aggregates — never text
     exchanges.foreach(e => assert(!e.contains("text#"), s"text column in shuffle: $e"))
   }
@@ -880,7 +883,7 @@ class PlanShapeSpec extends SparkSpec {
       Seq((1L, 10), (3L, 30), (5L, 50)).toDF("id", "y"),
       "bspec_b", s"$base/b", "id", 4)
     val j = spark.table("bspec_a").join(spark.table("bspec_b"), Seq("id"))
-    val exchanges = j.queryExecution.executedPlan.collect {
+    val exchanges = ProbeReference.collectPlan(j.queryExecution.executedPlan) {
       case e if e.nodeName == "Exchange" || e.nodeName.contains("ShuffleExchange") => e.toString
     }
     assert(exchanges.isEmpty,

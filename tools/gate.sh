@@ -2,7 +2,8 @@
 # Correctness gate: dump every SparkEntry query with graft.Verify at
 # sf0.001 and sf0.01, and on the hostile corpus built from each of them
 # (tools/make_advdata.py), and compare each dump with the DuckDB oracle
-# (tools/compare.py). Exits non-zero on any mismatch, missing query or
+# (tools/compare.py), and print the digests of the oracle SQL
+# (tools/oracle_digest.py). Exits non-zero on any mismatch, missing query or
 # failed step. Writes only under target/gate/: the hostile corpora,
 # dumps, compare reports, Spark's scratch space and the temp stores some
 # queries write. The testdata dir is only read.
@@ -32,6 +33,8 @@ for i in "${!names[@]}"; do
 done
 # one sbt session builds once and runs every dump
 SPARK_LOCAL_DIRS="$out/spark-local" sbt --batch "${runs[@]}"
+# the oracle's identity: raw and whitespace-normalized digests of the dump
+python3 tools/oracle_digest.py "$out/${names[0]}/oracle_sql.json"
 status=0
 for i in "${!names[@]}"; do
   name=${names[$i]}
