@@ -233,8 +233,16 @@ object NativeExprs {
 
   def shingles(tokens: Column, n: Int): Column = asCol(ShinglesExpr(ex(tokens), n))
 
+  /** Reads element `i` of a numeric array as a Double. A trait of its own,
+    * not `(ArrayData, Int) => Double`: `Function2` is not specialized for
+    * an `ArrayData` argument, so its `apply` would box the index and the
+    * result of every element read. */
+  private[functions] trait ElementReader {
+    def apply(a: ArrayData, i: Int): Double
+  }
+
   /** Numeric array element reader resolved once per (expression, type). */
-  private def reader(dt: DataType): (ArrayData, Int) => Double = dt match {
+  private def reader(dt: DataType): ElementReader = dt match {
     case ArrayType(FloatType, _)  => (a, i) => a.getFloat(i).toDouble
     case ArrayType(DoubleType, _) => (a, i) => a.getDouble(i)
     case ArrayType(IntegerType, _) => (a, i) => a.getInt(i).toDouble
@@ -254,8 +262,8 @@ object NativeExprs {
   abstract class VectorKernel extends BinaryExpression with CodegenFallback {
     override def dataType: DataType = DoubleType
     override def nullable: Boolean = true
-    @transient protected lazy val readL: (ArrayData, Int) => Double = reader(left.dataType)
-    @transient protected lazy val readR: (ArrayData, Int) => Double = reader(right.dataType)
+    @transient protected lazy val readL: ElementReader = reader(left.dataType)
+    @transient protected lazy val readR: ElementReader = reader(right.dataType)
     @transient private lazy val mayHaveNullElems: Boolean = Seq(left, right).exists {
       _.dataType match {
         case ArrayType(_, containsNull) => containsNull
@@ -626,14 +634,14 @@ object NativeExprs {
       extends BinaryExpression with CodegenFallback {
     override def dataType: DataType = ArrayType(IntegerType, containsNull = true)
     override def nullable: Boolean = true
-    @transient private lazy val readV: (ArrayData, Int) => Double = reader(left.dataType)
+    @transient private lazy val readV: ElementReader = reader(left.dataType)
     @transient private lazy val entrySchema: StructType = right.dataType match {
       case ArrayType(ArrayType(st: StructType, _), _) => st
       case other => throw new IllegalArgumentException(s"unsupported books type: $other")
     }
     @transient private lazy val codeIdx: Int = entrySchema.fieldIndex("code")
     @transient private lazy val cvecIdx: Int = entrySchema.fieldIndex("cvec")
-    @transient private lazy val readC: (ArrayData, Int) => Double =
+    @transient private lazy val readC: ElementReader =
       reader(entrySchema(cvecIdx).dataType)
     @transient private lazy val vMayNull: Boolean = left.dataType match {
       case ArrayType(_, cn) => cn
@@ -960,7 +968,7 @@ object NativeExprs {
       while (i < warr.length) { s += warr(i) * warr(i); i += 1 }
       s
     }
-    @transient private lazy val readV: (ArrayData, Int) => Double = reader(child.dataType)
+    @transient private lazy val readV: ElementReader = reader(child.dataType)
     override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
     override def nullable: Boolean = true
     override def eval(input: InternalRow): Any = {
@@ -992,7 +1000,7 @@ object NativeExprs {
     * Bit-identity with the HOF is fuzz-pinned in NativeExprsSpec. */
   case class BinaryCodesExpr(child: Expression)
       extends UnaryExpression with CodegenFallback {
-    @transient private lazy val readV: (ArrayData, Int) => Double = reader(child.dataType)
+    @transient private lazy val readV: ElementReader = reader(child.dataType)
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def nullable: Boolean = true
     override def eval(input: InternalRow): Any = {
@@ -1296,7 +1304,7 @@ object NativeExprs {
     @transient private lazy val dqIdx: Int = entrySchema.fieldIndex("dq")
     @transient private lazy val idIdx: Int = entrySchema.fieldIndex("id")
     @transient private lazy val embIdx: Int = entrySchema.fieldIndex("embedding")
-    @transient private lazy val readE: (ArrayData, Int) => Double =
+    @transient private lazy val readE: ElementReader =
       reader(entrySchema(embIdx).dataType)
     override def eval(input: InternalRow): Any = {
       val cands = child.eval(input).asInstanceOf[ArrayData]

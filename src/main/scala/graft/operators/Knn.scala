@@ -39,7 +39,7 @@ object Knn {
     * the plan as typed literals ([[attachTo]]) instead of a broadcast
     * cross join: a warm single-query plan is one scan job over the store,
     * with no broadcast exchange and no nested-loop join. */
-  private[operators] final case class QueryRow(schema: StructType, row: Option[Row]) {
+  private[graft] final case class QueryRow(schema: StructType, row: Option[Row]) {
 
     /** Column `name` as a typed literal; a typed null for a zero-row frame. */
     def literal(name: String): Column =
@@ -55,7 +55,7 @@ object Knn {
     }
   }
 
-  private[operators] object QueryRow {
+  private[graft] object QueryRow {
     /** Collect the query frame: no job for a local frame, one job for a
       * computed one. */
     def apply(query: DataFrame): QueryRow = {
@@ -145,7 +145,15 @@ object Knn {
     * A call binds by copying the prepared plan with its own values
     * (`transformAllExpressions`); the copy is immutable, so concurrent
     * callers share the prepared plan without a lock. It runs the copy in
-    * one job and returns the answer rows as a local frame.
+    * one job and returns the answer rows as a local frame. The plan's
+    * root is its top-k heap (`TakeOrderedAndProjectExec`), and the job
+    * runs through [[PlanBridge.takeOrdered]], not the node's
+    * `executeCollect`: that one hands three Spark-defined closures to
+    * Spark's closure cleaner, which reads and scans the class file of
+    * each closure's defining class (`RDD` twice, `SparkContext` once) on
+    * every call, a fixed cost of every warm query. (A plan with another
+    * root, the empty scan the optimizer leaves when a filter folds to
+    * false, runs its own `executeCollect`.)
     *
     * A prepared plan reads the cached columns of one CacheManager entry.
     * Every call looks the store up again and re-prepares when the entry
@@ -218,13 +226,15 @@ object Knn {
           plans.synchronized(plans.put(shape, e))
           e
         }
-        entry.plan.map { plan =>
-          val values = slotValues(query, clusters)
-          PlanBridge.collectLocal(store, entry.schema)(plan.transformAllExpressions {
-            case b: BoundValue => b.copy(value = values(b.slot))
-          })
-        }
+        entry.plan.map(plan => PlanBridge.collectLocal(store, entry.schema)(bind(plan, query, clusters)))
       }
+
+    /** A copy of the prepared `plan` with this call's values in its
+      * slots. */
+    private[graft] def bind(plan: SparkPlan, query: QueryRow, clusters: Option[Seq[Int]]): SparkPlan = {
+      val values = slotValues(query, clusters)
+      plan.transformAllExpressions { case b: BoundValue => b.copy(value = values(b.slot)) }
+    }
 
     /** The prepared physical plans held for `store`, least recently used
       * first. */

@@ -1,16 +1,22 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.trees.TreePattern
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.Dataset
-import org.apache.spark.sql.execution.{QueryExecution, SQLExecution, SparkPlan}
+import org.apache.spark.sql.execution.{QueryExecution, SQLExecution, SparkPlan, TakeOrderedAndProjectExec}
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.collection.{Utils => CollectionUtils}
 
-/** Bridge to `private[sql]` plan plumbing, sibling of [[ColumnBridge]]. */
+/** Bridge to `private[sql]` plan plumbing, sibling of [[ColumnBridge]],
+  * and the prepared serving plans' top-k runner ([[takeOrdered]]), which
+  * lives in this package to reach Spark's `private[spark]` bounded heap. */
 object PlanBridge {
 
   private def classic(df: DataFrame): Dataset[Row] = df.asInstanceOf[Dataset[Row]]
@@ -60,20 +66,59 @@ object PlanBridge {
   }
 
   /** Build a physical plan with `plan` and run it in `df`'s session,
-    * collecting its rows to the driver as a local frame with `schema`.
-    * `plan` is built with the session active, because a physical operator
-    * captures the active session when it is constructed, and the job runs
-    * with the session's SQL conf propagated to its tasks. No SQL
-    * execution is registered for the job (registering one posts the
-    * plan's explain string and plan info on every call), so
-    * `QueryExecutionListener`s, the SQL UI and per-execution SQL metrics
-    * do not see it; `SparkListener`s see its job and stages. */
+    * collecting its rows to the driver as a local frame with `schema`: a
+    * top-k root with no offset through [[takeOrdered]], any other root
+    * through its own `executeCollect`. `plan` is built with the session
+    * active, because a physical operator captures the active session
+    * when it is constructed, and the job runs with the session's SQL conf
+    * propagated to its tasks. No SQL execution is registered for the job
+    * (registering one posts the plan's explain string and plan info on
+    * every call), so `QueryExecutionListener`s, the SQL UI and
+    * per-execution SQL metrics do not see it; `SparkListener`s see its
+    * job and stages. */
   def collectLocal(df: DataFrame, schema: StructType)(plan: => SparkPlan): DataFrame = {
     val session = classic(df).sparkSession
     val rows: Array[InternalRow] = session.withActive {
       val p = plan
-      SQLExecution.withSQLConfPropagated(session)(p.executeCollect())
+      SQLExecution.withSQLConfPropagated(session)(p match {
+        case top: TakeOrderedAndProjectExec if top.offset == 0 => takeOrdered(top)
+        case other => other.executeCollect()
+      })
     }
     Dataset.ofRows(session, LocalRelation(DataTypeUtils.toAttributes(schema), rows.toSeq))
+  }
+
+  /** The rows `plan.executeCollect()` returns, for a top-k root with no
+    * offset, from one job: one stage and one task per partition of the
+    * child. Each task keeps its k smallest copied rows under the node's
+    * own ordering, in the bounded heap `RDD.takeOrdered` uses; the driver
+    * merges them with the same ordering and applies the projection only
+    * when it is not the child's output.
+    *
+    * `executeCollect` runs the same heaps through `RDD.takeOrdered`,
+    * which hands three closures defined in Spark to `mapPartitions`,
+    * `reduce` and `runJob`. Spark's closure cleaner reads and scans the
+    * class file that defines each closure, `RDD` (184 KB) twice and
+    * `SparkContext` (204 KB) once, on every call: a fixed cost of every
+    * warm single-vector query. Here the job's one closure is defined in
+    * this small object, and it goes to the `(TaskContext, Iterator)`
+    * overload of `runJob`, which does not wrap it in a second closure to
+    * clean. */
+  def takeOrdered(plan: TakeOrderedAndProjectExec): Array[InternalRow] = {
+    require(plan.offset == 0, s"a top-k plan with offset ${plan.offset}")
+    val child = plan.child
+    val k = plan.limit
+    val ord = new LazilyGeneratedOrdering(plan.sortOrder, child.output)
+    val heads: (TaskContext, Iterator[InternalRow]) => Array[InternalRow] =
+      (_, rows) => CollectionUtils.takeOrdered(rows.map(_.copy()), k)(ord).toArray
+    val rdd = child.execute()
+    val perPartition = rdd.sparkContext.runJob(rdd, heads, 0 until rdd.getNumPartitions)
+    val top = CollectionUtils.takeOrdered(perPartition.iterator.flatMap(_.iterator), k)(ord).toArray
+    if (plan.projectList == child.output) top
+    else {
+      val project = UnsafeProjection.create(plan.projectList, child.output)
+      project.initialize(0)
+      top.map(r => project(r).copy())
+    }
   }
 }

@@ -3,8 +3,10 @@
 # sf0.001 and sf0.01, and on the hostile corpus built from each of them
 # (tools/make_advdata.py), and compare each dump with the DuckDB oracle
 # (tools/compare.py), and print the digests of the oracle SQL
-# (tools/oracle_digest.py). Exits non-zero on any mismatch, missing query or
-# failed step. Writes only under target/gate/: the hostile corpora,
+# (tools/oracle_digest.py). The measuring tools' own tests
+# (tools/test_bench_diff.py, tools/test_oracle_digest.py) run first, before
+# the sbt session. Exits non-zero on any mismatch, missing query, failed
+# tool test or failed step. Writes only under target/gate/: the hostile corpora,
 # dumps, compare reports, Spark's scratch space and the temp stores some
 # queries write. The testdata dir is only read.
 # Usage: tools/gate.sh <testdata dir holding sf0.001/ and sf0.01/>
@@ -15,6 +17,9 @@ if [ $# -ne 1 ]; then
 fi
 data=$(cd "$1" && pwd)
 cd "$(dirname "$0")/.."
+# each tool test prints one "ok" line per passing case, then a summary
+python3 tools/test_bench_diff.py | grep -v '^ok '
+python3 tools/test_oracle_digest.py | grep -v '^ok '
 out=$PWD/target/gate
 scales=(sf0.001 sf0.01)
 mkdir -p "$out/spark-local" "$out/tmp"
